@@ -14,15 +14,16 @@ import org.apache.spark.sql.{Dataset, Encoder}
   * (joins.scala:15-21), minus the per-record trigger/evictor machinery
   * which batch dedup-on-read makes unnecessary (SURVEY.md §2.4).
   *
-  * The per-key expansion logic re-expresses the reference's cogroup
-  * functions C1–C5 (cogroupFunctions.scala:7-87) on *deduped* inputs —
-  * dedupe-before-expand, exactly as the reference does.
-  *
-  * For streaming variants see [[graft.streaming.VersionedStreamJoin]].
+  * Each key's rows are deduped to latest-per-id maps with
+  * [[JoinRules.upsert]] and expanded by the matching [[JoinRules]]
+  * variant — dedupe-before-expand, exactly as the reference does. The
+  * streaming drivers share the same rules
+  * ([[graft.streaming.VersionedStreamJoin]],
+  * [[graft.streaming.TwsVersionedJoin]]).
   */
 object TypedVersionedJoins {
 
-  /** J1 (joins.scala:10-23) + C1 (cogroupFunctions.scala:7-30). */
+  /** J1 (joins.scala:10-23) + C1: [[JoinRules.fullOuter]]. */
   def fullOuter[X, Y](
       dsx: Dataset[X], dsy: Dataset[Y],
       keyFromX: X => String, keyFromY: Y => String,
@@ -30,16 +31,11 @@ object TypedVersionedJoins {
       tsFromX: X => Long, tsFromY: Y => Long)(
       implicit ex: Encoder[X], ey: Encoder[Y], es: Encoder[String],
       eo: Encoder[(Option[X], Option[Y])]): Dataset[(Option[X], Option[Y])] =
-    dsx.groupByKey(keyFromX).cogroup(dsy.groupByKey(keyFromY)) { (_, xs, ys) =>
-      val xl = VersionedDedup.latestPerId(xs, idFromX, tsFromX)
-      val yl = VersionedDedup.latestPerId(ys, idFromY, tsFromY)
-      expandFullOuter(xl, yl)
-    }
+    cogrouped(dsx, dsy, keyFromX, keyFromY, idFromX, idFromY,
+      tsFromX, tsFromY)(JoinRules.fullOuter[X, Y])
 
-  /** J2 (joins.scala:24-37) + C2 (cogroupFunctions.scala:33-47):
-    * at most one X per key — latest over the whole key, NOT per id
-    * (reference TODO at cogroupFunctions.scala:31-32, ported exactly);
-    * keys with no X emit nothing. */
+  /** J2 (joins.scala:24-37) + C2: [[JoinRules.leftOuter]] — at most
+    * one X per key, the latest over the whole key (the reference quirk). */
   def leftOuter[X, Y](
       dsx: Dataset[X], dsy: Dataset[Y],
       keyFromX: X => String, keyFromY: Y => String,
@@ -47,18 +43,11 @@ object TypedVersionedJoins {
       tsFromX: X => Long, tsFromY: Y => Long)(
       implicit ex: Encoder[X], ey: Encoder[Y], es: Encoder[String],
       eo: Encoder[(X, Option[Y])]): Dataset[(X, Option[Y])] =
-    dsx.groupByKey(keyFromX).cogroup(dsy.groupByKey(keyFromY)) { (_, xs, ys) =>
-      VersionedDedup.latestOne(xs, tsFromX) match {
-        case None => Iterator.empty
-        case Some(x) =>
-          val yl = VersionedDedup.latestPerId(ys, idFromY, tsFromY)
-          if (yl.isEmpty) Iterator.single((x, None))
-          else yl.iterator.map(y => (x, Some(y)))
-      }
-    }
+    cogrouped(dsx, dsy, keyFromX, keyFromY, idFromX, idFromY,
+      tsFromX, tsFromY)(JoinRules.leftOuter(_, _, tsFromX))
 
-  /** J3 (joins.scala:39-54) + C3 (cogroupFunctions.scala:50-62):
-    * one row per X with all latest-version Ys as a Seq (empty allowed). */
+  /** J3 (joins.scala:39-54) + C3: [[JoinRules.leftOuterSeq]] — one row
+    * per key's X with all latest-version Ys as a Seq (empty allowed). */
   def leftOuterSeq[X, Y](
       dsx: Dataset[X], dsy: Dataset[Y],
       keyFromX: X => String, keyFromY: Y => String,
@@ -66,17 +55,12 @@ object TypedVersionedJoins {
       tsFromX: X => Long, tsFromY: Y => Long)(
       implicit ex: Encoder[X], ey: Encoder[Y], es: Encoder[String],
       eo: Encoder[(X, Seq[Y])]): Dataset[(X, Seq[Y])] =
-    dsx.groupByKey(keyFromX).cogroup(dsy.groupByKey(keyFromY)) { (_, xs, ys) =>
-      VersionedDedup.latestOne(xs, tsFromX) match {
-        case None    => Iterator.empty
-        case Some(x) =>
-          Iterator.single((x, VersionedDedup.latestPerId(ys, idFromY, tsFromY)))
-      }
-    }
+    cogrouped(dsx, dsy, keyFromX, keyFromY, idFromX, idFromY,
+      tsFromX, tsFromY)(JoinRules.leftOuterSeq(_, _, tsFromX))
 
-  /** J4 (joins.scala:56-70) + C4 (cogroupFunctions.scala:64-73):
-    * per-key (Seq[X], Seq[Y]) of latest versions; either side may be
-    * empty but never both (a key only exists where a record arrived). */
+  /** J4 (joins.scala:56-70) + C4: [[JoinRules.fullOuterSeq]] — per-key
+    * (Seq[X], Seq[Y]) of latest versions; either side may be empty but
+    * never both (a key only exists where a record arrived). */
   def fullOuterSeq[X, Y](
       dsx: Dataset[X], dsy: Dataset[Y],
       keyFromX: X => String, keyFromY: Y => String,
@@ -84,14 +68,12 @@ object TypedVersionedJoins {
       tsFromX: X => Long, tsFromY: Y => Long)(
       implicit ex: Encoder[X], ey: Encoder[Y], es: Encoder[String],
       eo: Encoder[(Seq[X], Seq[Y])]): Dataset[(Seq[X], Seq[Y])] =
-    dsx.groupByKey(keyFromX).cogroup(dsy.groupByKey(keyFromY)) { (_, xs, ys) =>
-      Iterator.single((VersionedDedup.latestPerId(xs, idFromX, tsFromX),
-        VersionedDedup.latestPerId(ys, idFromY, tsFromY)))
-    }
+    cogrouped(dsx, dsy, keyFromX, keyFromY, idFromX, idFromY,
+      tsFromX, tsFromY)(JoinRules.fullOuterSeq[X, Y])
 
   /** J5: the reference's defined-but-never-wired inner join C5
     * (cogroupFunctions.scala:74-87), promoted to a first-class operator:
-    * cross product of latest versions only when both sides non-empty. */
+    * [[JoinRules.inner]]. */
   def inner[X, Y](
       dsx: Dataset[X], dsy: Dataset[Y],
       keyFromX: X => String, keyFromY: Y => String,
@@ -99,17 +81,21 @@ object TypedVersionedJoins {
       tsFromX: X => Long, tsFromY: Y => Long)(
       implicit ex: Encoder[X], ey: Encoder[Y], es: Encoder[String],
       eo: Encoder[(X, Y)]): Dataset[(X, Y)] =
-    dsx.groupByKey(keyFromX).cogroup(dsy.groupByKey(keyFromY)) { (_, xs, ys) =>
-      val xl = VersionedDedup.latestPerId(xs, idFromX, tsFromX)
-      val yl = VersionedDedup.latestPerId(ys, idFromY, tsFromY)
-      for (x <- xl.iterator; y <- yl) yield (x, y)
-    }
+    cogrouped(dsx, dsy, keyFromX, keyFromY, idFromX, idFromY,
+      tsFromX, tsFromY)(JoinRules.inner[X, Y])
 
-  /** C1 expansion on deduped inputs: no-x ⇒ (None, Some(y)) per y;
-    * x with no ys ⇒ (Some(x), None); else cross product. */
-  private[graft] def expandFullOuter[X, Y](
-      xl: Seq[X], yl: Seq[Y]): Iterator[(Option[X], Option[Y])] =
-    if (xl.isEmpty) yl.iterator.map(y => (None, Some(y)))
-    else if (yl.isEmpty) xl.iterator.map(x => (Some(x), None))
-    else for (x <- xl.iterator; y <- yl.iterator) yield (Some(x), Some(y))
+  /** Shared driver: cogroup by key, dedup each side to latest-per-id
+    * maps, expand. */
+  private def cogrouped[X, Y, R](
+      dsx: Dataset[X], dsy: Dataset[Y],
+      keyFromX: X => String, keyFromY: Y => String,
+      idFromX: X => String, idFromY: Y => String,
+      tsFromX: X => Long, tsFromY: Y => Long)(
+      expand: (Map[String, X], Map[String, Y]) => Iterator[R])(
+      implicit ex: Encoder[X], ey: Encoder[Y], es: Encoder[String],
+      er: Encoder[R]): Dataset[R] =
+    dsx.groupByKey(keyFromX).cogroup(dsy.groupByKey(keyFromY)) { (_, xs, ys) =>
+      expand(JoinRules.upsertAll(Map.empty, xs)(idFromX, tsFromX),
+        JoinRules.upsertAll(Map.empty, ys)(idFromY, tsFromY))
+    }
 }

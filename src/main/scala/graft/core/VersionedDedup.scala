@@ -70,28 +70,10 @@ object VersionedDedup {
       .drop("__rn")
   }
 
-  /** In-group latest-wins used by the typed/streaming paths: keeps the
-    * first-encountered record per id on strict-ties, like the reference.
-    * Returns values ordered by first encounter of each id. */
+  /** In-group latest-wins per id ([[JoinRules.upsert]]: strict `>`, so
+    * the first-encountered record wins on equal ts, like the
+    * reference). Values come in no particular order. */
   def latestPerId[T](rows: Iterator[T], idOf: T => String,
-                     tsOf: T => Long): Seq[T] = {
-    val m = scala.collection.mutable.LinkedHashMap.empty[String, T]
-    rows.foreach { r =>
-      val id = idOf(r)
-      m.get(id) match {
-        case Some(prev) if tsOf(r) > tsOf(prev) => m.update(id, r)
-        case None                               => m.update(id, r)
-        case _                                  => ()
-      }
-    }
-    m.values.toSeq
-  }
-
-  /** D1 X-side: single latest record per group (strict `>`, first wins). */
-  def latestOne[T](rows: Iterator[T], tsOf: T => Long): Option[T] =
-    rows.foldLeft(Option.empty[T]) {
-      case (None, r)                               => Some(r)
-      case (Some(p), r) if tsOf(r) > tsOf(p)       => Some(r)
-      case (acc, _)                                => acc
-    }
+                     tsOf: T => Long): Seq[T] =
+    JoinRules.upsertAll(Map.empty, rows)(idOf, tsOf).values.toSeq
 }

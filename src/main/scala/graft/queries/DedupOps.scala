@@ -104,19 +104,29 @@ object DedupOps {
     * grouped posting-list expansion + filt checkpoint (the 100 TB
     * shape — rationale at the branch below). The default keeps every
     * bench/test SF (≤ ~1 MB of documents) on the small branch, which
-    * the r19 A/Bs measured faster there; a deployment overrides via
+    * A/B runs measured faster there; a deployment overrides via
     * env to its own broadcast comfort point (filt is a few × source
     * bytes, and a broadcast relation beyond a few hundred MB starts
     * costing real driver+executor memory and build time). */
   private[queries] val jaccardGroupedMinBytes: Long =
-    sys.env.get("SPARK_GRAFT_JACCARD_GROUPED_MIN_BYTES")
-      .map(_.toLong).getOrElse(256L << 20)
+    groupedMinBytes(sys.env.get("SPARK_GRAFT_JACCARD_GROUPED_MIN_BYTES"))
+
+  /** Parses the switch point, failing fast with the knob's contract
+    * instead of an opaque NumberFormatException at object load. */
+  private[queries] def groupedMinBytes(raw: Option[String]): Long = {
+    val bytes = raw.fold(Option(256L << 20))(_.trim.toLongOption)
+    require(bytes.exists(_ >= 0),
+      "SPARK_GRAFT_JACCARD_GROUPED_MIN_BYTES must be a non-negative " +
+        "integer byte count (documents parquet size above which jaccard " +
+        s"uses the grouped branch), got '${raw.getOrElse("")}'")
+    bytes.get
+  }
 
   /** Near-duplicate candidate pairs (d1 < d2, jaccard ≥ threshold) —
     * the shared core of dedup_shingle_jaccard and dedup_clusters. See
     * the dedup_shingle_jaccard entry for the localCheckpoint + df-cutoff
-    * rationale. The pair-generation shape is STATS-DRIVEN (r20,
-    * replacing a prose note with code): documents-source bytes — known
+    * rationale. The pair-generation shape is STATS-DRIVEN:
+    * documents-source bytes — known
     * from the file index, no job — pick the broadcast self-join below
     * [[jaccardGroupedMinBytes]] and the grouped posting-list expansion
     * above it. Both branches are pinned pair-identical by

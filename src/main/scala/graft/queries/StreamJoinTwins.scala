@@ -1,11 +1,11 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import scala.reflect.runtime.universe.TypeTag
 
-import graft.functions.{SketchFunctions, TextFunctions}
-import graft.streaming.{VersionedStreamDedup, VersionedStreamJoin}
+import graft.streaming.{TwsVersionedJoin, VersionedStreamDedup, VersionedStreamJoin}
 
 /** The reference-surface streaming twins: every versioned join
   * variant (full/left outer, sequenced, inner — both state-API
@@ -16,103 +16,106 @@ private[graft] object StreamJoinTwins {
 
   import StreamingHarness._
 
-  def entries: Seq[Entry] = Seq(
+  /** A single-join row's join over the split events stream. */
+  private type Join = (Dataset[Ev], Dataset[Ev]) => DataFrame
 
-    // File-source streaming J1: the production shape (see
-    // runFileStream); must hash-match the batch J1 oracle.
-    Entry("s4_stream_file_join",
-      (spark, dir) => { import spark.implicits._
-      runFileStream(spark, dir) { src =>
-        VersionedStreamJoin.fullOuter[Ev, Ev](
-          src().filter(isX _), src().filter(isY _),
-          x => x.user_id.toString, y => y.user_id.toString,
-          x => x.event_type, y => y.event_type,
-          x => x.ts_us, y => y.ts_us).toDF()
-      }(convergedJ1) },
-      Some(ReferenceJoins.j1OracleSql)),
+  /** One single-join replay row: the events stream split into the
+    * signup/error x side and the click/purchase/view y side, keyed by
+    * user with event_type as the upsert id and ts_us as the version.
+    * `join` names the variant and its state API: flatMapGroupsWithState
+    * ([[VersionedStreamJoin]]) or transformWithState
+    * ([[TwsVersionedJoin]], per-(key, id) MapState and a per-key
+    * event-time timer; requires RocksDB). `rocksDb` runs the state on
+    * the RocksDB provider; `scopedTtl` runs the replay inside
+    * [[VersionedStreamJoin.withEventTimeTtl]], the flatMapGroupsWithState
+    * TTL scope, while the transformWithState rows pass the same TTL to
+    * their driver. Either TTL is sized beyond the replay horizon (the
+    * watermarked union and retirement timers run, but never fire
+    * mid-replay). `coarse` takes [[StreamingHarness.coarseFilesPerTrigger]]
+    * files per trigger instead of one (sound here: every fold is a
+    * max-seq view, which is batching-independent). */
+  private final case class Twin(name: String, rocksDb: Boolean,
+                                scopedTtl: Boolean, coarse: Boolean,
+                                fold: DataFrame => DataFrame, oracle: String,
+                                join: Join)
 
-    // File-source streaming J2 (leftOuter, the per-KEY X dedup quirk):
-    // converged result must hash-match the batch j2_left_outer oracle.
-    // Determinism note: the per-key latest X is unique — no two
-    // latest-per-(user,type) X events share a ts for the same user at
-    // any SF (verified), so latest-wins needs no tiebreak here.
-    Entry("s5_stream_left_outer",
-      (spark, dir) => { import spark.implicits._
-      runFileStream(spark, dir,
-          // coarsened trigger (StreamingHarness.coarseFilesPerTrigger): s4 keeps the per-file archetype; converged max-seq view is batching-independent
-          filesPerTrigger = coarseFilesPerTrigger.toInt) { src =>
-        VersionedStreamJoin.leftOuter[Ev, Ev](
-          src().filter(isX _), src().filter(isY _),
-          x => x.user_id.toString, y => y.user_id.toString,
-          x => x.event_type, y => y.event_type,
-          x => x.ts_us, y => y.ts_us).toDF()
-      }(convergedJ1) },
-      Some(ReferenceJoins.j2OracleSql)),
+  /** Event-time TTL beyond the replay horizon. The version axis is
+    * epoch MICROSECONDS read as the TTL clock's milliseconds, which
+    * stretches the corpus's 29-day span ~80 years, so the watermark
+    * delay is sized in the same stretched units (a deployment with real
+    * epoch-millis versions uses its real out-of-orderness bound).
+    * Retirement itself is sbt-asserted (StreamJoinSpec, TwsJoinSpec),
+    * where arrival order is controllable. */
+  private val horizonTtlMs = 1000L * 365 * 86400 * 1000
+  private val horizonDelay = "36500 days"
 
-    // File-source streaming J3 (leftOuterSeq, nested Y side): converged
-    // rows project the ys array to the same sorted comma-joined string
-    // as the batch j3_left_outer_seq entry, so both hash-match the one
-    // oracle.
-    Entry("s6_stream_left_outer_seq",
-      (spark, dir) => {
-        import spark.implicits._
-        runFileStream(spark, dir,
-            // coarsened trigger (StreamingHarness.coarseFilesPerTrigger): same max-seq fold as s5
-            filesPerTrigger = coarseFilesPerTrigger.toInt) { src =>
-          VersionedStreamJoin.leftOuterSeq[Ev, Ev](
-            src().filter(isX _), src().filter(isY _),
-            x => x.user_id.toString, y => y.user_id.toString,
-            x => x.event_type, y => y.event_type,
-            x => x.ts_us, y => y.ts_us).toDF()
-        } { raw =>
-          val wMax = Window.partitionBy(col("key"))
-          raw
-            .withColumn("max_seq", max(col("seq")).over(wMax))
-            .filter(col("seq") === col("max_seq"))
-            .select(
-              col("key").cast("long").as("user_id"),
-              element_at(col("xs"), 1).getField("event_id").as("x_event_id"),
-              element_at(col("xs"), 1).getField("event_type").as("x_type"),
-              expr("timestamp_micros(element_at(xs, 1).ts_us)").as("x_ts"),
-              concat_ws(",", sort_array(expr("transform(ys, y -> y.event_id)"))
-                .cast("array<string>")).as("y_event_ids"),
-              size(col("ys")).cast("long").as("y_n"))
-            .orderBy(col("user_id"))
-        }
-      },
-      Some(ReferenceJoins.j3OracleSql)),
+  private val user: Ev => String = _.user_id.toString
+  private val evType: Ev => String = _.event_type
+  private val evId: Ev => String = _.event_id.toString
+  private val evTs: Ev => Long = _.ts_us
 
-    // File-source streaming J4 (fullOuterSeq, the per-key cogroup):
-    // every key's converged row projects both sides' latest versions to
-    // the same sorted comma-joined id strings as the batch
-    // j4_full_outer_seq entry — completing the J1–J4 streaming matrix
-    // against the batch oracles.
-    Entry("s7_stream_full_outer_seq",
-      (spark, dir) => {
-        import spark.implicits._
-        runFileStream(spark, dir,
-            // coarsened trigger (StreamingHarness.coarseFilesPerTrigger): same max-seq fold as s5
-            filesPerTrigger = coarseFilesPerTrigger.toInt) { src =>
-          VersionedStreamJoin.fullOuterSeq[Ev, Ev](
-            src().filter(isX _), src().filter(isY _),
-            x => x.user_id.toString, y => y.user_id.toString,
-            x => x.event_type, y => y.event_type,
-            x => x.ts_us, y => y.ts_us).toDF()
-        } { raw =>
-          val wMax = Window.partitionBy(col("key"))
-          raw
-            .withColumn("max_seq", max(col("seq")).over(wMax))
-            .filter(col("seq") === col("max_seq"))
-            .select(
-              col("key").cast("long").as("user_id"),
-              concat_ws(",", sort_array(expr("transform(xs, v -> v.event_id)"))
-                .cast("array<string>")).as("x_event_ids"),
-              concat_ws(",", sort_array(expr("transform(ys, v -> v.event_id)"))
-                .cast("array<string>")).as("y_event_ids"))
-            .orderBy(col("user_id"))
-        }
-      },
-      Some(ReferenceJoins.j4OracleSql)),
+  private val singleJoins: Seq[Twin] = {
+    import ReferenceJoins.{j1OracleSql => j1, j2OracleSql => j2,
+      j3OracleSql => j3, j4OracleSql => j4, j5OracleSql => j5}
+    // the join columns are built here, outside any session
+    implicit def productEncoder[T <: Product : TypeTag]: Encoder[T] =
+      Encoders.product[T]
+    implicit val stringEncoder: Encoder[String] = Encoders.STRING
+    val (fm, tws, ttl) = (VersionedStreamJoin, TwsVersionedJoin, Some(horizonTtlMs))
+    Seq(
+      //   name, rocksDb, scopedTtl, coarse, fold, oracle, join
+      // the per-file fidelity archetype of the fMGWS state machine
+      Twin("s4_stream_file_join", false, false, false, convergedJ1, j1,
+        fm.fullOuter(_, _, user, user, evType, evType, evTs, evTs).toDF()),
+      // J2's per-KEY x: at most one latest x per user (unique at every SF)
+      Twin("s5_stream_left_outer", false, false, true, convergedJ1, j2,
+        fm.leftOuter(_, _, user, user, evType, evType, evTs, evTs).toDF()),
+      Twin("s6_stream_left_outer_seq", false, false, true, convergedJ3, j3,
+        fm.leftOuterSeq(_, _, user, user, evType, evType, evTs, evTs).toDF()),
+      Twin("s7_stream_full_outer_seq", false, false, true, convergedJ4, j4,
+        fm.fullOuterSeq(_, _, user, user, evType, evType, evTs, evTs).toDF()),
+      Twin("s10_stream_inner", false, false, true, convergedJ1, j5,
+        fm.inner(_, _, user, user, evType, evType, evTs, evTs).toDF()),
+      // state-backend swap: upserts, maps and seqs round-trip RocksDB
+      Twin("s14_stream_rocksdb", true, false, true, convergedJ1, j1,
+        fm.fullOuter(_, _, user, user, evType, evType, evTs, evTs).toDF()),
+      // watermarked union + EventTimeTimeout; s45 keeps a firing-TTL row
+      Twin("s17_stream_ttl_join", false, true, true, convergedJ1, j1,
+        fm.fullOuter(_, _, user, user, evType, evType, evTs, evTs).toDF()),
+      // the per-file fidelity archetype of the transformWithState path
+      Twin("s20_stream_tws_join", true, false, false, convergedJ1, j1,
+        tws.fullOuter(_, _, user, user, evType, evType, evTs, evTs,
+          ttl, horizonDelay).toDF()),
+      Twin("s23_stream_tws_left_outer", true, false, true, convergedJ1, j2,
+        tws.leftOuter(_, _, user, user, evType, evType, evTs, evTs,
+          ttl, horizonDelay).toDF()),
+      Twin("s34_stream_tws_left_outer_seq", true, false, true, convergedJ3, j3,
+        tws.leftOuterSeq(_, _, user, user, evType, evType, evTs, evTs,
+          ttl, horizonDelay).toDF()),
+      Twin("s35_stream_tws_full_outer_seq", true, false, true, convergedJ4, j4,
+        tws.fullOuterSeq(_, _, user, user, evType, evType, evTs, evTs,
+          ttl, horizonDelay).toDF()),
+      Twin("s49_stream_tws_inner", true, false, true, convergedJ1, j5,
+        tws.inner(_, _, user, user, evType, evType, evTs, evTs,
+          ttl, horizonDelay).toDF()))
+  }
+
+  /** Runs one [[Twin]] row: state config around a file-source replay of
+    * the row's join, folded and checked against the row's oracle. */
+  private def entry(t: Twin): Entry = Entry(t.name, (spark, dir) => {
+    def replay(): DataFrame = runFileStream(spark, dir,
+        filesPerTrigger = if (t.coarse) coarseFilesPerTrigger.toInt else 1) {
+      src => t.join(src().filter(isX _), src().filter(isY _))
+    }(t.fold)
+    def withTtl(): DataFrame =
+      if (t.scopedTtl)
+        VersionedStreamJoin.withEventTimeTtl(horizonTtlMs, horizonDelay)(replay())
+      else replay()
+    if (t.rocksDb) VersionedStreamJoin.withStateStoreProvider(spark)(withTtl())
+    else withTtl()
+  }, Some(t.oracle))
+
+  def entries: Seq[Entry] = singleJoins.map(entry) ++ Seq(
 
     // Standalone streaming latest-wins dedup (reference D2 as its own
     // operator, not a join side): the whole events stream keyed by
@@ -126,10 +129,7 @@ private[graft] object StreamJoinTwins {
           VersionedStreamDedup.latestPerKeyId[Ev](src(),
             e => e.user_id.toString, e => e.event_type, e => e.ts_us).toDF()
         } { raw =>
-          val wMax = Window.partitionBy(col("key"))
-          raw
-            .withColumn("max_seq", max(col("seq")).over(wMax))
-            .filter(col("seq") === col("max_seq"))
+          latestSeqPerKey(raw)
             .select(explode(col("xs")).as("x"))
             .select(col("x.user_id").as("user_id"),
               col("x.event_id").as("event_id"),
@@ -140,48 +140,6 @@ private[graft] object StreamJoinTwins {
         }
       },
       Some(ReferenceJoins.d2OracleSql)),
-
-    // File-source streaming J5 (inner): emits only keys populated on
-    // both sides; converged result must hash-match the batch j5_inner
-    // oracle — completing driver-verified batch+streaming coverage of
-    // every reference cogroup variant (C1–C5,
-    // cogroupFunctions.scala:7-87).
-    Entry("s10_stream_inner",
-      (spark, dir) => { import spark.implicits._
-      // coarsened trigger (see StreamingHarness.coarseFilesPerTrigger):
-      // the converged max-seq view is batching-independent (upsert
-      // versions monotone per key — the s22 soundness argument); s4
-      // keeps the per-file-fidelity archetype for this state machine
-      runFileStream(spark, dir,
-          filesPerTrigger = coarseFilesPerTrigger.toInt) { src =>
-        VersionedStreamJoin.inner[Ev, Ev](
-          src().filter(isX _), src().filter(isY _),
-          x => x.user_id.toString, y => y.user_id.toString,
-          x => x.event_type, y => y.event_type,
-          x => x.ts_us, y => y.ts_us).toDF()
-      }(convergedJ1) },
-      Some(ReferenceJoins.j5OracleSql)),
-
-    // The s4 shape run on the ROCKSDB state store provider — the
-    // off-heap, disk-spilling backend that holds at 100 TB state (the
-    // default in-memory HDFS-backed provider caps at executor heap).
-    // Same J1 oracle: proves the state-backend swap is semantics-
-    // preserving end-to-end (upserts, per-key maps, seq counters all
-    // round-trip RocksDB serialization), not just sbt-asserted.
-    Entry("s14_stream_rocksdb",
-      (spark, dir) => { import spark.implicits._
-      VersionedStreamJoin.withStateStoreProvider(spark) {
-        runFileStream(spark, dir,
-            // coarsened trigger (StreamingHarness.coarseFilesPerTrigger): RocksDB round-trip still exercised each batch; max-seq fold batching-independent
-            filesPerTrigger = coarseFilesPerTrigger.toInt) { src =>
-          VersionedStreamJoin.fullOuter[Ev, Ev](
-            src().filter(isX _), src().filter(isY _),
-            x => x.user_id.toString, y => y.user_id.toString,
-            x => x.event_type, y => y.event_type,
-            x => x.ts_us, y => y.ts_us).toDF()
-        }(convergedJ1)
-      } },
-      Some(ReferenceJoins.j1OracleSql)),
 
     // SKEW-SALTED streaming state: the streaming joins' contract says
     // "skewed keys are the caller's concern" — this row demonstrates
@@ -212,10 +170,7 @@ private[graft] object StreamJoinTwins {
             x => x.event_type, y => y._2.event_type,
             x => x.ts_us, y => y._2.ts_us).toDF()
         } { raw =>
-          val wMax = Window.partitionBy(col("key"))
-          raw
-            .withColumn("max_seq", max(col("seq")).over(wMax))
-            .filter(col("seq") === col("max_seq"))
+          latestSeqPerKey(raw)
             .select(
               col("x.user_id").as("user_id"),
               col("x.event_id").as("x_event_id"),
@@ -229,35 +184,6 @@ private[graft] object StreamJoinTwins {
         }
       },
       Some(ReferenceJoins.j5OracleSql)),
-
-    // The s4 shape under EVENT-TIME TTL — the watermark-aligned state
-    // retirement mode (the 100 TB state-bounding story: keys idle
-    // while the watermark advances past their TTL are dropped). The
-    // version axis here is epoch MICROSECONDS read as the TTL clock's
-    // milliseconds, which stretches the corpus's 29-day span ~80
-    // years along that axis — so the watermark delay is sized in the
-    // same stretched units (a production deployment with real
-    // epoch-millis versions would use its real out-of-orderness
-    // bound), and the TTL is set beyond the replay horizon: proving
-    // the watermarked-union + EventTimeTimeout machinery end-to-end
-    // against the unchanged J1 oracle, with retirement semantics
-    // themselves sbt-asserted in StreamJoinSpec where arrival order
-    // is controllable.
-    Entry("s17_stream_ttl_join",
-      (spark, dir) => { import spark.implicits._
-      VersionedStreamJoin.withEventTimeTtl(ms = 1000L * 365 * 86400 * 1000,
-          watermarkDelay = "36500 days") {
-        runFileStream(spark, dir,
-            // coarsened trigger (StreamingHarness.coarseFilesPerTrigger): TTL sized beyond the replay horizon (never fires mid-replay), so batching cannot shift retirement; s45 keeps the firing-TTL per-file row
-            filesPerTrigger = coarseFilesPerTrigger.toInt) { src =>
-          VersionedStreamJoin.fullOuter[Ev, Ev](
-            src().filter(isX _), src().filter(isY _),
-            x => x.user_id.toString, y => y.user_id.toString,
-            x => x.event_type, y => y.event_type,
-            x => x.ts_us, y => y.ts_us).toDF()
-        }(convergedJ1)
-      } },
-      Some(ReferenceJoins.j1OracleSql)),
 
     // THE PRODUCTION DEPLOYMENT SHAPE: all three 100 TB configs at
     // once — RocksDB state store (state >> heap), event-time TTL
@@ -275,9 +201,7 @@ private[graft] object StreamJoinTwins {
       (spark, dir) => { import spark.implicits._
         val salts = 4
         VersionedStreamJoin.withStateStoreProvider(spark) {
-          VersionedStreamJoin.withEventTimeTtl(
-              ms = 1000L * 365 * 86400 * 1000,
-              watermarkDelay = "36500 days") {
+          VersionedStreamJoin.withEventTimeTtl(horizonTtlMs, horizonDelay) {
             runFileStream(spark, dir,
                 // coarsened trigger (StreamingHarness.coarseFilesPerTrigger): beyond-horizon TTL as s17; cross-salt fold over converged view is batching-independent
                 filesPerTrigger = coarseFilesPerTrigger.toInt) { src =>
@@ -291,11 +215,8 @@ private[graft] object StreamJoinTwins {
                 x => x.event_type, y => y._2.event_type,
                 x => x.ts_us, y => y._2.ts_us).toDF()
             } { raw =>
-              val wMax = Window.partitionBy(col("key"))
               val wBase = Window.partitionBy(col("base_key"))
-              raw
-                .withColumn("max_seq", max(col("seq")).over(wMax))
-                .filter(col("seq") === col("max_seq"))
+              latestSeqPerKey(raw)
                 .withColumn("base_key", substring_index(col("key"), "#", 1))
                 // cross-salt suppression: (None, y) survives only when
                 // no salt of the base key holds any X
@@ -322,234 +243,27 @@ private[graft] object StreamJoinTwins {
       },
       Some(ReferenceJoins.j1OracleSql)),
 
-    // The s4 shape on Spark 4's transformWithState (TwsVersionedJoin):
-    // typed MapState per (key, id) — an upsert rewrites one RocksDB
-    // entry, not the key's whole compacted blob — and TTL as an
-    // explicit per-key timer anchored at the key's own event-time
-    // frontier (the zero-watermark first-batch hazard is impossible by
-    // construction). TTL sized beyond the replay horizon exactly as
-    // s17; RocksDB provider is REQUIRED by the API. Same J1 oracle:
-    // the two state-API generations must agree bit-for-bit.
-    Entry("s20_stream_tws_join",
-      (spark, dir) => { import spark.implicits._
-        VersionedStreamJoin.withStateStoreProvider(spark) {
-          runFileStream(spark, dir) { src =>
-            graft.streaming.TwsVersionedJoin.fullOuter[Ev, Ev](
-              src().filter(isX _), src().filter(isY _),
-              x => x.user_id.toString, y => y.user_id.toString,
-              x => x.event_type, y => y.event_type,
-              x => x.ts_us, y => y.ts_us,
-              ttlMs = Some(1000L * 365 * 86400 * 1000),
-              watermarkDelay = "36500 days").toDF()
-          }(convergedJ1)
-        }
-      },
-      Some(ReferenceJoins.j1OracleSql)),
-
-    // The J2 per-KEY X dedup quirk (the subtlest semantic in the
-    // reference, cogroupFunctions.scala:31-47) on the
-    // transformWithState path — so BOTH state-API generations prove
-    // the quirk, not just flatMapGroupsWithState (s5). Same RocksDB +
-    // beyond-horizon TTL config as s20; converges to the one batch J2
-    // oracle.
-    Entry("s23_stream_tws_left_outer",
-      (spark, dir) => { import spark.implicits._
-        VersionedStreamJoin.withStateStoreProvider(spark) {
-          runFileStream(spark, dir,
-              // coarsened trigger (StreamingHarness.coarseFilesPerTrigger): s20 keeps the tws per-file archetype; beyond-horizon TTL
-              filesPerTrigger = coarseFilesPerTrigger.toInt) { src =>
-            graft.streaming.TwsVersionedJoin.leftOuter[Ev, Ev](
-              src().filter(isX _), src().filter(isY _),
-              x => x.user_id.toString, y => y.user_id.toString,
-              x => x.event_type, y => y.event_type,
-              x => x.ts_us, y => y.ts_us,
-              ttlMs = Some(1000L * 365 * 86400 * 1000),
-              watermarkDelay = "36500 days").toDF()
-          }(convergedJ1)
-        }
-      },
-      Some(ReferenceJoins.j2OracleSql)),
-
-    // J3 (leftOuterSeq) on the transformWithState path — with s20/s23
-    // this completes the J1–J4 matrix on BOTH state-API generations as
-    // driver rows, not just sbt specs (TwsJoinSpec). Same per-id
-    // MapState + typed-timer TTL rationale as s20; the converged
-    // projection is s6's verbatim, and both must hash-match the one
-    // batch J3 oracle.
-    Entry("s34_stream_tws_left_outer_seq",
-      (spark, dir) => { import spark.implicits._
-        VersionedStreamJoin.withStateStoreProvider(spark) {
-          runFileStream(spark, dir,
-              // coarsened trigger (StreamingHarness.coarseFilesPerTrigger): as s23
-              filesPerTrigger = coarseFilesPerTrigger.toInt) { src =>
-            graft.streaming.TwsVersionedJoin.leftOuterSeq[Ev, Ev](
-              src().filter(isX _), src().filter(isY _),
-              x => x.user_id.toString, y => y.user_id.toString,
-              x => x.event_type, y => y.event_type,
-              x => x.ts_us, y => y.ts_us,
-              ttlMs = Some(1000L * 365 * 86400 * 1000),
-              watermarkDelay = "36500 days").toDF()
-          } { raw =>
-            val wMax = Window.partitionBy(col("key"))
-            raw
-              .withColumn("max_seq", max(col("seq")).over(wMax))
-              .filter(col("seq") === col("max_seq"))
-              .select(
-                col("key").cast("long").as("user_id"),
-                element_at(col("xs"), 1).getField("event_id").as("x_event_id"),
-                element_at(col("xs"), 1).getField("event_type").as("x_type"),
-                expr("timestamp_micros(element_at(xs, 1).ts_us)").as("x_ts"),
-                concat_ws(",", sort_array(expr("transform(ys, y -> y.event_id)"))
-                  .cast("array<string>")).as("y_event_ids"),
-                size(col("ys")).cast("long").as("y_n"))
-              .orderBy(col("user_id"))
-          }
-        }
-      },
-      Some(ReferenceJoins.j3OracleSql)),
-
-    // J4 (fullOuterSeq, the per-key cogroup) on transformWithState —
-    // the last cell of the 2-API × 4-variant join matrix. Converged
-    // projection is s7's verbatim against the batch J4 oracle.
-    Entry("s35_stream_tws_full_outer_seq",
-      (spark, dir) => { import spark.implicits._
-        VersionedStreamJoin.withStateStoreProvider(spark) {
-          runFileStream(spark, dir,
-              // coarsened trigger (StreamingHarness.coarseFilesPerTrigger): as s23
-              filesPerTrigger = coarseFilesPerTrigger.toInt) { src =>
-            graft.streaming.TwsVersionedJoin.fullOuterSeq[Ev, Ev](
-              src().filter(isX _), src().filter(isY _),
-              x => x.user_id.toString, y => y.user_id.toString,
-              x => x.event_type, y => y.event_type,
-              x => x.ts_us, y => y.ts_us,
-              ttlMs = Some(1000L * 365 * 86400 * 1000),
-              watermarkDelay = "36500 days").toDF()
-          } { raw =>
-            val wMax = Window.partitionBy(col("key"))
-            raw
-              .withColumn("max_seq", max(col("seq")).over(wMax))
-              .filter(col("seq") === col("max_seq"))
-              .select(
-                col("key").cast("long").as("user_id"),
-                concat_ws(",", sort_array(expr("transform(xs, v -> v.event_id)"))
-                  .cast("array<string>")).as("x_event_ids"),
-                concat_ws(",", sort_array(expr("transform(ys, v -> v.event_id)"))
-                  .cast("array<string>")).as("y_event_ids"))
-              .orderBy(col("user_id"))
-          }
-        }
-      },
-      Some(ReferenceJoins.j4OracleSql)),
-
-    // C5/J5 (inner, the reference's defined-but-never-wired cogroup
-    // body promoted first-class) on transformWithState — completing
-    // the J1–J5 matrix on BOTH state-API generations as driver rows
-    // (s10 proved it on flatMapGroupsWithState). Same RocksDB +
-    // beyond-horizon TTL config as s20; converges to the one batch J5
-    // oracle through s10's verbatim projection.
-    Entry("s49_stream_tws_inner",
-      (spark, dir) => { import spark.implicits._
-        VersionedStreamJoin.withStateStoreProvider(spark) {
-          runFileStream(spark, dir,
-              // coarsened trigger (StreamingHarness.coarseFilesPerTrigger): as s23
-              filesPerTrigger = coarseFilesPerTrigger.toInt) { src =>
-            graft.streaming.TwsVersionedJoin.inner[Ev, Ev](
-              src().filter(isX _), src().filter(isY _),
-              x => x.user_id.toString, y => y.user_id.toString,
-              x => x.event_type, y => y.event_type,
-              x => x.ts_us, y => y.ts_us,
-              ttlMs = Some(1000L * 365 * 86400 * 1000),
-              watermarkDelay = "36500 days").toDF()
-          }(convergedJ1)
-        }
-      },
-      Some(ReferenceJoins.j5OracleSql)),
-
-    // STREAMING AS-OF JOIN — q_asof_join's streaming twin, and the
-    // versioned-join thesis at its most production-shaped: every
+    // STREAMING AS-OF JOIN — q_asof_join's streaming twin: every
     // signup/error event is enriched with the click/purchase/view IN
     // EFFECT at its own event time (latest y at-or-before x.ts), i.e.
     // leakage-free point-in-time feature attachment over a live
-    // stream. Per trigger each touched user re-emits its xs with
-    // their in-effect y resolved by binary search over the key's
-    // sorted y timeline, so late or out-of-order arrivals on EITHER
-    // side retroactively correct exactly the rows they should —
-    // the converged view (max seq per key) is arrival-order-free and
-    // hash-matches the batch oracle (DuckDB's native ASOF JOIN, a
-    // genuinely independent implementation of the semantics). State
-    // is latest-per-event_id on both sides, never the stream; the
-    // replay's file chunking guarantees xs and ys interleave across
-    // microbatches, so the retroactive-correction path actually runs.
-    Entry("s48_stream_asof_join",
-      (spark, dir) => { import spark.implicits._
-        runFileStream(spark, dir) { src =>
-          VersionedStreamJoin.asOf[Ev, Ev](
-            src().filter((e: Ev) =>
-              e.event_type == "signup" || e.event_type == "error"),
-            src().filter((e: Ev) => e.event_type == "click" ||
-              e.event_type == "purchase" || e.event_type == "view"),
-            x => x.user_id.toString, y => y.user_id.toString,
-            x => x.event_id.toString, y => y.event_id.toString,
-            x => x.ts_us, y => y.ts_us).toDF()
-        } { raw =>
-          val wMax = Window.partitionBy(col("key"))
-          raw.withColumn("max_seq", max(col("seq")).over(wMax))
-            .filter(col("seq") === col("max_seq"))
-            .select(
-              col("key").cast("long").as("user_id"),
-              col("x.event_id").as("x_event_id"),
-              col("x.event_type").as("x_type"),
-              expr("timestamp_micros(x.ts_us)").as("x_ts"),
-              col("y.event_id").as("y_event_id"),
-              col("y.event_type").as("y_type"),
-              expr("timestamp_micros(y.ts_us)").as("y_ts"),
-              col("y.value").as("y_value"))
-            .orderBy(col("user_id"), col("x_ts"), col("x_event_id"))
-        }
-      },
-      Some(Analytics.asofOracleSql)),
+    // stream. Late or out-of-order arrivals on EITHER side
+    // retroactively correct exactly the rows they should, so the
+    // converged view hash-matches DuckDB's native ASOF JOIN (a
+    // genuinely independent implementation). The per-file replay
+    // guarantees xs and ys interleave across microbatches, so the
+    // retroactive-correction path actually runs.
+    asOfTwin("s48_stream_asof_join", forward = false, coarse = false,
+      Analytics.asofOracleSql),
 
-    // STREAMING FORWARD AS-OF — q_asof_forward's streaming twin,
-    // completing the as-of matrix (backward × forward, batch ×
-    // streaming). Each signup/error resolves to the user's EARLIEST
-    // click/purchase/view at-or-after its own event time
-    // (next-action attribution: time-to-convert labels, post-signup
-    // windows). Forward resolution is inherently retroactive in a
-    // stream — a late-arriving y with a smaller qualifying ts must
-    // CORRECT already-emitted xs — which is exactly what the
-    // per-trigger re-emit + converged (max seq per key) projection
-    // already provides; no watermark-delayed hold needed. Oracle is
-    // DuckDB's native ASOF with the flipped inequality.
-    Entry("s51_stream_asof_forward",
-      (spark, dir) => { import spark.implicits._
-        runFileStream(spark, dir,
-            // coarsened trigger (StreamingHarness.coarseFilesPerTrigger): s48 keeps the as-of per-file archetype; converged max-seq corrections are arrival-order-free
-            filesPerTrigger = coarseFilesPerTrigger.toInt) { src =>
-          VersionedStreamJoin.asOfForward[Ev, Ev](
-            src().filter((e: Ev) =>
-              e.event_type == "signup" || e.event_type == "error"),
-            src().filter((e: Ev) => e.event_type == "click" ||
-              e.event_type == "purchase" || e.event_type == "view"),
-            x => x.user_id.toString, y => y.user_id.toString,
-            x => x.event_id.toString, y => y.event_id.toString,
-            x => x.ts_us, y => y.ts_us).toDF()
-        } { raw =>
-          val wMax = Window.partitionBy(col("key"))
-          raw.withColumn("max_seq", max(col("seq")).over(wMax))
-            .filter(col("seq") === col("max_seq"))
-            .select(
-              col("key").cast("long").as("user_id"),
-              col("x.event_id").as("x_event_id"),
-              col("x.event_type").as("x_type"),
-              expr("timestamp_micros(x.ts_us)").as("x_ts"),
-              col("y.event_id").as("y_event_id"),
-              col("y.event_type").as("y_type"),
-              expr("timestamp_micros(y.ts_us)").as("y_ts"),
-              col("y.value").as("y_value"))
-            .orderBy(col("user_id"), col("x_ts"), col("x_event_id"))
-        }
-      },
-      Some(Analytics.asofForwardOracleSql)),
+    // STREAMING FORWARD AS-OF — q_asof_forward's streaming twin: each
+    // signup/error resolves to the user's EARLIEST click/purchase/view
+    // at-or-after its own event time (next-action attribution). A late
+    // y with a smaller qualifying ts CORRECTS already-emitted xs, which
+    // the per-trigger re-emit + converged view provides; the coarsened
+    // trigger is sound because those corrections are arrival-order-free.
+    asOfTwin("s51_stream_asof_forward", forward = true, coarse = true,
+      Analytics.asofForwardOracleSql),
 
     // Spark's NATIVE watermarked stream-stream join (the built-in
     // operator family, distinct from the custom versioned-join core):
@@ -599,415 +313,284 @@ private[graft] object StreamJoinTwins {
       },
       Some(Analytics.rangeJoinOracleSql)),
 
-    // CHAINED streaming joins: the reference's full 3-level data model
-    // A 1—N B 1—N C (GenJoinInput.scala:32-34) with the second
-    // versioned join running over the FIRST's streaming output —
-    // driver-verified against the batch j6_chain_abc oracle. Chaining
-    // update-mode joins without retractions needs the decomposition
-    // proven in StreamJoinSpec ("two chained streaming joins converge"):
-    //   - stage 2 consumes only the b-carrying AB rows, keyed and
-    //     identified by o_orderkey (STABLE across an AB row's lifetime)
-    //     with the stage-1 per-key seq as a monotone version, so
-    //     superseded stage-1 emissions upsert cleanly downstream;
-    //   - the a-only arm (customers with no orders), whose identity
-    //     would MOVE when an order arrived, is taken from stage 1's own
-    //     converged (max-seq) view instead.
-    // Production shape throughout: both stages are file-source streams,
-    // the inter-stage relay is a parquet directory appended per
-    // microbatch by foreachBatch (an object-store prefix at scale), and
-    // stage 2's sink is another parquet log — nothing is ever collected
-    // to the driver. State is hash-partitioned by key per stage
-    // (c_custkey, then o_orderkey — Catalyst plans one exchange per
-    // stage, the same two-exchange shape as batch j6).
+    // The chain with per-file triggers on the default state store, so
+    // the fine-grained interleaving of both stages stays exercised.
     Entry("s11_stream_chain_abc",
-      (spark, dir) => withStreamConf(spark) {
-        import spark.implicits._
-        val tmp = java.nio.file.Files.createTempDirectory("graft_chain_")
-        val abLog = tmp.resolve("ablog")
-        val bcLog = tmp.resolve("bclog")
-        try {
-          // range-split chunked ingest dirs, shared with s22 (read-only)
-          val (custDir, ordDir, liDir) = chainChunkDirs(spark, dir)
-
-          def src(d: java.nio.file.Path, schema: String,
-                  filesPerTrigger: Int = 1,
-                  glob: String = "part-*"): DataFrame =
-            spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", filesPerTrigger.toString)
-              .option("pathGlobFilter", glob)
-              .parquet(d.toString)
-
-          // stage 1: customer ⋈ orders keyed by custkey; every
-          // microbatch's emissions land in the relay log PARTITIONED
-          // (one file per shuffle partition per batch — no single-task
-          // coalesce funnel; at scale this is the ingest prefix the
-          // next stage tails). Stage 2 absorbs the higher file count by
-          // taking up to a full stage-1 batch's files per trigger —
-          // sound because the converged max-seq view is batching-
-          // independent (upsert versions are monotone per key).
-          // DELTA emission (fullOuterDelta, r20): each touched key
-          // relays only the pairs that changed this batch instead of
-          // its full current result — every relayed row is a stage-2
-          // state upsert, so the full re-emission made stage-2's
-          // per-row RocksDB/encoder work quadratic in a key's update
-          // count (measured: allUpdatesTimeMs dominates both chain
-          // rows). Content convergence is unchanged: every (customer,
-          // order) pair is still delivered at least once per content
-          // change with a monotone per-key seq, which is all the
-          // stage-2 upsert (keyed by o_orderkey, versioned by that
-          // seq) consumes. The a-only arm below stays sound because a
-          // key's LAST changed-row emission carries a non-null
-          // o_orderkey iff the key ever saw an order ((cust, None) is
-          // only ever emitted while ys is empty, and no deletions
-          // exist to empty it again).
-          val q1 = VersionedStreamJoin.fullOuterDelta[CustRow, OrdRow](
-              src(custDir, "c_custkey BIGINT, c_name STRING").as[CustRow],
-              src(ordDir, "o_orderkey BIGINT, o_custkey BIGINT, " +
-                "o_ver BIGINT, o_totalprice DOUBLE").as[OrdRow],
-              _.c_custkey.toString, _.o_custkey.toString,
-              _.c_custkey.toString, _.o_orderkey.toString,
-              _ => 0L, _.o_ver) // one customer version per id: ts moot
-            .toDF()
-            .writeStream.outputMode("update")
-            .foreachBatch { (df: DataFrame, bid: Long) =>
-              writeBatchIdempotent(
-                df.select(col("key"), col("seq"),
-                  col("x.c_custkey").as("c_custkey"),
-                  col("x.c_name").as("c_name"),
-                  col("y.o_orderkey").as("o_orderkey"),
-                  col("y.o_totalprice").as("o_totalprice")),
-                abLog, bid)
-              ()
-            }.start()
-
-          val abSchema = "key STRING, seq BIGINT, c_custkey BIGINT, " +
-            "c_name STRING, o_orderkey BIGINT, o_totalprice DOUBLE"
-
-          // stage 2: (b-carrying AB rows) ⋈ lineitem keyed by orderkey,
-          // itself a file-source stream over the relay log. It starts
-          // WHILE stage 1 is still emitting — the production topology
-          // (stage 2 tails stage 1's log live) — which is sound
-          // because the converged max-seq view is interleaving-
-          // independent: however stage-1 emissions land in microbatches,
-          // the final upsert state is the same. The dir must exist
-          // before the source starts listing it.
-          // stage 2 also emits deltas: its fold below converges per
-          // row identity (key, l_linenumber) instead of per key
-          java.nio.file.Files.createDirectories(abLog)
-          val q2 = VersionedStreamJoin.fullOuterDelta[AbRel, LiRow](
-              src(abLog, abSchema,
-                filesPerTrigger = streamShufflePartitions.toInt, glob = "b*")
-                .where(col("o_orderkey").isNotNull)
-                .select(col("seq"), col("c_custkey"), col("c_name"),
-                  col("o_orderkey"), col("o_totalprice")).as[AbRel],
-              src(liDir, "l_orderkey BIGINT, l_linenumber INT, " +
-                "l_ver BIGINT, l_extendedprice DOUBLE").as[LiRow],
-              _.o_orderkey.toString, _.l_orderkey.toString,
-              _.o_orderkey.toString,
-              li => li.l_orderkey.toString + "_" + li.l_linenumber,
-              _.seq, _.l_ver)
-            .toDF()
-            .writeStream.outputMode("update")
-            .foreachBatch { (df: DataFrame, bid: Long) =>
-              writeBatchIdempotent(
-                df.select(col("key"), col("seq"),
-                  col("x.c_custkey").as("c_custkey"),
-                  col("x.c_name").as("c_name"),
-                  col("x.o_orderkey").as("o_orderkey"),
-                  col("x.o_totalprice").as("o_totalprice"),
-                  col("y.l_linenumber").as("l_linenumber"),
-                  col("y.l_extendedprice").as("l_extendedprice")),
-                // NOT repartition(1)-bounded like runFileStream's sinks:
-                // the chain rows' per-batch emission sets are large
-                // (~10^5 rows), and funneling them through one write
-                // task was A/B-measured at +1.3–1.8 s per row (min-of-4,
-                // sf0.1, matched controls) — the serial parquet encode
-                // costs more than the fold's per-file footer tax saves
-                bcLog, bid)
-              ()
-            }.start()
-          // drain stage 1 first (it feeds the relay), then stage 2;
-          // both have been processing concurrently since start
-          try {
-            q1.processAllAvailable()
-            q2.processAllAvailable()
-          } finally {
-            // nested so a throwing q1.stop() cannot leak q2
-            try q1.stop() finally q2.stop()
-          }
-
-          // converged stage-2 view under DELTA emission: the last
-          // emission for a key is only its last CHANGE, so convergence
-          // is per row identity — latest seq per (key, l_linenumber)
-          // for the lineitem-carrying rows (an AB-row update re-emits
-          // every pair at a higher seq, so the latest row per identity
-          // always carries the latest AB content; a (None, li) row is
-          // superseded the same way once its AB row arrives) — plus
-          // the null-linenumber group, a key's (x, None) rows, valid
-          // only while the key never emitted a pair (no deletions
-          // exist, so "has a lineitem row" is monotone per key).
-          // Folded as groupBy + max_by — ONE partially-aggregating
-          // exchange over the log instead of a whole-log window sort
-          // (guide §2.3: aggregate before you shuffle); seq ties per
-          // group are impossible (a key emits each identity at most
-          // once per batch, and seq increases per batch).
-          val bcStruct = struct(col("c_custkey"), col("c_name"),
-            col("o_orderkey"), col("o_totalprice"), col("l_linenumber"),
-            col("l_extendedprice"))
-          val folded = spark.read
-            .schema(abSchema + ", l_linenumber INT, l_extendedprice DOUBLE")
-            .parquet(bcLog.toString)
-            .groupBy(col("key"), col("l_linenumber"))
-            .agg(max_by(bcStruct, col("seq")).as("r"))
-          val wKeyBc = Window.partitionBy(col("key"))
-          val viaBc = folded
-            .withColumn("has_li",
-              max(when(col("l_linenumber").isNotNull, 1).otherwise(0))
-                .over(wKeyBc))
-            .filter(col("l_linenumber").isNotNull || col("has_li") === 0)
-            .select(col("r.c_custkey"), col("r.c_name"),
-              col("r.o_orderkey"), col("r.o_totalprice"),
-              col("r.l_linenumber"), col("r.l_extendedprice"))
-          // converged stage-1 view: the a-only arm (no order ever came).
-          // Same agg fold; among a max-seq TIE (one batch changing two
-          // of a key's orders) max_by picks arbitrarily, but every tied
-          // row then carries a non-null o_orderkey and is filtered out
-          // either way — an a-only key's surviving row is unique.
-          val aOnly = spark.read.schema(abSchema).parquet(abLog.toString)
-            .groupBy(col("key"))
-            .agg(max_by(struct(col("c_custkey"), col("c_name"),
-              col("o_orderkey")), col("seq")).as("r"))
-            .filter(col("r.o_orderkey").isNull)
-            .select(col("r.c_custkey").as("c_custkey"),
-              col("r.c_name").as("c_name"),
-              lit(null).cast("long").as("o_orderkey"),
-              lit(null).cast("double").as("o_totalprice"),
-              lit(null).cast("int").as("l_linenumber"),
-              lit(null).cast("double").as("l_extendedprice"))
-          // localCheckpoint materializes the answer so the tmp logs can
-          // be deleted in the finally below (the result is small — the
-          // converged chain — while the logs carry every emission)
-          viaBc.unionByName(aOnly)
-            .orderBy(asc_nulls_first("c_custkey"),
-              asc_nulls_first("o_orderkey"),
-              asc_nulls_first("l_linenumber"))
-            .localCheckpoint()
-        } finally deleteRecursively(tmp)
-      },
+      (spark, dir) => chain(spark, dir, salts = 1, production = false,
+        filesPerTrigger = 1),
       Some(ReferenceJoins.j6OracleSql)),
 
-    // THE CHAIN UNDER THE PRODUCTION CONFIG — s11's two-stage topology
-    // (decomposition proof there) with the three 100 TB state knobs
-    // s18 proved on a single join: RocksDB state store on BOTH stages,
-    // event-time TTL (watermarked unions + per-key retirement timers;
-    // the delay must cover the chain's MIXED version axes — stage-2
-    // versions span stage-1 seqs to packed shipdate·1e10 values, so
-    // the watermark stays at zero through the replay and timers are
-    // armed but never fire, exactly the beyond-horizon sizing of
-    // s17/s18; retirement itself is sbt-asserted where arrival order
-    // is controllable), and a 4-way SALTED stage 2. Salting composes
-    // with the relay because stage 1 stays unsalted: a salted stage 1
-    // would relay its per-sub-key (None, order) rows as AB versions of
-    // the same o_orderkey identity, colliding with the true
-    // (customer, order) row under stage 2's upsert — the converged
-    // suppression that removes them cannot run per-microbatch. Stage
-    // 2's X side (AB rows, identity = o_orderkey) lands in exactly one
-    // sub-key; lineitem replicas reach all of them; the converged view
-    // applies s18's cross-salt (None, y) suppression + replica dedup.
+    // THE CHAIN UNDER THE PRODUCTION CONFIG: RocksDB on both stages,
+    // event-time TTL, a 2-way salted stage 2 (2, not s18's 4: the salt
+    // factor multiplies the biggest table's state writes — lineitem
+    // replicas × RocksDB upserts — and two sub-keys already prove the
+    // cross-salt composition), and coarsened triggers, as a
+    // deployment sizes its trigger to its ingest prefix.
     Entry("s22_stream_production_chain",
-      (spark, dir) => withStreamConf(spark) {
-        import spark.implicits._
-        // 2, not s18's 4: the salt factor multiplies the biggest
-        // table's state writes (lineitem replicas × RocksDB upserts),
-        // and two sub-keys already prove the cross-salt composition;
-        // a deployment sizes this to its real hot-key fan-in
-        val salts = 2
-        VersionedStreamJoin.withStateStoreProvider(spark) {
-          VersionedStreamJoin.withEventTimeTtl(
-              ms = 1000L * 365 * 86400 * 1000,
-              watermarkDelay = "36500000 days") {
-            val tmp = java.nio.file.Files.createTempDirectory("graft_pchain_")
-            val abLog = tmp.resolve("ablog")
-            val bcLog = tmp.resolve("bclog")
-            try {
-              val (custDir, ordDir, liDir) = chainChunkDirs(spark, dir)
-
-              // COARSENED replay batching (4 chunk files per trigger,
-              // not s11's per-file fidelity): the converged max-seq
-              // view is batching-independent (the interleaving
-              // argument on stage 2 above — upsert versions are
-              // monotone per key, so HOW emissions group into
-              // microbatches cannot change the converged state), and
-              // every microbatch here pays two fixed costs that
-              // batching amortizes directly: a RocksDB state commit
-              // per stage and a staged-idempotent sink commit per
-              // log. s11 keeps per-file triggers so the fine-grained
-              // interleaving stays exercised; this row is the
-              // production-config twin, where a deployment sizes the
-              // trigger to its ingest prefix exactly like this.
-              // Multi-batch streaming semantics remain exercised: 8
-              // chunks / 4 per trigger = 2+ upserting microbatches
-              // per stage.
-              def src(d: java.nio.file.Path, schema: String,
-                      filesPerTrigger: Int = 4,
-                      glob: String = "part-*"): DataFrame =
-                spark.readStream.schema(schema)
-                  .option("maxFilesPerTrigger", filesPerTrigger.toString)
-                  .option("pathGlobFilter", glob)
-                  .parquet(d.toString)
-
-              // DELTA emission on both stages (fullOuterDelta — the
-              // s11 rationale: every relayed row is a stage-2 RocksDB
-              // upsert, and full re-emission is quadratic in a key's
-              // update count); the converged folds below consume it
-              // per row identity. State machinery, TTL and salting
-              // are unchanged.
-              val q1 = VersionedStreamJoin.fullOuterDelta[CustRow, OrdRow](
-                  src(custDir, "c_custkey BIGINT, c_name STRING").as[CustRow],
-                  src(ordDir, "o_orderkey BIGINT, o_custkey BIGINT, " +
-                    "o_ver BIGINT, o_totalprice DOUBLE").as[OrdRow],
-                  _.c_custkey.toString, _.o_custkey.toString,
-                  _.c_custkey.toString, _.o_orderkey.toString,
-                  // NOT 0: the watermarked union drops rows whose event
-                  // time is ≤ the watermark, and the watermark floor is
-                  // epoch 0 — a constant version of 0 silently deletes
-                  // the whole side once TTL mode watermarks the stream
-                  // (s11's unwatermarked stage can use 0; here it must
-                  // be positive)
-                  _ => 1L, _.o_ver)
-                .toDF()
-                .writeStream.outputMode("update")
-                .foreachBatch { (df: DataFrame, bid: Long) =>
-                  writeBatchIdempotent(
-                    df.select(col("key"), col("seq"),
-                      col("x.c_custkey").as("c_custkey"),
-                      col("x.c_name").as("c_name"),
-                      col("y.o_orderkey").as("o_orderkey"),
-                      col("y.o_totalprice").as("o_totalprice")),
-                    abLog, bid)
-                  ()
-                }.start()
-
-              val abSchema = "key STRING, seq BIGINT, c_custkey BIGINT, " +
-                "c_name STRING, o_orderkey BIGINT, o_totalprice DOUBLE"
-
-              java.nio.file.Files.createDirectories(abLog)
-              val lis = src(liDir, "l_orderkey BIGINT, l_linenumber INT, " +
-                  "l_ver BIGINT, l_extendedprice DOUBLE").as[LiRow]
-                .flatMap(li => (0 until salts).map(s => (s, li)))
-              val q2 = VersionedStreamJoin.fullOuterDelta[AbRel, (Int, LiRow)](
-                  src(abLog, abSchema,
-                    filesPerTrigger = streamShufflePartitions.toInt,
-                    glob = "b*")
-                    .where(col("o_orderkey").isNotNull)
-                    .select(col("seq"), col("c_custkey"), col("c_name"),
-                      col("o_orderkey"), col("o_totalprice")).as[AbRel],
-                  lis,
-                  ab => ab.o_orderkey.toString + "#" +
-                    math.floorMod(ab.o_orderkey, salts),
-                  li => li._2.l_orderkey.toString + "#" + li._1,
-                  _.o_orderkey.toString,
-                  li => li._2.l_orderkey.toString + "_" + li._2.l_linenumber,
-                  _.seq, _._2.l_ver)
-                .toDF()
-                .writeStream.outputMode("update")
-                .foreachBatch { (df: DataFrame, bid: Long) =>
-                  writeBatchIdempotent(
-                    df.select(col("key"), col("seq"),
-                      col("x.c_custkey").as("c_custkey"),
-                      col("x.c_name").as("c_name"),
-                      col("x.o_orderkey").as("o_orderkey"),
-                      col("x.o_totalprice").as("o_totalprice"),
-                      col("y._2.l_linenumber").as("l_linenumber"),
-                      col("y._2.l_extendedprice").as("l_extendedprice")),
-                    // not repartition(1)-bounded — the s11 A/B evidence
-                    bcLog, bid)
-                  ()
-                }.start()
-              try {
-                q1.processAllAvailable()
-                q2.processAllAvailable()
-              } finally {
-                try q1.stop() finally q2.stop()
-              }
-
-              // The coarsened trigger's soundness argument NEEDS
-              // multi-batch upsert semantics to stay exercised (8
-              // chunks / 4 per trigger = 2+ upserting microbatches per
-              // stage): assert it from the logs' `b<bid>_p*` names so
-              // a future chunking or trigger change can never silently
-              // degrade this row to a single-batch replay that would
-              // no longer witness the batching-independence claim.
-              def distinctBids(d: java.nio.file.Path): Int =
-                listDir(d).flatMap { p =>
-                  val n = p.getFileName.toString
-                  if (n.startsWith("b") && n.contains("_p"))
-                    n.drop(1).takeWhile(_.isDigit).toLongOption
-                  else None
-                }.distinct.size
-              val (abBids, bcBids) = (distinctBids(abLog), distinctBids(bcLog))
-              require(abBids >= 2 && bcBids >= 2,
-                s"s22 replay degraded to a single upserting microbatch " +
-                  s"(ab log: $abBids distinct bids, bc log: $bcBids): " +
-                  "the 4-files-per-trigger coarsening is only sound " +
-                  "because >=2 upserting microbatches per stage keep " +
-                  "multi-batch semantics exercised")
-
-              // converged stage-2 view under DELTA emission (per-row-
-              // identity groupBy + max_by fold, the s11 rationale) with
-              // cross-salt suppression on top: a (None, lineitem) row
-              // is real only if NO sub-key of its base o_orderkey holds
-              // an AB row (none here — every lineitem's order exists —
-              // but the plan must not assume that), and survivors are
-              // salts-fold replicas → distinct
-              val bcStruct = struct(col("c_custkey"), col("c_name"),
-                col("o_orderkey"), col("o_totalprice"),
-                col("l_linenumber"), col("l_extendedprice"))
-              val folded = spark.read
-                .schema(abSchema + ", l_linenumber INT, l_extendedprice DOUBLE")
-                .parquet(bcLog.toString)
-                .groupBy(col("key"), col("l_linenumber"))
-                .agg(max_by(bcStruct, col("seq")).as("r"))
-              val wKeyBc = Window.partitionBy(col("key"))
-              val wBase = Window.partitionBy(col("base_key"))
-              val viaBc = folded
-                .withColumn("has_li",
-                  max(when(col("l_linenumber").isNotNull, 1).otherwise(0))
-                    .over(wKeyBc))
-                .filter(col("l_linenumber").isNotNull || col("has_li") === 0)
-                .withColumn("base_key", substring_index(col("key"), "#", 1))
-                // x present ⟺ o_orderkey non-null: AbRel.o_orderkey is
-                // mandatory, so (None, li) emissions are the only rows
-                // where it is null
-                .withColumn("has_x",
-                  max(when(col("r.o_orderkey").isNotNull, 1).otherwise(0))
-                    .over(wBase))
-                .filter(col("r.o_orderkey").isNotNull || col("has_x") === 0)
-                .select(col("r.c_custkey"), col("r.c_name"),
-                  col("r.o_orderkey"), col("r.o_totalprice"),
-                  col("r.l_linenumber"), col("r.l_extendedprice"))
-                .distinct()
-              // a-only arm: agg fold, the s11 max_by tie argument
-              val aOnly = spark.read.schema(abSchema).parquet(abLog.toString)
-                .groupBy(col("key"))
-                .agg(max_by(struct(col("c_custkey"), col("c_name"),
-                  col("o_orderkey")), col("seq")).as("r"))
-                .filter(col("r.o_orderkey").isNull)
-                .select(col("r.c_custkey").as("c_custkey"),
-                  col("r.c_name").as("c_name"),
-                  lit(null).cast("long").as("o_orderkey"),
-                  lit(null).cast("double").as("o_totalprice"),
-                  lit(null).cast("int").as("l_linenumber"),
-                  lit(null).cast("double").as("l_extendedprice"))
-              viaBc.unionByName(aOnly)
-                .orderBy(asc_nulls_first("c_custkey"),
-                  asc_nulls_first("o_orderkey"),
-                  asc_nulls_first("l_linenumber"))
-                .localCheckpoint()
-            } finally deleteRecursively(tmp)
-          }
-        }
-      },
+      (spark, dir) => chain(spark, dir, salts = 2, production = true,
+        filesPerTrigger = coarseFilesPerTrigger.toInt),
       Some(ReferenceJoins.j6OracleSql)),
   )
+
+  /** One as-of replay row: signup/error events as x, click/purchase/view
+    * as y, keyed by user with event_id as the upsert id. */
+  private def asOfTwin(name: String, forward: Boolean, coarse: Boolean,
+                       oracle: String): Entry =
+    Entry(name, (spark, dir) => { import spark.implicits._
+      runFileStream(spark, dir,
+          filesPerTrigger = if (coarse) coarseFilesPerTrigger.toInt else 1) { src =>
+        val xs = src().filter((e: Ev) =>
+          e.event_type == "signup" || e.event_type == "error")
+        val ys = src().filter((e: Ev) => e.event_type == "click" ||
+          e.event_type == "purchase" || e.event_type == "view")
+        (if (forward) VersionedStreamJoin.asOfForward[Ev, Ev](
+           xs, ys, user, user, evId, evId, evTs, evTs)
+         else VersionedStreamJoin.asOf[Ev, Ev](
+           xs, ys, user, user, evId, evId, evTs, evTs)).toDF()
+      } { raw =>
+        latestSeqPerKey(raw)
+          .select(
+            col("key").cast("long").as("user_id"),
+            col("x.event_id").as("x_event_id"),
+            col("x.event_type").as("x_type"),
+            expr("timestamp_micros(x.ts_us)").as("x_ts"),
+            col("y.event_id").as("y_event_id"),
+            col("y.event_type").as("y_type"),
+            expr("timestamp_micros(y.ts_us)").as("y_ts"),
+            col("y.value").as("y_value"))
+          .orderBy(col("user_id"), col("x_ts"), col("x_event_id"))
+      }
+    }, Some(oracle))
+
+  /** CHAINED streaming joins: the reference's full 3-level data model
+    * A 1—N B 1—N C (GenJoinInput.scala:32-34) with the second versioned
+    * join running over the FIRST's streaming output, verified against
+    * the batch j6_chain_abc oracle. Chaining update-mode joins without
+    * retractions needs the decomposition proven in StreamJoinSpec ("two
+    * chained streaming joins converge"):
+    *   - stage 2 consumes only the b-carrying AB rows, keyed and
+    *     identified by o_orderkey (STABLE across an AB row's lifetime)
+    *     with the stage-1 per-key seq as a monotone version, so
+    *     superseded stage-1 emissions upsert cleanly downstream;
+    *   - the a-only arm (customers with no orders), whose identity
+    *     would MOVE when an order arrived, is taken from stage 1's own
+    *     converged view instead.
+    * Both stages are file-source streams, the inter-stage relay is a
+    * parquet directory appended per microbatch by foreachBatch (an
+    * object-store prefix at scale), and stage 2's sink is another
+    * parquet log — nothing is collected to the driver. Both stages emit
+    * deltas ([[VersionedStreamJoin.fullOuterDelta]]): every relayed row
+    * is a stage-2 state upsert, and full re-emission would make that
+    * work quadratic in a key's update count.
+    *
+    * The rows differ only in the parameters:
+    *   - `salts`: stage 2's X side (AB rows, identity o_orderkey) lands
+    *     in exactly one of `salts` sub-keys and lineitem replicas reach
+    *     all of them; the fold's cross-salt (None, lineitem)
+    *     suppression and replica dedup change nothing when
+    *     `salts` = 1, so both rows share one fold. Stage 1 stays
+    *     unsalted: a salted stage 1 would relay per-sub-key
+    *     (None, order) rows as AB versions of the same o_orderkey
+    *     identity, colliding with the true (customer, order) row;
+    *   - `production`: RocksDB state on both stages plus event-time TTL
+    *     on watermarked unions. The delay covers the chain's MIXED
+    *     version axes (stage-1 seqs up to packed shipdate·1e10
+    *     lineitem versions), so the watermark stays at zero through the
+    *     replay and timers are armed but never fire;
+    *   - `filesPerTrigger`: above one, each stage must still run >= 2
+    *     upserting microbatches, asserted from the sink logs.
+    * The customer side's constant version is positive because the
+    * watermarked union drops rows whose event time is at or below the
+    * epoch-0 watermark floor; the unwatermarked stage does not care. */
+  private def chain(spark: SparkSession, dir: String, salts: Int,
+                    production: Boolean, filesPerTrigger: Int): DataFrame =
+    withStreamConf(spark) {
+      if (!production) chainReplay(spark, dir, salts, filesPerTrigger)
+      else VersionedStreamJoin.withStateStoreProvider(spark) {
+        VersionedStreamJoin.withEventTimeTtl(horizonTtlMs,
+            watermarkDelay = "36500000 days") {
+          chainReplay(spark, dir, salts, filesPerTrigger)
+        }
+      }
+    }
+
+  private def chainReplay(spark: SparkSession, dir: String, salts: Int,
+                          filesPerTrigger: Int): DataFrame = {
+    import spark.implicits._
+    val tmp = java.nio.file.Files.createTempDirectory("graft_chain_")
+    val abLog = tmp.resolve("ablog")
+    val bcLog = tmp.resolve("bclog")
+    try {
+      // range-split chunked ingest dirs, shared by both chain rows
+      val (custDir, ordDir, liDir) = chainChunkDirs(spark, dir)
+
+      def src(d: java.nio.file.Path, schema: String,
+              files: Int = filesPerTrigger,
+              glob: String = "part-*"): DataFrame =
+        spark.readStream.schema(schema)
+          .option("maxFilesPerTrigger", files.toString)
+          .option("pathGlobFilter", glob)
+          .parquet(d.toString)
+
+      // stage 1: customer ⋈ orders keyed by custkey; every microbatch's
+      // emissions land in the relay log PARTITIONED (one file per
+      // shuffle partition per batch — no single-task coalesce funnel).
+      // The a-only arm below stays sound under delta emission because a
+      // key's LAST emission carries a non-null o_orderkey iff the key
+      // ever saw an order ((cust, None) is only emitted while ys is
+      // empty, and no deletions exist to empty it again).
+      val q1 = VersionedStreamJoin.fullOuterDelta[CustRow, OrdRow](
+          src(custDir, "c_custkey BIGINT, c_name STRING").as[CustRow],
+          src(ordDir, "o_orderkey BIGINT, o_custkey BIGINT, " +
+            "o_ver BIGINT, o_totalprice DOUBLE").as[OrdRow],
+          _.c_custkey.toString, _.o_custkey.toString,
+          _.c_custkey.toString, _.o_orderkey.toString,
+          _ => 1L, _.o_ver) // one customer version per id
+        .toDF()
+        .writeStream.outputMode("update")
+        .foreachBatch { (df: DataFrame, bid: Long) =>
+          writeBatchIdempotent(
+            df.select(col("key"), col("seq"),
+              col("x.c_custkey").as("c_custkey"),
+              col("x.c_name").as("c_name"),
+              col("y.o_orderkey").as("o_orderkey"),
+              col("y.o_totalprice").as("o_totalprice")),
+            abLog, bid)
+          ()
+        }.start()
+
+      val abSchema = "key STRING, seq BIGINT, c_custkey BIGINT, " +
+        "c_name STRING, o_orderkey BIGINT, o_totalprice DOUBLE"
+
+      // stage 2: (b-carrying AB rows) ⋈ lineitem keyed by orderkey, a
+      // file-source stream over the relay log. It starts WHILE stage 1
+      // is still emitting — the production topology — which is sound
+      // because the converged view is interleaving-independent. It
+      // takes up to a full stage-1 batch's files per trigger. The dir
+      // must exist before the source starts listing it.
+      java.nio.file.Files.createDirectories(abLog)
+      val lis = src(liDir, "l_orderkey BIGINT, l_linenumber INT, " +
+          "l_ver BIGINT, l_extendedprice DOUBLE").as[LiRow]
+        .flatMap(li => (0 until salts).map(s => (s, li)))
+      val q2 = VersionedStreamJoin.fullOuterDelta[AbRel, (Int, LiRow)](
+          src(abLog, abSchema, files = streamShufflePartitions.toInt,
+            glob = "b*")
+            .where(col("o_orderkey").isNotNull)
+            .select(col("seq"), col("c_custkey"), col("c_name"),
+              col("o_orderkey"), col("o_totalprice")).as[AbRel],
+          lis,
+          ab => ab.o_orderkey.toString + "#" + math.floorMod(ab.o_orderkey, salts),
+          li => li._2.l_orderkey.toString + "#" + li._1,
+          _.o_orderkey.toString,
+          li => li._2.l_orderkey.toString + "_" + li._2.l_linenumber,
+          _.seq, _._2.l_ver)
+        .toDF()
+        .writeStream.outputMode("update")
+        .foreachBatch { (df: DataFrame, bid: Long) =>
+          writeBatchIdempotent(
+            df.select(col("key"), col("seq"),
+              col("x.c_custkey").as("c_custkey"),
+              col("x.c_name").as("c_name"),
+              col("x.o_orderkey").as("o_orderkey"),
+              col("x.o_totalprice").as("o_totalprice"),
+              col("y._2.l_linenumber").as("l_linenumber"),
+              col("y._2.l_extendedprice").as("l_extendedprice")),
+            // NOT repartition(1)-bounded like runFileStream's sinks: the
+            // per-batch emission sets are large (~10^5 rows), and
+            // funneling them through one write task was A/B-measured at
+            // +1.3–1.8 s per row (min-of-4, sf0.1, matched controls)
+            bcLog, bid)
+          ()
+        }.start()
+      // drain stage 1 first (it feeds the relay), then stage 2; both
+      // have been processing concurrently since start
+      try {
+        q1.processAllAvailable()
+        q2.processAllAvailable()
+      } finally {
+        // nested so a throwing q1.stop() cannot leak q2
+        try q1.stop() finally q2.stop()
+      }
+
+      if (filesPerTrigger > 1) {
+        // the coarsened trigger is only sound while >= 2 upserting
+        // microbatches per stage keep multi-batch semantics exercised:
+        // count them from the logs' `b<bid>_p*` names
+        def distinctBids(d: java.nio.file.Path): Int =
+          listDir(d).flatMap { p =>
+            val n = p.getFileName.toString
+            if (n.startsWith("b") && n.contains("_p"))
+              n.drop(1).takeWhile(_.isDigit).toLongOption
+            else None
+          }.distinct.size
+        val (abBids, bcBids) = (distinctBids(abLog), distinctBids(bcLog))
+        require(abBids >= 2 && bcBids >= 2,
+          s"chain replay degraded to a single upserting microbatch " +
+            s"(ab log: $abBids distinct bids, bc log: $bcBids): " +
+            s"the $filesPerTrigger-files-per-trigger coarsening is only " +
+            "sound because >=2 upserting microbatches per stage keep " +
+            "multi-batch semantics exercised")
+      }
+
+      // converged stage-2 view under DELTA emission: the last emission
+      // for a key is only its last CHANGE, so convergence is per row
+      // identity — latest seq per (key, l_linenumber) for the
+      // lineitem-carrying rows (an AB-row update re-emits every pair at
+      // a higher seq, and a (None, li) row is superseded the same way
+      // once its AB row arrives) — plus the null-linenumber group, a
+      // key's (x, None) rows, valid only while the key never emitted a
+      // pair. Folded as groupBy + max_by: ONE partially-aggregating
+      // exchange instead of a whole-log window sort; seq ties per group
+      // are impossible (a key emits each identity at most once per
+      // batch, and seq increases per batch).
+      val bcStruct = struct(col("c_custkey"), col("c_name"),
+        col("o_orderkey"), col("o_totalprice"), col("l_linenumber"),
+        col("l_extendedprice"))
+      val perIdentity = spark.read
+        .schema(abSchema + ", l_linenumber INT, l_extendedprice DOUBLE")
+        .parquet(bcLog.toString)
+        .groupBy(col("key"), col("l_linenumber"))
+        .agg(max_by(bcStruct, col("seq")).as("r"))
+        .withColumn("has_li",
+          max(when(col("l_linenumber").isNotNull, 1).otherwise(0))
+            .over(Window.partitionBy(col("key"))))
+        .filter(col("l_linenumber").isNotNull || col("has_li") === 0)
+      // cross-salt suppression: a (None, lineitem) row is real only if
+      // NO sub-key of its base o_orderkey holds an AB row (x present ⟺
+      // o_orderkey non-null, since AbRel.o_orderkey is mandatory)
+      val unsalted = perIdentity
+        .withColumn("base_key", substring_index(col("key"), "#", 1))
+        .withColumn("has_x",
+          max(when(col("r.o_orderkey").isNotNull, 1).otherwise(0))
+            .over(Window.partitionBy(col("base_key"))))
+        .filter(col("r.o_orderkey").isNotNull || col("has_x") === 0)
+      val viaBc = unsalted.select(col("r.c_custkey"), col("r.c_name"),
+        col("r.o_orderkey"), col("r.o_totalprice"),
+        col("r.l_linenumber"), col("r.l_extendedprice"))
+        // collapse the salts-fold replicas
+        .distinct()
+      // converged stage-1 view: the a-only arm (no order ever came).
+      // Among a max-seq TIE (one batch changing two of a key's orders)
+      // max_by picks arbitrarily, but every tied row then carries a
+      // non-null o_orderkey and is filtered out either way.
+      val aOnly = spark.read.schema(abSchema).parquet(abLog.toString)
+        .groupBy(col("key"))
+        .agg(max_by(struct(col("c_custkey"), col("c_name"),
+          col("o_orderkey")), col("seq")).as("r"))
+        .filter(col("r.o_orderkey").isNull)
+        .select(col("r.c_custkey").as("c_custkey"),
+          col("r.c_name").as("c_name"),
+          lit(null).cast("long").as("o_orderkey"),
+          lit(null).cast("double").as("o_totalprice"),
+          lit(null).cast("int").as("l_linenumber"),
+          lit(null).cast("double").as("l_extendedprice"))
+      // localCheckpoint materializes the small converged answer so the
+      // tmp logs (every emission) can be deleted below
+      viaBc.unionByName(aOnly)
+        .orderBy(asc_nulls_first("c_custkey"),
+          asc_nulls_first("o_orderkey"),
+          asc_nulls_first("l_linenumber"))
+        .localCheckpoint()
+    } finally deleteRecursively(tmp)
+  }
 }

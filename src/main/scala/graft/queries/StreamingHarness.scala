@@ -19,7 +19,7 @@ private[graft] object StreamingHarness {
 
   private[graft] val chunks = 8
 
-  /** Coarsened replay trigger size — the s22 trigger discipline (r18)
+  /** Coarsened replay trigger size — the s22 trigger discipline
     * generalized: 4 files per trigger over the 8 replay chunks gives
     * 2+ microbatches, amortizing the per-microbatch fixed costs
     * (state-store commit, sink write + rename, incremental planning,
@@ -67,7 +67,7 @@ private[graft] object StreamingHarness {
     // validate ONCE at class load and fail fast with a clear message:
     // this value becomes spark.sql.shuffle.partitions AND relay
     // trigger sizes, where a non-numeric or non-positive value would
-    // otherwise surface as an opaque mid-query failure (r19 ADVICE)
+    // otherwise surface as an opaque mid-query failure
     require(raw.toIntOption.exists(_ > 0),
       s"SPARK_GRAFT_STREAM_PARTS must be a positive integer, got '$raw'" +
         " (it must also stay constant across a query's restarts - the" +
@@ -139,7 +139,7 @@ private[graft] object StreamingHarness {
     * content with no dedup logic of their own. Stable names also mean
     * a streaming file source that already consumed the first attempt
     * sees nothing new. Plain `mode("append")` logs lack exactly this
-    * property (r16 ADVICE on the s65/s66 relay).
+    * property (the s65/s66 relay relies on it).
     *
     * CONTRACT: a re-delivery must reproduce the first attempt's FILE
     * SET — deterministic content AND a stable part count across
@@ -175,7 +175,7 @@ private[graft] object StreamingHarness {
     // total parse of a file's `b<bid>_p<i>` index: None for a name
     // with no digit run after the prefix (a stray or foreign artifact
     // in the log dir must be ignored, not crash the microbatch with
-    // NumberFormatException — r17 ADVICE)
+    // NumberFormatException)
     def partIndex(p: java.nio.file.Path): Option[Int] = {
       val n = p.getFileName.toString
       if (!n.startsWith(prefix)) None
@@ -233,7 +233,7 @@ private[graft] object StreamingHarness {
     * newest mtime over its files. Part of the shared-ingest cache key so
     * a driver-side testdata regeneration invalidates the cache instead
     * of silently replaying stale chunks into the streaming rows (the
-    * events regeneration between r07 and r08 made this a live hazard:
+    * events table has been regenerated before, which made this a live hazard:
     * the oracle reads fresh parquet while a keyed-on-path cache would
     * keep serving the old vintage). */
   private[graft] def srcFingerprint(sfDir: String, srcTable: String): String = {
@@ -420,15 +420,17 @@ private[graft] object StreamingHarness {
       } finally deleteRecursively(tmp)
     }
 
-  /** Converged view of a raw update-mode join sink: keep each key's
-    * rows from its highest emission seq, then project to the batch
-    * J1/J2 output shape (shared by s1, s4 and s5 — all must hash-match
-    * their batch oracles). */
-  private[graft] def convergedJ1(raw: DataFrame): DataFrame = {
-    val wMax = Window.partitionBy(col("key"))
-    raw
-      .withColumn("max_seq", max(col("seq")).over(wMax))
+  /** A raw update-mode join sink's rows from each key's highest
+    * emission seq — the converged answer of every re-emitting variant. */
+  private[graft] def latestSeqPerKey(raw: DataFrame): DataFrame =
+    raw.withColumn("max_seq", max(col("seq")).over(Window.partitionBy(col("key"))))
       .filter(col("seq") === col("max_seq"))
+
+  /** Converged view of a raw update-mode join sink projected to the
+    * batch J1/J2/J5 output shape (every pair-emitting join twin must
+    * hash-match its batch oracle through it). */
+  private[graft] def convergedJ1(raw: DataFrame): DataFrame =
+    latestSeqPerKey(raw)
       .select(
         col("key").cast("long").as("user_id"),
         col("x.event_id").as("x_event_id"),
@@ -439,7 +441,35 @@ private[graft] object StreamingHarness {
         expr("timestamp_micros(y.ts_us)").as("y_ts"))
       .orderBy(col("user_id"), asc_nulls_first("x_type"),
         asc_nulls_first("y_type"))
-  }
+
+  /** Converged J3 (leftOuterSeq) sink projected to the batch
+    * j3_left_outer_seq shape: the ys array becomes a sorted
+    * comma-joined id string. */
+  private[graft] def convergedJ3(raw: DataFrame): DataFrame =
+    latestSeqPerKey(raw)
+      .select(
+        col("key").cast("long").as("user_id"),
+        element_at(col("xs"), 1).getField("event_id").as("x_event_id"),
+        element_at(col("xs"), 1).getField("event_type").as("x_type"),
+        expr("timestamp_micros(element_at(xs, 1).ts_us)").as("x_ts"),
+        sortedIds("ys").as("y_event_ids"),
+        size(col("ys")).cast("long").as("y_n"))
+      .orderBy(col("user_id"))
+
+  /** Converged J4 (fullOuterSeq) sink projected to the batch
+    * j4_full_outer_seq shape: both sides as sorted comma-joined id
+    * strings. */
+  private[graft] def convergedJ4(raw: DataFrame): DataFrame =
+    latestSeqPerKey(raw)
+      .select(
+        col("key").cast("long").as("user_id"),
+        sortedIds("xs").as("x_event_ids"),
+        sortedIds("ys").as("y_event_ids"))
+      .orderBy(col("user_id"))
+
+  private def sortedIds(side: String) =
+    concat_ws(",", sort_array(expr(s"transform($side, v -> v.event_id)"))
+      .cast("array<string>"))
 
   private[graft] def isX(e: Ev): Boolean =
     (e.event_type == "signup" || e.event_type == "error") && e.user_id % 3 != 0

@@ -10,8 +10,8 @@ import org.apache.spark.sql.streaming.{ExpiredTimerInfo, MapState, OutputMode,
   * Semantics are identical to the [[VersionedStreamJoin]] twins
   * (reference joins.scala:10-70, cogroupFunctions.scala:7-73):
   * latest-wins upsert state per (key, id), per-key re-expansion each
-  * trigger with a monotone emission seq; the variants differ only in
-  * their `expand`.
+  * trigger with a monotone emission seq, and the same [[StreamEmit]]
+  * variants over the one [[graft.core.JoinRules]] algebra.
   *
   * What the newer API buys at 100 TB:
   *   - per-id `MapState` entries instead of one monolithic state blob:
@@ -29,17 +29,17 @@ import org.apache.spark.sql.streaming.{ExpiredTimerInfo, MapState, OutputMode,
   */
 object TwsVersionedJoin {
 
-  /** Per-key processor: upsert maps + seq counter + optional
-    * event-time retirement timer. `expand` turns the key's compacted
-    * (id-ordered) sides into this trigger's emissions — the J1/J2
-    * variants differ only here, exactly like the fMGWS core's
-    * `joined(...)(expand)`. */
+  /** Per-key processor: per-id `MapState` on each side + seq counter +
+    * optional event-time retirement timer. Each trigger reads the key's
+    * maps once, upserts the batch in memory ([[graft.core.JoinRules.upsert]] via
+    * [[VersionedStreamJoin.upsertBatch]]), writes back only the changed
+    * ids, and hands the result to the variant's `expand` — the same
+    * [[StreamEmit]] variants the fMGWS core runs. */
   private final class TwsJoinProcessor[X, Y, U](
       idFromX: X => String, idFromY: Y => String,
       tsFromX: X => Long, tsFromY: Y => Long,
       ttlMs: Option[Long], ex: Encoder[X], ey: Encoder[Y],
-      expand: (String, Long, IndexedSeq[X], IndexedSeq[Y]) =>
-        Iterator[U])
+      expand: StreamEmit.Expand[X, Y, U])
     extends StatefulProcessor[String, Tagged[X, Y], U] {
 
     @transient private var xs: MapState[String, X] = _
@@ -57,22 +57,10 @@ object TwsVersionedJoin {
 
     override def handleInputRows(key: String, rows: Iterator[Tagged[X, Y]],
         timerValues: TimerValues): Iterator[U] = {
-      var maxEtsMs = Long.MinValue
-      rows.foreach { t =>
-        maxEtsMs = math.max(maxEtsMs, t.ets.getTime)
-        t.x.foreach { x =>
-          val id = idFromX(x)
-          // strict >: on equal ts the earlier-arrived version wins,
-          // matching the reference (versionDeduplicator.scala:17,25)
-          if (!xs.containsKey(id) || tsFromX(x) > tsFromX(xs.getValue(id)))
-            xs.updateValue(id, x)
-        }
-        t.y.foreach { y =>
-          val id = idFromY(y)
-          if (!ys.containsKey(id) || tsFromY(y) > tsFromY(ys.getValue(id)))
-            ys.updateValue(id, y)
-        }
-      }
+      val k = VersionedStreamJoin.upsertBatch(xs.iterator().toMap,
+        ys.iterator().toMap, rows, idFromX, idFromY, tsFromX, tsFromY)
+      k.newX.foreach(id => xs.updateValue(id, k.xs(id)))
+      k.newY.foreach(id => ys.updateValue(id, k.ys(id)))
       val seq = (if (seqS.exists()) seqS.get() else 0L) + 1
       seqS.update(seq)
       ttlMs.foreach { ms =>
@@ -82,12 +70,10 @@ object TwsVersionedJoin {
         // state-store-backed and not guaranteed safe under concurrent
         // mutation on the RocksDB provider.
         getHandle.listTimers().toList.foreach(getHandle.deleteTimer)
-        val anchor = math.max(timerValues.getCurrentWatermarkInMs(), maxEtsMs)
+        val anchor = math.max(timerValues.getCurrentWatermarkInMs(), k.maxEtsMs)
         if (anchor > Long.MinValue) getHandle.registerTimer(anchor + ms)
       }
-      val xsNow = xs.iterator().toIndexedSeq.sortBy(_._1).map(_._2)
-      val ysNow = ys.iterator().toIndexedSeq.sortBy(_._1).map(_._2)
-      expand(key, seq, xsNow, ysNow)
+      expand(key, seq, k)
     }
 
     /** Key retirement: drop state and counter; a later record rebuilds
@@ -116,12 +102,7 @@ object TwsVersionedJoin {
       et: Encoder[Tagged[X, Y]], es: Encoder[String],
       ee: Encoder[Emitted[X, Y]]): Dataset[Emitted[X, Y]] =
     run(dsx, dsy, keyFromX, keyFromY, idFromX, idFromY, tsFromX, tsFromY,
-      ttlMs, watermarkDelay) { (key, seq, xs, ys) =>
-      if (xs.isEmpty) ys.iterator.map(y => Emitted(key, seq, None, Some(y)))
-      else if (ys.isEmpty) xs.iterator.map(x => Emitted(key, seq, Some(x), None))
-      else for (x <- xs.iterator; y <- ys)
-        yield Emitted(key, seq, Some(x), Some(y))
-    }
+      ttlMs, watermarkDelay)(StreamEmit.fullOuter[X, Y])
 
   /** C5/J5 inner via transformWithState — emits only when both sides
     * are populated (the reference defined-but-never-wired cogroup
@@ -140,10 +121,7 @@ object TwsVersionedJoin {
       et: Encoder[Tagged[X, Y]], es: Encoder[String],
       ee: Encoder[Emitted[X, Y]]): Dataset[Emitted[X, Y]] =
     run(dsx, dsy, keyFromX, keyFromY, idFromX, idFromY, tsFromX, tsFromY,
-      ttlMs, watermarkDelay) { (key, seq, xs, ys) =>
-      for (x <- xs.iterator; y <- ys)
-        yield Emitted(key, seq, Some(x), Some(y))
-    }
+      ttlMs, watermarkDelay)(StreamEmit.inner[X, Y])
 
   /** J2 left-outer via transformWithState — the reference's per-KEY X
     * dedup quirk (cogroupFunctions.scala:31-47): at most one x per key,
@@ -162,14 +140,7 @@ object TwsVersionedJoin {
       et: Encoder[Tagged[X, Y]], es: Encoder[String],
       ee: Encoder[Emitted[X, Y]]): Dataset[Emitted[X, Y]] =
     run(dsx, dsy, keyFromX, keyFromY, idFromX, idFromY, tsFromX, tsFromY,
-      ttlMs, watermarkDelay) { (key, seq, xs, ys) =>
-      graft.core.VersionedDedup.latestOne[X](xs.iterator, tsFromX) match {
-        case None => Iterator.empty
-        case Some(x) =>
-          if (ys.isEmpty) Iterator.single(Emitted(key, seq, Some(x), None))
-          else ys.iterator.map(y => Emitted(key, seq, Some(x), Some(y)))
-      }
-    }
+      ttlMs, watermarkDelay)(StreamEmit.leftOuter[X, Y](tsFromX))
 
   /** J3 left-outer nested via transformWithState: per trigger the
     * key's single latest x (the per-key quirk, as [[leftOuter]]) with
@@ -187,12 +158,7 @@ object TwsVersionedJoin {
       et: Encoder[Tagged[X, Y]], es: Encoder[String],
       ee: Encoder[EmittedSeq[X, Y]]): Dataset[EmittedSeq[X, Y]] =
     run(dsx, dsy, keyFromX, keyFromY, idFromX, idFromY, tsFromX, tsFromY,
-      ttlMs, watermarkDelay) { (key, seq, xs, ys) =>
-      graft.core.VersionedDedup.latestOne[X](xs.iterator, tsFromX) match {
-        case None    => Iterator.empty
-        case Some(x) => Iterator.single(EmittedSeq(key, seq, Seq(x), ys))
-      }
-    }
+      ttlMs, watermarkDelay)(StreamEmit.leftOuterSeq[X, Y](tsFromX))
 
   /** J4 per-key cogroup via transformWithState: all latest versions on
     * both sides as id-ordered Seqs, either possibly empty (reference
@@ -209,9 +175,7 @@ object TwsVersionedJoin {
       et: Encoder[Tagged[X, Y]], es: Encoder[String],
       ee: Encoder[EmittedSeq[X, Y]]): Dataset[EmittedSeq[X, Y]] =
     run(dsx, dsy, keyFromX, keyFromY, idFromX, idFromY, tsFromX, tsFromY,
-      ttlMs, watermarkDelay) { (key, seq, xs, ys) =>
-      Iterator.single(EmittedSeq(key, seq, xs, ys))
-    }
+      ttlMs, watermarkDelay)(StreamEmit.fullOuterSeq[X, Y])
 
   /** Shared driver: tag + union the sides, watermark iff TTL'd, group
     * by key, run the processor with the variant's `expand`. */
@@ -221,16 +185,12 @@ object TwsVersionedJoin {
       idFromX: X => String, idFromY: Y => String,
       tsFromX: X => Long, tsFromY: Y => Long,
       ttlMs: Option[Long], watermarkDelay: String)(
-      expand: (String, Long, IndexedSeq[X], IndexedSeq[Y]) =>
-        Iterator[U])(
+      expand: StreamEmit.Expand[X, Y, U])(
       implicit ex: Encoder[X], ey: Encoder[Y],
       et: Encoder[Tagged[X, Y]], es: Encoder[String],
       eu: Encoder[U]): Dataset[U] = {
-    val tagged = dsx
-      .map(x => Tagged[X, Y](keyFromX(x), Some(x), None,
-        new java.sql.Timestamp(tsFromX(x))))
-      .union(dsy.map(y => Tagged[X, Y](keyFromY(y), None, Some(y),
-        new java.sql.Timestamp(tsFromY(y)))))
+    val tagged = VersionedStreamJoin.tagged(dsx, dsy, keyFromX, keyFromY,
+      tsFromX, tsFromY)
     val (withWm, timeMode) = ttlMs match {
       case Some(_) =>
         (tagged.withWatermark("ets", watermarkDelay), TimeMode.EventTime())

@@ -3,6 +3,8 @@ package graft.streaming
 import org.apache.spark.sql.{Dataset, Encoder}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
+import graft.core.JoinRules
+
 /** One emitted dedup row: the key's current latest versions (one per
   * id, ordered by id for determinism), stamped with the per-key
   * emission seq — same convergence contract as the streaming joins
@@ -30,7 +32,8 @@ final case class Stamped[X](x: X, ets: java.sql.Timestamp)
   */
 object VersionedStreamDedup {
 
-  /** Latest version per (key, id); per trigger each touched key
+  /** Latest version per (key, id) ([[JoinRules.upsert]]: on equal
+    * versions the earlier arrival wins); per trigger each touched key
     * re-emits its full compacted set. */
   def latestPerKeyId[X](
       dsx: Dataset[X],
@@ -42,17 +45,10 @@ object VersionedStreamDedup {
       OutputMode.Update, GroupStateTimeout.NoTimeout) {
       (key: String, rows: Iterator[X], state: GroupState[DedupState[X]]) =>
         val st = state.getOption.getOrElse(DedupState[X](Map.empty, 0L))
-        var m = st.xs
-        rows.foreach { x =>
-          val id = idFromX(x)
-          // strict >: on equal ts the earlier-arrived version wins,
-          // matching the reference (versionDeduplicator.scala:44,53)
-          if (!m.contains(id) || tsFromX(x) > tsFromX(m(id)))
-            m = m.updated(id, x)
-        }
+        val m = JoinRules.upsertAll(st.xs, rows)(idFromX, tsFromX)
         val seq = st.seq + 1
         state.update(DedupState(m, seq))
-        Iterator.single(EmittedDedup(key, seq, m.toSeq.sortBy(_._1).map(_._2)))
+        Iterator.single(EmittedDedup(key, seq, JoinRules.byId(m)))
     }
 
   /** [[latestPerKeyId]] with watermark-aligned key retirement whose
@@ -96,21 +92,15 @@ object VersionedStreamDedup {
           } else {
             val st = state.getOption.getOrElse(DedupState[X](Map.empty, 0L))
             var m = st.xs
-            var maxEtsMs = Long.MinValue
+            var anchor = state.getCurrentWatermarkMs()
             rows.foreach { s =>
-              maxEtsMs = math.max(maxEtsMs, s.ets.getTime)
-              val id = idFromX(s.x)
-              // strict >: on equal ts the earlier-arrived version wins
-              if (!m.contains(id) || tsFromX(s.x) > tsFromX(m(id)))
-                m = m.updated(id, s.x)
+              m = JoinRules.upsert(m, s.x)(idFromX, tsFromX)
+              anchor = math.max(anchor, s.ets.getTime)
             }
             val seq = st.seq + 1
             state.update(DedupState(m, seq))
-            val anchor = math.max(state.getCurrentWatermarkMs(), maxEtsMs)
-            if (anchor > Long.MinValue)
-              state.setTimeoutTimestamp(anchor + ttlMs)
-            Iterator.single(
-              EmittedDedup(key, seq, m.toSeq.sortBy(_._1).map(_._2)))
+            state.setTimeoutTimestamp(anchor + ttlMs)
+            Iterator.single(EmittedDedup(key, seq, JoinRules.byId(m)))
           }
       }
   }

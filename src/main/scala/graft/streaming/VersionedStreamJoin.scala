@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{Dataset, Encoder}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
-import graft.core.VersionedDedup
+import graft.core.JoinRules
 
 /** One emitted join row, stamped with the per-key emission sequence so
   * downstream consumers can (a) apply the reference's latest-wins dedup
@@ -155,9 +155,9 @@ object VersionedStreamJoin {
     }
   }
 
-  /** J1: full-outer — emits (None,Some)/(Some,None) for unmatched
-    * sides, else the per-key cross product of latest versions
-    * (reference cgfFullOuter, cogroupFunctions.scala:7-30). */
+  /** J1: full-outer — per trigger each touched key re-emits its
+    * [[JoinRules.fullOuter]] result (reference cgfFullOuter,
+    * cogroupFunctions.scala:7-30). */
   def fullOuter[X, Y](
       dsx: Dataset[X], dsy: Dataset[Y],
       keyFromX: X => String, keyFromY: Y => String,
@@ -167,27 +167,15 @@ object VersionedStreamJoin {
       et: Encoder[Tagged[X, Y]], es: Encoder[String],
       ej: Encoder[JoinState[X, Y]],
       ee: Encoder[Emitted[X, Y]]): Dataset[Emitted[X, Y]] =
-    joined(dsx, dsy, keyFromX, keyFromY, idFromX, idFromY, tsFromX, tsFromY) {
-      (key, seq, _, _, xs, ys) =>
-        if (xs.isEmpty) ys.valuesIterator.map(y => Emitted(key, seq, None, Some(y)))
-        else if (ys.isEmpty) xs.valuesIterator.map(x => Emitted(key, seq, Some(x), None))
-        else for (x <- xs.valuesIterator; y <- ys.values)
-          yield Emitted(key, seq, Some(x), Some(y))
-    }
+    joined(dsx, dsy, keyFromX, keyFromY, idFromX, idFromY, tsFromX, tsFromY)(
+      StreamEmit.fullOuter[X, Y])
 
   /** [[fullOuter]] with DELTA emission: per trigger a touched key emits
-    * only the join rows whose content CHANGED this batch — the pairs
-    * involving a newly-arrived or newly-superseded version on either
-    * side — instead of re-emitting its full current result. State,
-    * upsert semantics, seq stamping and TTL behavior are byte-identical
-    * to [[fullOuter]]; only the emission set shrinks. The changed set
-    * is exact for the full-outer shape:
-    *   - both sides populated: (changed x) × (all y) ∪ (unchanged x) ×
-    *     (changed y) — covers the None→Some side transitions too, since
-    *     a previously-empty side makes every entry of it "changed" and
-    *     therefore re-pairs the whole key;
-    *   - one side empty: the changed entries of the populated side as
-    *     (x, None) / (None, y) rows.
+    * only the join rows whose content CHANGED this batch
+    * ([[JoinRules.fullOuterDelta]]) instead of its full current result.
+    * State, upsert semantics, seq stamping and TTL behavior are those of
+    * [[fullOuter]]; only the emission set shrinks.
+    *
     * A downstream fold must therefore converge per ROW IDENTITY —
     * latest seq per (key, x-id, y-id), with (x, None) rows valid only
     * while the key has never emitted a pair — instead of [[fullOuter]]'s
@@ -196,11 +184,8 @@ object VersionedStreamJoin {
     * guard: the pair that supersedes one always carries a higher seq
     * for the same y id, so per-identity latest-wins already retires
     * it.) Used by the chain rows (s11/s22), where every stage-1
-    * re-emission is a stage-2 state upsert: pruning the relay volume
-    * cuts the downstream per-row state work at its source — the
-    * guide's "shuffle fewer bytes" applied to a stream relay. At
-    * 100 TB the full re-emission is quadratic in a hot key's update
-    * count; the delta is linear. */
+    * re-emission is a stage-2 state upsert: the full re-emission is
+    * quadratic in a hot key's update count, the delta is linear. */
   def fullOuterDelta[X, Y](
       dsx: Dataset[X], dsy: Dataset[Y],
       keyFromX: X => String, keyFromY: Y => String,
@@ -210,35 +195,12 @@ object VersionedStreamJoin {
       et: Encoder[Tagged[X, Y]], es: Encoder[String],
       ej: Encoder[JoinState[X, Y]],
       ee: Encoder[Emitted[X, Y]]): Dataset[Emitted[X, Y]] =
-    joined(dsx, dsy, keyFromX, keyFromY, idFromX, idFromY, tsFromX, tsFromY) {
-      (key, seq, xs0, ys0, xs, ys) =>
-        // an entry changed iff absent before the batch or replaced by a
-        // strictly newer version (upsert is strict >, so an equal
-        // version is the same entry)
-        def xChanged(id: String): Boolean =
-          !xs0.contains(id) || tsFromX(xs0(id)) != tsFromX(xs(id))
-        def yChanged(id: String): Boolean =
-          !ys0.contains(id) || tsFromY(ys0(id)) != tsFromY(ys(id))
-        if (xs.isEmpty)
-          ys.iterator.collect { case (id, y) if yChanged(id) =>
-            Emitted[X, Y](key, seq, None, Some(y)) }
-        else if (ys.isEmpty)
-          xs.iterator.collect { case (id, x) if xChanged(id) =>
-            Emitted[X, Y](key, seq, Some(x), None) }
-        else {
-          val (newX, oldX) = xs.partition { case (id, _) => xChanged(id) }
-          val newYs = ys.iterator
-            .collect { case (id, y) if yChanged(id) => y }.toList
-          (for (x <- newX.valuesIterator; y <- ys.values)
-            yield Emitted(key, seq, Some(x), Some(y))) ++
-          (for (x <- oldX.valuesIterator; y <- newYs.iterator)
-            yield Emitted(key, seq, Some(x), Some(y)))
-        }
-    }
+    joined(dsx, dsy, keyFromX, keyFromY, idFromX, idFromY, tsFromX, tsFromY)(
+      StreamEmit.fullOuterDelta[X, Y])
 
-  /** J2: left-outer — at most one x per key (latest by ts over the
-    * whole key, the reference quirk, cogroupFunctions.scala:31-47);
-    * keys with no x emit nothing. */
+  /** J2: left-outer — at most one x per key ([[JoinRules.leftOuter]],
+    * the reference quirk, cogroupFunctions.scala:31-47); keys with no x
+    * emit nothing. */
   def leftOuter[X, Y](
       dsx: Dataset[X], dsy: Dataset[Y],
       keyFromX: X => String, keyFromY: Y => String,
@@ -248,15 +210,8 @@ object VersionedStreamJoin {
       et: Encoder[Tagged[X, Y]], es: Encoder[String],
       ej: Encoder[JoinState[X, Y]],
       ee: Encoder[Emitted[X, Y]]): Dataset[Emitted[X, Y]] =
-    joined(dsx, dsy, keyFromX, keyFromY, idFromX, idFromY, tsFromX, tsFromY) {
-      (key, seq, _, _, xs, ys) =>
-        VersionedDedup.latestOne(xs.valuesIterator, tsFromX) match {
-          case None => Iterator.empty
-          case Some(x) =>
-            if (ys.isEmpty) Iterator.single(Emitted(key, seq, Some(x), None))
-            else ys.valuesIterator.map(y => Emitted(key, seq, Some(x), Some(y)))
-        }
-    }
+    joined(dsx, dsy, keyFromX, keyFromY, idFromX, idFromY, tsFromX, tsFromY)(
+      StreamEmit.leftOuter[X, Y](tsFromX))
 
   /** J5 analog: inner — emits only when both sides are populated. */
   def inner[X, Y](
@@ -268,43 +223,24 @@ object VersionedStreamJoin {
       et: Encoder[Tagged[X, Y]], es: Encoder[String],
       ej: Encoder[JoinState[X, Y]],
       ee: Encoder[Emitted[X, Y]]): Dataset[Emitted[X, Y]] =
-    joined(dsx, dsy, keyFromX, keyFromY, idFromX, idFromY, tsFromX, tsFromY) {
-      (key, seq, _, _, xs, ys) =>
-        for (x <- xs.valuesIterator; y <- ys.values)
-          yield Emitted(key, seq, Some(x), Some(y))
-    }
+    joined(dsx, dsy, keyFromX, keyFromY, idFromX, idFromY, tsFromX, tsFromY)(
+      StreamEmit.inner[X, Y])
 
   /** Streaming AS-OF (point-in-time) join — the production variant the
     * versioned-join state machinery was built for: every x row is
     * enriched with the y version IN EFFECT at x's own event time (the
-    * latest y with ts(y) <= ts(x); ties count as "before", matching
-    * the batch q_asof_join / DuckDB `ASOF JOIN ... ON x.ts >= y.ts`),
-    * or None when no y existed yet — leakage-free feature attachment
-    * over a live stream. Per trigger each touched key re-emits all its
-    * xs with their in-effect y, so a LATE y (or a newer version of an
-    * old y id) retroactively corrects every x it should have served:
-    * the converged result (max seq per key) is arrival-order-free and
-    * equals the batch as-of by construction. The per-key y timeline is
-    * sorted once per trigger and each x resolves by binary search —
-    * O((|xs|+|ys|)·log|ys|), never a rescan of y per x (the re-scan
-    * shape is what makes naive range joins die at 100 TB). State holds
-    * latest-per-id on both sides, exactly like the other variants; at
-    * scale, y versions strictly SHADOWED below the watermark (a newer
-    * y also at-or-below it) can be evicted — compose [[withEventTimeTtl]]
-    * for whole-key retirement, the same knob the other variants use.
-    *
-    * TIE-BREAK INVARIANT: among equal-ts y versions the timeline
-    * orders by id NUMERIC-AWARE (length, then lexicographic — numeric
-    * order ONLY for non-negative decimal ids WITHOUT leading zeros:
-    * "007" sorts after "12", and non-numeric ids order by length
-    * before content; the pick stays deterministic either way), and
-    * the search picks the boundary element; a SQL ASOF oracle picks
-    * an ARBITRARY
-    * row among equal-ts matches, so hash-comparison against such an
-    * oracle additionally relies on per-key timestamp UNIQUENESS on
-    * the y side (the driver fixtures hold it — event timestamps are
-    * unique per user). Equal-ts correctness of the operator itself
-    * does not depend on it: the choice is deterministic either way. */
+    * latest y with ts(y) <= ts(x), [[JoinRules.asOf]]; matching the
+    * batch q_asof_join / DuckDB `ASOF JOIN ... ON x.ts >= y.ts`), or
+    * None when no y existed yet — leakage-free feature attachment over
+    * a live stream. Per trigger each touched key re-emits all its xs
+    * with their in-effect y, so a LATE y (or a newer version of an old
+    * y id) retroactively corrects every x it should have served: the
+    * converged result (max seq per key) is arrival-order-free and
+    * equals the batch as-of by construction. State holds latest-per-id
+    * on both sides, exactly like the other variants; at scale, y
+    * versions strictly SHADOWED below the watermark (a newer y also
+    * at-or-below it) can be evicted — compose [[withEventTimeTtl]] for
+    * whole-key retirement, the same knob the other variants use. */
   def asOf[X, Y](
       dsx: Dataset[X], dsy: Dataset[Y],
       keyFromX: X => String, keyFromY: Y => String,
@@ -314,31 +250,14 @@ object VersionedStreamJoin {
       et: Encoder[Tagged[X, Y]], es: Encoder[String],
       ej: Encoder[JoinState[X, Y]],
       ee: Encoder[Emitted[X, Y]]): Dataset[Emitted[X, Y]] =
-    joined(dsx, dsy, keyFromX, keyFromY, idFromX, idFromY, tsFromX, tsFromY) {
-      (key, seq, _, _, xs, ys) =>
-        // (length, lexicographic) ≡ numeric ONLY for unpadded
-        // non-negative decimal ids — see the tie-break scaladoc
-        val timeline = ys.valuesIterator.toIndexedSeq
-          .sortBy(y => (tsFromY(y), idFromY(y).length, idFromY(y)))
-        xs.toSeq.sortBy(_._1).iterator.map { case (_, x) =>
-          val xt = tsFromX(x)
-          var lo = 0; var hi = timeline.length - 1; var best = -1
-          while (lo <= hi) {
-            val mid = (lo + hi) >>> 1
-            if (tsFromY(timeline(mid)) <= xt) { best = mid; lo = mid + 1 }
-            else hi = mid - 1
-          }
-          Emitted(key, seq, Some(x),
-            if (best >= 0) Some(timeline(best)) else None)
-        }
-    }
+    joined(dsx, dsy, keyFromX, keyFromY, idFromX, idFromY, tsFromX, tsFromY)(
+      StreamEmit.asOf[X, Y](tsFromX, tsFromY, forward = false))
 
   /** FORWARD as-of: each x resolves to the key's EARLIEST y version
     * at-or-AFTER its own timestamp (x.ts <= y.ts) — the streaming
     * next-action attribution shape (time-to-convert labels,
     * post-signup windows). Same state and convergence contract as
-    * [[asOf]]; only the binary search flips (first y with ts >= x.ts
-    * instead of last with ts <= x.ts). Forward resolution is
+    * [[asOf]]; only the search direction flips. Forward resolution is
     * inherently retroactive in a stream — the answer for an x can
     * improve whenever an earlier-qualifying y arrives late — which is
     * exactly what the per-trigger re-emit + converged (max seq per
@@ -354,27 +273,11 @@ object VersionedStreamJoin {
       et: Encoder[Tagged[X, Y]], es: Encoder[String],
       ej: Encoder[JoinState[X, Y]],
       ee: Encoder[Emitted[X, Y]]): Dataset[Emitted[X, Y]] =
-    joined(dsx, dsy, keyFromX, keyFromY, idFromX, idFromY, tsFromX, tsFromY) {
-      (key, seq, _, _, xs, ys) =>
-        // (length, lexicographic) ≡ numeric ONLY for unpadded
-        // non-negative decimal ids — see the tie-break scaladoc
-        val timeline = ys.valuesIterator.toIndexedSeq
-          .sortBy(y => (tsFromY(y), idFromY(y).length, idFromY(y)))
-        xs.toSeq.sortBy(_._1).iterator.map { case (_, x) =>
-          val xt = tsFromX(x)
-          var lo = 0; var hi = timeline.length - 1; var best = -1
-          while (lo <= hi) {
-            val mid = (lo + hi) >>> 1
-            if (tsFromY(timeline(mid)) >= xt) { best = mid; hi = mid - 1 }
-            else lo = mid + 1
-          }
-          Emitted(key, seq, Some(x),
-            if (best >= 0) Some(timeline(best)) else None)
-        }
-    }
+    joined(dsx, dsy, keyFromX, keyFromY, idFromX, idFromY, tsFromX, tsFromY)(
+      StreamEmit.asOf[X, Y](tsFromX, tsFromY, forward = true))
 
   /** J3: left-outer nested — per trigger, the key's single latest x
-    * (per-key dedup quirk) with all latest ys as a Seq (empty allowed);
+    * (per-key dedup quirk) with all latest ys as an id-ordered Seq;
     * keys with no x emit nothing (reference joins.scala:39-54, C3). */
   def leftOuterSeq[X, Y](
       dsx: Dataset[X], dsy: Dataset[Y],
@@ -385,14 +288,8 @@ object VersionedStreamJoin {
       et: Encoder[Tagged[X, Y]], es: Encoder[String],
       ej: Encoder[JoinState[X, Y]],
       ee: Encoder[EmittedSeq[X, Y]]): Dataset[EmittedSeq[X, Y]] =
-    joined[X, Y, EmittedSeq[X, Y]](dsx, dsy, keyFromX, keyFromY,
-      idFromX, idFromY, tsFromX, tsFromY) { (key, seq, _, _, xs, ys) =>
-      VersionedDedup.latestOne(xs.valuesIterator, tsFromX) match {
-        case None    => Iterator.empty
-        case Some(x) => Iterator.single(EmittedSeq(key, seq, Seq(x),
-          ys.toSeq.sortBy(_._1).map(_._2)))
-      }
-    }
+    joined(dsx, dsy, keyFromX, keyFromY, idFromX, idFromY, tsFromX, tsFromY)(
+      StreamEmit.leftOuterSeq[X, Y](tsFromX))
 
   /** J4: per-key cogroup — all latest versions on both sides as Seqs,
     * either possibly empty (reference joins.scala:56-70, C4). */
@@ -405,37 +302,54 @@ object VersionedStreamJoin {
       et: Encoder[Tagged[X, Y]], es: Encoder[String],
       ej: Encoder[JoinState[X, Y]],
       ee: Encoder[EmittedSeq[X, Y]]): Dataset[EmittedSeq[X, Y]] =
-    joined[X, Y, EmittedSeq[X, Y]](dsx, dsy, keyFromX, keyFromY,
-      idFromX, idFromY, tsFromX, tsFromY) { (key, seq, _, _, xs, ys) =>
-      Iterator.single(EmittedSeq(key, seq,
-        xs.toSeq.sortBy(_._1).map(_._2), ys.toSeq.sortBy(_._1).map(_._2)))
+    joined(dsx, dsy, keyFromX, keyFromY, idFromX, idFromY, tsFromX, tsFromY)(
+      StreamEmit.fullOuterSeq[X, Y])
+
+  /** Both sides as one keyed [[Tagged]] stream whose event time is the
+    * record's version. */
+  private[streaming] def tagged[X, Y](
+      dsx: Dataset[X], dsy: Dataset[Y],
+      keyFromX: X => String, keyFromY: Y => String,
+      tsFromX: X => Long, tsFromY: Y => Long)(
+      implicit et: Encoder[Tagged[X, Y]]): Dataset[Tagged[X, Y]] =
+    dsx.map(x => Tagged[X, Y](keyFromX(x), Some(x), None,
+        new java.sql.Timestamp(tsFromX(x))))
+      .union(dsy.map(y => Tagged[X, Y](keyFromY(y), None, Some(y),
+        new java.sql.Timestamp(tsFromY(y)))))
+
+  /** One trigger's rows for a key upserted into its latest-per-id maps
+    * with [[JoinRules.upsert]], in one pass that also takes the newest
+    * event time delivered. */
+  private[streaming] def upsertBatch[X, Y](
+      xs: Map[String, X], ys: Map[String, Y], rows: Iterator[Tagged[X, Y]],
+      idFromX: X => String, idFromY: Y => String,
+      tsFromX: X => Long, tsFromY: Y => Long): KeyUpdate[X, Y] = {
+    var xs1 = xs
+    var ys1 = ys
+    var maxEtsMs = Long.MinValue
+    rows.foreach { t =>
+      t.x.foreach(x => xs1 = JoinRules.upsert(xs1, x)(idFromX, tsFromX))
+      t.y.foreach(y => ys1 = JoinRules.upsert(ys1, y)(idFromY, tsFromY))
+      maxEtsMs = math.max(maxEtsMs, t.ets.getTime)
     }
+    KeyUpdate(xs, ys, xs1, ys1, maxEtsMs)
+  }
 
   /** Shared core: tagged union → keyed latest-wins upsert state →
-    * per-trigger re-expansion via `expand`, which receives the key's
-    * state maps BEFORE and AFTER the batch's upserts (pre-batch maps
-    * let [[fullOuterDelta]] emit only changed rows; the full-result
-    * variants ignore them). */
+    * per-trigger re-expansion via `expand`. */
   private def joined[X, Y, U](
       dsx: Dataset[X], dsy: Dataset[Y],
       keyFromX: X => String, keyFromY: Y => String,
       idFromX: X => String, idFromY: Y => String,
       tsFromX: X => Long, tsFromY: Y => Long)(
-      expand: (String, Long, Map[String, X], Map[String, Y],
-        Map[String, X], Map[String, Y]) => Iterator[U])(
+      expand: StreamEmit.Expand[X, Y, U])(
       implicit ex: Encoder[X], ey: Encoder[Y],
       et: Encoder[Tagged[X, Y]], es: Encoder[String],
       ej: Encoder[JoinState[X, Y]],
       ee: Encoder[U]): Dataset[U] = {
-
-    val taggedRaw = dsx
-      .map(x => Tagged[X, Y](keyFromX(x), Some(x), None,
-        new java.sql.Timestamp(tsFromX(x))))
-      .union(dsy.map(y => Tagged[X, Y](keyFromY(y), None, Some(y),
-        new java.sql.Timestamp(tsFromY(y)))))
-
+    val taggedRaw = tagged(dsx, dsy, keyFromX, keyFromY, tsFromX, tsFromY)
     val ttl = ttlConf.get() // captured at build time, serialized into the op
-    val (tagged, timeoutConf) = ttl match {
+    val (input, timeoutConf) = ttl match {
       case Some(TtlConf(_, EventTimeTtl(delay))) =>
         (taggedRaw.withWatermark("ets", delay),
           GroupStateTimeout.EventTimeTimeout)
@@ -444,7 +358,7 @@ object VersionedStreamJoin {
       case None => (taggedRaw, GroupStateTimeout.NoTimeout)
     }
 
-    tagged.groupByKey(_.key).flatMapGroupsWithState(
+    input.groupByKey(_.key).flatMapGroupsWithState(
       OutputMode.Update, timeoutConf) {
       (key: String, rows: Iterator[Tagged[X, Y]],
        state: GroupState[JoinState[X, Y]]) =>
@@ -456,28 +370,10 @@ object VersionedStreamJoin {
         } else {
           val st = state.getOption.getOrElse(
             JoinState[X, Y](Map.empty, Map.empty, 0L))
-          var xs = st.xs
-          var ys = st.ys
-          var maxEtsMs = Long.MinValue // latest event time in this batch
-          rows.foreach { t =>
-            maxEtsMs = math.max(maxEtsMs, t.ets.getTime)
-            t.x.foreach { x =>
-              val id = idFromX(x)
-              // strict >: on equal ts the earlier-arrived version wins,
-              // matching the reference (versionDeduplicator.scala:17,25)
-              if (!xs.contains(id) || tsFromX(x) > tsFromX(xs(id)))
-                xs = xs.updated(id, x)
-            }
-            t.y.foreach { y =>
-              val id = idFromY(y)
-              if (!ys.contains(id) || tsFromY(y) > tsFromY(ys(id)))
-                ys = ys.updated(id, y)
-            }
-          }
+          val k = upsertBatch(st.xs, st.ys, rows,
+            idFromX, idFromY, tsFromX, tsFromY)
           val seq = st.seq + 1
-          state.update(JoinState(xs, ys, seq))
-          val xs0 = st.xs
-          val ys0 = st.ys
+          state.update(JoinState(k.xs, k.ys, seq))
           ttl.foreach {
             case TtlConf(ms, ProcessingTimeTtl) => state.setTimeoutDuration(ms)
             case TtlConf(ms, _: EventTimeTtl) =>
@@ -492,12 +388,59 @@ object VersionedStreamJoin {
               // key and restarting its emission seq — nondeterministic
               // under input chunking. The data-side anchor keeps the
               // timeout ≥ the key's own event-time frontier.
-              val anchor = math.max(state.getCurrentWatermarkMs(), maxEtsMs)
+              val anchor = math.max(state.getCurrentWatermarkMs(), k.maxEtsMs)
               if (anchor > Long.MinValue)
                 state.setTimeoutTimestamp(anchor + ms)
           }
-          expand(key, seq, xs0, ys0, xs, ys)
+          expand(key, seq, k)
         }
     }
   }
+}
+
+/** A key's latest-per-id maps before (`xs0`, `ys0`) and after one
+  * trigger, and the newest event time the trigger delivered. The ids
+  * the trigger changed are derived only where a variant or driver
+  * reads them. */
+private[streaming] final case class KeyUpdate[X, Y](
+    xs0: Map[String, X], ys0: Map[String, Y],
+    xs: Map[String, X], ys: Map[String, Y], maxEtsMs: Long) {
+  lazy val newX: Set[String] = JoinRules.changedIds(xs0, xs)
+  lazy val newY: Set[String] = JoinRules.changedIds(ys0, ys)
+}
+
+/** The streaming drivers' variants: each wraps one [[JoinRules]]
+  * expansion into [[Emitted]] / [[EmittedSeq]] rows stamped with the
+  * key and its emission seq. Both state APIs
+  * ([[VersionedStreamJoin]], [[TwsVersionedJoin]]) run these. */
+private[streaming] object StreamEmit {
+  type Expand[X, Y, U] = (String, Long, KeyUpdate[X, Y]) => Iterator[U]
+
+  def fullOuter[X, Y]: Expand[X, Y, Emitted[X, Y]] = (key, seq, k) =>
+    JoinRules.fullOuter(k.xs, k.ys).map { case (x, y) => Emitted(key, seq, x, y) }
+
+  def fullOuterDelta[X, Y]: Expand[X, Y, Emitted[X, Y]] = (key, seq, k) =>
+    JoinRules.fullOuterDelta(k.xs, k.ys, k.newX, k.newY)
+      .map { case (x, y) => Emitted(key, seq, x, y) }
+
+  def leftOuter[X, Y](tsX: X => Long): Expand[X, Y, Emitted[X, Y]] =
+    (key, seq, k) => JoinRules.leftOuter(k.xs, k.ys, tsX)
+      .map { case (x, y) => Emitted(key, seq, Some(x), y) }
+
+  def inner[X, Y]: Expand[X, Y, Emitted[X, Y]] = (key, seq, k) =>
+    JoinRules.inner(k.xs, k.ys)
+      .map { case (x, y) => Emitted(key, seq, Some(x), Some(y)) }
+
+  def asOf[X, Y](tsX: X => Long, tsY: Y => Long,
+                 forward: Boolean): Expand[X, Y, Emitted[X, Y]] =
+    (key, seq, k) => JoinRules.asOf(k.xs, k.ys, tsX, tsY, forward)
+      .map { case (x, y) => Emitted(key, seq, Some(x), y) }
+
+  def leftOuterSeq[X, Y](tsX: X => Long): Expand[X, Y, EmittedSeq[X, Y]] =
+    (key, seq, k) => JoinRules.leftOuterSeq(k.xs, k.ys, tsX)
+      .map { case (x, ys) => EmittedSeq(key, seq, Seq(x), ys) }
+
+  def fullOuterSeq[X, Y]: Expand[X, Y, EmittedSeq[X, Y]] = (key, seq, k) =>
+    JoinRules.fullOuterSeq(k.xs, k.ys)
+      .map { case (xs, ys) => EmittedSeq(key, seq, xs, ys) }
 }

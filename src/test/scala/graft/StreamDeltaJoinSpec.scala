@@ -1,11 +1,12 @@
 package graft
 
+import org.apache.spark.sql.{Dataset, Encoder}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 import graft.GenJoin._
 import graft.streaming.{Emitted, VersionedStreamJoin}
 
-/** fullOuterDelta (r20): the delta-emitting variant of the versioned
+/** fullOuterDelta: the delta-emitting variant of the versioned
   * full-outer join must (a) converge to the same answer as fullOuter
   * under the per-row-identity fold its consumers (the s11/s22 chain
   * rows) use, and (b) actually emit FEWER raw rows than the full
@@ -14,12 +15,47 @@ import graft.streaming.{Emitted, VersionedStreamJoin}
   * delta rules are exercised on every transition: x-before-y,
   * y-before-x ((None, y) rows superseded per identity), x-only keys
   * ((x, None) rows suppressed once a pair exists), version updates on
-  * either side (a changed x re-pairs with every y), and multi-y keys
-  * (fanout 2). */
+  * either side (a changed x re-pairs with every y), multi-y keys
+  * (fanout 2) and, in the second input, multi-x keys (unchanged x's
+  * re-pair with a changed y). */
 class StreamDeltaJoinSpec extends SparkTestBase {
   import spark.implicits._
 
   val numSamples = 100
+
+  private implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+
+  /** Replays `xs`/`ys` in 8 interleaved chunks through `build`, each
+    * chunk exactly one microbatch: both sides come from one source, so
+    * a trigger can never fire between the x and the y half of a chunk,
+    * and the raw emission counts of two replays are comparable. */
+  private def replay[X, Y](name: String, xs: Seq[X], ys: Seq[Y])(
+      build: (Dataset[X], Dataset[Y]) => Dataset[Emitted[X, Y]])(
+      implicit ex: Encoder[X], ey: Encoder[Y],
+      exy: Encoder[(Option[X], Option[Y])],
+      ee: Encoder[Emitted[X, Y]]): Seq[Emitted[X, Y]] = {
+    val in = MemoryStream[(Option[X], Option[Y])]
+    val both = in.toDS()
+    val q = build(both.flatMap(_._1), both.flatMap(_._2)).toDF().writeStream
+      .outputMode("update").format("memory").queryName(name).start()
+    try {
+      val chunks = 8
+      val sa = math.max(1, (xs.length + chunks - 1) / chunks)
+      val sb = math.max(1, (ys.length + chunks - 1) / chunks)
+      xs.grouped(sa).zipAll(ys.grouped(sb), Nil, Nil).foreach {
+        case (ca, cb) =>
+          in.addData(ca.map(x => (Some(x), None)) ++ cb.map(y => (None, Some(y))))
+          q.processAllAvailable()
+      }
+    } finally q.stop()
+    spark.table(name).as[Emitted[X, Y]].collect().toSeq
+  }
+
+  /** fullOuter's converged view: whole-key max-seq filter. */
+  private def convergedFull[X, Y](raw: Seq[Emitted[X, Y]]): Set[(Option[X], Option[Y])] = {
+    val maxSeq = raw.groupBy(_.key).map { case (k, g) => k -> g.map(_.seq).max }
+    raw.filter(e => e.seq == maxSeq(e.key)).map(e => (e.x, e.y)).toSet
+  }
 
   test("fullOuterDelta under the per-identity fold equals fullOuter's " +
       "converged view, with strictly fewer raw emissions") {
@@ -32,48 +68,22 @@ class StreamDeltaJoinSpec extends SparkTestBase {
     val as = asFresh.map(a => a.copy(ts = a.ts - 17L)) ++ asFresh
     val bs = bsFresh.map(b => b.copy(ts = b.ts - 17L)) ++ bsFresh
 
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-
-    def replay(delta: Boolean): Seq[Emitted[A, B]] = {
-      val sx = MemoryStream[A]
-      val sy = MemoryStream[B]
-      val build =
-        if (delta) VersionedStreamJoin.fullOuterDelta[A, B] _
-        else VersionedStreamJoin.fullOuter[A, B] _
-      val joined = build(sx.toDS(), sy.toDS(),
-        _.id.toString, _.ida.toString, _.id.toString, _.id.toString,
-        _.ts, _.ts)
-      val name = if (delta) "delta_ab" else "full_ab"
-      val q = joined.toDF().writeStream.outputMode("update")
-        .format("memory").queryName(name).start()
-      try {
-        val chunks = 8
-        val sa = math.max(1, (as.length + chunks - 1) / chunks)
-        val sb = math.max(1, (bs.length + chunks - 1) / chunks)
-        as.grouped(sa).zipAll(bs.grouped(sb), Nil, Nil).foreach {
-          case (ca, cb) =>
-            if (ca.nonEmpty) sx.addData(ca)
-            if (cb.nonEmpty) sy.addData(cb)
-            q.processAllAvailable()
-        }
-      } finally q.stop()
-      spark.table(name).as[Emitted[A, B]].collect().toSeq
-    }
-
-    val rawFull = replay(delta = false)
-    val rawDelta = replay(delta = true)
+    def run(delta: Boolean): Seq[Emitted[A, B]] =
+      replay(if (delta) "delta_ab" else "full_ab", as, bs) { (dx, dy) =>
+        val build =
+          if (delta) VersionedStreamJoin.fullOuterDelta[A, B] _
+          else VersionedStreamJoin.fullOuter[A, B] _
+        build(dx, dy, _.id.toString, _.ida.toString, _.id.toString,
+          _.id.toString, _.ts, _.ts)
+      }
+    val rawFull = run(delta = false)
+    val rawDelta = run(delta = true)
 
     // the whole point: the delta stream is strictly smaller (the churn
     // guarantees at least one key is touched across >1 batch, which is
     // exactly where full re-emission pays twice)
     assert(rawDelta.size < rawFull.size,
       s"delta emitted ${rawDelta.size} rows vs full ${rawFull.size}")
-
-    // fullOuter's converged view: whole-key max-seq filter
-    val maxSeq = rawFull.groupBy(_.key).map { case (k, g) =>
-      k -> g.map(_.seq).max }
-    val convergedFull = rawFull.filter(e => e.seq == maxSeq(e.key))
-      .map(e => (e.x, e.y)).toSet
 
     // the delta consumers' fold (one x per key, the s11/s22 shape):
     // y-carrying rows converge per (key, y-id) by latest seq — an x
@@ -89,7 +99,7 @@ class StreamDeltaJoinSpec extends SparkTestBase {
       .groupBy(_.key).values.map(_.maxBy(_.seq)).toSeq
     val convergedDelta = (yRows ++ loneX).map(e => (e.x, e.y)).toSet
 
-    assert(convergedDelta == convergedFull)
+    assert(convergedDelta == convergedFull(rawFull))
 
     // and both equal the batch latest-wins answer
     val latestA = as.groupBy(_.id).map { case (k, g) => k -> g.maxBy(_.ts) }
@@ -103,6 +113,68 @@ class StreamDeltaJoinSpec extends SparkTestBase {
         case (Some(a), bs2)   => bs2.map(b => (Some(a), Some(b)))
       }
     }
+    assert(convergedDelta == expected)
+  }
+
+  test("fullOuterDelta with several x ids per key converges under the " +
+      "per-(x-id, y-id) fold") {
+    // x = the Bs, keyed by their A (ida) but identified by their own id,
+    // so one key holds several x ids; y = the A of that key. Stale Bs
+    // and As arrive first, so a later chunk changes some x's of a key
+    // while others stay, and changes the y under unchanged x's.
+    val truth = sampleExactlyN(genABNonempty(leftOptional = true, fanoutMax = 3),
+      seed = 99L, numSamples)
+    val bsFresh = truth.flatMap(_._2)
+    val asFresh = truth.flatMap(_._1)
+    val bs = bsFresh.map(b => b.copy(ts = b.ts - 17L)) ++ bsFresh
+    val as = asFresh.map(a => a.copy(ts = a.ts - 17L)) ++ asFresh
+    assert(bsFresh.groupBy(_.ida).values.exists(_.map(_.id).distinct.size > 1),
+      "fixture must put several x ids on one key")
+
+    def run(delta: Boolean): Seq[Emitted[B, A]] =
+      replay(if (delta) "delta_ba" else "full_ba", bs, as) { (dx, dy) =>
+        val build =
+          if (delta) VersionedStreamJoin.fullOuterDelta[B, A] _
+          else VersionedStreamJoin.fullOuter[B, A] _
+        build(dx, dy, _.ida.toString, _.id.toString, _.id.toString,
+          _.id.toString, _.ts, _.ts)
+      }
+    val rawFull = run(delta = false)
+    val rawDelta = run(delta = true)
+    assert(rawDelta.size < rawFull.size,
+      s"delta emitted ${rawDelta.size} rows vs full ${rawFull.size}")
+
+    // the mixed arm ran: some pair re-uses an x version the key already
+    // emitted in an earlier batch, i.e. an unchanged x met a changed y
+    val firstSeq = rawDelta.filter(_.x.isDefined)
+      .groupBy(e => (e.key, e.x)).map { case (kx, g) => kx -> g.map(_.seq).min }
+    assert(rawDelta.exists(e => e.x.isDefined && e.y.isDefined &&
+      firstSeq((e.key, e.x)) < e.seq), "no unchanged x re-paired with a changed y")
+
+    // pairs converge per (key, x-id, y-id); one-sided rows are valid
+    // only for keys that never emitted a pair, per (key, side id)
+    val pairs = rawDelta.filter(e => e.x.isDefined && e.y.isDefined)
+      .groupBy(e => (e.key, e.x.get.id, e.y.get.id)).values
+      .map(_.maxBy(_.seq)).toSeq
+    val pairKeys = pairs.map(_.key).toSet
+    val lone = rawDelta.filter(e => e.x.isEmpty || e.y.isEmpty)
+      .filterNot(e => pairKeys(e.key))
+      .groupBy(e => (e.key, e.x.map(_.id), e.y.map(_.id))).values
+      .map(_.maxBy(_.seq)).toSeq
+    val convergedDelta = (pairs ++ lone).map(e => (e.x, e.y)).toSet
+
+    val latestB = bs.groupBy(b => (b.ida, b.id)).values.map(_.maxBy(_.ts))
+      .toSeq.groupBy(_.ida)
+    val latestA = as.groupBy(_.id).map { case (k, g) => k -> g.maxBy(_.ts) }
+    val expected: Set[(Option[B], Option[A])] =
+      (latestB.keySet ++ latestA.keySet).flatMap { k =>
+        (latestB.getOrElse(k, Seq.empty), latestA.get(k)) match {
+          case (Seq(), Some(a)) => Seq((None, Some(a)))
+          case (xs2, None)      => xs2.map(b => (Some(b), None))
+          case (xs2, Some(a))   => xs2.map(b => (Some(b), Some(a)))
+        }
+      }
+    assert(convergedFull(rawFull) == expected)
     assert(convergedDelta == expected)
   }
 }

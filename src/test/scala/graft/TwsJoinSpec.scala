@@ -1,9 +1,11 @@
 package graft
 
+import org.apache.spark.sql.{Dataset, Encoder, SQLContext}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 import graft.GenJoin._
-import graft.streaming.{Emitted, TwsVersionedJoin, VersionedStreamJoin}
+import graft.core.{JoinRules, TypedVersionedJoins}
+import graft.streaming.{Emitted, EmittedSeq, TwsVersionedJoin, VersionedStreamJoin}
 
 /** The transformWithState twin of the versioned join
   * (TwsVersionedJoin): must satisfy the same convergence contract as
@@ -67,7 +69,34 @@ class TwsJoinSpec extends SparkTestBase {
     }
   }
 
+  private implicit lazy val sqlCtx: SQLContext = spark.sqlContext
+
+  /** Feeds `batches` through `build` over fresh MemoryStreams, one
+    * microbatch each, and returns every emitted row. */
+  private def replay[X, Y, R](name: String, batches: Seq[(Seq[X], Seq[Y])])(
+      build: (Dataset[X], Dataset[Y]) => Dataset[R])(
+      implicit ex: Encoder[X], ey: Encoder[Y], er: Encoder[R]): Seq[R] = {
+    val sx = MemoryStream[X]
+    val sy = MemoryStream[Y]
+    val q = build(sx.toDS(), sy.toDS()).toDF().writeStream
+      .outputMode("update").format("memory").queryName(name).start()
+    try batches.foreach { case (cx, cy) =>
+      if (cx.nonEmpty) sx.addData(cx)
+      if (cy.nonEmpty) sy.addData(cy)
+      q.processAllAvailable()
+    } finally q.stop()
+    spark.table(name).as[R].collect().toSeq
+  }
+
+  // every join answer as (key, seq, x side, y side) rows
+  private type Row = (String, Long, Seq[A], Seq[B])
+  private type Rows = Set[(Seq[A], Seq[B])]
+  private type Build = (Dataset[A], Dataset[B]) => Dataset[Row]
+
   test("tws J2/J3/J4/J5 variants converge to the fMGWS twins' answers") {
+    // every variant JoinRules defines, as a table: the batch
+    // TypedVersionedJoins answer, the converged fMGWS answer and the
+    // converged Tws answer must each equal the expectation derived here
     VersionedStreamJoin.withStateStoreProvider(spark) {
       val truth = sampleExactlyN(genABNonempty(leftOptional = true,
         fanoutMax = 3), seed = 321L, numSamples)
@@ -75,105 +104,156 @@ class TwsJoinSpec extends SparkTestBase {
       val bsFresh = truth.flatMap(_._2)
       val as = asFresh.map(a => a.copy(ts = a.ts - 17L)) ++ asFresh
       val bs = bsFresh.map(b => b.copy(ts = b.ts - 17L)) ++ bsFresh
+      val chunks = 8
+      val batches = as.grouped(math.max(1, (as.length + chunks - 1) / chunks))
+        .zipAll(bs.grouped(math.max(1, (bs.length + chunks - 1) / chunks)),
+          Nil, Nil).toSeq
 
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-
-      // shared replay driver: build the joined stream from fresh
-      // MemoryStreams, replay chunked, return the converged rows
-      def replay[R](name: String)(
-          build: (org.apache.spark.sql.Dataset[A],
-                  org.apache.spark.sql.Dataset[B]) =>
-            org.apache.spark.sql.Dataset[R])(
-          implicit enc: org.apache.spark.sql.Encoder[R]): Seq[R] = {
-        val sx = MemoryStream[A]
-        val sy = MemoryStream[B]
-        val q = build(sx.toDS(), sy.toDS()).toDF().writeStream
-          .outputMode("update").format("memory").queryName(name).start()
-        try {
-          val chunks = 8
-          val sa = math.max(1, (as.length + chunks - 1) / chunks)
-          val sb = math.max(1, (bs.length + chunks - 1) / chunks)
-          as.grouped(sa).zipAll(bs.grouped(sb), Nil, Nil).foreach {
-            case (ca, cb) =>
-              if (ca.nonEmpty) sx.addData(ca)
-              if (cb.nonEmpty) sy.addData(cb)
-              q.processAllAvailable()
-          }
-        } finally q.stop()
-        spark.table(name).as[R].collect().toSeq
+      def pairs(ds: Dataset[Emitted[A, B]]): Dataset[Row] =
+        ds.map(e => (e.key, e.seq, e.x.toSeq, e.y.toSeq))
+      def nested(ds: Dataset[EmittedSeq[A, B]]): Dataset[Row] =
+        ds.map(e => (e.key, e.seq, e.xs, e.ys))
+      // converged views: each key's max-seq rows; for delta emission the
+      // latest row per (key, x-id, y-id), one-sided rows only for keys
+      // that never emitted a pair
+      def latestPerKey(raw: Seq[Row]): Rows = raw.groupBy(_._1).values
+        .flatMap(g => { val m = g.map(_._2).max; g.filter(_._2 == m) })
+        .map(r => (r._3, r._4)).toSet
+      def latestPerIdentity(raw: Seq[Row]): Rows = {
+        val paired = raw.filter(r => r._3.nonEmpty && r._4.nonEmpty).map(_._1).toSet
+        raw.filter(r => (r._3.nonEmpty && r._4.nonEmpty) || !paired(r._1))
+          .groupBy(r => (r._1, r._3.map(_.id), r._4.map(_.id))).values
+          .map(_.maxBy(_._2)).map(r => (r._3, r._4)).toSet
       }
 
-      // expected building blocks (the same derivation the fMGWS specs
-      // use): per-key latest A (J2/J3 quirk), per-(key,id) latest Bs
+      val kA: A => String = _.id.toString
+      val kB: B => String = _.ida.toString
+      val iB: B => String = _.id.toString
+      val tA: A => Long = _.ts
+      val tB: B => Long = _.ts
+      val (fm, tws, batch) = (VersionedStreamJoin, TwsVersionedJoin, TypedVersionedJoins)
+      val (dsA, dsB) = (spark.createDataset(as), spark.createDataset(bs))
+
+      // expected building blocks: per-key latest A (one A id per key),
+      // per-(key, id) latest Bs in id order
       val latestA = as.groupBy(_.id).map { case (k, g) => k -> g.maxBy(_.ts) }
       val bByKey = bs.groupBy(b => (b.ida, b.id)).values.map(_.maxBy(_.ts))
         .toSeq.groupBy(_.ida)
       def ysSorted(k: Int): Seq[B] =
         bByKey.getOrElse(k, Seq.empty).sortBy(_.id.toString)
-
-      // J2: at most one x per key; keyless-x keys emit nothing
-      val j2raw = replay("tws_j2") { (dx, dy) =>
-        TwsVersionedJoin.leftOuter[A, B](dx, dy,
-          _.id.toString, _.ida.toString, _.id.toString, _.id.toString,
-          _.ts, _.ts).map(e => (e.key, e.seq, e.x, e.y))
-      }
-      val j2conv = j2raw.groupBy(_._1).values
-        .flatMap(g => { val m = g.map(_._2).max; g.filter(_._2 == m) })
-        .map(t => (t._3, t._4)).toSet
-      // .toSeq first: flatMap on a Map with tuple results rebuilds a
-      // MAP keyed by the first element, collapsing a key's multiple Bs
-      val j2exp: Set[(Option[A], Option[B])] = latestA.toSeq.flatMap { case (k, a) =>
-        ysSorted(k) match {
-          case Seq() => Seq((Some(a), None))
-          case ys2   => ys2.map(b => (Some(a): Option[A], Some(b): Option[B]))
+      val keys = latestA.keySet ++ bByKey.keySet
+      val j1: Rows = keys.flatMap { k =>
+        (latestA.get(k).toSeq, ysSorted(k)) match {
+          case (xs, Seq()) => Seq((xs, Seq.empty[B]))
+          case (xs, ys)    => ys.map(y => (xs, Seq(y)))
         }
+      }
+      val j2: Rows = latestA.toSeq.flatMap { case (k, a) =>
+        if (ysSorted(k).isEmpty) Seq((Seq(a), Seq.empty[B]))
+        else ysSorted(k).map(b => (Seq(a), Seq(b)))
       }.toSet
-      assert(j2conv == j2exp)
-
-      // J3: single latest x + all ys as an id-ordered Seq
-      val j3raw = replay("tws_j3") { (dx, dy) =>
-        TwsVersionedJoin.leftOuterSeq[A, B](dx, dy,
-          _.id.toString, _.ida.toString, _.id.toString, _.id.toString,
-          _.ts, _.ts).map(e => (e.key, e.seq, e.xs, e.ys))
-      }
-      val j3conv = j3raw.groupBy(_._1).values
-        .flatMap(g => { val m = g.map(_._2).max; g.filter(_._2 == m) })
-        .map(t => (t._3, t._4)).toSet
-      val j3exp = latestA.toSeq.map { case (k, a) => (Seq(a), ysSorted(k)) }.toSet
-      assert(j3conv == j3exp)
-
-      // J4: both sides as Seqs, either possibly empty (never both)
-      val j4raw = replay("tws_j4") { (dx, dy) =>
-        TwsVersionedJoin.fullOuterSeq[A, B](dx, dy,
-          _.id.toString, _.ida.toString, _.id.toString, _.id.toString,
-          _.ts, _.ts).map(e => (e.key, e.seq, e.xs, e.ys))
-      }
-      val j4conv = j4raw.groupBy(_._1).values
-        .flatMap(g => { val m = g.map(_._2).max; g.filter(_._2 == m) })
-        .map(t => (t._3, t._4)).toSet
-      val j4keys = latestA.keySet ++ bByKey.keySet
-      val j4exp = j4keys.map(k =>
-        (latestA.get(k).toSeq, ysSorted(k))).toSet
-      assert(j4conv == j4exp)
-
-      // J5 (inner, the promoted C5): only both-sides-populated keys
-      // emit — the full latest-versions cross product per key
-      val j5raw = replay("tws_j5") { (dx, dy) =>
-        TwsVersionedJoin.inner[A, B](dx, dy,
-          _.id.toString, _.ida.toString, _.id.toString, _.id.toString,
-          _.ts, _.ts).map(e => (e.key, e.seq, e.x, e.y))
-      }
-      val j5conv = j5raw.groupBy(_._1).values
-        .flatMap(g => { val m = g.map(_._2).max; g.filter(_._2 == m) })
-        .map(t => (t._3, t._4)).toSet
-      // the A generator keys by id, so the per-key latest-versions set
-      // is the single latestA — inner = latestA × latest Bs, skipping
-      // keys missing either side
-      val j5exp: Set[(Option[A], Option[B])] = latestA.toSeq.flatMap {
-        case (k, a) => bByKey.getOrElse(k, Seq.empty)
-          .map(b => (Some(a): Option[A], Some(b): Option[B]))
+      // the module's numeric-aware as-of tie order: (ts, id length, id)
+      def asOfExp(forward: Boolean): Rows = latestA.toSeq.map { case (k, a) =>
+        val order = (b: B) => (b.ts, b.id.toString.length, b.id.toString)
+        val y =
+          if (forward) ysSorted(k).filter(_.ts >= a.ts).minByOption(order)
+          else ysSorted(k).filter(_.ts <= a.ts).maxByOption(order)
+        (Seq(a), y.toSeq)
       }.toSet
-      assert(j5conv == j5exp)
+      // TypedVersionedJoins has no as-of: its batch column is the module
+      // run once over each key's whole deduped input
+      def asOfBatch(forward: Boolean): Rows = keys.flatMap { k =>
+        val xs = JoinRules.upsertAll(Map.empty, as.filter(_.id == k).iterator)(kA, tA)
+        val ys = JoinRules.upsertAll(Map.empty, bs.filter(_.ida == k).iterator)(iB, tB)
+        JoinRules.asOf(xs, ys, tA, tB, forward).map { case (x, y) => (Seq(x), y.toSeq) }
+      }
+      val batchJ1: Rows = batch.fullOuter[A, B](dsA, dsB, kA, kB, kA, iB, tA, tB)
+        .collect().map { case (x, y) => (x.toSeq, y.toSeq) }.toSet
+
+      val table: Seq[(String, Option[Rows], Build, Seq[Row] => Rows, Option[Build], Rows)] = Seq(
+        //  variant, batch, fMGWS, fMGWS fold, Tws, expected
+        ("j1", Some(batchJ1),
+          (x, y) => pairs(fm.fullOuter[A, B](x, y, kA, kB, kA, iB, tA, tB)), latestPerKey,
+          Some((x, y) => pairs(tws.fullOuter[A, B](x, y, kA, kB, kA, iB, tA, tB))), j1),
+        ("j1_delta", Some(batchJ1),
+          (x, y) => pairs(fm.fullOuterDelta[A, B](x, y, kA, kB, kA, iB, tA, tB)),
+          latestPerIdentity, None, j1),
+        ("j2", Some(batch.leftOuter[A, B](dsA, dsB, kA, kB, kA, iB, tA, tB)
+            .collect().map { case (x, y) => (Seq(x), y.toSeq) }.toSet),
+          (x, y) => pairs(fm.leftOuter[A, B](x, y, kA, kB, kA, iB, tA, tB)), latestPerKey,
+          Some((x, y) => pairs(tws.leftOuter[A, B](x, y, kA, kB, kA, iB, tA, tB))), j2),
+        ("j3", Some(batch.leftOuterSeq[A, B](dsA, dsB, kA, kB, kA, iB, tA, tB)
+            .collect().map { case (x, ys) => (Seq(x), ys) }.toSet),
+          (x, y) => nested(fm.leftOuterSeq[A, B](x, y, kA, kB, kA, iB, tA, tB)), latestPerKey,
+          Some((x, y) => nested(tws.leftOuterSeq[A, B](x, y, kA, kB, kA, iB, tA, tB))),
+          latestA.toSeq.map { case (k, a) => (Seq(a), ysSorted(k)) }.toSet),
+        ("j4", Some(batch.fullOuterSeq[A, B](dsA, dsB, kA, kB, kA, iB, tA, tB)
+            .collect().toSet),
+          (x, y) => nested(fm.fullOuterSeq[A, B](x, y, kA, kB, kA, iB, tA, tB)), latestPerKey,
+          Some((x, y) => nested(tws.fullOuterSeq[A, B](x, y, kA, kB, kA, iB, tA, tB))),
+          keys.map(k => (latestA.get(k).toSeq, ysSorted(k)))),
+        ("j5", Some(batch.inner[A, B](dsA, dsB, kA, kB, kA, iB, tA, tB)
+            .collect().map { case (x, y) => (Seq(x), Seq(y)) }.toSet),
+          (x, y) => pairs(fm.inner[A, B](x, y, kA, kB, kA, iB, tA, tB)), latestPerKey,
+          Some((x, y) => pairs(tws.inner[A, B](x, y, kA, kB, kA, iB, tA, tB))),
+          j1.filter { case (xs, ys) => xs.nonEmpty && ys.nonEmpty }),
+        ("asof", Some(asOfBatch(forward = false)),
+          (x, y) => pairs(fm.asOf[A, B](x, y, kA, kB, kA, iB, tA, tB)), latestPerKey,
+          None, asOfExp(forward = false)),
+        ("asof_forward", Some(asOfBatch(forward = true)),
+          (x, y) => pairs(fm.asOfForward[A, B](x, y, kA, kB, kA, iB, tA, tB)), latestPerKey,
+          None, asOfExp(forward = true)))
+
+      // the fixture must reach both outer arms and both as-of outcomes
+      assert(j1.exists(_._1.isEmpty) && j1.exists(_._2.isEmpty))
+      assert(asOfExp(forward = false).exists(_._2.isEmpty) &&
+        asOfExp(forward = false).exists(_._2.nonEmpty))
+      table.foreach { case (variant, batchRows, fmBuild, fold, twsBuild, expected) =>
+        assert(batchRows.forall(_ == expected), s"$variant: batch")
+        assert(fold(replay(s"fm_$variant", batches)(fmBuild)) == expected,
+          s"$variant: flatMapGroupsWithState")
+        twsBuild.foreach { b =>
+          assert(latestPerKey(replay(s"tws_$variant", batches)(b)) == expected,
+            s"$variant: transformWithState")
+        }
+      }
+    }
+  }
+
+  test("J2/J3 pick the lowest id among a key's equal-ts x's in every " +
+      "driver, in either arrival order") {
+    import TypedJoinsSpec.X
+    VersionedStreamJoin.withStateStoreProvider(spark) {
+      val tied = Seq(X("1", "x2", 10L), X("1", "x1", 10L))
+      val ys = Seq(B(7, 5L, 1))
+      val (kX, iX, tX) = ((x: X) => x.key, (x: X) => x.id, (x: X) => x.ts)
+      val (kB, iB, tB) = ((b: B) => b.ida.toString, (b: B) => b.id.toString,
+        (b: B) => b.ts)
+      for ((order, n) <- Seq(tied, tied.reverse).zipWithIndex) {
+        val (dx, dy) = (spark.createDataset(order), spark.createDataset(ys))
+        // each x in its own microbatch, the y with the first
+        val batches = Seq((order.take(1), ys), (order.drop(1), Seq.empty[B]))
+        def lastX(raw: Seq[(Long, String)]): String = raw.maxBy(_._1)._2
+        val picked = Map(
+          "batch J2" -> TypedVersionedJoins.leftOuter[X, B](dx, dy,
+            kX, kB, iX, iB, tX, tB).collect().map(_._1.id).toSeq.distinct,
+          "batch J3" -> TypedVersionedJoins.leftOuterSeq[X, B](dx, dy,
+            kX, kB, iX, iB, tX, tB).collect().map(_._1.id).toSeq,
+          "fMGWS J2" -> Seq(lastX(replay(s"tie_fm_j2_$n", batches) { (x, y) =>
+            VersionedStreamJoin.leftOuter[X, B](x, y, kX, kB, iX, iB, tX, tB)
+              .map(e => (e.seq, e.x.get.id)) })),
+          "fMGWS J3" -> Seq(lastX(replay(s"tie_fm_j3_$n", batches) { (x, y) =>
+            VersionedStreamJoin.leftOuterSeq[X, B](x, y, kX, kB, iX, iB, tX, tB)
+              .map(e => (e.seq, e.xs.head.id)) })),
+          "Tws J2" -> Seq(lastX(replay(s"tie_tws_j2_$n", batches) { (x, y) =>
+            TwsVersionedJoin.leftOuter[X, B](x, y, kX, kB, iX, iB, tX, tB)
+              .map(e => (e.seq, e.x.get.id)) })),
+          "Tws J3" -> Seq(lastX(replay(s"tie_tws_j3_$n", batches) { (x, y) =>
+            TwsVersionedJoin.leftOuterSeq[X, B](x, y, kX, kB, iX, iB, tX, tB)
+              .map(e => (e.seq, e.xs.head.id)) })))
+        assert(picked.values.forall(_ == Seq("x1")),
+          s"arrival order ${order.map(_.id)}: $picked")
+      }
     }
   }
 

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 
-/** The jaccard pair pipeline's stats-driven scale inversion (r20):
+/** The jaccard pair pipeline's stats-driven scale inversion:
   * below jaccardGroupedMinBytes the pairs come from the broadcast
   * self-join, above it from the grouped posting-list expansion with a
   * pinned filt — and BOTH branches must produce the identical pair
@@ -27,6 +27,11 @@ class JaccardScaleInversionSpec extends graft.SparkTestBase
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     assert(small.nonEmpty, "test corpus must produce near-dup pairs")
     assert(large == small)
+  }
+
+  test("the switch-point knob fails fast on a malformed value") {
+    assert(DedupOps.groupedMinBytes(Some("1024")) == 1024L)
+    intercept[IllegalArgumentException](DedupOps.groupedMinBytes(Some("256MB")))
   }
 
   test("auto switch picks the join branch at bench scale and the join " +

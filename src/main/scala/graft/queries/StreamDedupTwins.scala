@@ -30,42 +30,15 @@ private[graft] object StreamDedupTwins {
     // the converged state to admit only first-seen content.
     Entry("s19_stream_doc_dedup",
       (spark, dir) => { import spark.implicits._
-        withStreamConf(spark) {
-          val tmp = java.nio.file.Files.createTempDirectory("graft_docs_")
-          val log = tmp.resolve("log")
-          val ckpt = tmp.resolve("ckpt")
-          try {
-            val in = sharedChunkDir(dir, "docfp", "documents") { p =>
-              Registry.table(spark, dir, "documents")
-                .select(col("doc_id"), md5(col("text")).as("fp"))
-                .repartitionByRange(chunks, col("doc_id"))
-                .write.parquet(p.toString)
-            }
-            val src = spark.readStream.schema("doc_id BIGINT, fp STRING")
-              .option("maxFilesPerTrigger", "1")
-              .option("pathGlobFilter", "part-*")
-              .parquet(in.toString).as[DocFp]
-            val dd = VersionedStreamDedup.latestPerKeyId[DocFp](
-              src, _.fp, _.doc_id.toString, _.doc_id)
-            val q = dd.toDF().writeStream.outputMode("update")
-              .option("checkpointLocation", ckpt.toString)
-              .foreachBatch { (df: DataFrame, bid: Long) =>
-                writeBatchIdempotent(df.repartition(1), log, bid)
-                ()
-              }.start()
-            try q.processAllAvailable() finally q.stop()
-            val raw = spark.read.parquet(log.toString)
-            val wMax = Window.partitionBy(col("key"))
-            raw
-              .withColumn("max_seq", max(col("seq")).over(wMax))
-              .filter(col("seq") === col("max_seq"))
-              .select(col("key").as("fp"), explode(col("xs")).as("x"))
-              .groupBy(col("fp"))
-              .agg(count(lit(1)).as("n_docs"),
-                min(col("x.doc_id")).as("keep_doc_id"))
-              .orderBy(col("fp"))
-              .localCheckpoint()
-          } finally deleteRecursively(tmp)
+        runFileStream(spark, dir, "s19_stream_doc_dedup", DocFingerprint) { src =>
+          VersionedStreamDedup.latestPerKeyId[DocFp](
+            src().as[DocFp], _.fp, _.doc_id.toString, _.doc_id).toDF()
+        } { raw =>
+          latestMembers(raw)
+            .groupBy(col("key").as("fp"))
+            .agg(count(lit(1)).as("n_docs"),
+              min(col("x.doc_id")).as("keep_doc_id"))
+            .orderBy(col("fp"))
         }
       },
       Some(DedupOps.exactDedupOracleSql)),
@@ -84,59 +57,32 @@ private[graft] object StreamDedupTwins {
     // incrementally off this state at 100 TB.
     Entry("s21_stream_minhash_sig",
       (spark, dir) => { import spark.implicits._
-        withStreamConf(spark) {
-          val tmp = java.nio.file.Files.createTempDirectory("graft_sig_")
-          val log = tmp.resolve("log")
-          val ckpt = tmp.resolve("ckpt")
-          try {
-            val in = sharedChunkDir(dir, "doctext", "documents") { p =>
-              Registry.table(spark, dir, "documents")
-                .select(col("doc_id"), col("text"))
-                .repartitionByRange(chunks, col("doc_id"))
-                .write.parquet(p.toString)
-            }
-            // coarsened trigger (StreamingHarness.coarseFilesPerTrigger):
-            // signature state is a pure latest-per-doc upsert and the
-            // max-seq fold is batching-independent; s19 keeps this
-            // family's per-file-fidelity archetype
-            val src = spark.readStream.schema("doc_id BIGINT, text STRING")
-              .option("maxFilesPerTrigger", coarseFilesPerTrigger)
-              .option("pathGlobFilter", "part-*")
-              .parquet(in.toString)
-            // each projection materializes the previous stage's array
-            // so the next HOF reads an attribute (shingles3FromTokens
-            // perf note), never a re-evaluated expression
-            val sigs = src
-              .select(col("doc_id"),
-                TextFunctions.tokens(col("text")).as("toks"))
-              .select(col("doc_id"), array_distinct(
-                TextFunctions.shingles3FromTokens(col("toks"))).as("shs"))
-              .select(col("doc_id"), transform(col("shs"),
-                s => TextFunctions.tokenHash(s)).as("ths"))
-              .select(col("doc_id") +:
-                SketchFunctions.rowSignature(col("ths")): _*)
-              .as[DocSig]
-            val dd = VersionedStreamDedup.latestPerKeyId[DocSig](
-              sigs, _.doc_id.toString, _.doc_id.toString, _ => 0L)
-            val q = dd.toDF().writeStream.outputMode("update")
-              .option("checkpointLocation", ckpt.toString)
-              .foreachBatch { (df: DataFrame, bid: Long) =>
-                writeBatchIdempotent(df.repartition(1), log, bid)
-                ()
-              }.start()
-            try q.processAllAvailable() finally q.stop()
-            requireMultiBatch(ckpt, "s21_stream_minhash_sig")
-            val raw = spark.read.parquet(log.toString)
-            val wMax = Window.partitionBy(col("key"))
-            raw
-              .withColumn("max_seq", max(col("seq")).over(wMax))
-              .filter(col("seq") === col("max_seq"))
-              .select(explode(col("xs")).as("x"))
-              .select(col("x.doc_id").as("doc_id") +:
-                (0 to 7).map(i => col(s"x.h$i").as(s"h$i")): _*)
-              .orderBy(col("doc_id"))
-              .localCheckpoint()
-          } finally deleteRecursively(tmp)
+        // coarsened trigger (StreamingHarness.coarseFilesPerTrigger):
+        // signature state is a pure latest-per-doc upsert and the
+        // max-seq fold is batching-independent; s19 keeps this
+        // family's per-file-fidelity archetype
+        runFileStream(spark, dir, "s21_stream_minhash_sig", DocText,
+            filesPerTrigger = coarseFilesPerTrigger) { src =>
+          // each projection materializes the previous stage's array
+          // so the next HOF reads an attribute (shingles3FromTokens
+          // perf note), never a re-evaluated expression
+          val sigs = src()
+            .select(col("doc_id"),
+              TextFunctions.tokens(col("text")).as("toks"))
+            .select(col("doc_id"), array_distinct(
+              TextFunctions.shingles3FromTokens(col("toks"))).as("shs"))
+            .select(col("doc_id"), transform(col("shs"),
+              s => TextFunctions.tokenHash(s)).as("ths"))
+            .select(col("doc_id") +:
+              SketchFunctions.rowSignature(col("ths")): _*)
+            .as[DocSig]
+          VersionedStreamDedup.latestPerKeyId[DocSig](
+            sigs, _.doc_id.toString, _.doc_id.toString, _ => 0L).toDF()
+        } { raw =>
+          latestMembers(raw)
+            .select(col("x.doc_id").as("doc_id") +:
+              (0 to 7).map(i => col(s"x.h$i").as(s"h$i")): _*)
+            .orderBy(col("doc_id"))
         }
       },
       Some(DedupOps.minhashSigOracleSql)),
@@ -154,67 +100,40 @@ private[graft] object StreamDedupTwins {
     // ever stateful.
     Entry("s24_stream_lsh_pairs",
       (spark, dir) => { import spark.implicits._
-        withStreamConf(spark) {
-          val tmp = java.nio.file.Files.createTempDirectory("graft_lsh_")
-          val log = tmp.resolve("log")
-          val ckpt = tmp.resolve("ckpt")
-          try {
-            val in = sharedChunkDir(dir, "doctext", "documents") { p =>
-              Registry.table(spark, dir, "documents")
-                .select(col("doc_id"), col("text"))
-                .repartitionByRange(chunks, col("doc_id"))
-                .write.parquet(p.toString)
-            }
-            val src = spark.readStream.schema("doc_id BIGINT, text STRING")
-              // coarsened trigger (StreamingHarness.coarseFilesPerTrigger):
-              // order-independent converged fold (see entry comment);
-              // s19 keeps this family's per-file archetype
-              .option("maxFilesPerTrigger", coarseFilesPerTrigger)
-              .option("pathGlobFilter", "part-*")
-              .parquet(in.toString)
-            val bandStructs = (0 until SketchFunctions.numBands).map { j =>
-              struct(lit(j).as("bi"),
-                concat_ws("_", col(s"h${2 * j}"), col(s"h${2 * j + 1}"))
-                  .as("bv"))
-            }
-            val bandRows = src
-              .select(col("doc_id"),
-                TextFunctions.tokens(col("text")).as("toks"))
-              .select(col("doc_id"), array_distinct(
-                TextFunctions.shingles3FromTokens(col("toks"))).as("shs"))
-              .select(col("doc_id"), transform(col("shs"),
-                s => TextFunctions.tokenHash(s)).as("ths"))
-              .select(col("doc_id") +:
-                SketchFunctions.rowSignature(col("ths")): _*)
-              .select(col("doc_id"), explode(array(bandStructs: _*)).as("b"))
-              .select(col("b.bi").as("bi"), col("b.bv").as("bv"),
-                col("doc_id"))
-              .as[BandRow]
-            val dd = VersionedStreamDedup.latestPerKeyId[BandRow](
-              bandRows, r => r.bi + "|" + r.bv, _.doc_id.toString, _ => 0L)
-            val q = dd.toDF().writeStream.outputMode("update")
-              .option("checkpointLocation", ckpt.toString)
-              .foreachBatch { (df: DataFrame, bid: Long) =>
-                writeBatchIdempotent(df.repartition(1), log, bid)
-                ()
-              }.start()
-            try q.processAllAvailable() finally q.stop()
-            requireMultiBatch(ckpt, "s24_stream_lsh_pairs")
-            val raw = spark.read.parquet(log.toString)
-            val wMax = Window.partitionBy(col("key"))
-            val members = raw
-              .withColumn("max_seq", max(col("seq")).over(wMax))
-              .filter(col("seq") === col("max_seq"))
-              .select(col("key"), explode(col("xs")).as("x"))
-              .select(col("key"), col("x.doc_id").as("doc_id"))
-            members.as("a")
-              .join(members.as("b"), col("a.key") === col("b.key") &&
-                col("a.doc_id") < col("b.doc_id"))
-              .groupBy(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"))
-              .agg(count(lit(1)).as("n_bands"))
-              .orderBy(col("d1"), col("d2"))
-              .localCheckpoint()
-          } finally deleteRecursively(tmp)
+        val bandStructs = (0 until SketchFunctions.numBands).map { j =>
+          struct(lit(j).as("bi"),
+            concat_ws("_", col(s"h${2 * j}"), col(s"h${2 * j + 1}"))
+              .as("bv"))
+        }
+        runFileStream(spark, dir, "s24_stream_lsh_pairs", DocText,
+            // coarsened trigger (StreamingHarness.coarseFilesPerTrigger):
+            // order-independent converged fold (see entry comment);
+            // s19 keeps this family's per-file archetype
+            filesPerTrigger = coarseFilesPerTrigger) { src =>
+          val bandRows = src()
+            .select(col("doc_id"),
+              TextFunctions.tokens(col("text")).as("toks"))
+            .select(col("doc_id"), array_distinct(
+              TextFunctions.shingles3FromTokens(col("toks"))).as("shs"))
+            .select(col("doc_id"), transform(col("shs"),
+              s => TextFunctions.tokenHash(s)).as("ths"))
+            .select(col("doc_id") +:
+              SketchFunctions.rowSignature(col("ths")): _*)
+            .select(col("doc_id"), explode(array(bandStructs: _*)).as("b"))
+            .select(col("b.bi").as("bi"), col("b.bv").as("bv"),
+              col("doc_id"))
+            .as[BandRow]
+          VersionedStreamDedup.latestPerKeyId[BandRow](
+            bandRows, r => r.bi + "|" + r.bv, _.doc_id.toString, _ => 0L).toDF()
+        } { raw =>
+          val members = latestMembers(raw)
+            .select(col("key"), col("x.doc_id").as("doc_id"))
+          members.as("a")
+            .join(members.as("b"), col("a.key") === col("b.key") &&
+              col("a.doc_id") < col("b.doc_id"))
+            .groupBy(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"))
+            .agg(count(lit(1)).as("n_bands"))
+            .orderBy(col("d1"), col("d2"))
         }
       },
       Some(DedupOps.minhashPairsOracleSql)),
@@ -234,74 +153,31 @@ private[graft] object StreamDedupTwins {
     // dedup_semantic.
     Entry("s30_stream_semantic_dedup",
       (spark, dir) => { import spark.implicits._
-        withStreamConf(spark) {
-          val tmp = java.nio.file.Files.createTempDirectory("graft_sem_")
-          val relay = tmp.resolve("relay")
-          val log = tmp.resolve("log")
-          val ckpt1 = tmp.resolve("ckpt1")
-          val ckpt2 = tmp.resolve("ckpt2")
-          try {
-            val in = sharedChunkDir(dir, "embvec", "embeddings") { p =>
-              VectorOps.embSlim(spark, dir)
-                .repartitionByRange(chunks, col("vec_id"))
-                .write.parquet(p.toString)
-            }
-            val cent = VectorOps.ivfSeedCentroids(spark, dir)
-              .localCheckpoint()
-            val q1 = spark.readStream
-              .schema("vec_id BIGINT, e ARRAY<DOUBLE>, nrm DOUBLE")
-              // coarsened trigger (StreamingHarness.coarseFilesPerTrigger):
-              // order-independent converged fold (see entry comment);
-              // s19 keeps this family's per-file archetype
-              .option("maxFilesPerTrigger", coarseFilesPerTrigger)
-              .option("pathGlobFilter", "part-*")
-              .parquet(in.toString)
-              .writeStream.outputMode("append")
-              .option("checkpointLocation", ckpt1.toString)
-              .foreachBatch { (df: DataFrame, bid: Long) =>
-                // scan-local per-batch assignment carrying e/nrm
-                // through (the former groupBy + first(e) re-attach
-                // disappears); replay chunks are PK-unique, so the
-                // dropped per-vec_id collapse changed nothing
-                writeBatchIdempotent(
-                  VectorOps.assignScan(df, cent)
-                    .select(col("vec_id"), col("cell"), col("e"),
-                      col("nrm")),
-                  relay, bid)
-                ()
-              }.start()
-            java.nio.file.Files.createDirectories(relay)
-            val asgs = spark.readStream
-              .schema("vec_id BIGINT, cell BIGINT, e ARRAY<DOUBLE>, " +
-                "nrm DOUBLE")
-              .option("maxFilesPerTrigger", streamShufflePartitions.toString)
-              .option("pathGlobFilter", "b*")
-              .parquet(relay.toString)
-              .as[graft.streaming.AssignedVec]
-            val dec = graft.streaming.SemanticStreamDedup.decisions(
-              asgs, VectorOps.nearDupThreshold)
-            val q2 = dec.toDF().writeStream.outputMode("update")
-              .option("checkpointLocation", ckpt2.toString)
-              .foreachBatch { (df: DataFrame, bid: Long) =>
-                writeBatchIdempotent(df.repartition(1), log, bid)
-                ()
-              }.start()
-            try {
-              q1.processAllAvailable()
-              q2.processAllAvailable()
-            } finally {
-              try q1.stop() finally q2.stop()
-            }
-            requireMultiBatch(ckpt1, "s30_stream_semantic_dedup")
-            val raw = spark.read.parquet(log.toString)
-            val wMax = Window.partitionBy(col("vec_id"))
-            raw
-              .withColumn("max_seq", max(col("seq")).over(wMax))
-              .filter(col("seq") === col("max_seq") && col("kept"))
-              .select(col("vec_id"), col("cell"))
-              .orderBy(col("vec_id"))
-              .localCheckpoint()
-          } finally deleteRecursively(tmp)
+        // coarsened trigger (StreamingHarness.coarseFilesPerTrigger):
+        // order-independent converged fold (see entry comment); s19
+        // keeps this family's per-file archetype
+        inWorkDir(spark, "s30_stream_semantic_dedup", coarseFilesPerTrigger) { work =>
+          val cent = VectorOps.ivfSeedCentroids(spark, dir).localCheckpoint()
+          // scan-local per-batch assignment carrying e/nrm through;
+          // replay chunks are PK-unique, so no per-vec_id collapse
+          val q1 = startRelay(fileStream(spark, EmbVec.schema,
+              EmbVec.chunkDir(spark, dir), coarseFilesPerTrigger),
+              work.resolve("ckpt"), work.resolve("relay")) {
+            VectorOps.assignScan(_, cent)
+              .select(col("vec_id"), col("cell"), col("e"), col("nrm"))
+          }
+          val asgs = relayTail(spark, work.resolve("relay"),
+              "vec_id BIGINT, cell BIGINT, e ARRAY<DOUBLE>, nrm DOUBLE")
+            .as[graft.streaming.AssignedVec]
+          val q2 = startLog(graft.streaming.SemanticStreamDedup.decisions(
+              asgs, VectorOps.nearDupThreshold).toDF(),
+            work.resolve("ckpt2"), work.resolve("log"))
+          drain(q1, q2)
+          latestSeqPerKey(spark.read.parquet(work.resolve("log").toString),
+              "vec_id")
+            .filter(col("kept"))
+            .select(col("vec_id"), col("cell"))
+            .orderBy(col("vec_id"))
         }
       },
       Some(VectorOps.semanticKeptOracleSql)),
@@ -331,116 +207,61 @@ private[graft] object StreamDedupTwins {
     // prefix.
     Entry("s32_stream_curation",
       (spark, dir) => { import spark.implicits._
-        withStreamConf(spark) {
-          val tmp = java.nio.file.Files.createTempDirectory("graft_cur_")
-          val relay = tmp.resolve("relay")
-          val logE = tmp.resolve("logE")
-          val logS = tmp.resolve("logS")
-          val ckpt1 = tmp.resolve("ckpt1")
-          val ckpt2 = tmp.resolve("ckpt2")
-          val ckpt3 = tmp.resolve("ckpt3")
-          try {
-            val in = sharedChunkDir(dir, "doctext", "documents") { p =>
-              Registry.table(spark, dir, "documents")
-                .select(col("doc_id"), col("text"))
-                .repartitionByRange(chunks, col("doc_id"))
-                .write.parquet(p.toString)
-            }
-            // the static sides, slim and materialized once
-            val emb = VectorOps.embSlim(spark, dir).localCheckpoint()
-            val asg = graft.core.VectorTools.assignCells(
-                emb.select(col("vec_id").as("id"), col("e")),
-                VectorOps.ivfSeedCentroids(spark, dir))
-              .select(col("id").as("vec_id"), col("cell"))
-              .localCheckpoint()
-            val docsMeta = Registry.table(spark, dir, "documents")
-              .select(col("doc_id").as("mid"), col("lang"),
-                TextFunctions.qualityScore(col("text")).as("quality"))
-              .localCheckpoint()
-            val q1 = spark.readStream
-              .schema("doc_id BIGINT, text STRING")
-              // coarsened trigger (StreamingHarness.coarseFilesPerTrigger):
-              // order-independent converged fold (see entry comment);
-              // s19 keeps this family's per-file archetype
-              .option("maxFilesPerTrigger", coarseFilesPerTrigger)
-              .option("pathGlobFilter", "part-*")
-              .parquet(in.toString)
-              .writeStream.outputMode("append")
-              .option("checkpointLocation", ckpt1.toString)
-              .foreachBatch { (df: DataFrame, bid: Long) =>
-                writeBatchIdempotent(
-                  df.select(col("doc_id"),
-                      TextFunctions.qualityScore(col("text")).as("quality"),
-                      TextFunctions.fingerprint64(col("text")).as("fp64"),
-                      TextFunctions.splitBucket(col("doc_id")).as("bucket"))
-                    .filter(col("quality") >= lit(0.6))
-                    .join(emb, col("vec_id") === col("doc_id"))
-                    .join(asg.withColumnRenamed("vec_id", "avid"),
-                      col("avid") === col("doc_id"))
-                    .select(col("doc_id"), col("bucket"), col("fp64"),
-                      col("cell"), col("e"), col("nrm")),
-                  relay, bid)
-                ()
-              }.start()
-            java.nio.file.Files.createDirectories(relay)
-            val relaySchema = "doc_id BIGINT, bucket BIGINT, " +
-              "fp64 BIGINT, cell BIGINT, e ARRAY<DOUBLE>, nrm DOUBLE"
-            def tail(): DataFrame = spark.readStream.schema(relaySchema)
-              .option("maxFilesPerTrigger", streamShufflePartitions)
-              .option("pathGlobFilter", "b*")
-              .parquet(relay.toString)
-            val exactIn = tail()
-              .select(col("doc_id").as("vec_id"),
-                col("fp64").as("cell"), col("e"), col("nrm"))
-              .as[graft.streaming.AssignedVec]
-            val q2 = graft.streaming.SemanticStreamDedup
-              .decisions(exactIn, -1.0)
-              .toDF().writeStream.outputMode("update")
-              .option("checkpointLocation", ckpt2.toString)
-              .foreachBatch { (df: DataFrame, bid: Long) =>
-                writeBatchIdempotent(df.repartition(1), logE, bid)
-                ()
-              }.start()
-            val semIn = tail()
-              .select(col("doc_id").as("vec_id"), col("cell"),
-                col("e"), col("nrm"))
-              .as[graft.streaming.AssignedVec]
-            val q3 = graft.streaming.SemanticStreamDedup
-              .decisions(semIn, VectorOps.nearDupThreshold)
-              .toDF().writeStream.outputMode("update")
-              .option("checkpointLocation", ckpt3.toString)
-              .foreachBatch { (df: DataFrame, bid: Long) =>
-                writeBatchIdempotent(df.repartition(1), logS, bid)
-                ()
-              }.start()
-            try {
-              q1.processAllAvailable()
-              q2.processAllAvailable()
-              q3.processAllAvailable()
-            } finally {
-              try q1.stop() finally { try q2.stop() finally q3.stop() }
-            }
-            requireMultiBatch(ckpt1, "s32_stream_curation")
-            def latestKept(log: java.nio.file.Path): DataFrame = {
-              val w = Window.partitionBy(col("vec_id"))
-              spark.read.parquet(log.toString)
-                .withColumn("mx", max(col("seq")).over(w))
-                .filter(col("seq") === col("mx") && col("kept"))
-                .select(col("vec_id"))
-            }
-            spark.read.parquet(relay.toString)
-              .select(col("doc_id"), col("bucket"), col("cell"))
-              .join(latestKept(logE)
-                .withColumnRenamed("vec_id", "ke"), col("ke") === col("doc_id"))
-              .join(latestKept(logS)
-                .withColumnRenamed("vec_id", "ks"), col("ks") === col("doc_id"))
-              .join(docsMeta, col("mid") === col("doc_id"))
-              .select(col("doc_id"), col("lang"),
-                TextFunctions.splitFromBucket(col("bucket")).as("split"),
-                col("quality"), col("cell"))
-              .orderBy(col("doc_id"))
-              .localCheckpoint()
-          } finally deleteRecursively(tmp)
+        // coarsened trigger (StreamingHarness.coarseFilesPerTrigger):
+        // order-independent converged fold (see entry comment); s19
+        // keeps this family's per-file archetype
+        inWorkDir(spark, "s32_stream_curation", coarseFilesPerTrigger) { work =>
+          // the static sides, slim and materialized once
+          val emb = VectorOps.embSlim(spark, dir).localCheckpoint()
+          val asg = graft.core.VectorTools.assignCells(
+              emb.select(col("vec_id").as("id"), col("e")),
+              VectorOps.ivfSeedCentroids(spark, dir))
+            .select(col("id").as("vec_id"), col("cell"))
+            .localCheckpoint()
+          val docsMeta = Registry.table(spark, dir, "documents")
+            .select(col("doc_id").as("mid"), col("lang"),
+              TextFunctions.qualityScore(col("text")).as("quality"))
+            .localCheckpoint()
+          val relay = work.resolve("relay")
+          val q1 = startRelay(fileStream(spark, DocText.schema,
+              DocText.chunkDir(spark, dir), coarseFilesPerTrigger),
+              work.resolve("ckpt"), relay) {
+            _.select(col("doc_id"),
+                TextFunctions.qualityScore(col("text")).as("quality"),
+                TextFunctions.fingerprint64(col("text")).as("fp64"),
+                TextFunctions.splitBucket(col("doc_id")).as("bucket"))
+              .filter(col("quality") >= lit(0.6))
+              .join(emb, col("vec_id") === col("doc_id"))
+              .join(asg.withColumnRenamed("vec_id", "avid"),
+                col("avid") === col("doc_id"))
+              .select(col("doc_id"), col("bucket"), col("fp64"),
+                col("cell"), col("e"), col("nrm"))
+          }
+          // each decision query tails the relay, keyed by `cell`
+          def decisions(cell: String, threshold: Double, i: Int) =
+            startLog(graft.streaming.SemanticStreamDedup.decisions(
+                relayTail(spark, relay, "doc_id BIGINT, bucket BIGINT, " +
+                    "fp64 BIGINT, cell BIGINT, e ARRAY<DOUBLE>, nrm DOUBLE")
+                  .select(col("doc_id").as("vec_id"), col(cell).as("cell"),
+                    col("e"), col("nrm"))
+                  .as[graft.streaming.AssignedVec], threshold).toDF(),
+              work.resolve(s"ckpt$i"), work.resolve(s"log$i"))
+          drain(q1, decisions("fp64", -1.0, 2),
+            decisions("cell", VectorOps.nearDupThreshold, 3))
+          def latestKept(i: Int, alias: String): DataFrame =
+            latestSeqPerKey(spark.read.parquet(work.resolve(s"log$i").toString),
+                "vec_id")
+              .filter(col("kept"))
+              .select(col("vec_id").as(alias))
+          spark.read.parquet(relay.toString)
+            .select(col("doc_id"), col("bucket"), col("cell"))
+            .join(latestKept(2, "ke"), col("ke") === col("doc_id"))
+            .join(latestKept(3, "ks"), col("ks") === col("doc_id"))
+            .join(docsMeta, col("mid") === col("doc_id"))
+            .select(col("doc_id"), col("lang"),
+              TextFunctions.splitFromBucket(col("bucket")).as("split"),
+              col("quality"), col("cell"))
+            .orderBy(col("doc_id"))
         }
       },
       Some(s"""WITH g AS (SELECT doc_id, lang,
@@ -495,74 +316,47 @@ private[graft] object StreamDedupTwins {
     // (gram, doc_id, cnt) rows are ever stateful.
     Entry("s36_stream_substring_spans",
       (spark, dir) => { import spark.implicits._
-        withStreamConf(spark) {
-          val tmp = java.nio.file.Files.createTempDirectory("graft_sub_")
-          val log = tmp.resolve("log")
-          val ckpt = tmp.resolve("ckpt")
-          try {
-            val in = sharedChunkDir(dir, "doctext", "documents") { p =>
-              Registry.table(spark, dir, "documents")
-                .select(col("doc_id"), col("text"))
-                .repartitionByRange(chunks, col("doc_id"))
-                .write.parquet(p.toString)
-            }
-            val src = spark.readStream.schema("doc_id BIGINT, text STRING")
-              // coarsened trigger (StreamingHarness.coarseFilesPerTrigger):
-              // order-independent converged fold (see entry comment);
-              // s19 keeps this family's per-file archetype
-              .option("maxFilesPerTrigger", coarseFilesPerTrigger)
-              .option("pathGlobFilter", "part-*")
-              .parquet(in.toString)
-            val k = DedupOps.substringGramLen
-            // window fingerprints materialized as an attribute before
-            // the counting HOF reads it twice (shingles3FromTokens
-            // perf note); per-distinct-gram counts are scan-local
-            val gramRows = src
-              .select(col("doc_id"),
-                TextFunctions.tokens(col("text")).as("t"))
-              .filter(size(col("t")) >= k)
-              .select(col("doc_id"),
-                transform(sequence(lit(1), size(col("t")) - (k - 1)),
-                  i => md5(concat_ws(" ", slice(col("t"), i, lit(k)))))
-                  .as("gs"))
-              .select(col("doc_id"),
-                explode(transform(array_distinct(col("gs")), g =>
-                  struct(g.as("g"),
-                    size(filter(col("gs"), x => x === g)).cast("long")
-                      .as("cnt")))).as("gc"))
-              .select(col("gc.g").as("g"), col("doc_id"),
-                col("gc.cnt").as("cnt"))
-              .as[GramRow]
-            val dd = VersionedStreamDedup.latestPerKeyId[GramRow](
-              gramRows, _.g, _.doc_id.toString, _ => 0L)
-            val q = dd.toDF().writeStream.outputMode("update")
-              .option("checkpointLocation", ckpt.toString)
-              .foreachBatch { (df: DataFrame, bid: Long) =>
-                writeBatchIdempotent(df.repartition(1), log, bid)
-                ()
-              }.start()
-            try q.processAllAvailable() finally q.stop()
-            requireMultiBatch(ckpt, "s36_stream_substring_spans")
-            val raw = spark.read.parquet(log.toString)
-            val wMax = Window.partitionBy(col("key"))
-            val members = raw
-              .withColumn("max_seq", max(col("seq")).over(wMax))
-              .filter(col("seq") === col("max_seq"))
-              .select(col("key"), explode(col("xs")).as("x"))
-              .select(col("key"), col("x.doc_id").as("doc_id"),
-                col("x.cnt").as("cnt"))
-            val df2 = members.groupBy(col("key"))
-              .agg(count(lit(1)).as("nd"))
-            members.join(df2, "key")
-              .groupBy(col("doc_id"))
-              .agg(sum(col("cnt")).as("n_grams"),
-                sum(when(col("nd") >= 2, col("cnt")).otherwise(0L))
-                  .as("dup_grams"))
-              .withColumn("dup_coverage",
-                round(col("dup_grams").cast("double") / col("n_grams"), 6))
-              .orderBy(col("doc_id"))
-              .localCheckpoint()
-          } finally deleteRecursively(tmp)
+        val k = DedupOps.substringGramLen
+        runFileStream(spark, dir, "s36_stream_substring_spans", DocText,
+            // coarsened trigger (StreamingHarness.coarseFilesPerTrigger):
+            // order-independent converged fold (see entry comment);
+            // s19 keeps this family's per-file archetype
+            filesPerTrigger = coarseFilesPerTrigger) { src =>
+          // window fingerprints materialized as an attribute before
+          // the counting HOF reads it twice (shingles3FromTokens
+          // perf note); per-distinct-gram counts are scan-local
+          val gramRows = src()
+            .select(col("doc_id"),
+              TextFunctions.tokens(col("text")).as("t"))
+            .filter(size(col("t")) >= k)
+            .select(col("doc_id"),
+              transform(sequence(lit(1), size(col("t")) - (k - 1)),
+                i => md5(concat_ws(" ", slice(col("t"), i, lit(k)))))
+                .as("gs"))
+            .select(col("doc_id"),
+              explode(transform(array_distinct(col("gs")), g =>
+                struct(g.as("g"),
+                  size(filter(col("gs"), x => x === g)).cast("long")
+                    .as("cnt")))).as("gc"))
+            .select(col("gc.g").as("g"), col("doc_id"),
+              col("gc.cnt").as("cnt"))
+            .as[GramRow]
+          VersionedStreamDedup.latestPerKeyId[GramRow](
+            gramRows, _.g, _.doc_id.toString, _ => 0L).toDF()
+        } { raw =>
+          val members = latestMembers(raw)
+            .select(col("key"), col("x.doc_id").as("doc_id"),
+              col("x.cnt").as("cnt"))
+          val df2 = members.groupBy(col("key"))
+            .agg(count(lit(1)).as("nd"))
+          members.join(df2, "key")
+            .groupBy(col("doc_id"))
+            .agg(sum(col("cnt")).as("n_grams"),
+              sum(when(col("nd") >= 2, col("cnt")).otherwise(0L))
+                .as("dup_grams"))
+            .withColumn("dup_coverage",
+              round(col("dup_grams").cast("double") / col("n_grams"), 6))
+            .orderBy(col("doc_id"))
         }
       },
       Some(DedupOps.substringSpansOracleSql)),
@@ -583,48 +377,21 @@ private[graft] object StreamDedupTwins {
     // unchanged chunks land on existing state keys.
     Entry("s37_stream_cdc_chunk_dedup",
       (spark, dir) => { import spark.implicits._
-        withStreamConf(spark) {
-          val tmp = java.nio.file.Files.createTempDirectory("graft_cdc_")
-          val log = tmp.resolve("log")
-          val ckpt = tmp.resolve("ckpt")
-          try {
-            val in = sharedChunkDir(dir, "doctext", "documents") { p =>
-              Registry.table(spark, dir, "documents")
-                .select(col("doc_id"), col("text"))
-                .repartitionByRange(chunks, col("doc_id"))
-                .write.parquet(p.toString)
-            }
-            val src = spark.readStream.schema("doc_id BIGINT, text STRING")
-              // coarsened trigger (StreamingHarness.coarseFilesPerTrigger):
-              // order-independent converged fold (see entry comment);
-              // s19 keeps this family's per-file archetype
-              .option("maxFilesPerTrigger", coarseFilesPerTrigger)
-              .option("pathGlobFilter", "part-*")
-              .parquet(in.toString)
-            val chunkRows = cdcChunkCountRows(src).as[ChunkRow]
-            val dd = VersionedStreamDedup.latestPerKeyId[ChunkRow](
-              chunkRows, _.chunk_md5, _.doc_id.toString, _ => 0L)
-            val q = dd.toDF().writeStream.outputMode("update")
-              .option("checkpointLocation", ckpt.toString)
-              .foreachBatch { (df: DataFrame, bid: Long) =>
-                writeBatchIdempotent(df.repartition(1), log, bid)
-                ()
-              }.start()
-            try q.processAllAvailable() finally q.stop()
-            requireMultiBatch(ckpt, "s37_stream_cdc_chunk_dedup")
-            val raw = spark.read.parquet(log.toString)
-            val wMax = Window.partitionBy(col("key"))
-            raw
-              .withColumn("max_seq", max(col("seq")).over(wMax))
-              .filter(col("seq") === col("max_seq"))
-              .select(col("key").as("chunk_md5"), explode(col("xs")).as("x"))
-              .groupBy(col("chunk_md5"))
-              .agg(sum(col("x.cnt")).as("n_chunks"),
-                count(lit(1)).as("n_docs"))
-              .filter(col("n_docs") > 1)
-              .orderBy(col("chunk_md5"))
-              .localCheckpoint()
-          } finally deleteRecursively(tmp)
+        runFileStream(spark, dir, "s37_stream_cdc_chunk_dedup", DocText,
+            // coarsened trigger (StreamingHarness.coarseFilesPerTrigger):
+            // order-independent converged fold (see entry comment);
+            // s19 keeps this family's per-file archetype
+            filesPerTrigger = coarseFilesPerTrigger) { src =>
+          VersionedStreamDedup.latestPerKeyId[ChunkRow](
+            cdcChunkCountRows(src()).as[ChunkRow],
+            _.chunk_md5, _.doc_id.toString, _ => 0L).toDF()
+        } { raw =>
+          latestMembers(raw)
+            .groupBy(col("key").as("chunk_md5"))
+            .agg(sum(col("x.cnt")).as("n_chunks"),
+              count(lit(1)).as("n_docs"))
+            .filter(col("n_docs") > 1)
+            .orderBy(col("chunk_md5"))
         }
       },
       Some(MultimodalOps.cdcChunkOracleSql)),
@@ -649,107 +416,80 @@ private[graft] object StreamDedupTwins {
     // dedup_substring_trim oracle bit-for-bit.
     Entry("s42_stream_substring_trim",
       (spark, dir) => { import spark.implicits._
-        withStreamConf(spark) {
-          val tmp = java.nio.file.Files.createTempDirectory("graft_trim_")
-          val log = tmp.resolve("log")
-          val ckpt = tmp.resolve("ckpt")
-          try {
-            val in = sharedChunkDir(dir, "doctext", "documents") { p =>
-              Registry.table(spark, dir, "documents")
-                .select(col("doc_id"), col("text"))
-                .repartitionByRange(chunks, col("doc_id"))
-                .write.parquet(p.toString)
-            }
-            val src = spark.readStream.schema("doc_id BIGINT, text STRING")
-              // coarsened trigger (StreamingHarness.coarseFilesPerTrigger):
-              // order-independent converged fold (see entry comment);
-              // s19 keeps this family's per-file archetype
-              .option("maxFilesPerTrigger", coarseFilesPerTrigger)
-              .option("pathGlobFilter", "part-*")
-              .parquet(in.toString)
-            val k = DedupOps.substringGramLen
-            // Per-distinct-gram position lists in ONE O(n log n) pass
-            // over the SORTED (gram, pos) pairs (the cdcChunkCountRows
-            // run-detection shape): run starts are where the gram
-            // changes, a run's positions slice out contiguously and
-            // ascending. Scan-local and LINEAR in document length —
-            // replaces the filter-per-distinct-gram extraction that
-            // rescanned the full window array once per distinct gram
-            // (O(|windows| × |distinct grams|), quadratic on a
-            // long-document ingest). Each staged array is a
-            // materialized column consumed by reference (the
-            // shingles3FromTokens inlining note).
-            val gramRows = src
-              .select(col("doc_id"),
-                TextFunctions.tokens(col("text")).as("t"))
-              .filter(size(col("t")) >= k)
-              .select(col("doc_id"),
-                transform(sequence(lit(1), size(col("t")) - (k - 1)),
-                  i => struct(
-                    md5(concat_ws(" ", slice(col("t"), i, lit(k)))).as("g"),
-                    i.cast("long").as("p"))).as("gp"))
-              .withColumn("sorted", array_sort(col("gp")))
-              .withColumn("starts",
-                filter(sequence(lit(1), size(col("sorted"))), i =>
-                  (i === 1) ||
-                    element_at(col("sorted"), i).getField("g") =!=
-                      element_at(col("sorted"), i - 1).getField("g")))
-              .select(col("doc_id"), explode(zip_with(
-                col("starts"),
-                concat(slice(col("starts"), lit(2), size(col("starts"))),
-                  array(size(col("sorted")) + 1)),
-                (s, nxt) => struct(
-                  element_at(col("sorted"), s).getField("g").as("g"),
-                  transform(sequence(s, nxt - 1), j =>
-                    element_at(col("sorted"), j).getField("p"))
-                    .as("ps")))).as("gp"))
-              .select(col("gp.g").as("g"), col("doc_id"),
-                col("gp.ps").as("ps"))
-              .as[GramPosRow]
-            val dd = VersionedStreamDedup.latestPerKeyId[GramPosRow](
-              gramRows, _.g, _.doc_id.toString, _ => 0L)
-            val q = dd.toDF().writeStream.outputMode("update")
-              .option("checkpointLocation", ckpt.toString)
-              .foreachBatch { (df: DataFrame, bid: Long) =>
-                writeBatchIdempotent(df.repartition(1), log, bid)
-                ()
-              }.start()
-            try q.processAllAvailable() finally q.stop()
-            requireMultiBatch(ckpt, "s42_stream_substring_trim")
-            val raw = spark.read.parquet(log.toString)
-            val wMax = Window.partitionBy(col("key"))
-            val members = raw
-              .withColumn("max_seq", max(col("seq")).over(wMax))
-              .filter(col("seq") === col("max_seq"))
-              .select(col("key").as("g"), explode(col("xs")).as("x"))
-              .select(col("g"), col("x.doc_id").as("doc_id"),
-                col("x.ps").as("ps"))
-            val gstat = members.groupBy(col("g"))
-              .agg(count(lit(1)).as("nd"), min(col("doc_id")).as("mind"))
-            val covered = members.join(gstat, "g")
-              .filter(col("nd") >= 2 && col("doc_id") > col("mind"))
-              .select(col("doc_id"), explode(col("ps")).as("i"))
-              .select(col("doc_id"),
-                explode(sequence(col("i"), col("i") + (k - 1))).as("p"))
-              .groupBy(col("doc_id"))
-              .agg(collect_set(col("p")).as("cov"))
-            val toks = Registry.table(spark, dir, "documents")
-              .select(col("doc_id"),
-                TextFunctions.tokens(col("text")).as("t"))
-            toks.join(covered, Seq("doc_id"), "left")
-              .select(col("doc_id"), col("t"),
-                coalesce(col("cov"), array().cast("array<long>")).as("cov"))
-              .select(col("doc_id"),
-                size(col("t")).cast("long").as("n_tokens"),
-                filter(col("t"), (_, idx) =>
-                  !array_contains(col("cov"), idx.cast("long") + 1L))
-                  .as("kept"))
-              .select(col("doc_id"), col("n_tokens"),
-                size(col("kept")).cast("long").as("n_kept"),
-                concat_ws(" ", col("kept")).as("trimmed_text"))
-              .orderBy(col("doc_id"))
-              .localCheckpoint()
-          } finally deleteRecursively(tmp)
+        val k = DedupOps.substringGramLen
+        runFileStream(spark, dir, "s42_stream_substring_trim", DocText,
+            // coarsened trigger (StreamingHarness.coarseFilesPerTrigger):
+            // order-independent converged fold (see entry comment);
+            // s19 keeps this family's per-file archetype
+            filesPerTrigger = coarseFilesPerTrigger) { src =>
+          // Per-distinct-gram position lists in ONE O(n log n) pass
+          // over the SORTED (gram, pos) pairs (the cdcChunkCountRows
+          // run-detection shape): run starts are where the gram
+          // changes, a run's positions slice out contiguously and
+          // ascending. Scan-local and LINEAR in document length —
+          // replaces the filter-per-distinct-gram extraction that
+          // rescanned the full window array once per distinct gram
+          // (O(|windows| × |distinct grams|), quadratic on a
+          // long-document ingest). Each staged array is a
+          // materialized column consumed by reference (the
+          // shingles3FromTokens inlining note).
+          val gramRows = src()
+            .select(col("doc_id"),
+              TextFunctions.tokens(col("text")).as("t"))
+            .filter(size(col("t")) >= k)
+            .select(col("doc_id"),
+              transform(sequence(lit(1), size(col("t")) - (k - 1)),
+                i => struct(
+                  md5(concat_ws(" ", slice(col("t"), i, lit(k)))).as("g"),
+                  i.cast("long").as("p"))).as("gp"))
+            .withColumn("sorted", array_sort(col("gp")))
+            .withColumn("starts",
+              filter(sequence(lit(1), size(col("sorted"))), i =>
+                (i === 1) ||
+                  element_at(col("sorted"), i).getField("g") =!=
+                    element_at(col("sorted"), i - 1).getField("g")))
+            .select(col("doc_id"), explode(zip_with(
+              col("starts"),
+              concat(slice(col("starts"), lit(2), size(col("starts"))),
+                array(size(col("sorted")) + 1)),
+              (s, nxt) => struct(
+                element_at(col("sorted"), s).getField("g").as("g"),
+                transform(sequence(s, nxt - 1), j =>
+                  element_at(col("sorted"), j).getField("p"))
+                  .as("ps")))).as("gp"))
+            .select(col("gp.g").as("g"), col("doc_id"),
+              col("gp.ps").as("ps"))
+            .as[GramPosRow]
+          VersionedStreamDedup.latestPerKeyId[GramPosRow](
+            gramRows, _.g, _.doc_id.toString, _ => 0L).toDF()
+        } { raw =>
+          val members = latestMembers(raw)
+            .select(col("key").as("g"), col("x.doc_id").as("doc_id"),
+              col("x.ps").as("ps"))
+          val gstat = members.groupBy(col("g"))
+            .agg(count(lit(1)).as("nd"), min(col("doc_id")).as("mind"))
+          val covered = members.join(gstat, "g")
+            .filter(col("nd") >= 2 && col("doc_id") > col("mind"))
+            .select(col("doc_id"), explode(col("ps")).as("i"))
+            .select(col("doc_id"),
+              explode(sequence(col("i"), col("i") + (k - 1))).as("p"))
+            .groupBy(col("doc_id"))
+            .agg(collect_set(col("p")).as("cov"))
+          val toks = Registry.table(spark, dir, "documents")
+            .select(col("doc_id"),
+              TextFunctions.tokens(col("text")).as("t"))
+          toks.join(covered, Seq("doc_id"), "left")
+            .select(col("doc_id"), col("t"),
+              coalesce(col("cov"), array().cast("array<long>")).as("cov"))
+            .select(col("doc_id"),
+              size(col("t")).cast("long").as("n_tokens"),
+              filter(col("t"), (_, idx) =>
+                !array_contains(col("cov"), idx.cast("long") + 1L))
+                .as("kept"))
+            .select(col("doc_id"), col("n_tokens"),
+              size(col("kept")).cast("long").as("n_kept"),
+              concat_ws(" ", col("kept")).as("trimmed_text"))
+            .orderBy(col("doc_id"))
         }
       },
       Some(DedupOps.substringTrimOracleSql)),
@@ -783,14 +523,12 @@ private[graft] object StreamDedupTwins {
     // StreamCcRecoverySpec drives stop/restart, the partial-write
     // fallback, the untouched-bucket byte-identity, and the emptied-
     // bucket drop. The bucketed layout's fixed per-batch costs (state
-    // probe, staged 16-dir commit) initially bought a ~2x premium over
-    // the r15 single-file full rewrite; the cached committed-forest
-    // handle plus the driver-side QUOTIENT contraction (trickle
-    // batches contract the batch's edges mapped into label space —
-    // bounded by the microbatch — instead of O(diameter) Spark rounds
-    // over edges + touched stars) clawed that back (12.0s -> 8.0s solo
-    // min-of-3 at sf0.1; SCALE.md carries the full-run numbers) while
-    // KEEPING per-batch write work bounded by touched components
+    // probe, staged 16-dir commit) are offset by the cached
+    // committed-forest handle and the driver-side QUOTIENT contraction
+    // (trickle batches contract the batch's edges mapped into label
+    // space — bounded by the microbatch — instead of O(diameter) Spark
+    // rounds over edges + touched stars; SCALE.md carries the timings),
+    // while per-batch write work stays bounded by touched components
     // instead of accumulated state — the term that survives the 100x
     // scale-up.
     Entry("s62_stream_dedup_clusters",
@@ -799,13 +537,7 @@ private[graft] object StreamDedupTwins {
         val ckpt = tmp.resolve("ckpt")
         val state = tmp.resolve("state")
         try {
-          val in = sharedChunkDir(dir, "duppairs", "documents") { p =>
-            DedupOps.jaccardPairs(spark, dir)
-              .select(col("d1"), col("d2"))
-              .repartitionByRange(chunks, col("d1"))
-              .write.parquet(p.toString)
-          }
-          val q = incrementalCcQuery(spark, in.toString,
+          val q = incrementalCcQuery(spark, DupPairs.chunkDir(spark, dir).toString,
             ckpt.toString, state.toString)
           try q.processAllAvailable() finally q.stop()
           DedupOps.canonicalFrom(spark, dir,
@@ -913,7 +645,7 @@ private[graft] object StreamDedupTwins {
     * its path, its bucket set (one directory listing at install), and
     * its rows as a persisted DataFrame — so successive microbatches
     * stop re-listing and re-opening the committed parquet from disk
-    * (the per-batch fixed cost the r16 plan audit flagged on s62).
+    * (a per-batch fixed cost of s62).
     * `buckets` is empty (and `forest` None) for a committed-but-empty
     * snapshot. */
   private[graft] final class CcForestHandle(
@@ -1009,10 +741,8 @@ private[graft] object StreamDedupTwins {
   private[graft] def incrementalCcQuery(spark: SparkSession,
       edgesDir: String, ckpt: String, stateDir: String)
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    val q = spark.readStream.schema("d1 BIGINT, d2 BIGINT")
-      .option("maxFilesPerTrigger", "1")
-      .option("pathGlobFilter", "part-*")
-      .parquet(edgesDir)
+    val q = fileStream(spark, DupPairs.schema,
+        java.nio.file.Paths.get(edgesDir), filesPerTrigger = 1)
       .writeStream.outputMode("append")
       .option("checkpointLocation", ckpt)
       .foreachBatch { (df: DataFrame, bid: Long) =>
@@ -1089,9 +819,6 @@ private[graft] object StreamDedupTwins {
     // the microbatch is one small replayed file — re-reading it per
     // consumer is cheaper than a checkpoint job
     val edges = newEdges.select(col("d1"), col("d2"))
-    val t0 = System.nanoTime()
-    def mark(s: String): Unit = if (sys.env.contains("GRAFT_CC_DEBUG"))
-      System.err.println(f"[cc] b$bid $s ${(System.nanoTime() - t0) / 1e9}%.2f")
     import spark.implicits._
     // limit-probe the batch's edges FIRST: a trickle batch (≤
     // ccQuotientMaxEdges rows — the 100 TB steady state) is then fully
@@ -1145,7 +872,6 @@ private[graft] object StreamDedupTwins {
     val touchedLabels = oldLabels.toSeq.toDF("lab")
     val labelBuckets: Set[Int] = oldLabels
       .map(l => java.lang.Math.floorMod(l, ccForestBuckets.toLong).toInt)
-    mark("labels")
     // BULK-batch detection (initial backfill): when the batch's
     // endpoints touch components in EVERY bucket the state currently
     // has — and that is a real span of the layout, not just a young
@@ -1161,7 +887,6 @@ private[graft] object StreamDedupTwins {
     // phase bulk).
     val existingBuckets: Set[Int] = handle.map(_.buckets).getOrElse(Set.empty)
     val bulk = isBulkBatch(existingBuckets, labelBuckets)
-    mark(s"bulk=$bulk nb=${labelBuckets.size}")
     // rows of the touched components only — partition-pruned to their
     // label buckets, then semi-joined on the (small) touched label set
     val touchedRows = forest match {
@@ -1226,7 +951,6 @@ private[graft] object StreamDedupTwins {
             .distinct().collect().map(_.getInt(0)).toSet
         (stars, buckets)
     }
-    mark("contract")
     val touched = labelBuckets ++ starBuckets
     // stage the new snapshot: touched buckets = survivors (rows of
     // UNtouched components that share a touched bucket) + the new stars
@@ -1244,7 +968,6 @@ private[graft] object StreamDedupTwins {
       .withColumn("bucket", bucketOf)
       .repartition(col("bucket"))
       .write.partitionBy("bucket").mode("overwrite").parquet(stage.toString)
-    mark("stagewrite")
     // untouched buckets carry over as hardlinks from the previous
     // committed snapshot (same inode — zero copy, byte-identical); the
     // handle's path IS the latest committed snapshot (validated above,
@@ -1277,7 +1000,6 @@ private[graft] object StreamDedupTwins {
     // never dangle over pruned files
     installForestHandle(spark, stateDir, bdir)
     pruneStarForest(stateDir, bid)
-    mark("commit")
   }
 
   /** Drop everything under `stateDir` except the just-committed

@@ -103,9 +103,10 @@ private[graft] object StreamJoinTwins {
   /** Runs one [[Twin]] row: state config around a file-source replay of
     * the row's join, folded and checked against the row's oracle. */
   private def entry(t: Twin): Entry = Entry(t.name, (spark, dir) => {
-    def replay(): DataFrame = runFileStream(spark, dir,
-        filesPerTrigger = if (t.coarse) coarseFilesPerTrigger.toInt else 1) {
-      src => t.join(src().filter(isX _), src().filter(isY _))
+    def replay(): DataFrame = runFileStream(spark, dir, t.name, Events,
+        filesPerTrigger = if (t.coarse) coarseFilesPerTrigger else 1) { src =>
+      def ev = src().as(Encoders.product[Ev])
+      t.join(ev.filter(isX _), ev.filter(isY _))
     }(t.fold)
     def withTtl(): DataFrame =
       if (t.scopedTtl)
@@ -125,12 +126,11 @@ private[graft] object StreamJoinTwins {
     Entry("s8_stream_dedup",
       (spark, dir) => {
         import spark.implicits._
-        runFileStream(spark, dir) { src =>
-          VersionedStreamDedup.latestPerKeyId[Ev](src(),
+        runFileStream(spark, dir, "s8_stream_dedup", Events) { src =>
+          VersionedStreamDedup.latestPerKeyId[Ev](src().as[Ev],
             e => e.user_id.toString, e => e.event_type, e => e.ts_us).toDF()
         } { raw =>
-          latestSeqPerKey(raw)
-            .select(explode(col("xs")).as("x"))
+          latestMembers(raw)
             .select(col("x.user_id").as("user_id"),
               col("x.event_id").as("event_id"),
               col("x.event_type").as("event_type"),
@@ -157,20 +157,20 @@ private[graft] object StreamJoinTwins {
     Entry("s16_stream_salted_inner",
       (spark, dir) => { import spark.implicits._
         val salts = 4
-        runFileStream(spark, dir,
+        runFileStream(spark, dir, "s16_stream_salted_inner", Events,
             // coarsened trigger (StreamingHarness.coarseFilesPerTrigger): per-sub-key max-seq fold, batching-independent
-            filesPerTrigger = coarseFilesPerTrigger.toInt) { src =>
-          val ys = src().filter(isY _)
+            filesPerTrigger = coarseFilesPerTrigger) { src =>
+          val ys = src().as[Ev].filter(isY _)
             .flatMap(y => (0 until salts).map(s => (s, y)))
           VersionedStreamJoin.inner[Ev, (Int, Ev)](
-            src().filter(isX _), ys,
+            src().as[Ev].filter(isX _), ys,
             x => x.user_id.toString + "#" +
               math.floorMod(x.event_type.hashCode, salts),
             y => y._2.user_id.toString + "#" + y._1,
             x => x.event_type, y => y._2.event_type,
             x => x.ts_us, y => y._2.ts_us).toDF()
         } { raw =>
-          latestSeqPerKey(raw)
+          latestSeqPerKey(raw, "key")
             .select(
               col("x.user_id").as("user_id"),
               col("x.event_id").as("x_event_id"),
@@ -202,13 +202,13 @@ private[graft] object StreamJoinTwins {
         val salts = 4
         VersionedStreamJoin.withStateStoreProvider(spark) {
           VersionedStreamJoin.withEventTimeTtl(horizonTtlMs, horizonDelay) {
-            runFileStream(spark, dir,
+            runFileStream(spark, dir, "s18_stream_production_join", Events,
                 // coarsened trigger (StreamingHarness.coarseFilesPerTrigger): beyond-horizon TTL as s17; cross-salt fold over converged view is batching-independent
-                filesPerTrigger = coarseFilesPerTrigger.toInt) { src =>
-              val ys = src().filter(isY _)
+                filesPerTrigger = coarseFilesPerTrigger) { src =>
+              val ys = src().as[Ev].filter(isY _)
                 .flatMap(y => (0 until salts).map(s => (s, y)))
               VersionedStreamJoin.fullOuter[Ev, (Int, Ev)](
-                src().filter(isX _), ys,
+                src().as[Ev].filter(isX _), ys,
                 x => x.user_id.toString + "#" +
                   math.floorMod(x.event_type.hashCode, salts),
                 y => y._2.user_id.toString + "#" + y._1,
@@ -216,7 +216,7 @@ private[graft] object StreamJoinTwins {
                 x => x.ts_us, y => y._2.ts_us).toDF()
             } { raw =>
               val wBase = Window.partitionBy(col("base_key"))
-              latestSeqPerKey(raw)
+              latestSeqPerKey(raw, "key")
                 .withColumn("base_key", substring_index(col("key"), "#", 1))
                 // cross-salt suppression: (None, y) survives only when
                 // no salt of the base key holds any X
@@ -282,14 +282,14 @@ private[graft] object StreamJoinTwins {
     // and accepts the documented late-drop.
     Entry("s9_stream_range_join",
       (spark, dir) => {
-        runFileStream(spark, dir, mode = "append",
+        runFileStream(spark, dir, "s9_stream_range_join", Events, mode = "append",
             // coarsened trigger (StreamingHarness.coarseFilesPerTrigger): inner range join with beyond-span watermark: every pair emitted exactly once whatever the batching; e1<e2 fold batching-independent
-            filesPerTrigger = coarseFilesPerTrigger.toInt) { src =>
-          val a = src().toDF()
+            filesPerTrigger = coarseFilesPerTrigger) { src =>
+          val a = src()
             .select(col("user_id"), col("event_id"), col("ts_us"))
             .withColumn("ats", expr("timestamp_micros(ts_us)"))
             .withWatermark("ats", "400 days")
-          val b = src().toDF()
+          val b = src()
             .select(col("user_id").as("uid2"), col("event_id").as("e2"),
               col("ts_us").as("tus2"))
             .withColumn("bts", expr("timestamp_micros(tus2)"))
@@ -328,7 +328,7 @@ private[graft] object StreamJoinTwins {
     // deployment sizes its trigger to its ingest prefix.
     Entry("s22_stream_production_chain",
       (spark, dir) => chain(spark, dir, salts = 2, production = true,
-        filesPerTrigger = coarseFilesPerTrigger.toInt),
+        filesPerTrigger = coarseFilesPerTrigger),
       Some(ReferenceJoins.j6OracleSql)),
   )
 
@@ -337,18 +337,18 @@ private[graft] object StreamJoinTwins {
   private def asOfTwin(name: String, forward: Boolean, coarse: Boolean,
                        oracle: String): Entry =
     Entry(name, (spark, dir) => { import spark.implicits._
-      runFileStream(spark, dir,
-          filesPerTrigger = if (coarse) coarseFilesPerTrigger.toInt else 1) { src =>
-        val xs = src().filter((e: Ev) =>
+      runFileStream(spark, dir, name, Events,
+          filesPerTrigger = if (coarse) coarseFilesPerTrigger else 1) { src =>
+        val xs = src().as[Ev].filter((e: Ev) =>
           e.event_type == "signup" || e.event_type == "error")
-        val ys = src().filter((e: Ev) => e.event_type == "click" ||
+        val ys = src().as[Ev].filter((e: Ev) => e.event_type == "click" ||
           e.event_type == "purchase" || e.event_type == "view")
         (if (forward) VersionedStreamJoin.asOfForward[Ev, Ev](
            xs, ys, user, user, evId, evId, evTs, evTs)
          else VersionedStreamJoin.asOf[Ev, Ev](
            xs, ys, user, user, evId, evId, evTs, evTs)).toDF()
       } { raw =>
-        latestSeqPerKey(raw)
+        latestSeqPerKey(raw, "key")
           .select(
             col("key").cast("long").as("user_id"),
             col("x.event_id").as("x_event_id"),
@@ -421,16 +421,8 @@ private[graft] object StreamJoinTwins {
     val abLog = tmp.resolve("ablog")
     val bcLog = tmp.resolve("bclog")
     try {
-      // range-split chunked ingest dirs, shared by both chain rows
-      val (custDir, ordDir, liDir) = chainChunkDirs(spark, dir)
-
-      def src(d: java.nio.file.Path, schema: String,
-              files: Int = filesPerTrigger,
-              glob: String = "part-*"): DataFrame =
-        spark.readStream.schema(schema)
-          .option("maxFilesPerTrigger", files.toString)
-          .option("pathGlobFilter", glob)
-          .parquet(d.toString)
+      def src(c: ChunkedSource): DataFrame =
+        fileStream(spark, c.schema, c.chunkDir(spark, dir), filesPerTrigger)
 
       // stage 1: customer ⋈ orders keyed by custkey; every microbatch's
       // emissions land in the relay log PARTITIONED (one file per
@@ -440,9 +432,8 @@ private[graft] object StreamJoinTwins {
       // ever saw an order ((cust, None) is only emitted while ys is
       // empty, and no deletions exist to empty it again).
       val q1 = VersionedStreamJoin.fullOuterDelta[CustRow, OrdRow](
-          src(custDir, "c_custkey BIGINT, c_name STRING").as[CustRow],
-          src(ordDir, "o_orderkey BIGINT, o_custkey BIGINT, " +
-            "o_ver BIGINT, o_totalprice DOUBLE").as[OrdRow],
+          src(ChainCust).as[CustRow],
+          src(ChainOrd).as[OrdRow],
           _.c_custkey.toString, _.o_custkey.toString,
           _.c_custkey.toString, _.o_orderkey.toString,
           _ => 1L, _.o_ver) // one customer version per id
@@ -466,15 +457,11 @@ private[graft] object StreamJoinTwins {
       // file-source stream over the relay log. It starts WHILE stage 1
       // is still emitting — the production topology — which is sound
       // because the converged view is interleaving-independent. It
-      // takes up to a full stage-1 batch's files per trigger. The dir
-      // must exist before the source starts listing it.
-      java.nio.file.Files.createDirectories(abLog)
-      val lis = src(liDir, "l_orderkey BIGINT, l_linenumber INT, " +
-          "l_ver BIGINT, l_extendedprice DOUBLE").as[LiRow]
+      // takes up to a full stage-1 batch's files per trigger.
+      val lis = src(ChainLi).as[LiRow]
         .flatMap(li => (0 until salts).map(s => (s, li)))
       val q2 = VersionedStreamJoin.fullOuterDelta[AbRel, (Int, LiRow)](
-          src(abLog, abSchema, files = streamShufflePartitions.toInt,
-            glob = "b*")
+          relayTail(spark, abLog, abSchema)
             .where(col("o_orderkey").isNotNull)
             .select(col("seq"), col("c_custkey"), col("c_name"),
               col("o_orderkey"), col("o_totalprice")).as[AbRel],
@@ -495,7 +482,7 @@ private[graft] object StreamJoinTwins {
               col("x.o_totalprice").as("o_totalprice"),
               col("y._2.l_linenumber").as("l_linenumber"),
               col("y._2.l_extendedprice").as("l_extendedprice")),
-            // NOT repartition(1)-bounded like runFileStream's sinks: the
+            // NOT repartition(1)-bounded like the singleFile logs: the
             // per-batch emission sets are large (~10^5 rows), and
             // funneling them through one write task was A/B-measured at
             // +1.3–1.8 s per row (min-of-4, sf0.1, matched controls)
@@ -504,13 +491,7 @@ private[graft] object StreamJoinTwins {
         }.start()
       // drain stage 1 first (it feeds the relay), then stage 2; both
       // have been processing concurrently since start
-      try {
-        q1.processAllAvailable()
-        q2.processAllAvailable()
-      } finally {
-        // nested so a throwing q1.stop() cannot leak q2
-        try q1.stop() finally q2.stop()
-      }
+      drain(q1, q2)
 
       if (filesPerTrigger > 1) {
         // the coarsened trigger is only sound while >= 2 upserting

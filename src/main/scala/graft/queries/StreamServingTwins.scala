@@ -32,71 +32,11 @@ private[graft] object StreamServingTwins {
     // seed-assignment oracle; a re-embedded vector (new version)
     // would move cells by upsert.
     Entry("s25_stream_ivf_index",
-      (spark, dir) => { import spark.implicits._
-        withStreamConf(spark) {
-          val tmp = java.nio.file.Files.createTempDirectory("graft_ivf_")
-          val relay = tmp.resolve("relay")
-          val log = tmp.resolve("log")
-          val ckpt1 = tmp.resolve("ckpt1")
-          val ckpt2 = tmp.resolve("ckpt2")
-          try {
-            val in = sharedChunkDir(dir, "embvec", "embeddings") { p =>
-              VectorOps.embSlim(spark, dir)
-                .repartitionByRange(chunks, col("vec_id"))
-                .write.parquet(p.toString)
-            }
-            val cent = VectorOps.ivfSeedCentroids(spark, dir)
-              .localCheckpoint()
-            val q1 = spark.readStream
-              .schema("vec_id BIGINT, e ARRAY<DOUBLE>, nrm DOUBLE")
-              .option("maxFilesPerTrigger", "1")
-              .option("pathGlobFilter", "part-*")
-              .parquet(in.toString)
-              .writeStream.outputMode("append")
-              .option("checkpointLocation", ckpt1.toString)
-              .foreachBatch { (df: DataFrame, bid: Long) =>
-                // scan-local per-batch assignment (VectorOps.assignScan
-                // — no per-microbatch argmax exchange; replay chunks
-                // are PK-unique, so the dropped groupBy changed
-                // nothing); stable part count = the batch's input
-                // split count, deterministic on re-delivery
-                writeBatchIdempotent(
-                  VectorOps.assignScan(df, cent)
-                    .select(col("vec_id"), col("cell")),
-                  relay, bid)
-                ()
-              }.start()
-            java.nio.file.Files.createDirectories(relay)
-            val asgs = spark.readStream.schema("vec_id BIGINT, cell BIGINT")
-              .option("maxFilesPerTrigger", streamShufflePartitions.toString)
-              .option("pathGlobFilter", "b*")
-              .parquet(relay.toString).as[AsgRow]
-            val dd = VersionedStreamDedup.latestPerKeyId[AsgRow](
-              asgs, _.cell.toString, _.vec_id.toString, _ => 0L)
-            val q2 = dd.toDF().writeStream.outputMode("update")
-              .option("checkpointLocation", ckpt2.toString)
-              .foreachBatch { (df: DataFrame, bid: Long) =>
-                writeBatchIdempotent(df.repartition(1), log, bid)
-                ()
-              }.start()
-            try {
-              q1.processAllAvailable()
-              q2.processAllAvailable()
-            } finally {
-              try q1.stop() finally q2.stop()
-            }
-            val raw = spark.read.parquet(log.toString)
-            val wMax = Window.partitionBy(col("key"))
-            raw
-              .withColumn("max_seq", max(col("seq")).over(wMax))
-              .filter(col("seq") === col("max_seq"))
-              .select(explode(col("xs")).as("x"))
-              .select(col("x.vec_id").as("vec_id"), col("x.cell").as("cell"))
-              .orderBy(col("vec_id"))
-              .localCheckpoint()
-          } finally deleteRecursively(tmp)
-        }
-      },
+      (spark, dir) =>
+        inWorkDir(spark, "s25_stream_ivf_index", filesPerTrigger = 1) { work =>
+          streamedIvfIndex(spark, dir, work, filesPerTrigger = 1)
+            .orderBy(col("vec_id"))
+        },
       Some(VectorOps.ivfAssignOracleSql)),
 
     // STREAMING ANN SERVING — the index-maintenance → query-serving
@@ -114,42 +54,19 @@ private[graft] object StreamServingTwins {
     // candidates, and scoring reads the int8 corpus — each rung's
     // scale story is unchanged from its batch row.
     Entry("s44_stream_ann_serving",
-      (spark, dir) => {
-        withStreamConf(spark) {
-          val tmp = java.nio.file.Files.createTempDirectory("graft_serve_")
-          val relay = tmp.resolve("relay")
-          val log = tmp.resolve("log")
-          val ckpt1 = tmp.resolve("ckpt1")
-          val ckpt2 = tmp.resolve("ckpt2")
-          try {
-            val in = StreamTrainedTwins.kmeansIngestChunks(spark, dir)
-            val cent = VectorOps.ivfSeedCentroids(spark, dir)
-              .localCheckpoint()
-            // coarsened trigger (StreamingHarness.coarseFilesPerTrigger):
-            // membership upsert state, converged fold batching-
-            // independent; s25 keeps the relay per-file archetype (and
-            // StreamAnnRecoverySpec drives this stage per-file)
-            val q1 = startIvfAssignStream(spark, in.toString, cent,
-              ckpt1, relay, filesPerTrigger = coarseFilesPerTrigger.toInt)
-            java.nio.file.Files.createDirectories(relay)
-            val q2 = startIvfMembershipStream(spark, relay, ckpt2, log)
-            try {
-              q1.processAllAvailable()
-              q2.processAllAvailable()
-            } finally {
-              try q1.stop() finally q2.stop()
-            }
-            requireMultiBatch(ckpt1, "s44_stream_ann_serving")
-            // SERVE: probe → fetch members from the streamed index →
-            // int8 score → top-k (the batch entry's exact tail)
-            VectorOps.quantScoredTopk(spark, dir,
-                VectorOps.ivfCandidatesFrom(spark, dir,
-                  convergedMembershipFrom(spark, log)))
-              .orderBy(col("query_id"), col("rank"))
-              .localCheckpoint()
-          } finally deleteRecursively(tmp)
-        }
-      },
+      (spark, dir) =>
+        // coarsened trigger (StreamingHarness.coarseFilesPerTrigger):
+        // membership upsert state, converged fold batching-
+        // independent; s25 keeps the relay per-file archetype (and
+        // StreamAnnRecoverySpec drives this stage per-file)
+        inWorkDir(spark, "s44_stream_ann_serving", coarseFilesPerTrigger) { work =>
+          // SERVE: probe → fetch members from the streamed index →
+          // int8 score → top-k (the batch entry's exact tail)
+          VectorOps.quantScoredTopk(spark, dir,
+              VectorOps.ivfCandidatesFrom(spark, dir,
+                streamedIvfIndex(spark, dir, work, coarseFilesPerTrigger)))
+            .orderBy(col("query_id"), col("rank"))
+        },
       Some(VectorOps.ivfQuantTopkOracleSql)),
 
     // STREAMING PQ SERVING — the maintenance→serving loop closed for
@@ -166,72 +83,29 @@ private[graft] object StreamServingTwins {
     // uncompressed anywhere downstream of the encoder.
     Entry("s46_stream_pq_serving",
       (spark, dir) => { import spark.implicits._
-        withStreamConf(spark) {
-          val tmp = java.nio.file.Files.createTempDirectory("graft_pqserve_")
-          val relay = tmp.resolve("relay")
-          val log = tmp.resolve("log")
-          val ckpt1 = tmp.resolve("ckpt1")
-          val ckpt2 = tmp.resolve("ckpt2")
-          try {
-            val in = sharedChunkDir(dir, "embvec", "embeddings") { p =>
-              VectorOps.embSlim(spark, dir)
-                .repartitionByRange(chunks, col("vec_id"))
-                .write.parquet(p.toString)
-            }
-            val cb = VectorOps.pqCodebook(spark, dir).localCheckpoint()
-            val q1 = spark.readStream
-              .schema("vec_id BIGINT, e ARRAY<DOUBLE>, nrm DOUBLE")
-              // coarsened trigger (StreamingHarness.coarseFilesPerTrigger):
-              // latest-per-id upsert state, converged max-seq fold is
-              // batching-independent
-              .option("maxFilesPerTrigger", coarseFilesPerTrigger)
-              .option("pathGlobFilter", "part-*")
-              .parquet(in.toString)
-              .writeStream.outputMode("append")
-              .option("checkpointLocation", ckpt1.toString)
-              .foreachBatch { (df: DataFrame, bid: Long) =>
-                writeBatchIdempotent(
-                  VectorOps.pqEncode(spark,
-                    df.select(col("vec_id"), col("e")), cb),
-                  relay, bid)
-                ()
-              }.start()
-            java.nio.file.Files.createDirectories(relay)
-            val codesIn = spark.readStream
-              .schema("vec_id BIGINT, s INT, code BIGINT")
-              .option("maxFilesPerTrigger", streamShufflePartitions.toString)
-              .option("pathGlobFilter", "b*")
-              .parquet(relay.toString).as[PqCodeRow]
-            val dd = VersionedStreamDedup.latestPerKeyId[PqCodeRow](
-              codesIn, _.vec_id.toString, _.s.toString, _ => 0L)
-            val q2 = dd.toDF().writeStream.outputMode("update")
-              .option("checkpointLocation", ckpt2.toString)
-              .foreachBatch { (df: DataFrame, bid: Long) =>
-                writeBatchIdempotent(df.repartition(1), log, bid)
-                ()
-              }.start()
-            try {
-              q1.processAllAvailable()
-              q2.processAllAvailable()
-            } finally {
-              try q1.stop() finally q2.stop()
-            }
-            requireMultiBatch(ckpt1, "s46_stream_pq_serving")
-            // the converged code table, read back from state output
-            val raw = spark.read.parquet(log.toString)
-            val wMax = Window.partitionBy(col("key"))
-            val codes = raw
-              .withColumn("max_seq", max(col("seq")).over(wMax))
-              .filter(col("seq") === col("max_seq"))
-              .select(explode(col("xs")).as("x"))
-              .select(col("x.vec_id").as("vec_id"), col("x.s").as("s"),
-                col("x.code").as("code"))
-            // SERVE: ADC against the streamed codes (the batch
-            // entry's exact scoring tail)
-            VectorOps.pqAdcServe(spark, dir, codes)
-              .orderBy(col("query_id"), col("rank"))
-              .localCheckpoint()
-          } finally deleteRecursively(tmp)
+        // coarsened trigger (StreamingHarness.coarseFilesPerTrigger):
+        // latest-per-id upsert state, converged max-seq fold is
+        // batching-independent
+        inWorkDir(spark, "s46_stream_pq_serving", coarseFilesPerTrigger) { work =>
+          val cb = VectorOps.pqCodebook(spark, dir).localCheckpoint()
+          val q1 = startRelay(fileStream(spark, EmbVec.schema,
+              EmbVec.chunkDir(spark, dir), coarseFilesPerTrigger),
+              work.resolve("ckpt"), work.resolve("relay")) { df =>
+            VectorOps.pqEncode(spark, df.select(col("vec_id"), col("e")), cb)
+          }
+          val codesIn = relayTail(spark, work.resolve("relay"),
+            "vec_id BIGINT, s INT, code BIGINT").as[PqCodeRow]
+          drain(q1, startLog(VersionedStreamDedup.latestPerKeyId[PqCodeRow](
+              codesIn, _.vec_id.toString, _.s.toString, _ => 0L).toDF(),
+            work.resolve("ckpt2"), work.resolve("log")))
+          // the converged code table, read back from state output
+          val codes = latestMembers(spark.read.parquet(work.resolve("log").toString))
+            .select(col("x.vec_id").as("vec_id"), col("x.s").as("s"),
+              col("x.code").as("code"))
+          // SERVE: ADC against the streamed codes (the batch
+          // entry's exact scoring tail)
+          VectorOps.pqAdcServe(spark, dir, codes)
+            .orderBy(col("query_id"), col("rank"))
         }
       },
       Some(VectorOps.pqTopkOracleSql)),
@@ -252,7 +126,7 @@ private[graft] object StreamServingTwins {
     // longs per asset, and the ANN family queries it while assets
     // stream in.
     Entry("s50_stream_media_features",
-      (spark, dir) => runMediaFeatureStream(spark, dir) { feats =>
+      (spark, dir) => runMediaFeatureStream(spark, dir, "s50_stream_media_features") { feats =>
         MultimodalOps.mediaTopkFrom(feats)
           .orderBy(col("query_id"), col("rank"))
       },
@@ -272,7 +146,7 @@ private[graft] object StreamServingTwins {
     // partition key, and a query touches nprobe partitions of a
     // corpus that was never batch-indexed.
     Entry("s61_stream_media_ivf",
-      (spark, dir) => runMediaFeatureStream(spark, dir) { feats =>
+      (spark, dir) => runMediaFeatureStream(spark, dir, "s61_stream_media_ivf") { feats =>
         MultimodalOps.mediaIvfTopkFrom(feats)
       },
       Some(MultimodalOps.mediaIvfTopkOracleSql)),
@@ -288,7 +162,8 @@ private[graft] object StreamServingTwins {
     // proof; at 100 TB features stream into the index as clips land,
     // never a corpus-wide refeaturize.
     Entry("s52_stream_audio_features",
-      (spark, dir) => runMediaFeatureStream(spark, dir, wavPooled) { feats =>
+      (spark, dir) => runMediaFeatureStream(spark, dir, "s52_stream_audio_features",
+          wavPooled) { feats =>
         MultimodalOps.mediaTopkFrom(feats)
           .orderBy(col("query_id"), col("rank"))
       },
@@ -306,7 +181,8 @@ private[graft] object StreamServingTwins {
     // 32 longs per clip, and a query touches nprobe cell partitions
     // of a corpus that was never batch-indexed.
     Entry("s67_stream_audio_ivf",
-      (spark, dir) => runMediaFeatureStream(spark, dir, wavPooled) { feats =>
+      (spark, dir) => runMediaFeatureStream(spark, dir, "s67_stream_audio_ivf",
+          wavPooled) { feats =>
         MultimodalOps.mediaIvfTopkFrom(feats)
       },
       Some(MultimodalOps.audioIvfTopkOracleSql)),
@@ -327,47 +203,20 @@ private[graft] object StreamServingTwins {
     // converging bit-for-bit to its batch twin.
     Entry("s53_stream_hamming_serving",
       (spark, dir) => { import spark.implicits._
-        withStreamConf(spark) {
-          val tmp = java.nio.file.Files.createTempDirectory("graft_hserve_")
-          val log = tmp.resolve("log")
-          val ckpt = tmp.resolve("ckpt")
-          try {
-            val in = sharedChunkDir(dir, "embvec", "embeddings") { p =>
-              VectorOps.embSlim(spark, dir)
-                .repartitionByRange(chunks, col("vec_id"))
-                .write.parquet(p.toString)
-            }
-            val src = spark.readStream
-              .schema("vec_id BIGINT, e ARRAY<DOUBLE>, nrm DOUBLE")
-              // coarsened trigger (StreamingHarness.coarseFilesPerTrigger):
-              // latest-per-id upsert state, converged max-seq fold is
-              // batching-independent
-              .option("maxFilesPerTrigger", coarseFilesPerTrigger)
-              .option("pathGlobFilter", "part-*")
-              .parquet(in.toString)
-            val codeRows = VectorOps.signPackedFrom(src).as[SignCodeRow]
-            val dd = VersionedStreamDedup.latestPerKeyId[SignCodeRow](
-              codeRows, _.vec_id.toString, _ => "c", _ => 0L)
-            val q = dd.toDF().writeStream.outputMode("update")
-              .option("checkpointLocation", ckpt.toString)
-              .foreachBatch { (df: DataFrame, bid: Long) =>
-                writeBatchIdempotent(df.repartition(1), log, bid)
-                ()
-              }.start()
-            try q.processAllAvailable() finally q.stop()
-            requireMultiBatch(ckpt, "s53_stream_hamming_serving")
-            val raw = spark.read.parquet(log.toString)
-            val wMax = Window.partitionBy(col("key"))
-            val codes = raw
-              .withColumn("max_seq", max(col("seq")).over(wMax))
-              .filter(col("seq") === col("max_seq"))
-              .select(explode(col("xs")).as("x"))
-              .select(col("x.vec_id").as("vec_id"), col("x.lo").as("lo"),
-                col("x.hi").as("hi"))
-            VectorOps.hammingTopkFrom(spark, dir, codes)
-              .orderBy(col("query_id"), col("rank"))
-              .localCheckpoint()
-          } finally deleteRecursively(tmp)
+        runFileStream(spark, dir, "s53_stream_hamming_serving", EmbVec,
+            // coarsened trigger (StreamingHarness.coarseFilesPerTrigger):
+            // latest-per-id upsert state, converged max-seq fold is
+            // batching-independent
+            filesPerTrigger = coarseFilesPerTrigger) { src =>
+          VersionedStreamDedup.latestPerKeyId[SignCodeRow](
+            VectorOps.signPackedFrom(src()).as[SignCodeRow],
+            _.vec_id.toString, _ => "c", _ => 0L).toDF()
+        } { raw =>
+          val codes = latestMembers(raw)
+            .select(col("x.vec_id").as("vec_id"), col("x.lo").as("lo"),
+              col("x.hi").as("hi"))
+          VectorOps.hammingTopkFrom(spark, dir, codes)
+            .orderBy(col("query_id"), col("rank"))
         }
       },
       Some(VectorOps.hammingTopkOracleSql)),
@@ -386,7 +235,7 @@ private[graft] object StreamServingTwins {
     // and cut reports re-derive from state as late frames of a video
     // arrive — never a re-decode of what's already ingested.
     Entry("s57_stream_scene_cut",
-      (spark, dir) => runFrameStatStream(spark, dir)(
+      (spark, dir) => runFrameStatStream(spark, dir, "s57_stream_scene_cut")(
         MultimodalOps.sceneCutFrom),
       Some(MultimodalOps.sceneCutOracleSql)),
 
@@ -403,7 +252,7 @@ private[graft] object StreamServingTwins {
     // frame state (late frames re-segment their own doc only), and
     // the query panel is answered from the index while ingest runs.
     Entry("s58_stream_video_serving",
-      (spark, dir) => runFrameStatStream(spark, dir) { stats =>
+      (spark, dir) => runFrameStatStream(spark, dir, "s58_stream_video_serving") { stats =>
         MultimodalOps.videoTopkFrom(stats)
           .orderBy(col("query_id"), col("rank"))
       },
@@ -420,7 +269,7 @@ private[graft] object StreamServingTwins {
     // vectors partition by cell, and a query touches nprobe
     // partitions while ingest runs.
     Entry("s68_stream_video_ivf",
-      (spark, dir) => runFrameStatStream(spark, dir) { stats =>
+      (spark, dir) => runFrameStatStream(spark, dir, "s68_stream_video_ivf") { stats =>
         MultimodalOps.mediaIvfTopkFrom(
           MultimodalOps.videoSceneVectors(stats))
       },
@@ -428,32 +277,40 @@ private[graft] object StreamServingTwins {
   )
 
 
-  /** s44's stage 1 (also driven stop/restart by StreamAnnRecoverySpec):
+  /** s25/s44's streamed IVF index, built in `work` from the embedding
+    * chunks against the seed centroids: stage 1 ([[startIvfAssignStream]],
+    * checkpoint `work/ckpt`) relays cell assignments to `work/relay`,
+    * stage 2 ([[startIvfMembershipStream]]) upserts them into the
+    * membership log `work/log`; returns the converged (vec_id, cell)
+    * index. */
+  private def streamedIvfIndex(spark: SparkSession, dir: String,
+      work: java.nio.file.Path, filesPerTrigger: Int): DataFrame = {
+    val cent = VectorOps.ivfSeedCentroids(spark, dir).localCheckpoint()
+    drain(
+      startIvfAssignStream(spark, EmbVec.chunkDir(spark, dir).toString, cent,
+        work.resolve("ckpt"), work.resolve("relay"), filesPerTrigger),
+      startIvfMembershipStream(spark, work.resolve("relay"),
+        work.resolve("ckpt2"), work.resolve("log")))
+    convergedMembershipFrom(spark, work.resolve("log"))
+  }
+
+  /** IVF stage 1 (also driven stop/restart by StreamAnnRecoverySpec):
     * arriving vectors assign to the broadcast `cent` cells SCAN-LOCALLY
     * in their microbatch (exact batch arithmetic — rounded cosine,
-    * lower-cid argmax) and relay slim (vec_id, cell) rows; the vectors
-    * themselves never enter streaming state. */
+    * lower-cid argmax; no per-microbatch argmax exchange) and relay
+    * slim (vec_id, cell) rows; the vectors themselves never enter
+    * streaming state. Replay chunks are PK-unique, so no per-vec_id
+    * collapse is needed. */
   private[graft] def startIvfAssignStream(spark: SparkSession, in: String,
       cent: DataFrame, ckpt: java.nio.file.Path, relay: java.nio.file.Path,
       filesPerTrigger: Int = 1)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    spark.readStream
-      .schema("vec_id BIGINT, e ARRAY<DOUBLE>, nrm DOUBLE")
-      .option("maxFilesPerTrigger", filesPerTrigger.toString)
-      .option("pathGlobFilter", "part-*")
-      .parquet(in)
-      .writeStream.outputMode("append")
-      .option("checkpointLocation", ckpt.toString)
-      .foreachBatch { (df: DataFrame, bid: Long) =>
-        // scan-local per-batch assignment — see the s25 site note
-        writeBatchIdempotent(
-          VectorOps.assignScan(df, cent)
-            .select(col("vec_id"), col("cell")),
-          relay, bid)
-        ()
-      }.start()
+    startRelay(fileStream(spark, EmbVec.schema, java.nio.file.Paths.get(in),
+        filesPerTrigger), ckpt, relay) {
+      VectorOps.assignScan(_, cent).select(col("vec_id"), col("cell"))
+    }
 
-  /** s44's stage 2: the relayed (vec_id, cell) assignments upsert into
+  /** IVF stage 2: the relayed (vec_id, cell) assignments upsert into
     * cell-keyed membership state (two longs per vector), each update
     * appending to the convergence log that
     * [[convergedMembershipFrom]] folds. */
@@ -462,91 +319,49 @@ private[graft] object StreamServingTwins {
       log: java.nio.file.Path)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     import spark.implicits._
-    val asgs = spark.readStream.schema("vec_id BIGINT, cell BIGINT")
-      .option("maxFilesPerTrigger", streamShufflePartitions.toString)
-      .option("pathGlobFilter", "b*")
-      .parquet(relay.toString).as[AsgRow]
-    val dd = VersionedStreamDedup.latestPerKeyId[AsgRow](
-      asgs, _.cell.toString, _.vec_id.toString, _ => 0L)
-    dd.toDF().writeStream.outputMode("update")
-      .option("checkpointLocation", ckpt.toString)
-      .foreachBatch { (df: DataFrame, bid: Long) =>
-        writeBatchIdempotent(df.repartition(1), log, bid)
-        ()
-      }.start()
+    val asgs = relayTail(spark, relay, "vec_id BIGINT, cell BIGINT").as[AsgRow]
+    startLog(VersionedStreamDedup.latestPerKeyId[AsgRow](
+      asgs, _.cell.toString, _.vec_id.toString, _ => 0L).toDF(), ckpt, log)
   }
 
   /** The converged inverted index (vec_id, cell) read back from a
     * membership stream's convergence log: latest emission per cell
     * key, members exploded. */
   private[graft] def convergedMembershipFrom(spark: SparkSession,
-      log: java.nio.file.Path): DataFrame = {
-    val raw = spark.read.parquet(log.toString)
-    val wMax = Window.partitionBy(col("key"))
-    raw
-      .withColumn("max_seq", max(col("seq")).over(wMax))
-      .filter(col("seq") === col("max_seq"))
-      .select(explode(col("xs")).as("x"))
+      log: java.nio.file.Path): DataFrame =
+    latestMembers(spark.read.parquet(log.toString))
       .select(col("x.vec_id").as("vec_id"), col("x.cell").as("cell"))
-  }
 
-  /** The streamed media featurize→index loop shared by s50 and s61:
-    * document ids replay as chunked files, each arriving asset is
-    * BMP-decoded and mean-pooled SCAN-LOCALLY in its microbatch (the
-    * exact batch featurizer — no shuffle touches pixels), the 48-long
-    * feature vector upserts into doc-keyed state, and `serve` runs an
-    * arbitrary batch scoring tail over the CONVERGED feature table
-    * (brute panel for s50, the IVF index layout for s61). */
+  /** The streamed media featurize→index loop shared by s50, s61, s52
+    * and s67: document ids replay as chunked files, each arriving asset
+    * is decoded and pooled SCAN-LOCALLY in its microbatch by
+    * `featurize` (the exact batch featurizer — no shuffle touches
+    * pixels or samples), the feature vector upserts into doc-keyed
+    * state, and `serve` runs an arbitrary batch scoring tail over the
+    * CONVERGED feature table (brute panel for s50/s52, the IVF index
+    * layout for s61/s67). The log is key-bucketed: its rows carry the
+    * feature vectors, so the payload, not the row count, is the
+    * per-batch write cost. */
   private[graft] def runMediaFeatureStream(spark: SparkSession, dir: String,
+      name: String,
       featurize: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
         id => graft.multimodal.MultimodalPipeline.poolBmp(
           graft.multimodal.MultimodalPipeline.encodeBmp(id), 4, 4))(
       serve: DataFrame => DataFrame): DataFrame = {
     import spark.implicits._
-    withStreamConf(spark) {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_mfeat_")
-      val log = tmp.resolve("log")
-      val ckpt = tmp.resolve("ckpt")
-      try {
-        val in = sharedChunkDir(dir, "docid", "documents") { p =>
-          Registry.table(spark, dir, "documents").select(col("doc_id"))
-            .repartitionByRange(chunks, col("doc_id"))
-            .write.parquet(p.toString)
-        }
-        // coarsened trigger (StreamingHarness.coarseFilesPerTrigger):
-        // doc-keyed feature upserts, converged max-seq fold is
-        // batching-independent
-        val src = spark.readStream.schema("doc_id BIGINT")
-          .option("maxFilesPerTrigger", coarseFilesPerTrigger)
-          .option("pathGlobFilter", "part-*")
-          .parquet(in.toString)
-        val featRows = src
-          .select(col("doc_id"), featurize(col("doc_id")).as("f"))
-          .as[MediaFeatRow]
-        val dd = VersionedStreamDedup.latestPerKeyId[MediaFeatRow](
-          featRows, _.doc_id.toString, _ => "f", _ => 0L)
-        // key-bucketed like s63's log: these rows carry the pooled
-        // feature vector per asset, so the payload — not the row
-        // count — is the per-batch write cost
-        val q = dd.toDF().writeStream.outputMode("update")
-          .option("checkpointLocation", ckpt.toString)
-          .foreachBatch { (df: DataFrame, bid: Long) =>
-            writeBatchIdempotent(
-              df.repartition(streamShufflePartitions.toInt, col("key")),
-              log, bid)
-            ()
-          }.start()
-        try q.processAllAvailable() finally q.stop()
-        requireMultiBatch(ckpt, "runMediaFeatureStream")
-        val raw = spark.read.parquet(log.toString)
-        val wMax = Window.partitionBy(col("key"))
-        val feats = raw
-          .withColumn("max_seq", max(col("seq")).over(wMax))
-          .filter(col("seq") === col("max_seq"))
-          .select(explode(col("xs")).as("x"))
-          .select(col("x.doc_id").as("doc_id"), col("x.f").as("f"))
-        serve(feats).localCheckpoint()
-      } finally deleteRecursively(tmp)
+    // coarsened trigger (StreamingHarness.coarseFilesPerTrigger):
+    // doc-keyed feature upserts, converged max-seq fold is
+    // batching-independent
+    runFileStream(spark, dir, name, DocId,
+        filesPerTrigger = coarseFilesPerTrigger, layout = keyBuckets) { src =>
+      val featRows = src()
+        .select(col("doc_id"), featurize(col("doc_id")).as("f"))
+        .as[MediaFeatRow]
+      VersionedStreamDedup.latestPerKeyId[MediaFeatRow](
+        featRows, _.doc_id.toString, _ => "f", _ => 0L).toDF()
+    } { raw =>
+      serve(latestMembers(raw)
+        .select(col("x.doc_id").as("doc_id"), col("x.f").as("f")))
     }
   }
 
@@ -565,50 +380,24 @@ private[graft] object StreamServingTwins {
     * upsert into (doc, frame)-keyed state, and `serve` runs an
     * arbitrary batch tail over the CONVERGED stat table (cut report
     * for s57, brute panel for s58, the IVF index layout for s68). */
-  private[graft] def runFrameStatStream(spark: SparkSession, dir: String)(
-      serve: DataFrame => DataFrame): DataFrame = {
+  private[graft] def runFrameStatStream(spark: SparkSession, dir: String,
+      name: String)(serve: DataFrame => DataFrame): DataFrame = {
     import spark.implicits._
-    withStreamConf(spark) {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_vstat_")
-      val log = tmp.resolve("log")
-      val ckpt = tmp.resolve("ckpt")
-      try {
-        val in = sharedChunkDir(dir, "docid", "documents") { p =>
-          Registry.table(spark, dir, "documents").select(col("doc_id"))
-            .repartitionByRange(chunks, col("doc_id"))
-            .write.parquet(p.toString)
-        }
-        // coarsened trigger (StreamingHarness.coarseFilesPerTrigger):
-        // (doc, frame)-keyed stat upserts, converged fold is
-        // batching-independent
-        val src = spark.readStream.schema("doc_id BIGINT")
-          .option("maxFilesPerTrigger", coarseFilesPerTrigger)
-          .option("pathGlobFilter", "part-*")
-          .parquet(in.toString)
-        val statRows = MultimodalOps.videoFrameStats(src)
-          .as[FrameStatRow]
-        val dd = VersionedStreamDedup.latestPerKeyId[FrameStatRow](
-          statRows, _.doc_id.toString, _.frame_idx.toString, _ => 0L)
-        val q = dd.toDF().writeStream.outputMode("update")
-          .option("checkpointLocation", ckpt.toString)
-          .foreachBatch { (df: DataFrame, bid: Long) =>
-            writeBatchIdempotent(df.repartition(1), log, bid)
-            ()
-          }.start()
-        try q.processAllAvailable() finally q.stop()
-        requireMultiBatch(ckpt, "runFrameStatStream")
-        val raw = spark.read.parquet(log.toString)
-        val wMax = Window.partitionBy(col("key"))
-        val stats = raw
-          .withColumn("max_seq", max(col("seq")).over(wMax))
-          .filter(col("seq") === col("max_seq"))
-          .select(explode(col("xs")).as("x"))
-          .select(col("x.doc_id").as("doc_id"),
-            col("x.frame_idx").as("frame_idx"),
-            col("x.sum_r").as("sum_r"), col("x.sum_g").as("sum_g"),
-            col("x.sum_b").as("sum_b"))
-        serve(stats.localCheckpoint()).localCheckpoint()
-      } finally deleteRecursively(tmp)
+    // coarsened trigger (StreamingHarness.coarseFilesPerTrigger):
+    // (doc, frame)-keyed stat upserts, converged fold is
+    // batching-independent
+    runFileStream(spark, dir, name, DocId,
+        filesPerTrigger = coarseFilesPerTrigger) { src =>
+      VersionedStreamDedup.latestPerKeyId[FrameStatRow](
+        MultimodalOps.videoFrameStats(src()).as[FrameStatRow],
+        _.doc_id.toString, _.frame_idx.toString, _ => 0L).toDF()
+    } { raw =>
+      serve(latestMembers(raw)
+        .select(col("x.doc_id").as("doc_id"),
+          col("x.frame_idx").as("frame_idx"),
+          col("x.sum_r").as("sum_r"), col("x.sum_g").as("sum_g"),
+          col("x.sum_b").as("sum_b"))
+        .localCheckpoint())
     }
   }
 }

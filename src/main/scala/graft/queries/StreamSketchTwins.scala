@@ -32,10 +32,10 @@ private[graft] object StreamSketchTwins {
     Entry("s38_stream_kmv_users",
       (spark, dir) => {
         import graft.functions.{KmvSketch, TextFunctions}
-        runFileStream(spark, dir, mode = "complete",
+        runFileStream(spark, dir, "s38_stream_kmv_users", Events, mode = "complete",
             // coarsened trigger: complete-mode sketch agg, batching-independent
-            filesPerTrigger = coarseFilesPerTrigger.toInt) { src =>
-          src().toDF()
+            filesPerTrigger = coarseFilesPerTrigger) { src =>
+          src()
             .select(col("event_type"),
               TextFunctions.fingerprint64(col("user_id").cast("string"))
                 .as("h"))
@@ -64,70 +64,48 @@ private[graft] object StreamSketchTwins {
     // against the live ingest: overlap between the growing train feed
     // and a frozen eval set, continuously, from 4 KB of state.
     Entry("s39_stream_kmv_contamination",
-      (spark, dir) => { import spark.implicits._
+      (spark, dir) => {
         import graft.functions.KmvSketch
-        withStreamConf(spark) {
-          val tmp = java.nio.file.Files.createTempDirectory("graft_kmvc_")
-          val log = tmp.resolve("log"); val ckpt = tmp.resolve("ckpt")
-          try {
-            val in = sharedChunkDir(dir, "doctext", "documents") { p =>
-              Registry.table(spark, dir, "documents")
-                .select(col("doc_id"), col("text"))
-                .repartitionByRange(chunks, col("doc_id"))
-                .write.parquet(p.toString)
-            }
-            val src = spark.readStream.schema("doc_id BIGINT, text STRING")
-              // coarsened trigger (StreamingHarness.coarseFilesPerTrigger):
-              // monoid streaming-agg state, batching-independent convergence
-              .option("maxFilesPerTrigger", coarseFilesPerTrigger)
-              .option("pathGlobFilter", "part-*")
-              .parquet(in.toString)
-            val k = 256
-            val sketches = src
-              .withColumn("split", TextFunctions.splitAssign(col("doc_id")))
-              .filter(col("split") =!= "val")
-              .select(col("split"), TextFunctions.tokens(col("text")).as("toks"))
-              .select(col("split"), explode(array_distinct(
-                TextFunctions.shingles3FromTokens(col("toks")))).as("sh"))
-              .select(col("split"),
-                TextFunctions.fingerprint64(col("sh")).as("fp"))
-              .groupBy(col("split"))
-              .agg(KmvSketch.kmvHashes(col("fp"), k).as("hs"))
-            val q = sketches.writeStream.outputMode("complete")
-              .option("checkpointLocation", ckpt.toString)
-              .foreachBatch { (df: DataFrame, _: Long) =>
-                df.repartition(1).write.mode("overwrite").parquet(log.toString)
-                ()
-              }.start()
-            try q.processAllAvailable() finally q.stop()
-            requireMultiBatch(ckpt, "s39_stream_kmv_contamination")
-            val conv = spark.read.parquet(log.toString)
-            val tr = conv.filter(col("split") === "train")
-              .select(col("hs").as("train_hs"))
-            val te = conv.filter(col("split") === "test")
-              .select(col("hs").as("test_hs"))
-            tr.crossJoin(te)
-              .withColumn("u",
-                KmvSketch.unionMin(col("train_hs"), col("test_hs"), k))
-              .select(
-                KmvSketch.estimateFromHashes(
-                  sort_array(col("train_hs")), k).as("n_train_kmv"),
-                KmvSketch.estimateFromHashes(
-                  sort_array(col("test_hs")), k).as("n_test_kmv"),
-                KmvSketch.estimateFromHashes(col("u"), k).as("n_union_kmv"),
-                KmvSketch.coincidences(col("u"), col("train_hs"),
-                  col("test_hs")).as("c"),
-                size(col("u")).as("nu"))
-              .select(col("n_train_kmv"), col("n_test_kmv"),
-                col("n_union_kmv"), col("c"),
-                when(col("nu") === 0, lit(0.0))
-                  .otherwise(round(col("c") / col("nu"), 6))
-                  .as("jaccard_kmv"),
-                when(col("nu") === 0, lit(0L)).otherwise(
-                  floor(col("c") * col("n_union_kmv") / col("nu"))
-                    .cast("long")).as("n_inter_kmv"))
-              .localCheckpoint()
-          } finally deleteRecursively(tmp)
+        val k = 256
+        runFileStream(spark, dir, "s39_stream_kmv_contamination", DocText,
+            mode = "complete",
+            // coarsened trigger: monoid streaming-agg state, batching-independent convergence
+            filesPerTrigger = coarseFilesPerTrigger) { src =>
+          src()
+            .withColumn("split", TextFunctions.splitAssign(col("doc_id")))
+            .filter(col("split") =!= "val")
+            .select(col("split"), TextFunctions.tokens(col("text")).as("toks"))
+            .select(col("split"), explode(array_distinct(
+              TextFunctions.shingles3FromTokens(col("toks")))).as("sh"))
+            .select(col("split"),
+              TextFunctions.fingerprint64(col("sh")).as("fp"))
+            .groupBy(col("split"))
+            .agg(KmvSketch.kmvHashes(col("fp"), k).as("hs"))
+        } { conv =>
+          val tr = conv.filter(col("split") === "train")
+            .select(col("hs").as("train_hs"))
+          val te = conv.filter(col("split") === "test")
+            .select(col("hs").as("test_hs"))
+          tr.crossJoin(te)
+            .withColumn("u",
+              KmvSketch.unionMin(col("train_hs"), col("test_hs"), k))
+            .select(
+              KmvSketch.estimateFromHashes(
+                sort_array(col("train_hs")), k).as("n_train_kmv"),
+              KmvSketch.estimateFromHashes(
+                sort_array(col("test_hs")), k).as("n_test_kmv"),
+              KmvSketch.estimateFromHashes(col("u"), k).as("n_union_kmv"),
+              KmvSketch.coincidences(col("u"), col("train_hs"),
+                col("test_hs")).as("c"),
+              size(col("u")).as("nu"))
+            .select(col("n_train_kmv"), col("n_test_kmv"),
+              col("n_union_kmv"), col("c"),
+              when(col("nu") === 0, lit(0.0))
+                .otherwise(round(col("c") / col("nu"), 6))
+                .as("jaccard_kmv"),
+              when(col("nu") === 0, lit(0L)).otherwise(
+                floor(col("c") * col("n_union_kmv") / col("nu"))
+                  .cast("long")).as("n_inter_kmv"))
         }
       },
       Some(s"""WITH b AS (SELECT doc_id, text,
@@ -180,58 +158,36 @@ private[graft] object StreamSketchTwins {
     // 100 TB feed runs. The probe set (exact top-20) joins in from the
     // static table at convergence; same oracle as the batch row.
     Entry("s40_stream_cms_heavy_hitters",
-      (spark, dir) => { import spark.implicits._
+      (spark, dir) => {
         import graft.functions.SketchFunctions
-        withStreamConf(spark) {
-          val tmp = java.nio.file.Files.createTempDirectory("graft_cms_")
-          val log = tmp.resolve("log"); val ckpt = tmp.resolve("ckpt")
-          try {
-            val in = sharedChunkDir(dir, "doctext", "documents") { p =>
-              Registry.table(spark, dir, "documents")
-                .select(col("doc_id"), col("text"))
-                .repartitionByRange(chunks, col("doc_id"))
-                .write.parquet(p.toString)
-            }
-            val src = spark.readStream.schema("doc_id BIGINT, text STRING")
-              // coarsened trigger (StreamingHarness.coarseFilesPerTrigger):
-              // monoid streaming-agg state, batching-independent convergence
-              .option("maxFilesPerTrigger", coarseFilesPerTrigger)
-              .option("pathGlobFilter", "part-*")
-              .parquet(in.toString)
-            val cmsStream = src
-              .select(explode(TextFunctions.tokens(col("text"))).as("tok"))
-              .select(explode(SketchFunctions.cmsCoords(
+        runFileStream(spark, dir, "s40_stream_cms_heavy_hitters", DocText,
+            mode = "complete",
+            // coarsened trigger: monoid streaming-agg state, batching-independent convergence
+            filesPerTrigger = coarseFilesPerTrigger) { src =>
+          src()
+            .select(explode(TextFunctions.tokens(col("text"))).as("tok"))
+            .select(explode(SketchFunctions.cmsCoords(
+              TextFunctions.tokenHash(col("tok")))).as("rb"))
+            .groupBy(col("rb.r").as("r"), col("rb.b").as("b"))
+            .agg(count(lit(1)).as("cnt"))
+        } { cms =>
+          val top = Registry.table(spark, dir, "documents")
+            .select(explode(TextFunctions.tokens(col("text"))).as("tok"))
+            .groupBy(col("tok"))
+            .agg(count(lit(1)).as("n_exact"))
+            .orderBy(col("n_exact").desc, col("tok"))
+            .limit(20)
+          top
+            .select(col("tok"), col("n_exact"),
+              explode(SketchFunctions.cmsCoords(
                 TextFunctions.tokenHash(col("tok")))).as("rb"))
-              .groupBy(col("rb.r").as("r"), col("rb.b").as("b"))
-              .agg(count(lit(1)).as("cnt"))
-            val q = cmsStream.writeStream.outputMode("complete")
-              .option("checkpointLocation", ckpt.toString)
-              .foreachBatch { (df: DataFrame, _: Long) =>
-                df.repartition(1).write.mode("overwrite").parquet(log.toString)
-                ()
-              }.start()
-            try q.processAllAvailable() finally q.stop()
-            requireMultiBatch(ckpt, "s40_stream_cms_heavy_hitters")
-            val cms = spark.read.parquet(log.toString)
-            val top = Registry.table(spark, dir, "documents")
-              .select(explode(TextFunctions.tokens(col("text"))).as("tok"))
-              .groupBy(col("tok"))
-              .agg(count(lit(1)).as("n_exact"))
-              .orderBy(col("n_exact").desc, col("tok"))
-              .limit(20)
-            top
-              .select(col("tok"), col("n_exact"),
-                explode(SketchFunctions.cmsCoords(
-                  TextFunctions.tokenHash(col("tok")))).as("rb"))
-              .select(col("tok"), col("n_exact"),
-                col("rb.r").as("r"), col("rb.b").as("b"))
-              .join(cms, Seq("r", "b"))
-              .groupBy(col("tok"), col("n_exact"))
-              .agg(min(col("cnt")).as("n_cms"))
-              .withColumn("overestimate", col("n_cms") - col("n_exact"))
-              .orderBy(col("n_exact").desc, col("tok"))
-              .localCheckpoint()
-          } finally deleteRecursively(tmp)
+            .select(col("tok"), col("n_exact"),
+              col("rb.r").as("r"), col("rb.b").as("b"))
+            .join(cms, Seq("r", "b"))
+            .groupBy(col("tok"), col("n_exact"))
+            .agg(min(col("cnt")).as("n_cms"))
+            .withColumn("overestimate", col("n_cms") - col("n_exact"))
+            .orderBy(col("n_exact").desc, col("tok"))
         }
       },
       Some {
@@ -270,77 +226,55 @@ private[graft] object StreamSketchTwins {
     // this is the incremental dedup pre-filter: the filter keeps
     // absorbing the feed without rebuilds.
     Entry("s41_stream_bloom_contamination",
-      (spark, dir) => { import spark.implicits._
+      (spark, dir) => {
         import graft.functions.SketchFunctions
-        withStreamConf(spark) {
-          val tmp = java.nio.file.Files.createTempDirectory("graft_blm_")
-          val log = tmp.resolve("log"); val ckpt = tmp.resolve("ckpt")
-          try {
-            val in = sharedChunkDir(dir, "doctext", "documents") { p =>
-              Registry.table(spark, dir, "documents")
-                .select(col("doc_id"), col("text"))
-                .repartitionByRange(chunks, col("doc_id"))
-                .write.parquet(p.toString)
-            }
-            val src = spark.readStream.schema("doc_id BIGINT, text STRING")
-              // coarsened trigger (StreamingHarness.coarseFilesPerTrigger):
-              // monoid streaming-agg state, batching-independent convergence
-              .option("maxFilesPerTrigger", coarseFilesPerTrigger)
-              .option("pathGlobFilter", "part-*")
-              .parquet(in.toString)
-            def shingleHashes(df: DataFrame): DataFrame = df
-              .withColumn("split", TextFunctions.splitAssign(col("doc_id")))
-              .select(col("doc_id"), col("split"),
-                TextFunctions.tokens(col("text")).as("toks"))
-              .select(col("doc_id"), col("split"), explode(array_distinct(
-                TextFunctions.shingles3FromTokens(col("toks")))).as("sh"))
-              .select(col("doc_id"), col("split"),
-                TextFunctions.tokenHash(col("sh")).as("th"))
-            // train bits as streaming DISTINCT state (monotone: set
-            // bits only turn on) — groupBy(pos).count in complete mode
-            val bitsStream = shingleHashes(src.toDF())
-              .filter(col("split") === "train")
-              .select(explode(SketchFunctions.bloomPositions(col("th")))
-                .as("pos"))
-              .groupBy(col("pos")).agg(count(lit(1)).as("n"))
-            val q = bitsStream.writeStream.outputMode("complete")
-              .option("checkpointLocation", ckpt.toString)
-              .foreachBatch { (df: DataFrame, _: Long) =>
-                df.repartition(1).write.mode("overwrite").parquet(log.toString)
-                ()
-              }.start()
-            try q.processAllAvailable() finally q.stop()
-            requireMultiBatch(ckpt, "s41_stream_bloom_contamination")
-            val bits = spark.read.parquet(log.toString)
-              .select(col("pos")).withColumn("set", lit(1))
-            val sh = shingleHashes(
-              Registry.table(spark, dir, "documents")
-                .select(col("doc_id"), col("text")))
-            val test = sh.filter(col("split") === "test")
-            val trainTh = sh.filter(col("split") === "train")
-              .select(col("th")).distinct()
-            val bloomHits = test
-              .select(col("doc_id"), col("th"),
-                explode(SketchFunctions.bloomPositions(col("th"))).as("pos"))
-              .join(broadcast(bits), Seq("pos"), "left")
-              .groupBy(col("doc_id"), col("th"))
-              .agg((count(col("set")) === SketchFunctions.bloomK)
-                .cast("int").as("hit"))
-              .groupBy(col("doc_id"))
-              .agg(count(lit(1)).as("n_shingles"),
-                sum(col("hit")).as("n_bloom_hits"))
-            val exactHits = test
-              .join(trainTh.withColumn("intrain", lit(1)), Seq("th"), "left")
-              .groupBy(col("doc_id"))
-              .agg(count(col("intrain")).as("n_contaminated"))
-            bloomHits.join(exactHits, Seq("doc_id"))
-              .select(col("doc_id"), col("n_shingles"),
-                col("n_contaminated"), col("n_bloom_hits"),
-                (col("n_bloom_hits") - col("n_contaminated"))
-                  .as("bloom_false_pos"))
-              .orderBy(col("doc_id"))
-              .localCheckpoint()
-          } finally deleteRecursively(tmp)
+        def shingleHashes(df: DataFrame): DataFrame = df
+          .withColumn("split", TextFunctions.splitAssign(col("doc_id")))
+          .select(col("doc_id"), col("split"),
+            TextFunctions.tokens(col("text")).as("toks"))
+          .select(col("doc_id"), col("split"), explode(array_distinct(
+            TextFunctions.shingles3FromTokens(col("toks")))).as("sh"))
+          .select(col("doc_id"), col("split"),
+            TextFunctions.tokenHash(col("sh")).as("th"))
+        runFileStream(spark, dir, "s41_stream_bloom_contamination", DocText,
+            mode = "complete",
+            // coarsened trigger: monoid streaming-agg state, batching-independent convergence
+            filesPerTrigger = coarseFilesPerTrigger) { src =>
+          // train bits as streaming DISTINCT state (monotone: set
+          // bits only turn on) — groupBy(pos).count in complete mode
+          shingleHashes(src())
+            .filter(col("split") === "train")
+            .select(explode(SketchFunctions.bloomPositions(col("th")))
+              .as("pos"))
+            .groupBy(col("pos")).agg(count(lit(1)).as("n"))
+        } { log =>
+          val bits = log.select(col("pos")).withColumn("set", lit(1))
+          val sh = shingleHashes(
+            Registry.table(spark, dir, "documents")
+              .select(col("doc_id"), col("text")))
+          val test = sh.filter(col("split") === "test")
+          val trainTh = sh.filter(col("split") === "train")
+            .select(col("th")).distinct()
+          val bloomHits = test
+            .select(col("doc_id"), col("th"),
+              explode(SketchFunctions.bloomPositions(col("th"))).as("pos"))
+            .join(broadcast(bits), Seq("pos"), "left")
+            .groupBy(col("doc_id"), col("th"))
+            .agg((count(col("set")) === SketchFunctions.bloomK)
+              .cast("int").as("hit"))
+            .groupBy(col("doc_id"))
+            .agg(count(lit(1)).as("n_shingles"),
+              sum(col("hit")).as("n_bloom_hits"))
+          val exactHits = test
+            .join(trainTh.withColumn("intrain", lit(1)), Seq("th"), "left")
+            .groupBy(col("doc_id"))
+            .agg(count(col("intrain")).as("n_contaminated"))
+          bloomHits.join(exactHits, Seq("doc_id"))
+            .select(col("doc_id"), col("n_shingles"),
+              col("n_contaminated"), col("n_bloom_hits"),
+              (col("n_bloom_hits") - col("n_contaminated"))
+                .as("bloom_false_pos"))
+            .orderBy(col("doc_id"))
         }
       },
       Some {
@@ -391,8 +325,9 @@ private[graft] object StreamSketchTwins {
     Entry("s43_stream_quantile_sketch",
       (spark, dir) => {
         import graft.functions.{PrioritySample, TextFunctions}
-        runFileStream(spark, dir, mode = "complete") { src =>
-          src().toDF()
+        runFileStream(spark, dir, "s43_stream_quantile_sketch", Events,
+            mode = "complete") { src =>
+          src()
             .select(col("event_type"), col("value"),
               TextFunctions.fingerprint64(col("event_id").cast("string"))
                 .as("h"))
@@ -436,49 +371,8 @@ private[graft] object StreamSketchTwins {
     // a deterministic per-doc hash test — no resampling pass over
     // what's already ingested.
     Entry("s54_stream_domain_mix",
-      (spark, dir) => {
-        withStreamConf(spark) {
-          val tmp = java.nio.file.Files.createTempDirectory("graft_dmix_")
-          val log = tmp.resolve("log")
-          val ckpt = tmp.resolve("ckpt")
-          try {
-            val in = sharedChunkDir(dir, "doclang", "documents") { p =>
-              Registry.table(spark, dir, "documents")
-                .select(col("doc_id"), col("lang"))
-                .repartitionByRange(chunks, col("doc_id"))
-                .write.parquet(p.toString)
-            }
-            val src = spark.readStream
-              .schema("doc_id BIGINT, lang STRING")
-              // coarsened trigger (StreamingHarness.coarseFilesPerTrigger):
-              // monoid streaming-agg state, batching-independent convergence
-              .option("maxFilesPerTrigger", coarseFilesPerTrigger)
-              .option("pathGlobFilter", "part-*")
-              .parquet(in.toString)
-            val counts = src.groupBy(col("lang"))
-              .agg(count(lit(1)).as("c"))
-            val q = counts.writeStream.outputMode("update")
-              .option("checkpointLocation", ckpt.toString)
-              .foreachBatch { (df: DataFrame, bid: Long) =>
-                writeBatchIdempotent(
-                  df.withColumn("bid", lit(bid)).repartition(1), log, bid)
-                ()
-              }.start()
-            try q.processAllAvailable() finally q.stop()
-            requireMultiBatch(ckpt, "s54_stream_domain_mix")
-            // converged counts = each language's LAST emitted running sum
-            val raw = spark.read.parquet(log.toString)
-            val wMax = Window.partitionBy(col("lang"))
-            val converged = raw
-              .withColumn("max_bid", max(col("bid")).over(wMax))
-              .filter(col("bid") === col("max_bid"))
-              .select(col("lang"), col("c"))
-            TextOps.domainMixFrom(spark, dir,
-                converged.localCheckpoint())
-              .localCheckpoint()
-          } finally deleteRecursively(tmp)
-        }
-      },
+      (spark, dir) => runLangCountStream(spark, dir, "s54_stream_domain_mix")(
+        TextOps.domainMixFrom(spark, dir, _)),
       Some(TextOps.domainMixOracleSql)),
 
     // STREAMING LM TRAINING → QUALITY FILTER — the perplexity filter's
@@ -494,53 +388,22 @@ private[graft] object StreamSketchTwins {
     // crawl lands, and re-banding the corpus is a re-run of the
     // scoring pass against a model that is already current.
     Entry("s55_stream_lm_filter",
-      (spark, dir) => {
-        withStreamConf(spark) {
-          val tmp = java.nio.file.Files.createTempDirectory("graft_lmf_")
-          val log = tmp.resolve("log")
-          val ckpt = tmp.resolve("ckpt")
-          try {
-            val in = sharedChunkDir(dir, "doctext", "documents") { p =>
-              Registry.table(spark, dir, "documents")
-                .select(col("doc_id"), col("text"))
-                .repartitionByRange(chunks, col("doc_id"))
-                .write.parquet(p.toString)
-            }
-            val src = spark.readStream
-              .schema("doc_id BIGINT, text STRING")
-              // coarsened trigger (StreamingHarness.coarseFilesPerTrigger):
-              // monoid streaming-agg state, batching-independent convergence
-              .option("maxFilesPerTrigger", coarseFilesPerTrigger)
-              .option("pathGlobFilter", "part-*")
-              .parquet(in.toString)
-            val vocab = src
-              .select(explode(
-                graft.functions.TextFunctions.tokens(col("text")))
-                .as("tok"))
-              .groupBy(col("tok"))
-              .agg(count(lit(1)).as("cnt"))
-            val q = vocab.writeStream.outputMode("update")
-              .option("checkpointLocation", ckpt.toString)
-              .foreachBatch { (df: DataFrame, bid: Long) =>
-                writeBatchIdempotent(
-                  df.withColumn("bid", lit(bid)).repartition(1), log, bid)
-                ()
-              }.start()
-            try q.processAllAvailable() finally q.stop()
-            requireMultiBatch(ckpt, "s55_stream_lm_filter")
-            // converged model = each token's LAST emitted running count
-            val raw = spark.read.parquet(log.toString)
-            val wMax = Window.partitionBy(col("tok"))
-            val converged = raw
-              .withColumn("max_bid", max(col("bid")).over(wMax))
-              .filter(col("bid") === col("max_bid"))
-              .select(col("tok"), col("cnt"))
-            TextOps.perplexityBandsFrom(spark, dir,
-                converged.localCheckpoint())
-              .localCheckpoint()
-          } finally deleteRecursively(tmp)
-        }
-      },
+      (spark, dir) =>
+        runFileStream(spark, dir, "s55_stream_lm_filter", DocText,
+            // coarsened trigger: monoid streaming-agg state, batching-independent convergence
+            filesPerTrigger = coarseFilesPerTrigger) { src =>
+          src()
+            .select(explode(
+              graft.functions.TextFunctions.tokens(col("text")))
+              .as("tok"))
+            .groupBy(col("tok"))
+            .agg(count(lit(1)).as("cnt"))
+        } { raw =>
+          // converged model = each token's LAST emitted running count
+          TextOps.perplexityBandsFrom(spark, dir,
+            latestBidPerKey(raw, "tok").select(col("tok"), col("cnt"))
+              .localCheckpoint())
+        },
       Some(TextOps.perplexityBandsOracleSql)),
 
     // STREAMING SOURCE REPUTATION — the coarse curation statistic
@@ -556,52 +419,22 @@ private[graft] object StreamSketchTwins {
     // microbatch, and re-deciding which sources pass the bar is
     // arithmetic on that table — never a re-scan of what's ingested.
     Entry("s56_stream_source_filter",
-      (spark, dir) => {
-        withStreamConf(spark) {
-          val tmp = java.nio.file.Files.createTempDirectory("graft_srcf_")
-          val log = tmp.resolve("log")
-          val ckpt = tmp.resolve("ckpt")
-          try {
-            val in = sharedChunkDir(dir, "docsrc", "documents") { p =>
-              Registry.table(spark, dir, "documents")
-                .select(col("doc_id"), col("source"), col("text"))
-                .repartitionByRange(chunks, col("doc_id"))
-                .write.parquet(p.toString)
-            }
-            val src = spark.readStream
-              .schema("doc_id BIGINT, source STRING, text STRING")
-              // coarsened trigger (StreamingHarness.coarseFilesPerTrigger):
-              // monoid streaming-agg state, batching-independent convergence
-              .option("maxFilesPerTrigger", coarseFilesPerTrigger)
-              .option("pathGlobFilter", "part-*")
-              .parquet(in.toString)
-            val per = TextOps.sourceQmicro(src)
-              .groupBy(col("source"))
-              .agg(count(lit(1)).as("n_docs"),
-                sum(col("qmicro")).as("q_sum"),
-                sum(col("doc_id")).as("sum_ids"))
-            val q = per.writeStream.outputMode("update")
-              .option("checkpointLocation", ckpt.toString)
-              .foreachBatch { (df: DataFrame, bid: Long) =>
-                writeBatchIdempotent(
-                  df.withColumn("bid", lit(bid)).repartition(1), log, bid)
-                ()
-              }.start()
-            try q.processAllAvailable() finally q.stop()
-            requireMultiBatch(ckpt, "s59_stream_temp_mix")
-            // converged stats = each source's LAST emitted running sums
-            val raw = spark.read.parquet(log.toString)
-            val wMax = Window.partitionBy(col("source"))
-            val converged = raw
-              .withColumn("max_bid", max(col("bid")).over(wMax))
-              .filter(col("bid") === col("max_bid"))
-              .select(col("source"), col("n_docs"), col("q_sum"),
-                col("sum_ids"))
-            TextOps.sourceFilterFrom(converged.localCheckpoint())
-              .localCheckpoint()
-          } finally deleteRecursively(tmp)
-        }
-      },
+      (spark, dir) =>
+        runFileStream(spark, dir, "s56_stream_source_filter", DocSource,
+            // coarsened trigger: monoid streaming-agg state, batching-independent convergence
+            filesPerTrigger = coarseFilesPerTrigger) { src =>
+          TextOps.sourceQmicro(src())
+            .groupBy(col("source"))
+            .agg(count(lit(1)).as("n_docs"),
+              sum(col("qmicro")).as("q_sum"),
+              sum(col("doc_id")).as("sum_ids"))
+        } { raw =>
+          // converged stats = each source's LAST emitted running sums
+          TextOps.sourceFilterFrom(latestBidPerKey(raw, "source")
+            .select(col("source"), col("n_docs"), col("q_sum"),
+              col("sum_ids"))
+            .localCheckpoint())
+        },
       Some(TextOps.sourceFilterOracleSql)),
 
     // STREAMING TEMPERATURE MIXING — s54's incremental-mixture proof
@@ -615,47 +448,8 @@ private[graft] object StreamSketchTwins {
     // now re-derive live from one maintained count table; switching α
     // at 100 TB is arithmetic on 5 rows, not a corpus pass.
     Entry("s59_stream_temp_mix",
-      (spark, dir) => {
-        withStreamConf(spark) {
-          val tmp = java.nio.file.Files.createTempDirectory("graft_tmix_")
-          val log = tmp.resolve("log")
-          val ckpt = tmp.resolve("ckpt")
-          try {
-            val in = sharedChunkDir(dir, "doclang", "documents") { p =>
-              Registry.table(spark, dir, "documents")
-                .select(col("doc_id"), col("lang"))
-                .repartitionByRange(chunks, col("doc_id"))
-                .write.parquet(p.toString)
-            }
-            val src = spark.readStream
-              .schema("doc_id BIGINT, lang STRING")
-              // coarsened trigger (StreamingHarness.coarseFilesPerTrigger):
-              // monoid streaming-agg state, batching-independent convergence
-              .option("maxFilesPerTrigger", coarseFilesPerTrigger)
-              .option("pathGlobFilter", "part-*")
-              .parquet(in.toString)
-            val counts = src.groupBy(col("lang"))
-              .agg(count(lit(1)).as("c"))
-            val q = counts.writeStream.outputMode("update")
-              .option("checkpointLocation", ckpt.toString)
-              .foreachBatch { (df: DataFrame, bid: Long) =>
-                writeBatchIdempotent(
-                  df.withColumn("bid", lit(bid)).repartition(1), log, bid)
-                ()
-              }.start()
-            try q.processAllAvailable() finally q.stop()
-            requireMultiBatch(ckpt, "s60_stream_tfidf_model")
-            val raw = spark.read.parquet(log.toString)
-            val wMax = Window.partitionBy(col("lang"))
-            val converged = raw
-              .withColumn("max_bid", max(col("bid")).over(wMax))
-              .filter(col("bid") === col("max_bid"))
-              .select(col("lang"), col("c"))
-            TextOps.tempMixFrom(spark, dir, converged.localCheckpoint())
-              .localCheckpoint()
-          } finally deleteRecursively(tmp)
-        }
-      },
+      (spark, dir) => runLangCountStream(spark, dir, "s59_stream_temp_mix")(
+        TextOps.tempMixFrom(spark, dir, _)),
       Some(TextOps.tempMixOracleSql)),
 
     // STREAMING DF MODEL → TF-IDF KEYWORDS — the retrieval-side
@@ -674,50 +468,34 @@ private[graft] object StreamSketchTwins {
     // documents land, and re-scoring is a re-run of the tf pass
     // against a model that is already current.
     Entry("s60_stream_tfidf_model",
-      (spark, dir) => {
-        withStreamConf(spark) {
-          val tmp = java.nio.file.Files.createTempDirectory("graft_tfidf_")
-          val log = tmp.resolve("log")
-          val ckpt = tmp.resolve("ckpt")
-          try {
-            val in = sharedChunkDir(dir, "doctext", "documents") { p =>
-              Registry.table(spark, dir, "documents")
-                .select(col("doc_id"), col("text"))
-                .repartitionByRange(chunks, col("doc_id"))
-                .write.parquet(p.toString)
-            }
-            val src = spark.readStream
-              .schema("doc_id BIGINT, text STRING")
-              // coarsened trigger (StreamingHarness.coarseFilesPerTrigger):
-              // monoid streaming-agg state, batching-independent convergence
-              .option("maxFilesPerTrigger", coarseFilesPerTrigger)
-              .option("pathGlobFilter", "part-*")
-              .parquet(in.toString)
-            val model = TextOps.tfidfDocTokens(src)
-              .groupBy(col("tok"))
-              .agg(count(lit(1)).as("df"))
-            val q = model.writeStream.outputMode("update")
-              .option("checkpointLocation", ckpt.toString)
-              .foreachBatch { (df: DataFrame, bid: Long) =>
-                writeBatchIdempotent(
-                  df.withColumn("bid", lit(bid)).repartition(1), log, bid)
-                ()
-              }.start()
-            try q.processAllAvailable() finally q.stop()
-            requireMultiBatch(ckpt, "s60_stream_tfidf_model")
-            // converged model = each token's LAST emitted running df
-            val raw = spark.read.parquet(log.toString)
-            val wMax = Window.partitionBy(col("tok"))
-            val converged = raw
-              .withColumn("max_bid", max(col("bid")).over(wMax))
-              .filter(col("bid") === col("max_bid"))
-              .select(col("tok"), col("df"))
-            TextOps.tfidfTopFrom(spark, dir,
-                converged.localCheckpoint())
-              .localCheckpoint()
-          } finally deleteRecursively(tmp)
-        }
-      },
+      (spark, dir) =>
+        runFileStream(spark, dir, "s60_stream_tfidf_model", DocText,
+            // coarsened trigger: monoid streaming-agg state, batching-independent convergence
+            filesPerTrigger = coarseFilesPerTrigger) { src =>
+          TextOps.tfidfDocTokens(src())
+            .groupBy(col("tok"))
+            .agg(count(lit(1)).as("df"))
+        } { raw =>
+          // converged model = each token's LAST emitted running df
+          TextOps.tfidfTopFrom(spark, dir,
+            latestBidPerKey(raw, "tok").select(col("tok"), col("df"))
+              .localCheckpoint())
+        },
       Some(TextOps.tfidfTopOracleSql))
   )
+
+  /** The streamed per-language document count shared by s54 and s59:
+    * native streaming aggregation holds the ≤5-row count table, and
+    * `serve` runs the row's batch quota chain over the CONVERGED
+    * counts (each language's last emitted running count). */
+  private def runLangCountStream(spark: SparkSession, dir: String,
+      name: String)(serve: DataFrame => DataFrame): DataFrame =
+    runFileStream(spark, dir, name, DocLang,
+        // coarsened trigger: monoid streaming-agg state, batching-independent convergence
+        filesPerTrigger = coarseFilesPerTrigger) { src =>
+      src().groupBy(col("lang")).agg(count(lit(1)).as("c"))
+    } { raw =>
+      serve(latestBidPerKey(raw, "lang").select(col("lang"), col("c"))
+        .localCheckpoint())
+    }
 }

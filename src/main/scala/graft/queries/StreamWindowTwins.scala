@@ -20,18 +20,14 @@ private[graft] object StreamWindowTwins {
 
     // Streaming windowed aggregation (complete mode): per-day,
     // per-type counts/sums accumulated across the file-source
-    // microbatches must equal the batch group-by. (Historical note:
-    // through round 4 this replayed a driver-collected array through
-    // MemoryStream; the file source removes the last non-harness
-    // `.collect()` from the library — MemoryStream-based replay now
-    // lives only in the sbt determinism harnesses.)
+    // microbatches must equal the batch group-by. (MemoryStream-based
+    // replay lives only in the sbt determinism harnesses.)
     Entry("s2_stream_window_agg",
       (spark, dir) => {
-        import spark.implicits._
-        runFileStream(spark, dir, mode = "complete",
+        runFileStream(spark, dir, "s2_stream_window_agg", Events, mode = "complete",
             // coarsened trigger (StreamingHarness.coarseFilesPerTrigger): complete-mode agg, final overwrite is the converged answer at any batching
-            filesPerTrigger = coarseFilesPerTrigger.toInt) { src =>
-          src().toDF()
+            filesPerTrigger = coarseFilesPerTrigger) { src =>
+          src()
             .withColumn("ts", expr("timestamp_micros(ts_us)"))
             .groupBy(date_trunc("day", col("ts")).as("day"), col("event_type"))
             .agg(count(lit(1)).as("n"), round(sum(col("value")), 4).as("sum_value"))
@@ -82,7 +78,7 @@ private[graft] object StreamWindowTwins {
             .agg(count(lit(1)).as("n"))
           // complete mode → each trigger's foreachBatch carries the full
           // current answer; overwrite keeps the log at exactly one copy
-          // (the runFileStream discipline — no memory sink anywhere)
+          // (no memory sink anywhere)
           val q = agg.writeStream.outputMode("complete")
             .option("checkpointLocation", ckpt.toString)
             .foreachBatch { (df: DataFrame, _: Long) =>
@@ -113,11 +109,10 @@ private[graft] object StreamWindowTwins {
     // s3_stream_file_agg's pattern applied to session_window).
     Entry("s12_stream_session_window",
       (spark, dir) => {
-        import spark.implicits._
-        runFileStream(spark, dir, mode = "complete",
+        runFileStream(spark, dir, "s12_stream_session_window", Events, mode = "complete",
             // coarsened trigger (StreamingHarness.coarseFilesPerTrigger): complete-mode session state, batching-independent final emission
-            filesPerTrigger = coarseFilesPerTrigger.toInt) { src =>
-          src().toDF()
+            filesPerTrigger = coarseFilesPerTrigger) { src =>
+          src()
             .withColumn("ts", expr("timestamp_micros(ts_us)"))
             .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
             .agg(count(lit(1)).as("n_events"),
@@ -167,7 +162,7 @@ private[graft] object StreamWindowTwins {
     Entry("s15_stream_session_append",
       (spark, dir) => runAppendReplay(spark, dir,
                           // coarsened trigger (StreamingHarness.coarseFilesPerTrigger): s13 keeps the tumbling-window per-file archetype; session closure happens only at the sentinel flush
-                          filesPerTrigger = coarseFilesPerTrigger.toInt) { src =>
+                          filesPerTrigger = coarseFilesPerTrigger) { src =>
         src().groupBy(session_window(col("ets"), "30 minutes"),
             col("user_id"))
           .agg(count(lit(1)).as("n_events"),
@@ -198,7 +193,7 @@ private[graft] object StreamWindowTwins {
     Entry("s26_stream_range_left_outer",
       (spark, dir) => runAppendReplay(spark, dir,
                           // coarsened trigger (StreamingHarness.coarseFilesPerTrigger): matched rows and the sentinel-flushed nulls are the same set at any batching
-                          filesPerTrigger = coarseFilesPerTrigger.toInt) { src =>
+                          filesPerTrigger = coarseFilesPerTrigger) { src =>
         val a = src()
           .filter(expr("event_type IN ('signup','error') " +
             "AND user_id % 3 != 0"))
@@ -231,7 +226,7 @@ private[graft] object StreamWindowTwins {
       (spark, dir) => VersionedStreamJoin.withStateStoreProvider(spark) {
         runAppendReplay(spark, dir,
             // coarsened trigger (StreamingHarness.coarseFilesPerTrigger): as s26, on the RocksDB backend
-            filesPerTrigger = coarseFilesPerTrigger.toInt) { src =>
+            filesPerTrigger = coarseFilesPerTrigger) { src =>
           val a = src()
             .filter(expr("event_type IN ('signup','error') " +
               "AND user_id % 3 != 0"))
@@ -262,7 +257,7 @@ private[graft] object StreamWindowTwins {
     Entry("s27_stream_range_full_outer",
       (spark, dir) => runAppendReplay(spark, dir,
                           // coarsened trigger (StreamingHarness.coarseFilesPerTrigger): as s26
-                          filesPerTrigger = coarseFilesPerTrigger.toInt) { src =>
+                          filesPerTrigger = coarseFilesPerTrigger) { src =>
         val a = src()
           .filter(expr("event_type IN ('signup','error') " +
             "AND user_id % 3 != 0"))
@@ -291,7 +286,7 @@ private[graft] object StreamWindowTwins {
     Entry("s28_stream_range_semi",
       (spark, dir) => runAppendReplay(spark, dir,
                           // coarsened trigger (StreamingHarness.coarseFilesPerTrigger): as s26
-                          filesPerTrigger = coarseFilesPerTrigger.toInt) { src =>
+                          filesPerTrigger = coarseFilesPerTrigger) { src =>
         val a = src()
           .filter(expr("event_type IN ('signup','error') " +
             "AND user_id % 3 != 0"))
@@ -326,8 +321,8 @@ private[graft] object StreamWindowTwins {
     // joins (s9/s26–s28), windows (s13/s12/s15), dedup (here).
     Entry("s29_stream_native_dedup",
       (spark, dir) =>
-        runFileStream(spark, dir, mode = "append") { src =>
-          src().toDF()
+        runFileStream(spark, dir, "s29_stream_native_dedup", Events, mode = "append") { src =>
+          src()
             .withColumn("ets", expr("timestamp_micros(ts_us)"))
             .withWatermark("ets", "400 days")
             .dropDuplicatesWithinWatermark("user_id", "event_type")
@@ -350,10 +345,10 @@ private[graft] object StreamWindowTwins {
       (spark, dir) => {
         val dim = broadcast(Registry.table(spark, dir, "customer")
           .select(col("c_custkey"), col("c_name"), col("c_mktsegment")))
-        runFileStream(spark, dir, mode = "append",
+        runFileStream(spark, dir, "s33_stream_static_enrich", Events, mode = "append",
             // coarsened trigger (StreamingHarness.coarseFilesPerTrigger): stateless enrichment, each event emitted exactly once at any batching
-            filesPerTrigger = coarseFilesPerTrigger.toInt) { src =>
-          src().toDF()
+            filesPerTrigger = coarseFilesPerTrigger) { src =>
+          src()
             .join(dim, col("user_id") === col("c_custkey"))
             .select(col("event_id"), col("user_id"), col("event_type"),
               col("c_name"), col("c_mktsegment"))
@@ -446,11 +441,7 @@ private[graft] object StreamWindowTwins {
                 ()
               }.start()
             try q.processAllAvailable() finally q.stop()
-            val raw = spark.read.parquet(log.toString)
-            val wMax = Window.partitionBy(col("key"))
-            raw
-              .withColumn("max_bid", max(col("bid")).over(wMax))
-              .filter(col("bid") === col("max_bid"))
+            latestBidPerKey(spark.read.parquet(log.toString), "key")
               .filter(size(col("xs")) > 0) // end-retired keys: tombstoned
               .select(col("key").cast("long").as("user_id"),
                 explode(col("xs")).as("x"))

@@ -1,45 +1,58 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.nio.file.Path
+
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.functions.{SketchFunctions, TextFunctions}
 import graft.streaming.{VersionedStreamDedup, VersionedStreamJoin}
 
-/** Shared machinery of every streaming replay row: the synchronous
-  * file-source harnesses (chunked ingest dirs, shared immutable chunk
-  * cache, converged-log folds), the stream-tuned session conf (NIO
-  * checkpoint manager, replay-sized shuffle width), and the
-  * watermark/append replay with its sentinel flush. Every temp-dir
-  * lifecycle helper lives here so the per-family files hold only
-  * query logic. */
+/** Shared machinery of the streaming replay rows. A table replays as
+  * a [[ChunkedSource]]: `chunks` range-split parquet files, written
+  * once into a shared immutable cache dir and consumed through the file
+  * source, a few files per trigger, like a growing ingest prefix. One
+  * runner drives every single-query row ([[runFileStream]], or
+  * [[replayInto]] in a caller-owned dir): it starts the row's query
+  * under the stream-tuned session conf ([[withStreamConf]]), logs every
+  * microbatch idempotently to parquet ([[startLog]],
+  * [[writeBatchIdempotent]]), drains it, checks that a coarsened replay
+  * ran several microbatches, and folds the re-read log to the row's
+  * converged answer, which is pinned before the work dir is deleted.
+  * The folds are the two convergence rules of at-least-once
+  * re-emission: the latest emission `seq` per key for keyed upsert
+  * state ([[latestSeqPerKey]], [[latestMembers]]) and the last
+  * microbatch per group for running aggregates ([[latestBidPerKey]]).
+  * Two-stage rows relay stage 1's scan-local output through a parquet
+  * dir ([[startRelay]], [[relayTail]]) and drain the stages in order
+  * ([[drain]]). Also here: the watermark/append replay with its
+  * sentinel flush. */
 private[graft] object StreamingHarness {
 
 
   private[graft] val chunks = 8
 
-  /** Coarsened replay trigger size — the s22 trigger discipline
-    * generalized: 4 files per trigger over the 8 replay chunks gives
-    * 2+ microbatches, amortizing the per-microbatch fixed costs
-    * (state-store commit, sink write + rename, incremental planning,
-    * offset/commit WAL) that dominate these rows at replay scale
-    * (guide §1/§2: the data barely registers; measured ~0.2–0.5 s per
-    * microbatch against a converged answer that is identical at any
-    * batching). ONLY sound for rows whose converged answer is
-    * batching-independent — upsert/monoid state with max-seq/max-bid
-    * folds; rows where batch boundaries are load-bearing (TTL firing
-    * schedules: s17/s18/s45; watermark-horizon dedup: s29; the
-    * batch-size-capped incremental CC paths: s62; the per-family
-    * per-file-fidelity archetypes: s4, s8, s11, s19, s20, s25, s48)
-    * keep maxFilesPerTrigger=1. Every coarsened row must call
-    * [[requireMultiBatch]] (or run through runFileStream, which does)
-    * so replay can never silently degrade to a single batch. */
-  private[graft] val coarseFilesPerTrigger = "4"
+  /** Files per trigger of a coarsened replay: 4 of the 8 chunk files,
+    * so the replay runs at least two microbatches while paying the
+    * per-microbatch fixed costs (state-store commit, sink write and
+    * rename, incremental planning, offset and commit logs) half as
+    * often as one file per trigger. Sound only for rows whose converged
+    * answer does not depend on batching: keyed upsert state folded by
+    * max seq, or monoid aggregates folded by max bid or overwritten in
+    * complete mode. Rows whose batch boundaries matter (TTL firing:
+    * s17/s18/s45; watermark-horizon dedup: s29; the batch-size-capped
+    * incremental CC: s62) and each family's per-file fidelity row (s4,
+    * s8, s11, s19, s20, s25, s48) take one file per trigger. The
+    * runner asserts that a coarsened replay committed >= 2 microbatches
+    * ([[requireMultiBatch]]), so it can never silently collapse to a
+    * single batch. */
+  private[graft] val coarseFilesPerTrigger = 4
 
-  /** Assert a coarsened replay actually ran ≥2 committed microbatches,
-    * from the engine's own commit log (works for every output mode —
-    * update/append logs and complete-mode overwrite sinks alike). */
+  /** Assert a coarsened replay of row `what` actually ran ≥2 committed
+    * microbatches, from the engine's own commit log under `ckpt` (works
+    * for every output mode). */
   private[graft] def requireMultiBatch(ckpt: java.nio.file.Path,
                                        what: String): Unit = {
     val commits = listDir(ckpt.resolve("commits"))
@@ -219,9 +232,7 @@ private[graft] object StreamingHarness {
   // count), so they are written ONCE into a shared immutable dir and
   // reused by all replay rows — each row keeps its own checkpoint and
   // sink-log dirs (the stateful parts), only the read-only ingest
-  // prefix is shared. Previously each of the 20 s-rows paid the
-  // repartition+write fixed cost (~the dominant non-state cost of the
-  // streaming suite). Publication is atomic (write to a pid-suffixed
+  // prefix is shared. Publication is atomic (write to a pid-suffixed
   // sibling, rename into place) so a concurrent second process either
   // wins the rename or reuses the winner's dir; _SUCCESS (written by
   // Spark's committer) marks completeness across JVM restarts.
@@ -295,142 +306,225 @@ private[graft] object StreamingHarness {
     }
   }
 
-  /** The events table as `chunks` range-split replay files (the shape
-    * every events-replay row consumes; see [[evReplaySchema]]). */
-  private[graft] def sharedEventsChunks(spark: SparkSession,
-                                 dir: String): java.nio.file.Path =
-    sharedChunkDir(dir, "events", "events") { p =>
-      Registry.table(spark, dir, "events")
-        .select(col("event_id"), col("user_id"), col("event_type"),
-          expr("unix_micros(ts)").as("ts_us"), col("value"))
-        .repartitionByRange(chunks, col("event_id"))
-        .write.parquet(p.toString)
-    }
-
-  /** The chained-join tables (customer / orders / lineitem) as chunked
-    * replay dirs — shared by s11 and s22. `l_ver` packs (shipdate
-    * epoch-days, price cents) so its strict ordering equals the batch
-    * oracle's dedup (see [[LiRow]]). */
-  private[graft] def chainChunkDirs(spark: SparkSession, dir: String)
-      : (java.nio.file.Path, java.nio.file.Path, java.nio.file.Path) = {
-    val cust = sharedChunkDir(dir, "chain_cust", "customer") { p =>
-      Registry.table(spark, dir, "customer")
-        .select(col("c_custkey"), col("c_name"))
-        .repartitionByRange(chunks, col("c_custkey"))
-        .write.parquet(p.toString)
-    }
-    // "_v2" = the +1 o_ver shift below: sharedChunkDir keys fingerprint
-    // the SOURCE data but not this derivation logic, so a
-    // schema/derivation change must still bump the name or a stale
-    // cache from an older build poisons the replay
-    val ord = sharedChunkDir(dir, "chain_ord_v2", "orders") { p =>
-      Registry.table(spark, dir, "orders")
-        .select(col("o_orderkey"), col("o_custkey"),
-          // +1: versions must stay POSITIVE — o_orderkey 0 exists, and
-          // under s22's event-time TTL an epoch-zero version is dropped
-          // by the watermarked union (EventTimeZeroVersionSpec); a
-          // strictly monotone shift changes no dedup outcome
-          (col("o_orderkey") + lit(1)).as("o_ver"), col("o_totalprice"))
-        .repartitionByRange(chunks, col("o_orderkey"))
-        .write.parquet(p.toString)
-    }
-    val li = sharedChunkDir(dir, "chain_li", "lineitem") { p =>
-      Registry.table(spark, dir, "lineitem")
-        .select(col("l_orderkey"), col("l_linenumber"),
-          (expr("unix_date(cast(l_shipdate as date))") * lit(10000000000L)
-            + expr("cast(round(l_extendedprice * 100) as bigint)"))
-            .as("l_ver"),
-          col("l_extendedprice"))
-        .repartitionByRange(chunks, col("l_orderkey"))
-        .write.parquet(p.toString)
-    }
-    (cust, ord, li)
+  /** A table replayed as `chunks` range-split parquet files: the
+    * shared-chunk-dir `name`, the source `table` whose content keys the
+    * cache (see [[sharedChunkDir]]), the replay files' `schema`, and
+    * the projection `project` that writes them, range-split on its
+    * first column. The cache key fingerprints the source data, not the
+    * projection, so a projection change must come with a new `name`. */
+  private[graft] final case class ChunkedSource(name: String, table: String,
+      schema: String, project: (SparkSession, String) => DataFrame) {
+    /** This source's chunk dir for the tables under `dir`, written once. */
+    def chunkDir(spark: SparkSession, dir: String): Path =
+      sharedChunkDir(dir, name, table) { p =>
+        val df = project(spark, dir)
+        df.repartitionByRange(chunks, col(df.columns.head)).write.parquet(p.toString)
+      }
   }
 
-  /** Schema of the range-split events replay files (runFileStream and
-    * s13 must agree — the same writer feeds both). */
-  private[graft] val evReplaySchema = "event_id BIGINT, user_id BIGINT, " +
-    "event_type STRING, ts_us BIGINT, value DOUBLE"
+  private def documents(cols: Column*): (SparkSession, String) => DataFrame =
+    (spark, dir) => Registry.table(spark, dir, "documents").select(cols: _*)
 
-  /** File-source streaming harness (the production shape — nothing is
-    * EVER driver-resident, sink included): the events table is
-    * range-split into `chunks` parquet files (a stand-in for a growing
-    * ingest directory — at 100 TB this is the object-store prefix new
-    * files land in), then readStream consumes one file per trigger
-    * through `build`, and every microbatch's emissions land in a
-    * parquet LOG via foreachBatch (per-bid idempotent renames via
-    * [[writeBatchIdempotent]] for update/append mode; whole-dir
-    * overwrite for complete mode, where each trigger carries the full
-    * current answer). Raw update-mode emission volume (typically 5–10×
-    * the converged answer) therefore lives only in executor-written
-    * files, never in a driver-side memory sink. `finish` reduces the
-    * re-read log to the small converged answer (e.g. the max-seq
-    * filter), which is localCheckpointed so the temp log can be
-    * deleted. Arrival order varies with file mtimes, but versions are
-    * unique per (key, id) so converged state is order-independent. */
-  private[graft] def runFileStream(spark: SparkSession, dir: String,
-                            mode: String = "update",
-                            filesPerTrigger: Int = 1)(
-      build: (() => org.apache.spark.sql.Dataset[Ev]) => DataFrame)(
-      finish: DataFrame => DataFrame): DataFrame =
+  private[graft] val Events = ChunkedSource("events", "events",
+    "event_id BIGINT, user_id BIGINT, event_type STRING, ts_us BIGINT, value DOUBLE",
+    (spark, dir) => Registry.table(spark, dir, "events")
+      .select(col("event_id"), col("user_id"), col("event_type"),
+        expr("unix_micros(ts)").as("ts_us"), col("value")))
+  private[graft] val DocText = ChunkedSource("doctext", "documents",
+    "doc_id BIGINT, text STRING", documents(col("doc_id"), col("text")))
+  private[graft] val DocFingerprint = ChunkedSource("docfp", "documents",
+    "doc_id BIGINT, fp STRING", documents(col("doc_id"), md5(col("text")).as("fp")))
+  private[graft] val DocLang = ChunkedSource("doclang", "documents",
+    "doc_id BIGINT, lang STRING", documents(col("doc_id"), col("lang")))
+  private[graft] val DocSource = ChunkedSource("docsrc", "documents",
+    "doc_id BIGINT, source STRING, text STRING",
+    documents(col("doc_id"), col("source"), col("text")))
+  private[graft] val DocId = ChunkedSource("docid", "documents",
+    "doc_id BIGINT", documents(col("doc_id")))
+  private[graft] val EmbVec = ChunkedSource("embvec", "embeddings",
+    "vec_id BIGINT, e ARRAY<DOUBLE>, nrm DOUBLE", VectorOps.embSlim)
+  private[graft] val EmbLabeled = ChunkedSource("emblab", "embeddings",
+    "vec_id BIGINT, label INT, e ARRAY<DOUBLE>, nrm DOUBLE", VectorOps.embLabeled)
+  /** Near-duplicate candidate edges (s62's streamed graph). */
+  private[graft] val DupPairs = ChunkedSource("duppairs", "documents",
+    "d1 BIGINT, d2 BIGINT",
+    (spark, dir) => DedupOps.jaccardPairs(spark, dir).select(col("d1"), col("d2")))
+
+  /** The chained-join tables (customer / orders / lineitem), shared by
+    * s11 and s22. `l_ver` packs (shipdate epoch-days, price cents) so
+    * its strict ordering equals the batch oracle's dedup (see
+    * [[LiRow]]). */
+  private[graft] val ChainCust = ChunkedSource("chain_cust", "customer",
+    "c_custkey BIGINT, c_name STRING",
+    (spark, dir) => Registry.table(spark, dir, "customer")
+      .select(col("c_custkey"), col("c_name")))
+  // "_v2" names the +1 o_ver shift (see ChunkedSource on naming)
+  private[graft] val ChainOrd = ChunkedSource("chain_ord_v2", "orders",
+    "o_orderkey BIGINT, o_custkey BIGINT, o_ver BIGINT, o_totalprice DOUBLE",
+    (spark, dir) => Registry.table(spark, dir, "orders")
+      .select(col("o_orderkey"), col("o_custkey"),
+        // +1: versions must stay POSITIVE — o_orderkey 0 exists, and
+        // under s22's event-time TTL an epoch-zero version is dropped
+        // by the watermarked union (EventTimeZeroVersionSpec); a
+        // strictly monotone shift changes no dedup outcome
+        (col("o_orderkey") + lit(1)).as("o_ver"), col("o_totalprice")))
+  private[graft] val ChainLi = ChunkedSource("chain_li", "lineitem",
+    "l_orderkey BIGINT, l_linenumber INT, l_ver BIGINT, l_extendedprice DOUBLE",
+    (spark, dir) => Registry.table(spark, dir, "lineitem")
+      .select(col("l_orderkey"), col("l_linenumber"),
+        (expr("unix_date(cast(l_shipdate as date))") * lit(10000000000L)
+          + expr("cast(round(l_extendedprice * 100) as bigint)"))
+          .as("l_ver"),
+        col("l_extendedprice")))
+
+  /** The replay file source: `schema` rows of the `glob` files in `in`,
+    * at most `filesPerTrigger` files per microbatch. */
+  private[graft] def fileStream(spark: SparkSession, schema: String, in: Path,
+      filesPerTrigger: Int, glob: String = "part-*"): DataFrame =
+    spark.readStream.schema(schema)
+      .option("maxFilesPerTrigger", filesPerTrigger.toString)
+      .option("pathGlobFilter", glob)
+      .parquet(in.toString)
+
+  /** Replay-log layouts. `singleFile` funnels each microbatch's small
+    * emission set through one write task (repartition, not coalesce, so
+    * the stateful stage keeps its parallelism), bounding the log at one
+    * file per microbatch for the converge-scan. `keyBuckets` spreads
+    * the rows over the stream's shuffle width by upsert key, for logs
+    * whose rows carry payloads (vectors, features), where bytes rather
+    * than rows set the write cost. Both are constant layouts, as
+    * [[writeBatchIdempotent]] requires. */
+  private[graft] val singleFile: DataFrame => DataFrame = _.repartition(1)
+  private[graft] val keyBuckets: DataFrame => DataFrame =
+    _.repartition(streamShufflePartitions.toInt, col("key"))
+
+  /** Starts `df`'s query, checkpointed at `ckpt`, logging its output
+    * to parquet under `log` in `layout`. Update and append modes write
+    * each microbatch through [[writeBatchIdempotent]], so a re-delivered
+    * batch replaces its first attempt; update mode also stamps each row
+    * with its microbatch `bid`, the order [[latestBidPerKey]] folds by.
+    * Complete mode overwrites the log: each trigger carries the whole
+    * current answer. */
+  private[graft] def startLog(df: DataFrame, ckpt: Path, log: Path,
+      mode: String = "update",
+      layout: DataFrame => DataFrame = singleFile): StreamingQuery =
+    df.writeStream.outputMode(mode)
+      .option("checkpointLocation", ckpt.toString)
+      .foreachBatch { (batch: DataFrame, bid: Long) =>
+        mode match {
+          case "complete" =>
+            layout(batch).write.mode("overwrite").parquet(log.toString)
+          case "update" =>
+            writeBatchIdempotent(layout(batch.withColumn("bid", lit(bid))), log, bid)
+          case _ => writeBatchIdempotent(layout(batch), log, bid)
+        }
+      }.start()
+
+  /** Relay stage 1: an append-mode query over `src` whose microbatches,
+    * transformed scan-locally by `stage`, land in `relay` through
+    * [[writeBatchIdempotent]]. The relay keeps `stage`'s own
+    * partitioning, whose part count [[withStreamConf]]'s constant
+    * shuffle width keeps stable across re-deliveries. */
+  private[graft] def startRelay(src: DataFrame, ckpt: Path, relay: Path)(
+      stage: DataFrame => DataFrame): StreamingQuery =
+    src.writeStream.outputMode("append")
+      .option("checkpointLocation", ckpt.toString)
+      .foreachBatch { (batch: DataFrame, bid: Long) =>
+        writeBatchIdempotent(stage(batch), relay, bid)
+      }.start()
+
+  /** Relay stage 2's source: the `b*` files stage 1 committed to
+    * `relay`, up to one stage-1 batch (one file per shuffle partition)
+    * per trigger. Creates `relay`: the file source must list it before
+    * stage 1's first commit. */
+  private[graft] def relayTail(spark: SparkSession, relay: Path,
+      schema: String): DataFrame = {
+    java.nio.file.Files.createDirectories(relay)
+    fileStream(spark, schema, relay, streamShufflePartitions.toInt, glob = "b*")
+  }
+
+  /** Drains `qs` in order, then stops them all. processAllAvailable is
+    * a barrier: it returns only once every microbatch of its query has
+    * committed, i.e. every file the query writes is complete and
+    * renamed into place. Draining a relay's stage 1 before the stage 2
+    * that tails it therefore guarantees stage 2 neither lists a
+    * half-written relay file nor misses stage 1's last one; overlapping
+    * or swapping the drains silently breaks this. */
+  private[graft] def drain(qs: StreamingQuery*): Unit =
+    try qs.foreach(_.processAllAvailable()) finally stopAll(qs)
+
+  private def stopAll(qs: Seq[StreamingQuery]): Unit =
+    if (qs.nonEmpty) try qs.head.stop() finally stopAll(qs.tail)
+
+  /** One query over `source`'s chunk files in `in`, built by `build`
+    * (given a source factory, so joins can open two streams), run to
+    * completion in the caller's `work` dir (checkpoint `work/ckpt`, log
+    * `work/log`); returns the re-read log. Nothing is deleted: called
+    * again with the same dir, the query resumes from its checkpoint. */
+  private[graft] def replayInto(spark: SparkSession, source: ChunkedSource,
+      in: Path, work: Path, mode: String, filesPerTrigger: Int,
+      layout: DataFrame => DataFrame)(
+      build: (() => DataFrame) => DataFrame): DataFrame = {
+    drain(startLog(build(() => fileStream(spark, source.schema, in, filesPerTrigger)),
+      work.resolve("ckpt"), work.resolve("log"), mode, layout))
+    spark.read.parquet(work.resolve("log").toString)
+  }
+
+  /** Runs the replay of row `name` in a fresh work dir under
+    * [[withStreamConf]]. A coarsened replay (`filesPerTrigger` > 1)
+    * must have committed >= 2 microbatches on its first query,
+    * checkpointed at `work/ckpt` ([[requireMultiBatch]]). The answer is
+    * localCheckpointed, pinning only the small converged result in
+    * executor blocks, before the dir and every raw emission in it are
+    * deleted. */
+  private[graft] def inWorkDir(spark: SparkSession, name: String,
+      filesPerTrigger: Int)(replay: Path => DataFrame): DataFrame =
     withStreamConf(spark) {
-      import spark.implicits._
-      val tmp = java.nio.file.Files.createTempDirectory("graft_fs_")
-      val log = tmp.resolve("log")
-      val ckpt = tmp.resolve("ckpt")
+      val work = java.nio.file.Files.createTempDirectory("graft_replay_")
       try {
-        // read-only ingest chunks are shared across rows; checkpoint
-        // and sink log stay private to this row
-        val in = sharedEventsChunks(spark, dir)
-        def src = spark.readStream.schema(evReplaySchema)
-          .option("maxFilesPerTrigger", filesPerTrigger.toString)
-          .option("pathGlobFilter", "part-*")
-          .parquet(in.toString).as[Ev]
-        val q = build(() => src).writeStream
-          .outputMode(mode)
-          .option("checkpointLocation", ckpt.toString)
-          .foreachBatch { (df: DataFrame, bid: Long) =>
-            // Bound the log's file count: without this, every microbatch
-            // appends one file PER SHUFFLE PARTITION (32 × trigger count
-            // small files), and the converge-scan pays the open/footer
-            // tax per file. repartition — not coalesce — so the stateful
-            // stage keeps its full parallelism and only the (small)
-            // emission set funnels through the single write task; a
-            // production deployment sizes this to emission volume
-            // (one file per few hundred MB) rather than 1.
-            // Complete mode overwrites (each trigger carries the full
-            // current answer — re-delivery is idempotent by shape);
-            // update/append modes write through the per-bid idempotent
-            // renamer so a re-delivered batch replaces its first
-            // attempt instead of duplicating the log's max-seq rows.
-            if (mode == "complete")
-              df.repartition(1).write.mode("overwrite").parquet(log.toString)
-            else writeBatchIdempotent(df.repartition(1), log, bid)
-            ()
-          }.start()
-        try q.processAllAvailable() finally q.stop()
-        // a coarsened replay (see [[coarseFilesPerTrigger]]) must keep
-        // multi-batch semantics exercised — enforced from the engine's
-        // own commit log
-        if (filesPerTrigger > 1) requireMultiBatch(ckpt, "runFileStream")
-        // converge BEFORE materializing: only the small final answer is
-        // pinned (executor block manager, not driver), then the raw log
-        // — which carries every emission — can be deleted.
-        finish(spark.read.parquet(log.toString)).localCheckpoint()
-      } finally deleteRecursively(tmp)
+        val answer = replay(work)
+        if (filesPerTrigger > 1) requireMultiBatch(work.resolve("ckpt"), name)
+        answer.localCheckpoint()
+      } finally deleteRecursively(work)
     }
 
-  /** A raw update-mode join sink's rows from each key's highest
-    * emission seq — the converged answer of every re-emitting variant. */
-  private[graft] def latestSeqPerKey(raw: DataFrame): DataFrame =
-    raw.withColumn("max_seq", max(col("seq")).over(Window.partitionBy(col("key"))))
+  /** The single-query replay row `name`: `source` replayed through
+    * [[replayInto]] in a fresh work dir ([[inWorkDir]]), its log folded
+    * to the converged answer by `finish`. */
+  private[graft] def runFileStream(spark: SparkSession, dir: String,
+      name: String, source: ChunkedSource, mode: String = "update",
+      filesPerTrigger: Int = 1, layout: DataFrame => DataFrame = singleFile)(
+      build: (() => DataFrame) => DataFrame)(
+      finish: DataFrame => DataFrame): DataFrame =
+    inWorkDir(spark, name, filesPerTrigger) { work =>
+      finish(replayInto(spark, source, source.chunkDir(spark, dir), work,
+        mode, filesPerTrigger, layout)(build))
+    }
+
+  /** Each `keys` group's rows from its highest emission `seq`: the
+    * converged answer of a re-emitting update-mode query over keyed
+    * upsert state. */
+  private[graft] def latestSeqPerKey(raw: DataFrame, keys: String*): DataFrame =
+    raw.withColumn("max_seq", max(col("seq")).over(Window.partitionBy(keys.map(col): _*)))
       .filter(col("seq") === col("max_seq"))
+
+  /** Each key's converged members: its latest emission's `xs`,
+    * exploded to one `x` per row beside its `key`. */
+  private[graft] def latestMembers(raw: DataFrame): DataFrame =
+    latestSeqPerKey(raw, "key").select(col("key"), explode(col("xs")).as("x"))
+
+  /** Each `keys` group's rows from its last microbatch `bid`: the
+    * converged value of a streaming aggregation's running update-mode
+    * emissions. */
+  private[graft] def latestBidPerKey(raw: DataFrame, keys: String*): DataFrame =
+    raw.withColumn("max_bid", max(col("bid")).over(Window.partitionBy(keys.map(col): _*)))
+      .filter(col("bid") === col("max_bid"))
 
   /** Converged view of a raw update-mode join sink projected to the
     * batch J1/J2/J5 output shape (every pair-emitting join twin must
     * hash-match its batch oracle through it). */
   private[graft] def convergedJ1(raw: DataFrame): DataFrame =
-    latestSeqPerKey(raw)
+    latestSeqPerKey(raw, "key")
       .select(
         col("key").cast("long").as("user_id"),
         col("x.event_id").as("x_event_id"),
@@ -446,7 +540,7 @@ private[graft] object StreamingHarness {
     * j3_left_outer_seq shape: the ys array becomes a sorted
     * comma-joined id string. */
   private[graft] def convergedJ3(raw: DataFrame): DataFrame =
-    latestSeqPerKey(raw)
+    latestSeqPerKey(raw, "key")
       .select(
         col("key").cast("long").as("user_id"),
         element_at(col("xs"), 1).getField("event_id").as("x_event_id"),
@@ -460,7 +554,7 @@ private[graft] object StreamingHarness {
     * j4_full_outer_seq shape: both sides as sorted comma-joined id
     * strings. */
   private[graft] def convergedJ4(raw: DataFrame): DataFrame =
-    latestSeqPerKey(raw)
+    latestSeqPerKey(raw, "key")
       .select(
         col("key").cast("long").as("user_id"),
         sortedIds("xs").as("x_event_ids"),
@@ -504,7 +598,7 @@ private[graft] object StreamingHarness {
       // dir (the sentinel below must not pollute the shared prefix);
       // links cost no copy and no re-write
       java.nio.file.Files.createDirectories(in)
-      listDir(sharedEventsChunks(spark, dir))
+      listDir(Events.chunkDir(spark, dir))
         .filter(_.getFileName.toString.startsWith("part-"))
         .foreach { p =>
           java.nio.file.Files.createLink(in.resolve(p.getFileName), p)
@@ -548,15 +642,11 @@ private[graft] object StreamingHarness {
       // batching), and every append emission flushes only once the
       // sentinel advances the watermark — so the sink's final content
       // is batching-independent by construction
-      def src(): DataFrame = spark.readStream.schema(evReplaySchema)
-        .option("maxFilesPerTrigger", filesPerTrigger.toString)
-        .option("pathGlobFilter", "part-*")
-        .parquet(in.toString)
+      def src(): DataFrame = fileStream(spark, Events.schema, in, filesPerTrigger)
         .withColumn("ets", expr("timestamp_micros(ts_us)"))
         .withWatermark("ets", "35 days")
-      // EVENT-DRIVEN QUIESCE (replaces the former 500 ms sink-count
-      // sleep-poll, which set a 1–2 s wall-clock floor per row and was
-      // the surface co-tenant noise coupled into). The emissions these
+      // EVENT-DRIVEN QUIESCE (no sleep-poll on the sink, which would
+      // set a wall-clock floor per row). The emissions these
       // rows wait for land in the NO-DATA batch(es) that run once the
       // sentinel has advanced the watermark — processAllAvailable can
       // return before those commit (it only covers source DATA), so

@@ -56,7 +56,7 @@ class StreamTrainedRecoverySpec extends graft.SparkTestBase {
     StreamingHarness.withStreamConf(spark) {
       val tmp = Files.createTempDirectory("graft_lloydrec_")
       try {
-        val in = StreamTrainedTwins.kmeansIngestChunks(spark, sfDir)
+        val in = StreamingHarness.EmbVec.chunkDir(spark, sfDir)
         val cent0 = VectorOps.ivfSeedCentroids(spark, sfDir)
           .select(col("cid"), col("ce")).localCheckpoint()
 
@@ -69,7 +69,7 @@ class StreamTrainedRecoverySpec extends graft.SparkTestBase {
         assert(relayAfterClean.nonEmpty, "round 1 wrote no relay files")
 
         // ---- (a) q1 re-delivery: drop its last commit, re-run ----
-        dropLatestCommit(w1.resolve("ckpt1"))
+        dropLatestCommit(w1.resolve("ckpt"))
         val c1a = centMap(
           StreamTrainedTwins.streamedLloydRound(spark, in, cent0, w1))
         assert(relayFiles(w1) == relayAfterClean,
@@ -138,7 +138,7 @@ class StreamTrainedRecoverySpec extends graft.SparkTestBase {
     StreamingHarness.withStreamConf(spark) {
       val tmp = Files.createTempDirectory("graft_bperec_")
       try {
-        val shared = StreamTrainedTwins.bpeIngestChunks(spark, sfDir)
+        val shared = StreamingHarness.DocText.chunkDir(spark, sfDir)
         def countsOf(df: DataFrame): Map[String, Long] =
           df.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
         def logFiles(work: Path): Set[String] =

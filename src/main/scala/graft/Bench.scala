@@ -180,6 +180,9 @@ object Bench {
     val probesJson = scalingProbes.map("\"" + _ + "\"")
       .mkString("[", ",", "]")
     val json = s"""{"metric":"total","value":$valueJson,"value_median":$medianJson,"unit":"sec","queries":${qsJson(slow8)},"nqueries":${best.size},"passes":${pass - 1},"failed_passes":$nfail,"incomplete":$incomplete,"loadavg":$la,"control":$ctl,"scaling_probes":$probesJson,"sf":"$sfDir"}"""
+    require(json.length < 1024, s"the stdout result must stay one JSON line " +
+      s"under 1024 chars (longer lines are truncated and parse as null), " +
+      s"got ${json.length}; move new keys to BENCH_FULL.json")
     println(json)
     val fullJson = s"""{"metric":"total","value":$valueJson,"value_median":$medianJson,"unit":"sec","queries":$fullQs,"queries_median":$medQs,"nqueries":${best.size},"passes":${pass - 1},"failed_passes":$nfail,"failures":$failJson,"incomplete":$incomplete,"loadavg":$la,"control":$ctl,"sf":"$sfDir"}"""
     // Persist the COMPLETE record (all 150 per-query timings) to files

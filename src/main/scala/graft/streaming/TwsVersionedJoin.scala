@@ -14,10 +14,10 @@ import org.apache.spark.sql.streaming.{ExpiredTimerInfo, MapState, OutputMode,
   * variants over the one [[graft.core.JoinRules]] algebra.
   *
   * What the newer API buys at 100 TB:
-  *   - per-id `MapState` entries instead of one monolithic state blob:
+  *   - per-id `MapState` entries instead of one state value per key:
   *     an upsert rewrites ONE map entry in RocksDB, not the whole
-  *     key's compacted window (the fMGWS path re-serializes its full
-  *     `JoinState` on every touch);
+  *     key's compacted window (the fMGWS path rewrites the key's
+  *     packed rows on every touch);
   *   - TTL as an explicit per-key TIMER registered at the key's own
   *     event-time frontier + ttl — the first-batch zero-watermark
   *     footgun the fMGWS path had to code around (see
@@ -31,16 +31,14 @@ object TwsVersionedJoin {
 
   /** Per-key processor: per-id `MapState` on each side + seq counter +
     * optional event-time retirement timer. Each trigger reads the key's
-    * maps once, upserts the batch in memory ([[graft.core.JoinRules.upsert]] via
-    * [[VersionedStreamJoin.upsertBatch]]), writes back only the changed
-    * ids, and hands the result to the variant's `expand` — the same
-    * [[StreamEmit]] variants the fMGWS core runs. */
+    * maps once, upserts the batch's [[Packed]] rows in memory
+    * ([[graft.core.JoinRules.upsert]] via [[JoinSides.upsert]]), writes
+    * back only the changed ids, and hands the result to the variant's
+    * `expand` — the same [[StreamEmit]] variants the fMGWS core runs. */
   private final class TwsJoinProcessor[X, Y, U](
-      idFromX: X => String, idFromY: Y => String,
-      tsFromX: X => Long, tsFromY: Y => Long,
-      ttlMs: Option[Long], ex: Encoder[X], ey: Encoder[Y],
-      expand: StreamEmit.Expand[X, Y, U])
-    extends StatefulProcessor[String, Tagged[X, Y], U] {
+      sides: JoinSides[X, Y], ttlMs: Option[Long],
+      ex: Encoder[X], ey: Encoder[Y], expand: StreamEmit.Expand[X, Y, U])
+    extends StatefulProcessor[String, Packed, U] {
 
     @transient private var xs: MapState[String, X] = _
     @transient private var ys: MapState[String, Y] = _
@@ -55,10 +53,9 @@ object TwsVersionedJoin {
         TTLConfig.NONE)
     }
 
-    override def handleInputRows(key: String, rows: Iterator[Tagged[X, Y]],
+    override def handleInputRows(key: String, rows: Iterator[Packed],
         timerValues: TimerValues): Iterator[U] = {
-      val k = VersionedStreamJoin.upsertBatch(xs.iterator().toMap,
-        ys.iterator().toMap, rows, idFromX, idFromY, tsFromX, tsFromY)
+      val k = sides.upsert(xs.iterator().toMap, ys.iterator().toMap, rows)
       k.newX.foreach(id => xs.updateValue(id, k.xs(id)))
       k.newY.foreach(id => ys.updateValue(id, k.ys(id)))
       val seq = (if (seqS.exists()) seqS.get() else 0L) + 1
@@ -99,7 +96,7 @@ object TwsVersionedJoin {
       ttlMs: Option[Long] = None,
       watermarkDelay: String = "10 seconds")(
       implicit ex: Encoder[X], ey: Encoder[Y],
-      et: Encoder[Tagged[X, Y]], es: Encoder[String],
+      es: Encoder[String],
       ee: Encoder[Emitted[X, Y]]): Dataset[Emitted[X, Y]] =
     run(dsx, dsy, keyFromX, keyFromY, idFromX, idFromY, tsFromX, tsFromY,
       ttlMs, watermarkDelay)(StreamEmit.fullOuter[X, Y])
@@ -118,7 +115,7 @@ object TwsVersionedJoin {
       ttlMs: Option[Long] = None,
       watermarkDelay: String = "10 seconds")(
       implicit ex: Encoder[X], ey: Encoder[Y],
-      et: Encoder[Tagged[X, Y]], es: Encoder[String],
+      es: Encoder[String],
       ee: Encoder[Emitted[X, Y]]): Dataset[Emitted[X, Y]] =
     run(dsx, dsy, keyFromX, keyFromY, idFromX, idFromY, tsFromX, tsFromY,
       ttlMs, watermarkDelay)(StreamEmit.inner[X, Y])
@@ -137,7 +134,7 @@ object TwsVersionedJoin {
       ttlMs: Option[Long] = None,
       watermarkDelay: String = "10 seconds")(
       implicit ex: Encoder[X], ey: Encoder[Y],
-      et: Encoder[Tagged[X, Y]], es: Encoder[String],
+      es: Encoder[String],
       ee: Encoder[Emitted[X, Y]]): Dataset[Emitted[X, Y]] =
     run(dsx, dsy, keyFromX, keyFromY, idFromX, idFromY, tsFromX, tsFromY,
       ttlMs, watermarkDelay)(StreamEmit.leftOuter[X, Y](tsFromX))
@@ -155,7 +152,7 @@ object TwsVersionedJoin {
       ttlMs: Option[Long] = None,
       watermarkDelay: String = "10 seconds")(
       implicit ex: Encoder[X], ey: Encoder[Y],
-      et: Encoder[Tagged[X, Y]], es: Encoder[String],
+      es: Encoder[String],
       ee: Encoder[EmittedSeq[X, Y]]): Dataset[EmittedSeq[X, Y]] =
     run(dsx, dsy, keyFromX, keyFromY, idFromX, idFromY, tsFromX, tsFromY,
       ttlMs, watermarkDelay)(StreamEmit.leftOuterSeq[X, Y](tsFromX))
@@ -172,12 +169,12 @@ object TwsVersionedJoin {
       ttlMs: Option[Long] = None,
       watermarkDelay: String = "10 seconds")(
       implicit ex: Encoder[X], ey: Encoder[Y],
-      et: Encoder[Tagged[X, Y]], es: Encoder[String],
+      es: Encoder[String],
       ee: Encoder[EmittedSeq[X, Y]]): Dataset[EmittedSeq[X, Y]] =
     run(dsx, dsy, keyFromX, keyFromY, idFromX, idFromY, tsFromX, tsFromY,
       ttlMs, watermarkDelay)(StreamEmit.fullOuterSeq[X, Y])
 
-  /** Shared driver: tag + union the sides, watermark iff TTL'd, group
+  /** Shared driver: pack + union the sides, watermark iff TTL'd, group
     * by key, run the processor with the variant's `expand`. */
   private def run[X, Y, U](
       dsx: Dataset[X], dsy: Dataset[Y],
@@ -187,18 +184,18 @@ object TwsVersionedJoin {
       ttlMs: Option[Long], watermarkDelay: String)(
       expand: StreamEmit.Expand[X, Y, U])(
       implicit ex: Encoder[X], ey: Encoder[Y],
-      et: Encoder[Tagged[X, Y]], es: Encoder[String],
+      es: Encoder[String],
       eu: Encoder[U]): Dataset[U] = {
-    val tagged = VersionedStreamJoin.tagged(dsx, dsy, keyFromX, keyFromY,
+    val sides = new JoinSides(keyFromX, keyFromY, idFromX, idFromY,
       tsFromX, tsFromY)
+    val packed = sides.pack(dsx, dsy)
     val (withWm, timeMode) = ttlMs match {
       case Some(_) =>
-        (tagged.withWatermark("ets", watermarkDelay), TimeMode.EventTime())
-      case None => (tagged, TimeMode.None())
+        (packed.withWatermark("ets", watermarkDelay), TimeMode.EventTime())
+      case None => (packed, TimeMode.None())
     }
     withWm.groupByKey(_.key).transformWithState(
-      new TwsJoinProcessor[X, Y, U](idFromX, idFromY, tsFromX, tsFromY,
-        ttlMs, ex, ey, expand),
+      new TwsJoinProcessor[X, Y, U](sides, ttlMs, ex, ey, expand),
       timeMode, OutputMode.Update())
   }
 }

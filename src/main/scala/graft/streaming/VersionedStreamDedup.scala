@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoder}
+import org.apache.spark.sql.{Dataset, Encoder, Encoders}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import graft.core.JoinRules
@@ -11,11 +11,8 @@ import graft.core.JoinRules
   * (max seq per key = the final answer). */
 final case class EmittedDedup[X](key: String, seq: Long, xs: Seq[X])
 
-/** Per-key dedup state: latest version per id + emission counter. */
-final case class DedupState[X](xs: Map[String, X], seq: Long)
-
 /** Input wrapper carrying the event-time column the TTL variant
-  * watermarks on (mirrors the joins' `Tagged.ets`). */
+  * watermarks on (mirrors the joins' `Packed.ets`). */
 final case class Stamped[X](x: X, ets: java.sql.Timestamp)
 
 /** Standalone streaming latest-wins deduplication — the reference's D2
@@ -28,9 +25,25 @@ final case class Stamped[X](x: X, ets: java.sql.Timestamp)
   * FIRST arrival of a key forever; CDC semantics need newest-version-
   * wins with late-but-older arrivals ignored, which is what the keyed
   * upsert state here does. State is bounded by live (key, id) pairs,
-  * hash-partitioned by key across executors.
+  * hash-partitioned by key across executors. A key's state is one byte
+  * array ([[PackedState]]): its emission seq, then its latest row per id
+  * as [[RowCodec]] bytes.
   */
 object VersionedStreamDedup {
+
+  /** A key's seq and latest-per-id map; none yet is seq 0, empty. */
+  private def readState[X](state: Option[Array[Byte]], codec: RowCodec[X],
+                           id: X => String): (Long, Map[String, X]) =
+    state match {
+      case Some(bytes) =>
+        val r = new PackedState.Reader(bytes)
+        (r.seq, r.side(codec, id))
+      case None => (0L, Map.empty)
+    }
+
+  private def writeState[X](seq: Long, m: Map[String, X],
+                            codec: RowCodec[X]): Array[Byte] =
+    PackedState.write(seq, m.valuesIterator.map(codec.toBytes).toSeq)
 
   /** Latest version per (key, id) ([[JoinRules.upsert]]: on equal
     * versions the earlier arrival wins); per trigger each touched key
@@ -39,17 +52,18 @@ object VersionedStreamDedup {
       dsx: Dataset[X],
       keyFromX: X => String, idFromX: X => String, tsFromX: X => Long)(
       implicit ex: Encoder[X], es: Encoder[String],
-      ej: Encoder[DedupState[X]],
-      ee: Encoder[EmittedDedup[X]]): Dataset[EmittedDedup[X]] =
+      ee: Encoder[EmittedDedup[X]]): Dataset[EmittedDedup[X]] = {
+    val codec = RowCodec(ex)
     dsx.groupByKey(keyFromX).flatMapGroupsWithState(
       OutputMode.Update, GroupStateTimeout.NoTimeout) {
-      (key: String, rows: Iterator[X], state: GroupState[DedupState[X]]) =>
-        val st = state.getOption.getOrElse(DedupState[X](Map.empty, 0L))
-        val m = JoinRules.upsertAll(st.xs, rows)(idFromX, tsFromX)
-        val seq = st.seq + 1
-        state.update(DedupState(m, seq))
+      (key: String, rows: Iterator[X], state: GroupState[Array[Byte]]) =>
+        val (seq0, m0) = readState(state.getOption, codec, idFromX)
+        val m = JoinRules.upsertAll(m0, rows)(idFromX, tsFromX)
+        val seq = seq0 + 1
+        state.update(writeState(seq, m, codec))
         Iterator.single(EmittedDedup(key, seq, JoinRules.byId(m)))
-    }
+    }(Encoders.BINARY, ee)
+  }
 
   /** [[latestPerKeyId]] with watermark-aligned key retirement whose
     * timers actually FIRE observably: when the event-time watermark
@@ -75,33 +89,34 @@ object VersionedStreamDedup {
       etsMsFromX: X => Long, ttlMs: Long,
       watermarkDelay: String = "10 seconds")(
       implicit ex: Encoder[X], est: Encoder[Stamped[X]],
-      es: Encoder[String], ej: Encoder[DedupState[X]],
+      es: Encoder[String],
       ee: Encoder[EmittedDedup[X]]): Dataset[EmittedDedup[X]] = {
     require(ttlMs > 0, s"TTL must be positive, got $ttlMs")
+    val codec = RowCodec(ex)
     dsx.map(x => Stamped(x, new java.sql.Timestamp(etsMsFromX(x))))
       .withWatermark("ets", watermarkDelay)
       .groupByKey(s => keyFromX(s.x))
       .flatMapGroupsWithState(OutputMode.Update,
         GroupStateTimeout.EventTimeTimeout) {
         (key: String, rows: Iterator[Stamped[X]],
-         state: GroupState[DedupState[X]]) =>
+         state: GroupState[Array[Byte]]) =>
           if (state.hasTimedOut) {
-            val seq = state.get.seq + 1
+            val seq = new PackedState.Reader(state.get).seq + 1
             state.remove()
             Iterator.single(EmittedDedup(key, seq, Seq.empty[X]))
           } else {
-            val st = state.getOption.getOrElse(DedupState[X](Map.empty, 0L))
-            var m = st.xs
+            val (seq0, m0) = readState(state.getOption, codec, idFromX)
+            var m = m0
             var anchor = state.getCurrentWatermarkMs()
             rows.foreach { s =>
               m = JoinRules.upsert(m, s.x)(idFromX, tsFromX)
               anchor = math.max(anchor, s.ets.getTime)
             }
-            val seq = st.seq + 1
-            state.update(DedupState(m, seq))
+            val seq = seq0 + 1
+            state.update(writeState(seq, m, codec))
             state.setTimeoutTimestamp(anchor + ttlMs)
             Iterator.single(EmittedDedup(key, seq, JoinRules.byId(m)))
           }
-      }
+      }(Encoders.BINARY, ee)
   }
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoder}
+import org.apache.spark.sql.{Dataset, Encoder, Encoders}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import graft.core.JoinRules
@@ -16,29 +16,84 @@ final case class Emitted[X, Y](key: String, seq: Long,
 final case class EmittedSeq[X, Y](key: String, seq: Long,
                                   xs: Seq[X], ys: Seq[Y])
 
-/** Internal tagged-union envelope — the Spark-explicit form of the
-  * reference's internal `TaggedUnion[X,Y]` cogroup input (reference:
-  * versionDeduplicator.scala:61, VersioningEvictor.scala:15).
-  * `ets` carries the record's version as an event-time instant
+/** One record of either side as the keyed state drivers read it — the
+  * Spark-explicit form of the reference's internal `TaggedUnion[X,Y]`
+  * cogroup input (reference: versionDeduplicator.scala:61,
+  * VersioningEvictor.scala:15): the join key, the side, the record as
+  * [[RowCodec]] bytes, and its version as an event-time instant
   * (version interpreted as epoch millis) so event-time TTL mode can
-  * hang a watermark on the union. */
-final case class Tagged[X, Y](key: String, x: Option[X], y: Option[Y],
-                              ets: java.sql.Timestamp)
+  * hang a watermark on the union. A flat row, so the operators'
+  * per-task input decode is trivial. */
+private[streaming] final case class Packed(key: String, isX: Boolean,
+                                           row: Array[Byte],
+                                           ets: java.sql.Timestamp)
 
-/** Per-key join state: latest version per id on each side. Upsert on
-  * write means the state IS the reference's compacted window buffer —
-  * the VersioningEvictor/deduplicateMutable machinery (E1/D3,
+/** What the keyed state drivers need of the two sides: the key, id and
+  * version of a record, and a [[RowCodec]] per side.
+  *
+  * The flatMapGroupsWithState state of a key is one byte array
+  * ([[PackedState]]): its emission seq, then the latest X row per id,
+  * then the latest Y row per id; ids are re-derived on unpack. Upsert
+  * on write means the state IS the reference's compacted window
+  * buffer — the VersioningEvictor/deduplicateMutable machinery (E1/D3,
   * VersioningEvictor.scala:10-29) becomes unnecessary by construction,
   * and D3's Y-side eviction bug (versionDeduplicator.scala:100) has
   * nothing to port. */
-final case class JoinState[X, Y](xs: Map[String, X], ys: Map[String, Y],
-                                 seq: Long)
+private[streaming] final class JoinSides[X, Y](
+    keyX: X => String, keyY: Y => String,
+    idX: X => String, idY: Y => String,
+    tsX: X => Long, tsY: Y => Long)(
+    implicit ex: Encoder[X], ey: Encoder[Y]) extends Serializable {
+  private val cx = RowCodec(ex)
+  private val cy = RowCodec(ey)
+
+  /** Both sides as one keyed stream whose event time is the record's
+    * version. */
+  def pack(dsx: Dataset[X], dsy: Dataset[Y]): Dataset[Packed] = {
+    implicit val ep: Encoder[Packed] = Encoders.product[Packed]
+    dsx.map(x => Packed(keyX(x), isX = true, cx.toBytes(x),
+        new java.sql.Timestamp(tsX(x))))
+      .union(dsy.map(y => Packed(keyY(y), isX = false, cy.toBytes(y),
+        new java.sql.Timestamp(tsY(y)))))
+  }
+
+  /** One trigger's rows for a key upserted into its latest-per-id maps
+    * with [[JoinRules.upsert]], in one pass that also takes the newest
+    * event time delivered. */
+  def upsert(xs: Map[String, X], ys: Map[String, Y],
+             rows: Iterator[Packed]): KeyUpdate[X, Y] = {
+    var xs1 = xs
+    var ys1 = ys
+    var maxEtsMs = Long.MinValue
+    rows.foreach { p =>
+      if (p.isX) xs1 = JoinRules.upsert(xs1, cx.fromBytes(p.row))(idX, tsX)
+      else ys1 = JoinRules.upsert(ys1, cy.fromBytes(p.row))(idY, tsY)
+      maxEtsMs = math.max(maxEtsMs, p.ets.getTime)
+    }
+    KeyUpdate(xs, ys, xs1, ys1, maxEtsMs)
+  }
+
+  def writeState(seq: Long, xs: Map[String, X],
+                 ys: Map[String, Y]): Array[Byte] =
+    PackedState.write(seq, xs.valuesIterator.map(cx.toBytes).toSeq,
+      ys.valuesIterator.map(cy.toBytes).toSeq)
+
+  /** A key's seq and latest-per-id maps; none yet is seq 0, both empty. */
+  def readState(state: Option[Array[Byte]]
+               ): (Long, Map[String, X], Map[String, Y]) = state match {
+    case Some(bytes) =>
+      val r = new PackedState.Reader(bytes)
+      val xs = r.side(cx, idX)
+      (r.seq, xs, r.side(cy, idY))
+    case None => (0L, Map.empty, Map.empty)
+  }
+}
 
 /** Streaming versioned joins over CDC-style upsert streams — the
   * reference's continuously-updated J1–J4 (joins.scala:10-70)
   * re-expressed on Structured Streaming.
   *
-  * Shape: map both streams into [[Tagged]], union, `groupByKey(key)`,
+  * Shape: pack both streams into [[Packed]] rows, union, `groupByKey(key)`,
   * `flatMapGroupsWithState` (update mode). On every microbatch each
   * touched key upserts arrivals into latest-wins per-id state and
   * re-emits its full join result — per-microbatch granularity instead
@@ -164,8 +219,7 @@ object VersionedStreamJoin {
       idFromX: X => String, idFromY: Y => String,
       tsFromX: X => Long, tsFromY: Y => Long)(
       implicit ex: Encoder[X], ey: Encoder[Y],
-      et: Encoder[Tagged[X, Y]], es: Encoder[String],
-      ej: Encoder[JoinState[X, Y]],
+      es: Encoder[String],
       ee: Encoder[Emitted[X, Y]]): Dataset[Emitted[X, Y]] =
     joined(dsx, dsy, keyFromX, keyFromY, idFromX, idFromY, tsFromX, tsFromY)(
       StreamEmit.fullOuter[X, Y])
@@ -192,8 +246,7 @@ object VersionedStreamJoin {
       idFromX: X => String, idFromY: Y => String,
       tsFromX: X => Long, tsFromY: Y => Long)(
       implicit ex: Encoder[X], ey: Encoder[Y],
-      et: Encoder[Tagged[X, Y]], es: Encoder[String],
-      ej: Encoder[JoinState[X, Y]],
+      es: Encoder[String],
       ee: Encoder[Emitted[X, Y]]): Dataset[Emitted[X, Y]] =
     joined(dsx, dsy, keyFromX, keyFromY, idFromX, idFromY, tsFromX, tsFromY)(
       StreamEmit.fullOuterDelta[X, Y])
@@ -207,8 +260,7 @@ object VersionedStreamJoin {
       idFromX: X => String, idFromY: Y => String,
       tsFromX: X => Long, tsFromY: Y => Long)(
       implicit ex: Encoder[X], ey: Encoder[Y],
-      et: Encoder[Tagged[X, Y]], es: Encoder[String],
-      ej: Encoder[JoinState[X, Y]],
+      es: Encoder[String],
       ee: Encoder[Emitted[X, Y]]): Dataset[Emitted[X, Y]] =
     joined(dsx, dsy, keyFromX, keyFromY, idFromX, idFromY, tsFromX, tsFromY)(
       StreamEmit.leftOuter[X, Y](tsFromX))
@@ -220,8 +272,7 @@ object VersionedStreamJoin {
       idFromX: X => String, idFromY: Y => String,
       tsFromX: X => Long, tsFromY: Y => Long)(
       implicit ex: Encoder[X], ey: Encoder[Y],
-      et: Encoder[Tagged[X, Y]], es: Encoder[String],
-      ej: Encoder[JoinState[X, Y]],
+      es: Encoder[String],
       ee: Encoder[Emitted[X, Y]]): Dataset[Emitted[X, Y]] =
     joined(dsx, dsy, keyFromX, keyFromY, idFromX, idFromY, tsFromX, tsFromY)(
       StreamEmit.inner[X, Y])
@@ -247,8 +298,7 @@ object VersionedStreamJoin {
       idFromX: X => String, idFromY: Y => String,
       tsFromX: X => Long, tsFromY: Y => Long)(
       implicit ex: Encoder[X], ey: Encoder[Y],
-      et: Encoder[Tagged[X, Y]], es: Encoder[String],
-      ej: Encoder[JoinState[X, Y]],
+      es: Encoder[String],
       ee: Encoder[Emitted[X, Y]]): Dataset[Emitted[X, Y]] =
     joined(dsx, dsy, keyFromX, keyFromY, idFromX, idFromY, tsFromX, tsFromY)(
       StreamEmit.asOf[X, Y](tsFromX, tsFromY, forward = false))
@@ -270,8 +320,7 @@ object VersionedStreamJoin {
       idFromX: X => String, idFromY: Y => String,
       tsFromX: X => Long, tsFromY: Y => Long)(
       implicit ex: Encoder[X], ey: Encoder[Y],
-      et: Encoder[Tagged[X, Y]], es: Encoder[String],
-      ej: Encoder[JoinState[X, Y]],
+      es: Encoder[String],
       ee: Encoder[Emitted[X, Y]]): Dataset[Emitted[X, Y]] =
     joined(dsx, dsy, keyFromX, keyFromY, idFromX, idFromY, tsFromX, tsFromY)(
       StreamEmit.asOf[X, Y](tsFromX, tsFromY, forward = true))
@@ -285,8 +334,7 @@ object VersionedStreamJoin {
       idFromX: X => String, idFromY: Y => String,
       tsFromX: X => Long, tsFromY: Y => Long)(
       implicit ex: Encoder[X], ey: Encoder[Y],
-      et: Encoder[Tagged[X, Y]], es: Encoder[String],
-      ej: Encoder[JoinState[X, Y]],
+      es: Encoder[String],
       ee: Encoder[EmittedSeq[X, Y]]): Dataset[EmittedSeq[X, Y]] =
     joined(dsx, dsy, keyFromX, keyFromY, idFromX, idFromY, tsFromX, tsFromY)(
       StreamEmit.leftOuterSeq[X, Y](tsFromX))
@@ -299,43 +347,12 @@ object VersionedStreamJoin {
       idFromX: X => String, idFromY: Y => String,
       tsFromX: X => Long, tsFromY: Y => Long)(
       implicit ex: Encoder[X], ey: Encoder[Y],
-      et: Encoder[Tagged[X, Y]], es: Encoder[String],
-      ej: Encoder[JoinState[X, Y]],
+      es: Encoder[String],
       ee: Encoder[EmittedSeq[X, Y]]): Dataset[EmittedSeq[X, Y]] =
     joined(dsx, dsy, keyFromX, keyFromY, idFromX, idFromY, tsFromX, tsFromY)(
       StreamEmit.fullOuterSeq[X, Y])
 
-  /** Both sides as one keyed [[Tagged]] stream whose event time is the
-    * record's version. */
-  private[streaming] def tagged[X, Y](
-      dsx: Dataset[X], dsy: Dataset[Y],
-      keyFromX: X => String, keyFromY: Y => String,
-      tsFromX: X => Long, tsFromY: Y => Long)(
-      implicit et: Encoder[Tagged[X, Y]]): Dataset[Tagged[X, Y]] =
-    dsx.map(x => Tagged[X, Y](keyFromX(x), Some(x), None,
-        new java.sql.Timestamp(tsFromX(x))))
-      .union(dsy.map(y => Tagged[X, Y](keyFromY(y), None, Some(y),
-        new java.sql.Timestamp(tsFromY(y)))))
-
-  /** One trigger's rows for a key upserted into its latest-per-id maps
-    * with [[JoinRules.upsert]], in one pass that also takes the newest
-    * event time delivered. */
-  private[streaming] def upsertBatch[X, Y](
-      xs: Map[String, X], ys: Map[String, Y], rows: Iterator[Tagged[X, Y]],
-      idFromX: X => String, idFromY: Y => String,
-      tsFromX: X => Long, tsFromY: Y => Long): KeyUpdate[X, Y] = {
-    var xs1 = xs
-    var ys1 = ys
-    var maxEtsMs = Long.MinValue
-    rows.foreach { t =>
-      t.x.foreach(x => xs1 = JoinRules.upsert(xs1, x)(idFromX, tsFromX))
-      t.y.foreach(y => ys1 = JoinRules.upsert(ys1, y)(idFromY, tsFromY))
-      maxEtsMs = math.max(maxEtsMs, t.ets.getTime)
-    }
-    KeyUpdate(xs, ys, xs1, ys1, maxEtsMs)
-  }
-
-  /** Shared core: tagged union → keyed latest-wins upsert state →
+  /** Shared core: packed union → keyed latest-wins upsert state →
     * per-trigger re-expansion via `expand`. */
   private def joined[X, Y, U](
       dsx: Dataset[X], dsy: Dataset[Y],
@@ -343,37 +360,34 @@ object VersionedStreamJoin {
       idFromX: X => String, idFromY: Y => String,
       tsFromX: X => Long, tsFromY: Y => Long)(
       expand: StreamEmit.Expand[X, Y, U])(
-      implicit ex: Encoder[X], ey: Encoder[Y],
-      et: Encoder[Tagged[X, Y]], es: Encoder[String],
-      ej: Encoder[JoinState[X, Y]],
+      implicit ex: Encoder[X], ey: Encoder[Y], es: Encoder[String],
       ee: Encoder[U]): Dataset[U] = {
-    val taggedRaw = tagged(dsx, dsy, keyFromX, keyFromY, tsFromX, tsFromY)
+    val sides = new JoinSides(keyFromX, keyFromY, idFromX, idFromY,
+      tsFromX, tsFromY)
+    val packed = sides.pack(dsx, dsy)
     val ttl = ttlConf.get() // captured at build time, serialized into the op
     val (input, timeoutConf) = ttl match {
       case Some(TtlConf(_, EventTimeTtl(delay))) =>
-        (taggedRaw.withWatermark("ets", delay),
+        (packed.withWatermark("ets", delay),
           GroupStateTimeout.EventTimeTimeout)
       case Some(TtlConf(_, ProcessingTimeTtl)) =>
-        (taggedRaw, GroupStateTimeout.ProcessingTimeTimeout)
-      case None => (taggedRaw, GroupStateTimeout.NoTimeout)
+        (packed, GroupStateTimeout.ProcessingTimeTimeout)
+      case None => (packed, GroupStateTimeout.NoTimeout)
     }
 
     input.groupByKey(_.key).flatMapGroupsWithState(
       OutputMode.Update, timeoutConf) {
-      (key: String, rows: Iterator[Tagged[X, Y]],
-       state: GroupState[JoinState[X, Y]]) =>
+      (key: String, rows: Iterator[Packed], state: GroupState[Array[Byte]]) =>
         if (state.hasTimedOut) {
           // key retirement: drop the compacted maps; a later record
           // for this key rebuilds from scratch
           state.remove()
           Iterator.empty
         } else {
-          val st = state.getOption.getOrElse(
-            JoinState[X, Y](Map.empty, Map.empty, 0L))
-          val k = upsertBatch(st.xs, st.ys, rows,
-            idFromX, idFromY, tsFromX, tsFromY)
-          val seq = st.seq + 1
-          state.update(JoinState(k.xs, k.ys, seq))
+          val (seq0, xs0, ys0) = sides.readState(state.getOption)
+          val k = sides.upsert(xs0, ys0, rows)
+          val seq = seq0 + 1
+          state.update(sides.writeState(seq, k.xs, k.ys))
           ttl.foreach {
             case TtlConf(ms, ProcessingTimeTtl) => state.setTimeoutDuration(ms)
             case TtlConf(ms, _: EventTimeTtl) =>
@@ -394,7 +408,7 @@ object VersionedStreamJoin {
           }
           expand(key, seq, k)
         }
-    }
+    }(Encoders.BINARY, ee)
   }
 }
 

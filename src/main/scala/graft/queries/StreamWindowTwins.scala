@@ -1,10 +1,8 @@
 package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.functions.{SketchFunctions, TextFunctions}
 import graft.streaming.{VersionedStreamDedup, VersionedStreamJoin}
 
 /** Watermarked window/aggregation twins and the native
@@ -43,53 +41,35 @@ private[graft] object StreamWindowTwins {
     // the production shape: at scale the source is a growing directory
     // and maxFilesPerTrigger bounds each microbatch.
     Entry("s3_stream_file_agg",
-      (spark, dir) => withStreamConf(spark) {
+      (spark, dir) => inWorkDir(spark, "s3_stream_file_agg", filesPerTrigger = 1) { work =>
         // MUST precede the raw-footer sniff below: on the
         // TIMESTAMP(NANOS) vintage an unguarded spark.read.parquet
         // throws PARQUET_TYPE_ILLEGAL — this set keeps s3
         // order-independent (no reliance on an earlier Registry.table
         // call having set the conf session-wide)
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        val tmp = java.nio.file.Files.createTempDirectory("graft_s3_")
-        val log = tmp.resolve("log"); val ckpt = tmp.resolve("ckpt")
-        try {
-          // readStream needs an explicit schema, and the testdata has
-          // shipped events.ts in two vintages (TIMESTAMP(NANOS) → read
-          // as BIGINT under the legacy conf; TIMESTAMP(MICROS) → NTZ).
-          // Sniff the dtype the batch reader actually loads (a footer
-          // read, no data scan) and declare the matching stream schema
-          // instead of assuming one vintage.
-          val tsIsLong = spark.read.parquet(s"$dir/events.parquet")
-            .schema("ts").dataType == org.apache.spark.sql.types.LongType
-          val tsDecl = if (tsIsLong) "ts BIGINT" else "ts TIMESTAMP_NTZ"
-          val schema = s"event_id BIGINT, $tsDecl, user_id BIGINT, " +
-            "event_type STRING, value DOUBLE, props STRING"
-          val src0 = spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .option("pathGlobFilter", "events.parquet")
-            .parquet(dir)
-          val src =
-            if (tsIsLong) src0.withColumn("ets", expr("timestamp_micros(ts div 1000)"))
-            else src0.withColumn("ets", col("ts").cast("timestamp"))
-          val agg = src
-            .withWatermark("ets", "1 hour")
-            .groupBy(window(col("ets"), "1 day").getField("start").as("day"),
-              col("event_type"))
-            .agg(count(lit(1)).as("n"))
-          // complete mode → each trigger's foreachBatch carries the full
-          // current answer; overwrite keeps the log at exactly one copy
-          // (no memory sink anywhere)
-          val q = agg.writeStream.outputMode("complete")
-            .option("checkpointLocation", ckpt.toString)
-            .foreachBatch { (df: DataFrame, _: Long) =>
-              df.write.mode("overwrite").parquet(log.toString)
-              ()
-            }.start()
-          try q.processAllAvailable() finally q.stop()
-          spark.read.parquet(log.toString)
-            .orderBy(col("day"), col("event_type"))
-            .localCheckpoint()
-        } finally deleteRecursively(tmp)
+        // readStream needs an explicit schema, and the testdata has
+        // shipped events.ts in two vintages (TIMESTAMP(NANOS) → read
+        // as BIGINT under the legacy conf; TIMESTAMP(MICROS) → NTZ).
+        // Sniff the dtype the batch reader actually loads (a footer
+        // read, no data scan) and declare the matching stream schema
+        // instead of assuming one vintage.
+        val tsIsLong = spark.read.parquet(s"$dir/events.parquet")
+          .schema("ts").dataType == org.apache.spark.sql.types.LongType
+        val tsDecl = if (tsIsLong) "ts BIGINT" else "ts TIMESTAMP_NTZ"
+        val src = fileStream(spark, s"event_id BIGINT, $tsDecl, user_id BIGINT, " +
+          "event_type STRING, value DOUBLE, props STRING",
+          java.nio.file.Paths.get(dir), 1, glob = "events.parquet")
+        val ets =
+          if (tsIsLong) expr("timestamp_micros(ts div 1000)") else col("ts").cast("timestamp")
+        val agg = src.withColumn("ets", ets)
+          .withWatermark("ets", "1 hour")
+          .groupBy(window(col("ets"), "1 day").getField("start").as("day"),
+            col("event_type"))
+          .agg(count(lit(1)).as("n"))
+        drain(startLog(agg, work.resolve("ckpt"), work.resolve("log"), "complete"))
+        spark.read.parquet(work.resolve("log").toString)
+          .orderBy(col("day"), col("event_type"))
       },
       Some("""SELECT CAST(date_trunc('day', ts) AS TIMESTAMP) AS day, event_type,
         |  count(*) AS n
@@ -128,17 +108,16 @@ private[graft] object StreamWindowTwins {
     // APPEND-mode watermarked windowed agg with a real FILE sink —
     // the production output mode: each closed window is emitted
     // exactly once to parquet (a downstream consumer needs no upsert
-    // handling), and state for closed windows is dropped. Window
-    // closure needs the watermark to pass the window end, which
-    // processAllAvailable alone never forces for the LAST windows —
-    // the standard flush is a sentinel event far past the data (the
-    // "punctuation" idea): with a 35-day delay (> the corpus's 29-day
-    // span) no real window can close before the sentinel arrives, so
-    // file arrival order is irrelevant (no late-drop risk), and the
-    // sentinel's own window never closes so it is never emitted. The
-    // flushed parquet must hash-match the batch q_time_window oracle.
+    // handling), and state for closed windows is dropped. A window
+    // closes once the watermark passes its end; the sentinel event far
+    // past the data (the "punctuation" idea) moves the watermark past
+    // every real window, and `Trigger.AvailableNow` runs the no-data
+    // batch that emits them before the query terminates
+    // (StreamingHarness.runAppendReplay). The flushed parquet must
+    // hash-match the batch q_time_window oracle.
     Entry("s13_stream_append_window",
-      (spark, dir) => runAppendReplay(spark, dir) { src =>
+      (spark, dir) => runAppendReplay(spark, dir, "s13_stream_append_window", Events,
+          filesPerTrigger = 1) { src =>
         // append mode requires grouping by the window STRUCT (the
         // watermark tracking rides on it); .start projects after
         src().groupBy(window(col("ets"), "1 day"), col("event_type"))
@@ -160,9 +139,9 @@ private[graft] object StreamWindowTwins {
     // and is never emitted. Must hash-match the batch q_session_window
     // oracle, proving merging-window state in append mode end-to-end.
     Entry("s15_stream_session_append",
-      (spark, dir) => runAppendReplay(spark, dir,
-                          // coarsened trigger (StreamingHarness.coarseFilesPerTrigger): s13 keeps the tumbling-window per-file archetype; session closure happens only at the sentinel flush
-                          filesPerTrigger = coarseFilesPerTrigger) { src =>
+      (spark, dir) => runAppendReplay(spark, dir, "s15_stream_session_append", Events,
+          // coarsened trigger (StreamingHarness.coarseFilesPerTrigger): s13 keeps the tumbling-window per-file archetype; session closure happens only at the sentinel flush
+          filesPerTrigger = coarseFilesPerTrigger) { src =>
         src().groupBy(session_window(col("ets"), "30 minutes"),
             col("user_id"))
           .agg(count(lit(1)).as("n_events"),
@@ -180,37 +159,16 @@ private[graft] object StreamWindowTwins {
     // right match can arrive — the delayed-null contract a production
     // outer join lives by (state for the row is dropped at the same
     // moment). Asymmetric sides (signup/error lefts probing
-    // click/purchase/view rights) so genuinely unmatched lefts exist;
-    // the sentinel advances BOTH streams' watermarks past every match
-    // window, flushing the nulls; the harness's listener-driven
-    // quiesce then waits for the post-sentinel no-data batch to
-    // commit (it runs at the final watermark, so its progress event
-    // is the convergence signal). The join condition carries only
-    // key equality + the event-time range (the stream-stream state
-    // watermark contract, as in s9); both the matched and the
-    // null-extended rows must hash-match the batch left-outer range
-    // oracle.
+    // click/purchase/view rights, see [[rangeJoin]]) so genuinely
+    // unmatched lefts exist; the sentinel advances BOTH streams'
+    // watermarks past every match window, and the no-data batch that
+    // `Trigger.AvailableNow` runs at that watermark flushes the nulls.
+    // The join condition carries only key equality + the event-time
+    // range (the stream-stream state watermark contract, as in s9);
+    // both the matched and the null-extended rows must hash-match the
+    // batch left-outer range oracle.
     Entry("s26_stream_range_left_outer",
-      (spark, dir) => runAppendReplay(spark, dir,
-                          // coarsened trigger (StreamingHarness.coarseFilesPerTrigger): matched rows and the sentinel-flushed nulls are the same set at any batching
-                          filesPerTrigger = coarseFilesPerTrigger) { src =>
-        val a = src()
-          .filter(expr("event_type IN ('signup','error') " +
-            "AND user_id % 3 != 0"))
-          .select(col("user_id"), col("event_id"), col("ts_us"),
-            col("ets").as("ats"))
-        val b = src()
-          .filter(expr("event_type IN ('click','purchase','view') " +
-            "AND user_id % 5 != 0"))
-          .select(col("user_id").as("uid2"), col("event_id").as("e2"),
-            col("ts_us").as("tus2"), col("ets").as("bts"))
-        a.join(b, expr("user_id = uid2 AND " +
-            "bts BETWEEN ats - INTERVAL 30 MINUTES " +
-            "AND ats + INTERVAL 30 MINUTES"), "left_outer")
-          .select(col("user_id"), col("event_id").as("e1"), col("e2"),
-            (col("tus2") - col("ts_us")).as("dt_us"))
-      }(_.filter(col("user_id") >= 0) // belt-and-braces vs sentinels
-        .orderBy(col("user_id"), col("e1"), col("e2"))),
+      (spark, dir) => rangeLeftOuter(spark, dir, "s26_stream_range_left_outer"),
       Some(Analytics.rangeLeftOuterOracleSql)),
 
     // s26's NATIVE outer join under the PRODUCTION state backend:
@@ -224,26 +182,7 @@ private[graft] object StreamWindowTwins {
     // left-outer oracle.
     Entry("s31_stream_native_rocksdb",
       (spark, dir) => VersionedStreamJoin.withStateStoreProvider(spark) {
-        runAppendReplay(spark, dir,
-            // coarsened trigger (StreamingHarness.coarseFilesPerTrigger): as s26, on the RocksDB backend
-            filesPerTrigger = coarseFilesPerTrigger) { src =>
-          val a = src()
-            .filter(expr("event_type IN ('signup','error') " +
-              "AND user_id % 3 != 0"))
-            .select(col("user_id"), col("event_id"), col("ts_us"),
-              col("ets").as("ats"))
-          val b = src()
-            .filter(expr("event_type IN ('click','purchase','view') " +
-              "AND user_id % 5 != 0"))
-            .select(col("user_id").as("uid2"), col("event_id").as("e2"),
-              col("ts_us").as("tus2"), col("ets").as("bts"))
-          a.join(b, expr("user_id = uid2 AND " +
-              "bts BETWEEN ats - INTERVAL 30 MINUTES " +
-              "AND ats + INTERVAL 30 MINUTES"), "left_outer")
-            .select(col("user_id"), col("event_id").as("e1"), col("e2"),
-              (col("tus2") - col("ts_us")).as("dt_us"))
-        }(_.filter(col("user_id") >= 0)
-          .orderBy(col("user_id"), col("e1"), col("e2")))
+        rangeLeftOuter(spark, dir, "s31_stream_native_rocksdb")
       },
       Some(Analytics.rangeLeftOuterOracleSql)),
 
@@ -255,22 +194,10 @@ private[graft] object StreamWindowTwins {
     // right-null rows together hash-match the batch full-outer range
     // join.
     Entry("s27_stream_range_full_outer",
-      (spark, dir) => runAppendReplay(spark, dir,
-                          // coarsened trigger (StreamingHarness.coarseFilesPerTrigger): as s26
-                          filesPerTrigger = coarseFilesPerTrigger) { src =>
-        val a = src()
-          .filter(expr("event_type IN ('signup','error') " +
-            "AND user_id % 3 != 0"))
-          .select(col("user_id"), col("event_id"), col("ts_us"),
-            col("ets").as("ats"))
-        val b = src()
-          .filter(expr("event_type IN ('click','purchase','view') " +
-            "AND user_id % 5 != 0"))
-          .select(col("user_id").as("uid2"), col("event_id").as("e2"),
-            col("ts_us").as("tus2"), col("ets").as("bts"))
-        a.join(b, expr("user_id = uid2 AND " +
-            "bts BETWEEN ats - INTERVAL 30 MINUTES " +
-            "AND ats + INTERVAL 30 MINUTES"), "full_outer")
+      (spark, dir) => runAppendReplay(spark, dir, "s27_stream_range_full_outer", Events,
+          // coarsened trigger (StreamingHarness.coarseFilesPerTrigger): as s26
+          filesPerTrigger = coarseFilesPerTrigger) { src =>
+        rangeJoin(src, "full_outer")
           .select(coalesce(col("user_id"), col("uid2")).as("user_id"),
             col("event_id").as("e1"), col("e2"),
             (col("tus2") - col("ts_us")).as("dt_us"))
@@ -284,22 +211,10 @@ private[graft] object StreamWindowTwins {
     // EXISTS shape a feed filter runs ("keep signups that saw
     // activity within 30 minutes").
     Entry("s28_stream_range_semi",
-      (spark, dir) => runAppendReplay(spark, dir,
-                          // coarsened trigger (StreamingHarness.coarseFilesPerTrigger): as s26
-                          filesPerTrigger = coarseFilesPerTrigger) { src =>
-        val a = src()
-          .filter(expr("event_type IN ('signup','error') " +
-            "AND user_id % 3 != 0"))
-          .select(col("user_id"), col("event_id"), col("ts_us"),
-            col("ets").as("ats"))
-        val b = src()
-          .filter(expr("event_type IN ('click','purchase','view') " +
-            "AND user_id % 5 != 0"))
-          .select(col("user_id").as("uid2"), col("event_id").as("e2"),
-            col("ets").as("bts"))
-        a.join(b, expr("user_id = uid2 AND " +
-            "bts BETWEEN ats - INTERVAL 30 MINUTES " +
-            "AND ats + INTERVAL 30 MINUTES"), "left_semi")
+      (spark, dir) => runAppendReplay(spark, dir, "s28_stream_range_semi", Events,
+          // coarsened trigger (StreamingHarness.coarseFilesPerTrigger): as s26
+          filesPerTrigger = coarseFilesPerTrigger) { src =>
+        rangeJoin(src, "left_semi")
           .select(col("user_id"), col("event_id").as("e1"), col("ts_us"))
       }(_.filter(col("user_id") >= 0)
         .orderBy(col("user_id"), col("e1"))),
@@ -362,8 +277,9 @@ private[graft] object StreamWindowTwins {
     // other driver row exercises end-to-end (s14/s17/s18/s22 size the
     // TTL beyond the replay horizon, so their timers arm but never
     // fire). The purchase stream is replayed in six TIME-ORDERED
-    // chunks (one file = one microbatch, mtime-ordered — the
-    // runAppendReplay listing trick), keyed by user under a TTL of
+    // chunks (one file = one microbatch; the file source lists files
+    // in mtime order, so strictly increasing mtimes fix the replay
+    // order), keyed by user under a TTL of
     // 1/32 of the event-time span (~22 h of the 30-day corpus): a user
     // idle while the watermark advances past last-activity + TTL is
     // RETIRED mid-replay, emitting a TOMBSTONE (empty xs, the
@@ -387,71 +303,52 @@ private[graft] object StreamWindowTwins {
     // the tombstone stream is the change feed that keeps downstream
     // materializations consistent with the retirements.
     Entry("s45_stream_ttl_retirement",
-      (spark, dir) => { import spark.implicits._
-        withStreamConf(spark) {
-          val tmp = java.nio.file.Files.createTempDirectory("graft_ttlr_")
-          val in = tmp.resolve("in")
-          val log = tmp.resolve("log")
-          val ckpt = tmp.resolve("ckpt")
-          try {
-            java.nio.file.Files.createDirectories(in)
-            val ev = Registry.table(spark, dir, "events")
-              .filter(col("event_type") === "purchase")
-              .select(col("user_id"), col("event_id"),
-                expr("unix_micros(ts)").as("ts_us"))
-            val bounds = ev.agg(min(col("ts_us")), max(col("ts_us"))).head()
-            val (mn, mx) = (bounds.getLong(0), bounds.getLong(1))
-            val nCh = 6
-            val ttlMs = (mx / 1000 - mn / 1000) / 32
-            val chunked = ev.withColumn("c", expr(
-              s"least(${nCh - 1}, ((ts_us - ${mn}L) * $nCh) div ${mx - mn + 1}L)"))
-              .localCheckpoint()
-            // one file per time-ordered chunk + the sentinel, with
-            // strictly increasing mtimes so the file source replays
-            // them in event-time order (batch = chunk)
-            val base = System.currentTimeMillis() - 3600000L
-            def writeChunk(df: DataFrame, idx: Int): Unit = {
-              val stage = tmp.resolve(s"stage$idx")
-              df.coalesce(1).write.parquet(stage.toString)
-              val part = listDir(stage)
-                .find(_.getFileName.toString.startsWith("part-")).get
-              val dst = in.resolve(f"chunk$idx%02d.parquet")
-              java.nio.file.Files.move(part, dst)
-              java.nio.file.Files.setLastModifiedTime(dst,
-                java.nio.file.attribute.FileTime.fromMillis(
-                  base + idx * 10000L))
-            }
-            for (c <- 0 until nCh)
-              writeChunk(chunked.filter(col("c") === c)
-                .select(col("user_id"), col("event_id"), col("ts_us")), c)
-            writeChunk(Seq(TtlEv(-1L, -1L, mx)).toDF(), nCh)
-            val src = spark.readStream
-              .schema("user_id BIGINT, event_id BIGINT, ts_us BIGINT")
-              .option("maxFilesPerTrigger", "1")
-              .option("pathGlobFilter", "chunk*")
-              .parquet(in.toString).as[TtlEv]
-            val dd = VersionedStreamDedup.latestPerKeyIdWithEventTimeTtl[TtlEv](
-              src, _.user_id.toString, _.event_id.toString, _.ts_us,
-              _.ts_us / 1000, ttlMs)
-            val q = dd.toDF().writeStream.outputMode("update")
-              .option("checkpointLocation", ckpt.toString)
-              .foreachBatch { (df: DataFrame, bid: Long) =>
-                writeBatchIdempotent(
-                  df.withColumn("bid", lit(bid)).repartition(1), log, bid)
-                ()
-              }.start()
-            try q.processAllAvailable() finally q.stop()
-            latestBidPerKey(spark.read.parquet(log.toString), "key")
-              .filter(size(col("xs")) > 0) // end-retired keys: tombstoned
-              .select(col("key").cast("long").as("user_id"),
-                explode(col("xs")).as("x"))
-              .filter(col("user_id") >= 0) // drop the sentinel key
-              .select(col("user_id"), col("x.event_id").as("event_id"),
-                col("x.ts_us").as("ts_us"))
-              .orderBy(col("user_id"), col("event_id"))
-              .localCheckpoint()
-          } finally deleteRecursively(tmp)
+      (spark, dir) => inWorkDir(spark, "s45_stream_ttl_retirement", filesPerTrigger = 1) { work =>
+        import spark.implicits._
+        val in = java.nio.file.Files.createDirectories(work.resolve("in"))
+        val ev = Registry.table(spark, dir, "events")
+          .filter(col("event_type") === "purchase")
+          .select(col("user_id"), col("event_id"),
+            expr("unix_micros(ts)").as("ts_us"))
+        val bounds = ev.agg(min(col("ts_us")), max(col("ts_us"))).head()
+        val (mn, mx) = (bounds.getLong(0), bounds.getLong(1))
+        val nCh = 6
+        val ttlMs = (mx / 1000 - mn / 1000) / 32
+        val chunked = ev.withColumn("c", expr(
+          s"least(${nCh - 1}, ((ts_us - ${mn}L) * $nCh) div ${mx - mn + 1}L)"))
+          .localCheckpoint()
+        // one file per time-ordered chunk + the sentinel, with
+        // strictly increasing mtimes so the file source replays
+        // them in event-time order (batch = chunk)
+        val base = System.currentTimeMillis() - 3600000L
+        def writeChunk(df: DataFrame, idx: Int): Unit = {
+          val stage = work.resolve(s"stage$idx")
+          df.coalesce(1).write.parquet(stage.toString)
+          val part = listDir(stage)
+            .find(_.getFileName.toString.startsWith("part-")).get
+          val dst = in.resolve(f"chunk$idx%02d.parquet")
+          java.nio.file.Files.move(part, dst)
+          java.nio.file.Files.setLastModifiedTime(dst,
+            java.nio.file.attribute.FileTime.fromMillis(base + idx * 10000L))
         }
+        for (c <- 0 until nCh)
+          writeChunk(chunked.filter(col("c") === c)
+            .select(col("user_id"), col("event_id"), col("ts_us")), c)
+        writeChunk(Seq(TtlEv(-1L, -1L, mx)).toDF(), nCh)
+        val src = fileStream(spark, "user_id BIGINT, event_id BIGINT, ts_us BIGINT",
+          in, 1, glob = "chunk*").as[TtlEv]
+        val dd = VersionedStreamDedup.latestPerKeyIdWithEventTimeTtl[TtlEv](
+          src, _.user_id.toString, _.event_id.toString, _.ts_us,
+          _.ts_us / 1000, ttlMs)
+        drain(startLog(dd.toDF(), work.resolve("ckpt"), work.resolve("log"), "update"))
+        latestBidPerKey(spark.read.parquet(work.resolve("log").toString), "key")
+          .filter(size(col("xs")) > 0) // end-retired keys: tombstoned
+          .select(col("key").cast("long").as("user_id"),
+            explode(col("xs")).as("x"))
+          .filter(col("user_id") >= 0) // drop the sentinel key
+          .select(col("user_id"), col("x.event_id").as("event_id"),
+            col("x.ts_us").as("ts_us"))
+          .orderBy(col("user_id"), col("event_id"))
       },
       Some("""WITH ev AS (SELECT user_id, event_id, epoch_us(ts) AS ts_us
         |  FROM events WHERE event_type = 'purchase'),
@@ -488,4 +385,33 @@ private[graft] object StreamWindowTwins {
         |  AND ch.user_id NOT IN (SELECT user_id FROM dead)
         |ORDER BY user_id, event_id""".stripMargin)),
   )
+
+  /** The native range join of the s26-s28/s31 rows over two streams
+    * from `src`: signup/error lefts (users not divisible by 3) against
+    * click/purchase/view rights (users not divisible by 5) of the same
+    * user within 30 minutes of event time, joined `how`. Left columns
+    * `user_id`, `event_id`, `ts_us`, `ats`; right `uid2`, `e2`, `tus2`,
+    * `bts`. */
+  private[graft] def rangeJoin(src: () => DataFrame, how: String): DataFrame = {
+    val a = src()
+      .filter(expr("event_type IN ('signup','error') AND user_id % 3 != 0"))
+      .select(col("user_id"), col("event_id"), col("ts_us"), col("ets").as("ats"))
+    val b = src()
+      .filter(expr("event_type IN ('click','purchase','view') AND user_id % 5 != 0"))
+      .select(col("user_id").as("uid2"), col("event_id").as("e2"),
+        col("ts_us").as("tus2"), col("ets").as("bts"))
+    a.join(b, expr("user_id = uid2 AND " +
+      "bts BETWEEN ats - INTERVAL 30 MINUTES AND ats + INTERVAL 30 MINUTES"), how)
+  }
+
+  /** s26 and s31: the left-outer [[rangeJoin]] as row `name`. */
+  private def rangeLeftOuter(spark: SparkSession, dir: String, name: String): DataFrame =
+    runAppendReplay(spark, dir, name, Events,
+        // coarsened trigger (StreamingHarness.coarseFilesPerTrigger): matched rows and the sentinel-flushed nulls are the same set at any batching
+        filesPerTrigger = coarseFilesPerTrigger) { src =>
+      rangeJoin(src, "left_outer")
+        .select(col("user_id"), col("event_id").as("e1"), col("e2"),
+          (col("tus2") - col("ts_us")).as("dt_us"))
+    }(_.filter(col("user_id") >= 0) // belt-and-braces vs sentinels
+      .orderBy(col("user_id"), col("e1"), col("e2")))
 }

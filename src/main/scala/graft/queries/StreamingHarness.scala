@@ -5,10 +5,7 @@ import java.nio.file.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
-
-import graft.functions.{SketchFunctions, TextFunctions}
-import graft.streaming.{VersionedStreamDedup, VersionedStreamJoin}
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** Shared machinery of the streaming replay rows. A table replays as
   * a [[ChunkedSource]]: `chunks` range-split parquet files, written
@@ -27,8 +24,10 @@ import graft.streaming.{VersionedStreamDedup, VersionedStreamJoin}
   * microbatch per group for running aggregates ([[latestBidPerKey]]).
   * Two-stage rows relay stage 1's scan-local output through a parquet
   * dir ([[startRelay]], [[relayTail]]) and drain the stages in order
-  * ([[drain]]). Also here: the watermark/append replay with its
-  * sentinel flush. */
+  * ([[drain]]). Append-mode watermark rows run in the same work dir
+  * through [[runAppendReplay]]: a sentinel file pushes the watermark
+  * past every real row, and `Trigger.AvailableNow` runs the no-data
+  * flush batch before the query terminates. */
 private[graft] object StreamingHarness {
 
 
@@ -571,175 +570,60 @@ private[graft] object StreamingHarness {
     (e.event_type == "click" || e.event_type == "purchase" ||
       e.event_type == "view") && e.user_id % 5 != 0
 
-  /** Watermark + append-mode replay harness with the sentinel flush
-    * (shared by s13 tumbling and s15 session windows): the events table
-    * is range-split into chunked ingest files, a sentinel event 40 days
-    * past max event time is appended as the LAST file (mtime-bumped so
-    * the source lists it last — were it processed early, its watermark
-    * would mark every later-arriving real event beyond-late), and the
-    * 35-day watermark delay EXCEEDS the corpus time span so no real
-    * window can close before the sentinel arrives, making file arrival
-    * order irrelevant (no late-drop risk). The sentinel's own window /
-    * session never closes, so it is never emitted. `agg` builds the
-    * watermarked windowed aggregation over the `ets`-stamped source;
-    * each closed window lands exactly once in a parquet FILE sink (a
-    * downstream consumer needs no upsert handling) and closed-window
-    * state is dropped. */
+  /** The append-mode watermark replay of row `name` (s13 and s15
+    * windows, the s26-s28/s31 range joins), in a fresh work dir
+    * ([[inWorkDir]]). `source`'s chunk files are hardlinked into
+    * `work/in`, and three sentinel events 40 days past its max event
+    * time follow as the LAST file (mtime-bumped so the source lists it
+    * last). The 35-day watermark delay exceeds the source's time span,
+    * so no real window or match range closes before the sentinel
+    * arrives: file arrival order and trigger size cannot make a real
+    * row late. `build` gets a factory of `ets`-stamped, watermarked
+    * streams (joins open two) and its closed rows land exactly once in
+    * a parquet file sink at `work/log`. The query runs under
+    * `Trigger.AvailableNow`: it processes every file, then runs the
+    * no-data batch at the sentinel's watermark, which flushes the
+    * closed state, before it terminates. A failed batch, that flush
+    * included, throws from here. The sentinels' own windows never
+    * close, so they are never emitted. */
   private[graft] def runAppendReplay(spark: SparkSession, dir: String,
-                              filesPerTrigger: Int = 1)(
-      agg: (() => DataFrame) => DataFrame)(
-      finish: DataFrame => DataFrame): DataFrame = withStreamConf(spark) {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_app_")
-    val in = tmp.resolve("in"); val out = tmp.resolve("out")
-    val ckpt = tmp.resolve("ckpt")
-    try {
+      name: String, source: ChunkedSource, filesPerTrigger: Int)(
+      build: (() => DataFrame) => DataFrame)(
+      finish: DataFrame => DataFrame): DataFrame =
+    inWorkDir(spark, name, filesPerTrigger) { work =>
       import spark.implicits._
-      // the immutable shared chunks, HARDLINKED into this row's private
-      // dir (the sentinel below must not pollute the shared prefix);
-      // links cost no copy and no re-write
-      java.nio.file.Files.createDirectories(in)
-      listDir(Events.chunkDir(spark, dir))
+      // hardlinks, not copies: the sentinel must not enter the shared
+      // chunk dir
+      val in = java.nio.file.Files.createDirectories(work.resolve("in"))
+      def parts() = listDir(in).filter(_.getFileName.toString.startsWith("part-")).toSet
+      listDir(source.chunkDir(spark, dir))
         .filter(_.getFileName.toString.startsWith("part-"))
-        .foreach { p =>
-          java.nio.file.Files.createLink(in.resolve(p.getFileName), p)
-        }
-      // sentinel bounds: one scalar row to the driver, not a data
-      // collect — read back from the narrow chunk files, not a second
-      // source scan. Fail fast if data growth ever breaks the
-      // delay-exceeds-span invariant.
+        .foreach(p => java.nio.file.Files.createLink(in.resolve(p.getFileName), p))
       val bounds = spark.read.parquet(in.toString)
         .agg(min(col("ts_us")), max(col("ts_us"))).head()
       val (minUs, maxUs) = (bounds.getLong(0), bounds.getLong(1))
       require(maxUs - minUs < 34L * 86400000000L,
-        s"events span ${(maxUs - minUs) / 86400000000L} days; " +
+        s"$name: events span ${(maxUs - minUs) / 86400000000L} days; " +
           "raise the 35-day watermark or arrival order can drop rows")
-      def parts() = listDir(in)
-        .filter(_.getFileName.toString.startsWith("part-")).toSet
       val mainParts = parts()
-      // THREE sentinel rows, one per downstream filter shape: consumers
-      // prune their event types below the watermark operator (Catalyst
-      // pushes the filter through EventTimeWatermark), so a sentinel
-      // only advances a branch's watermark if it SURVIVES that branch's
-      // filter. The negative user ids ride the never-emitted trick
-      // (their windows / sessions / match-ranges never close before the
-      // stream ends) and differ so the sentinels cannot join each other.
-      Seq((-1L, -1L, "sentinel", maxUs + 40L * 86400000000L, 0.0),
-          (-2L, -1L, "signup", maxUs + 40L * 86400000000L, 0.0),
-          (-3L, -2L, "click", maxUs + 40L * 86400000000L, 0.0))
+      // one sentinel per downstream filter shape: Catalyst pushes a
+      // branch's event-type filter below the watermark operator, so a
+      // sentinel advances only the branches whose filter it survives;
+      // distinct negative ids keep the sentinels from joining each other
+      Seq((-1L, -1L, "sentinel"), (-2L, -1L, "signup"), (-3L, -2L, "click"))
+        .map { case (e, u, t) => (e, u, t, maxUs + 40L * 86400000000L, 0.0) }
         .toDF("event_id", "user_id", "event_type", "ts_us", "value")
         .coalesce(1).write.mode("append").parquet(in.toString)
-      (parts() -- mainParts).foreach { p =>
-        java.nio.file.Files.setLastModifiedTime(p,
-          java.nio.file.attribute.FileTime.fromMillis(
-            System.currentTimeMillis() + 60000L))
-      }
-      // a FACTORY so joins can open two independently-watermarked
-      // streams over the same replay dir (the sentinel advances both)
-      // a coarsened replay (see [[coarseFilesPerTrigger]]) is sound
-      // here because the sentinel file's mtime bump keeps it in the
-      // LAST batch whatever the trigger size, the 35-day delay exceeds
-      // the corpus span (no real row is ever beyond-late at any
-      // batching), and every append emission flushes only once the
-      // sentinel advances the watermark — so the sink's final content
-      // is batching-independent by construction
-      def src(): DataFrame = fileStream(spark, Events.schema, in, filesPerTrigger)
-        .withColumn("ets", expr("timestamp_micros(ts_us)"))
-        .withWatermark("ets", "35 days")
-      // EVENT-DRIVEN QUIESCE (no sleep-poll on the sink, which would
-      // set a wall-clock floor per row). The emissions these
-      // rows wait for land in the NO-DATA batch(es) that run once the
-      // sentinel has advanced the watermark — processAllAvailable can
-      // return before those commit (it only covers source DATA), so
-      // the waiter below blocks on the listener bus instead of
-      // sleeping: each completed batch (its file-sink commit included)
-      // posts a QueryProgressEvent carrying the watermark that batch
-      // ran at. The query is converged exactly when (a) some committed
-      // batch ran AT the final watermark — any state that can ever
-      // flush, flushed in it or an immediately-following batch, since
-      // no new data exists to move the watermark further — (b) the
-      // engine has gone quiet (no event for a grace window and no
-      // trigger in flight: follow-up no-data batches run back-to-back,
-      // so a pending one is always either active or already reported
-      // inside the grace), and (c) the sink is non-empty.
-      //
-      // The final watermark is exact, not observed: event-time stats
-      // are tracked in ms (the watermark operator floor-divides the
-      // micros column), the sentinel is the max event at
-      // maxUs + 40 days, and the delay is 35 days:
-      val finalWmMs = (maxUs + 40L * 86400000000L) / 1000L -
-        35L * 86400000L
-      val monitor = new Object
-      val flushSeen = java.util.concurrent.ConcurrentHashMap
-        .newKeySet[java.util.UUID]()
-      val lastEvent = new java.util.concurrent.ConcurrentHashMap[
-        java.util.UUID, java.lang.Long]()
-      // the listener is registered BEFORE start() (events are not
-      // replayed to late subscribers) and keyed by progress.id so a
-      // concurrently-running query on the same session cannot satisfy
-      // this row's conditions
-      val listener = new org.apache.spark.sql.streaming.StreamingQueryListener {
-        import org.apache.spark.sql.streaming.StreamingQueryListener._
-        override def onQueryStarted(e: QueryStartedEvent): Unit = ()
-        override def onQueryProgress(e: QueryProgressEvent): Unit = {
-          lastEvent.put(e.progress.id, System.nanoTime())
-          val wm = Option(e.progress.eventTime.get("watermark"))
-          if (wm.exists(w =>
-              java.time.Instant.parse(w).toEpochMilli >= finalWmMs))
-            flushSeen.add(e.progress.id)
-          monitor.synchronized(monitor.notifyAll())
-        }
-        override def onQueryTerminated(e: QueryTerminatedEvent): Unit =
-          monitor.synchronized(monitor.notifyAll())
-      }
-      spark.streams.addListener(listener)
-      try {
-        val q = agg(() => src())
-          .writeStream.outputMode("append")
-          .format("parquet").option("path", out.toString)
-          .option("checkpointLocation", ckpt.toString)
-          .start()
-        try {
-          q.processAllAvailable()
-          def sinkCount(): Long =
-            try spark.read.parquet(out.toString).count()
-            catch { case _: Exception => -1L } // sink not created yet
-          val graceNs = 300L * 1000000L
-          val deadline = System.nanoTime() + 60L * 1000000000L
-          var done = false
-          while (!done && System.nanoTime() < deadline) {
-            val ready = monitor.synchronized {
-              val last = Option(lastEvent.get(q.id))
-                .fold(Long.MinValue)(_.longValue)
-              val quietNs =
-                if (last == Long.MinValue) Long.MaxValue
-                else System.nanoTime() - last
-              val ok = flushSeen.contains(q.id) && quietNs >= graceNs &&
-                !q.status.isTriggerActive
-              if (!ok) monitor.wait(
-                // no flush batch observed yet: block until the bus
-                // delivers one (bounded re-check vs a lost wake-up);
-                // inside the grace: sleep exactly the remainder;
-                // only a trigger in flight: short re-check
-                if (!flushSeen.contains(q.id)) 1000L
-                else if (quietNs < graceNs)
-                  math.max(1L, (graceNs - quietNs) / 1000000L + 1)
-                else 50L)
-              ok
-            }
-            // the sink check costs a Spark job, so it runs only once
-            // the engine is quiet — empty here means the flush batch
-            // emitted nothing yet (cannot happen for these shapes, but
-            // the deadline bounds it rather than an assumption)
-            if (ready) {
-              if (sinkCount() > 0) done = true
-              else monitor.synchronized(monitor.wait(200L))
-            }
-          }
-        } finally q.stop()
-      } finally spark.streams.removeListener(listener)
-      if (filesPerTrigger > 1) requireMultiBatch(ckpt, "runAppendReplay")
-      finish(spark.read.parquet(out.toString))
-        .localCheckpoint() // materialize before the tmp dir is deleted
-    } finally deleteRecursively(tmp)
-  }
+      (parts() -- mainParts).foreach(java.nio.file.Files.setLastModifiedTime(_,
+        java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis() + 60000L)))
+      build(() => fileStream(spark, source.schema, in, filesPerTrigger)
+          .withColumn("ets", expr("timestamp_micros(ts_us)"))
+          .withWatermark("ets", "35 days"))
+        .writeStream.outputMode("append")
+        .format("parquet").option("path", work.resolve("log").toString)
+        .option("checkpointLocation", work.resolve("ckpt").toString)
+        .trigger(Trigger.AvailableNow())
+        .start().awaitTermination()
+      finish(spark.read.parquet(work.resolve("log").toString))
+    }
 }

@@ -1,9 +1,9 @@
 package graft.core
 
 /** The versioned-join rules, written once. Every driver — the batch
-  * typed cogroup ([[TypedVersionedJoins]]), flatMapGroupsWithState
-  * ([[graft.streaming.VersionedStreamJoin]]), transformWithState
-  * ([[graft.streaming.TwsVersionedJoin]]) and the streaming dedup
+  * typed cogroup ([[TypedVersionedJoins]]), the streaming join in
+  * either state layout ([[graft.streaming.VersionedStreamJoin]]:
+  * flatMapGroupsWithState or transformWithState) and the streaming dedup
   * ([[graft.streaming.VersionedStreamDedup]]) — reduces a key's records
   * to `id → latest version` maps with [[upsert]] and turns those maps
   * into rows with one of the per-key expansions below. The drivers only

@@ -17,9 +17,8 @@ import org.apache.spark.sql.{Dataset, Encoder}
   * Each key's rows are deduped to latest-per-id maps with
   * [[JoinRules.upsert]] and expanded by the matching [[JoinRules]]
   * variant — dedupe-before-expand, exactly as the reference does. The
-  * streaming drivers share the same rules
-  * ([[graft.streaming.VersionedStreamJoin]],
-  * [[graft.streaming.TwsVersionedJoin]]).
+  * streaming driver shares the same rules
+  * ([[graft.streaming.VersionedStreamJoin]], both state layouts).
   */
 object TypedVersionedJoins {
 

@@ -3,9 +3,11 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import java.nio.file.Path
 import scala.reflect.runtime.universe.TypeTag
 
-import graft.streaming.{TwsVersionedJoin, VersionedStreamDedup, VersionedStreamJoin}
+import graft.streaming.{EventTimeTtl, PerIdEntries, Ttl, VersionedStreamDedup,
+  VersionedStreamJoin}
 
 /** The reference-surface streaming twins: every versioned join
   * variant (full/left outer, sequenced, inner — both state-API
@@ -22,20 +24,18 @@ private[graft] object StreamJoinTwins {
   /** One single-join replay row: the events stream split into the
     * signup/error x side and the click/purchase/view y side, keyed by
     * user with event_type as the upsert id and ts_us as the version.
-    * `join` names the variant and its state API: flatMapGroupsWithState
-    * ([[VersionedStreamJoin]]) or transformWithState
-    * ([[TwsVersionedJoin]], per-(key, id) MapState and a per-key
-    * event-time timer; requires RocksDB). `rocksDb` runs the state on
-    * the RocksDB provider; `scopedTtl` runs the replay inside
-    * [[VersionedStreamJoin.withEventTimeTtl]], the flatMapGroupsWithState
-    * TTL scope, while the transformWithState rows pass the same TTL to
-    * their driver. Either TTL is sized beyond the replay horizon (the
-    * watermarked union and retirement timers run, but never fire
-    * mid-replay). `coarse` takes [[StreamingHarness.coarseFilesPerTrigger]]
-    * files per trigger instead of one (sound here: every fold is a
-    * max-seq view, which is batching-independent). */
+    * `join` names the [[VersionedStreamJoin]] variant with its TTL and
+    * state layout: the default per-key packed state, or the per-id
+    * entries ([[PerIdEntries]]: transformWithState, per-(key, id)
+    * MapState and a per-key event-time timer; requires RocksDB). The
+    * TTL rows pass [[horizon]], sized beyond the replay (the watermarked
+    * union and retirement timers run, but never fire mid-replay).
+    * `rocksDb` runs the state on the RocksDB provider; `coarse` takes
+    * [[StreamingHarness.coarseFilesPerTrigger]] files per trigger
+    * instead of one (sound here: every fold is a max-seq view, which is
+    * batching-independent). */
   private final case class Twin(name: String, rocksDb: Boolean,
-                                scopedTtl: Boolean, coarse: Boolean,
+                                coarse: Boolean,
                                 fold: DataFrame => DataFrame, oracle: String,
                                 join: Join)
 
@@ -47,7 +47,7 @@ private[graft] object StreamJoinTwins {
     * Retirement itself is sbt-asserted (StreamJoinSpec, TwsJoinSpec),
     * where arrival order is controllable. */
   private val horizonTtlMs = 1000L * 365 * 86400 * 1000
-  private val horizonDelay = "36500 days"
+  private val horizon: Option[Ttl] = Some(EventTimeTtl(horizonTtlMs, "36500 days"))
 
   private val user: Ev => String = _.user_id.toString
   private val evType: Ev => String = _.event_type
@@ -61,43 +61,44 @@ private[graft] object StreamJoinTwins {
     implicit def productEncoder[T <: Product : TypeTag]: Encoder[T] =
       Encoders.product[T]
     implicit val stringEncoder: Encoder[String] = Encoders.STRING
-    val (fm, tws, ttl) = (VersionedStreamJoin, TwsVersionedJoin, Some(horizonTtlMs))
+    import VersionedStreamJoin._
     Seq(
-      //   name, rocksDb, scopedTtl, coarse, fold, oracle, join
-      // the per-file fidelity archetype of the fMGWS state machine
-      Twin("s4_stream_file_join", false, false, false, convergedJ1, j1,
-        fm.fullOuter(_, _, user, user, evType, evType, evTs, evTs).toDF()),
+      //   name, rocksDb, coarse, fold, oracle, join
+      // the per-file fidelity archetype of the packed-state path
+      Twin("s4_stream_file_join", false, false, convergedJ1, j1,
+        fullOuter(_, _, user, user, evType, evType, evTs, evTs).toDF()),
       // J2's per-KEY x: at most one latest x per user (unique at every SF)
-      Twin("s5_stream_left_outer", false, false, true, convergedJ1, j2,
-        fm.leftOuter(_, _, user, user, evType, evType, evTs, evTs).toDF()),
-      Twin("s6_stream_left_outer_seq", false, false, true, convergedJ3, j3,
-        fm.leftOuterSeq(_, _, user, user, evType, evType, evTs, evTs).toDF()),
-      Twin("s7_stream_full_outer_seq", false, false, true, convergedJ4, j4,
-        fm.fullOuterSeq(_, _, user, user, evType, evType, evTs, evTs).toDF()),
-      Twin("s10_stream_inner", false, false, true, convergedJ1, j5,
-        fm.inner(_, _, user, user, evType, evType, evTs, evTs).toDF()),
+      Twin("s5_stream_left_outer", false, true, convergedJ1, j2,
+        leftOuter(_, _, user, user, evType, evType, evTs, evTs).toDF()),
+      Twin("s6_stream_left_outer_seq", false, true, convergedJ3, j3,
+        leftOuterSeq(_, _, user, user, evType, evType, evTs, evTs).toDF()),
+      Twin("s7_stream_full_outer_seq", false, true, convergedJ4, j4,
+        fullOuterSeq(_, _, user, user, evType, evType, evTs, evTs).toDF()),
+      Twin("s10_stream_inner", false, true, convergedJ1, j5,
+        inner(_, _, user, user, evType, evType, evTs, evTs).toDF()),
       // state-backend swap: upserts, maps and seqs round-trip RocksDB
-      Twin("s14_stream_rocksdb", true, false, true, convergedJ1, j1,
-        fm.fullOuter(_, _, user, user, evType, evType, evTs, evTs).toDF()),
+      Twin("s14_stream_rocksdb", true, true, convergedJ1, j1,
+        fullOuter(_, _, user, user, evType, evType, evTs, evTs).toDF()),
       // watermarked union + EventTimeTimeout; s45 keeps a firing-TTL row
-      Twin("s17_stream_ttl_join", false, true, true, convergedJ1, j1,
-        fm.fullOuter(_, _, user, user, evType, evType, evTs, evTs).toDF()),
-      // the per-file fidelity archetype of the transformWithState path
-      Twin("s20_stream_tws_join", true, false, false, convergedJ1, j1,
-        tws.fullOuter(_, _, user, user, evType, evType, evTs, evTs,
-          ttl, horizonDelay).toDF()),
-      Twin("s23_stream_tws_left_outer", true, false, true, convergedJ1, j2,
-        tws.leftOuter(_, _, user, user, evType, evType, evTs, evTs,
-          ttl, horizonDelay).toDF()),
-      Twin("s34_stream_tws_left_outer_seq", true, false, true, convergedJ3, j3,
-        tws.leftOuterSeq(_, _, user, user, evType, evType, evTs, evTs,
-          ttl, horizonDelay).toDF()),
-      Twin("s35_stream_tws_full_outer_seq", true, false, true, convergedJ4, j4,
-        tws.fullOuterSeq(_, _, user, user, evType, evType, evTs, evTs,
-          ttl, horizonDelay).toDF()),
-      Twin("s49_stream_tws_inner", true, false, true, convergedJ1, j5,
-        tws.inner(_, _, user, user, evType, evType, evTs, evTs,
-          ttl, horizonDelay).toDF()))
+      Twin("s17_stream_ttl_join", false, true, convergedJ1, j1,
+        fullOuter(_, _, user, user, evType, evType, evTs, evTs,
+          horizon).toDF()),
+      // the per-file fidelity archetype of the per-id entries layout
+      Twin("s20_stream_tws_join", true, false, convergedJ1, j1,
+        fullOuter(_, _, user, user, evType, evType, evTs, evTs,
+          horizon, PerIdEntries).toDF()),
+      Twin("s23_stream_tws_left_outer", true, true, convergedJ1, j2,
+        leftOuter(_, _, user, user, evType, evType, evTs, evTs,
+          horizon, PerIdEntries).toDF()),
+      Twin("s34_stream_tws_left_outer_seq", true, true, convergedJ3, j3,
+        leftOuterSeq(_, _, user, user, evType, evType, evTs, evTs,
+          horizon, PerIdEntries).toDF()),
+      Twin("s35_stream_tws_full_outer_seq", true, true, convergedJ4, j4,
+        fullOuterSeq(_, _, user, user, evType, evType, evTs, evTs,
+          horizon, PerIdEntries).toDF()),
+      Twin("s49_stream_tws_inner", true, true, convergedJ1, j5,
+        inner(_, _, user, user, evType, evType, evTs, evTs,
+          horizon, PerIdEntries).toDF()))
   }
 
   /** Runs one [[Twin]] row: state config around a file-source replay of
@@ -108,12 +109,8 @@ private[graft] object StreamJoinTwins {
       def ev = src().as(Encoders.product[Ev])
       t.join(ev.filter(isX _), ev.filter(isY _))
     }(t.fold)
-    def withTtl(): DataFrame =
-      if (t.scopedTtl)
-        VersionedStreamJoin.withEventTimeTtl(horizonTtlMs, horizonDelay)(replay())
-      else replay()
-    if (t.rocksDb) VersionedStreamJoin.withStateStoreProvider(spark)(withTtl())
-    else withTtl()
+    if (t.rocksDb) VersionedStreamJoin.withStateStoreProvider(spark)(replay())
+    else replay()
   }, Some(t.oracle))
 
   def entries: Seq[Entry] = singleJoins.map(entry) ++ Seq(
@@ -201,43 +198,41 @@ private[graft] object StreamJoinTwins {
       (spark, dir) => { import spark.implicits._
         val salts = 4
         VersionedStreamJoin.withStateStoreProvider(spark) {
-          VersionedStreamJoin.withEventTimeTtl(horizonTtlMs, horizonDelay) {
-            runFileStream(spark, dir, "s18_stream_production_join", Events,
-                // coarsened trigger (StreamingHarness.coarseFilesPerTrigger): beyond-horizon TTL as s17; cross-salt fold over converged view is batching-independent
-                filesPerTrigger = coarseFilesPerTrigger) { src =>
-              val ys = src().as[Ev].filter(isY _)
-                .flatMap(y => (0 until salts).map(s => (s, y)))
-              VersionedStreamJoin.fullOuter[Ev, (Int, Ev)](
-                src().as[Ev].filter(isX _), ys,
-                x => x.user_id.toString + "#" +
-                  math.floorMod(x.event_type.hashCode, salts),
-                y => y._2.user_id.toString + "#" + y._1,
-                x => x.event_type, y => y._2.event_type,
-                x => x.ts_us, y => y._2.ts_us).toDF()
-            } { raw =>
-              val wBase = Window.partitionBy(col("base_key"))
-              latestSeqPerKey(raw, "key")
-                .withColumn("base_key", substring_index(col("key"), "#", 1))
-                // cross-salt suppression: (None, y) survives only when
-                // no salt of the base key holds any X
-                .withColumn("has_x",
-                  max(when(col("x").isNotNull, 1).otherwise(0)).over(wBase))
-                .filter(col("x").isNotNull || col("has_x") === 0)
-                .select(
-                  col("base_key").cast("long").as("user_id"),
-                  col("x.event_id").as("x_event_id"),
-                  col("x.event_type").as("x_type"),
-                  expr("timestamp_micros(x.ts_us)").as("x_ts"),
-                  col("y._2.event_id").as("y_event_id"),
-                  col("y._2.event_type").as("y_type"),
-                  expr("timestamp_micros(y._2.ts_us)").as("y_ts"))
-                // collapse the `salts`-fold (None, y) replicas; exact
-                // for the rest too — no duplicate rows exist in the J1
-                // answer (every row carries its event ids)
-                .distinct()
-                .orderBy(col("user_id"), asc_nulls_first("x_type"),
-                  asc_nulls_first("y_type"))
-            }
+          runFileStream(spark, dir, "s18_stream_production_join", Events,
+              // coarsened trigger (StreamingHarness.coarseFilesPerTrigger): beyond-horizon TTL as s17; cross-salt fold over converged view is batching-independent
+              filesPerTrigger = coarseFilesPerTrigger) { src =>
+            val ys = src().as[Ev].filter(isY _)
+              .flatMap(y => (0 until salts).map(s => (s, y)))
+            VersionedStreamJoin.fullOuter[Ev, (Int, Ev)](
+              src().as[Ev].filter(isX _), ys,
+              x => x.user_id.toString + "#" +
+                math.floorMod(x.event_type.hashCode, salts),
+              y => y._2.user_id.toString + "#" + y._1,
+              x => x.event_type, y => y._2.event_type,
+              x => x.ts_us, y => y._2.ts_us, horizon).toDF()
+          } { raw =>
+            val wBase = Window.partitionBy(col("base_key"))
+            latestSeqPerKey(raw, "key")
+              .withColumn("base_key", substring_index(col("key"), "#", 1))
+              // cross-salt suppression: (None, y) survives only when
+              // no salt of the base key holds any X
+              .withColumn("has_x",
+                max(when(col("x").isNotNull, 1).otherwise(0)).over(wBase))
+              .filter(col("x").isNotNull || col("has_x") === 0)
+              .select(
+                col("base_key").cast("long").as("user_id"),
+                col("x.event_id").as("x_event_id"),
+                col("x.event_type").as("x_type"),
+                expr("timestamp_micros(x.ts_us)").as("x_ts"),
+                col("y._2.event_id").as("y_event_id"),
+                col("y._2.event_type").as("y_type"),
+                expr("timestamp_micros(y._2.ts_us)").as("y_ts"))
+              // collapse the `salts`-fold (None, y) replicas; exact
+              // for the rest too — no duplicate rows exist in the J1
+              // answer (every row carries its event ids)
+              .distinct()
+              .orderBy(col("user_id"), asc_nulls_first("x_type"),
+                asc_nulls_first("y_type"))
           }
         }
       },
@@ -316,8 +311,8 @@ private[graft] object StreamJoinTwins {
     // The chain with per-file triggers on the default state store, so
     // the fine-grained interleaving of both stages stays exercised.
     Entry("s11_stream_chain_abc",
-      (spark, dir) => chain(spark, dir, salts = 1, production = false,
-        filesPerTrigger = 1),
+      (spark, dir) => chain(spark, dir, "s11_stream_chain_abc", salts = 1,
+        production = false, filesPerTrigger = 1),
       Some(ReferenceJoins.j6OracleSql)),
 
     // THE CHAIN UNDER THE PRODUCTION CONFIG: RocksDB on both stages,
@@ -327,8 +322,8 @@ private[graft] object StreamJoinTwins {
     // cross-salt composition), and coarsened triggers, as a
     // deployment sizes its trigger to its ingest prefix.
     Entry("s22_stream_production_chain",
-      (spark, dir) => chain(spark, dir, salts = 2, production = true,
-        filesPerTrigger = coarseFilesPerTrigger),
+      (spark, dir) => chain(spark, dir, "s22_stream_production_chain",
+        salts = 2, production = true, filesPerTrigger = coarseFilesPerTrigger),
       Some(ReferenceJoins.j6OracleSql)),
   )
 
@@ -376,9 +371,10 @@ private[graft] object StreamJoinTwins {
     *     would MOVE when an order arrived, is taken from stage 1's own
     *     converged view instead.
     * Both stages are file-source streams, the inter-stage relay is a
-    * parquet directory appended per microbatch by foreachBatch (an
-    * object-store prefix at scale), and stage 2's sink is another
-    * parquet log — nothing is collected to the driver. Both stages emit
+    * parquet log ([[StreamingHarness.startLog]], an object-store prefix
+    * at scale), and stage 2's sink is another parquet log — nothing is
+    * collected to the driver. Both stages checkpoint in the row's work
+    * dir ([[StreamingHarness.inWorkDir]]). Both stages emit
     * deltas ([[VersionedStreamJoin.fullOuterDelta]]): every relayed row
     * is a stage-2 state upsert, and full re-emission would make that
     * work quadratic in a key's update count.
@@ -397,70 +393,71 @@ private[graft] object StreamJoinTwins {
     *     version axes (stage-1 seqs up to packed shipdate·1e10
     *     lineitem versions), so the watermark stays at zero through the
     *     replay and timers are armed but never fire;
-    *   - `filesPerTrigger`: above one, each stage must still run >= 2
-    *     upserting microbatches, asserted from the sink logs.
+    *   - `filesPerTrigger`: above one, each stage must still commit
+    *     >= 2 microbatches ([[StreamingHarness.requireMultiBatch]] on
+    *     both checkpoints), and every commit is an upserting one: a
+    *     no-data batch runs only to advance a watermark, which the
+    *     unwatermarked stages lack and `production`'s delay holds at 0.
     * The customer side's constant version is positive because the
     * watermarked union drops rows whose event time is at or below the
     * epoch-0 watermark floor; the unwatermarked stage does not care. */
-  private def chain(spark: SparkSession, dir: String, salts: Int,
-                    production: Boolean, filesPerTrigger: Int): DataFrame =
-    withStreamConf(spark) {
-      if (!production) chainReplay(spark, dir, salts, filesPerTrigger)
-      else VersionedStreamJoin.withStateStoreProvider(spark) {
-        VersionedStreamJoin.withEventTimeTtl(horizonTtlMs,
-            watermarkDelay = "36500000 days") {
-          chainReplay(spark, dir, salts, filesPerTrigger)
-        }
-      }
+  private def chain(spark: SparkSession, dir: String, name: String,
+                    salts: Int, production: Boolean,
+                    filesPerTrigger: Int): DataFrame = {
+    val ttl = if (production) Some(EventTimeTtl(horizonTtlMs,
+      watermarkDelay = "36500000 days")) else None
+    def replay(): DataFrame = inWorkDir(spark, name, filesPerTrigger) { work =>
+      val answer = chainReplay(spark, dir, work, salts, filesPerTrigger, ttl)
+      // stage 1's checkpoint, work/ckpt, is checked by inWorkDir
+      if (filesPerTrigger > 1) requireMultiBatch(work.resolve("ckpt2"), name)
+      answer
     }
+    if (production) VersionedStreamJoin.withStateStoreProvider(spark)(replay())
+    else replay()
+  }
 
-  private def chainReplay(spark: SparkSession, dir: String, salts: Int,
-                          filesPerTrigger: Int): DataFrame = {
+  private def chainReplay(spark: SparkSession, dir: String, work: Path,
+                          salts: Int, filesPerTrigger: Int,
+                          ttl: Option[Ttl]): DataFrame = {
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft_chain_")
-    val abLog = tmp.resolve("ablog")
-    val bcLog = tmp.resolve("bclog")
-    try {
-      def src(c: ChunkedSource): DataFrame =
-        fileStream(spark, c.schema, c.chunkDir(spark, dir), filesPerTrigger)
+    val (abLog, bcLog) = (work.resolve("ablog"), work.resolve("bclog"))
+    def src(c: ChunkedSource): DataFrame =
+      fileStream(spark, c.schema, c.chunkDir(spark, dir), filesPerTrigger)
 
-      // stage 1: customer ⋈ orders keyed by custkey; every microbatch's
-      // emissions land in the relay log PARTITIONED (one file per
-      // shuffle partition per batch — no single-task coalesce funnel).
-      // The a-only arm below stays sound under delta emission because a
-      // key's LAST emission carries a non-null o_orderkey iff the key
-      // ever saw an order ((cust, None) is only emitted while ys is
-      // empty, and no deletions exist to empty it again).
-      val q1 = VersionedStreamJoin.fullOuterDelta[CustRow, OrdRow](
+    // stage 1: customer ⋈ orders keyed by custkey; every microbatch's
+    // emissions land in the relay log in the stateful stage's own
+    // partitioning (one file per shuffle partition per batch — no
+    // single-task funnel). The a-only arm below stays sound under delta
+    // emission because a key's LAST emission carries a non-null
+    // o_orderkey iff the key ever saw an order ((cust, None) is only
+    // emitted while ys is empty, and no deletions exist to empty it
+    // again).
+    val q1 = startLog(
+      VersionedStreamJoin.fullOuterDelta[CustRow, OrdRow](
           src(ChainCust).as[CustRow],
           src(ChainOrd).as[OrdRow],
           _.c_custkey.toString, _.o_custkey.toString,
           _.c_custkey.toString, _.o_orderkey.toString,
-          _ => 1L, _.o_ver) // one customer version per id
-        .toDF()
-        .writeStream.outputMode("update")
-        .foreachBatch { (df: DataFrame, bid: Long) =>
-          writeBatchIdempotent(
-            df.select(col("key"), col("seq"),
-              col("x.c_custkey").as("c_custkey"),
-              col("x.c_name").as("c_name"),
-              col("y.o_orderkey").as("o_orderkey"),
-              col("y.o_totalprice").as("o_totalprice")),
-            abLog, bid)
-          ()
-        }.start()
+          _ => 1L, _.o_ver, ttl) // one customer version per id
+        .select(col("key"), col("seq"),
+          col("x.c_custkey").as("c_custkey"),
+          col("x.c_name").as("c_name"),
+          col("y.o_orderkey").as("o_orderkey"),
+          col("y.o_totalprice").as("o_totalprice")),
+      work.resolve("ckpt"), abLog, layout = identity)
 
-      val abSchema = "key STRING, seq BIGINT, c_custkey BIGINT, " +
-        "c_name STRING, o_orderkey BIGINT, o_totalprice DOUBLE"
+    val abSchema = "key STRING, seq BIGINT, c_custkey BIGINT, " +
+      "c_name STRING, o_orderkey BIGINT, o_totalprice DOUBLE"
 
-      // stage 2: (b-carrying AB rows) ⋈ lineitem keyed by orderkey, a
-      // file-source stream over the relay log. It starts WHILE stage 1
-      // is still emitting — the production topology — which is sound
-      // because the converged view is interleaving-independent. It
-      // takes up to a full stage-1 batch's files per trigger.
-      val lis = src(ChainLi).as[LiRow]
-        .flatMap(li => (0 until salts).map(s => (s, li)))
-      val q2 = VersionedStreamJoin.fullOuterDelta[AbRel, (Int, LiRow)](
+    // stage 2: (b-carrying AB rows) ⋈ lineitem keyed by orderkey, a
+    // file-source stream over the relay log. It starts WHILE stage 1
+    // is still emitting — the production topology — which is sound
+    // because the converged view is interleaving-independent. It
+    // takes up to a full stage-1 batch's files per trigger.
+    val lis = src(ChainLi).as[LiRow]
+      .flatMap(li => (0 until salts).map(s => (s, li)))
+    val q2 = startLog(
+      VersionedStreamJoin.fullOuterDelta[AbRel, (Int, LiRow)](
           relayTail(spark, abLog, abSchema)
             .where(col("o_orderkey").isNotNull)
             .select(col("seq"), col("c_custkey"), col("c_name"),
@@ -470,108 +467,78 @@ private[graft] object StreamJoinTwins {
           li => li._2.l_orderkey.toString + "#" + li._1,
           _.o_orderkey.toString,
           li => li._2.l_orderkey.toString + "_" + li._2.l_linenumber,
-          _.seq, _._2.l_ver)
-        .toDF()
-        .writeStream.outputMode("update")
-        .foreachBatch { (df: DataFrame, bid: Long) =>
-          writeBatchIdempotent(
-            df.select(col("key"), col("seq"),
-              col("x.c_custkey").as("c_custkey"),
-              col("x.c_name").as("c_name"),
-              col("x.o_orderkey").as("o_orderkey"),
-              col("x.o_totalprice").as("o_totalprice"),
-              col("y._2.l_linenumber").as("l_linenumber"),
-              col("y._2.l_extendedprice").as("l_extendedprice")),
-            // NOT repartition(1)-bounded like the singleFile logs: the
-            // per-batch emission sets are large (~10^5 rows), and
-            // funneling them through one write task was A/B-measured at
-            // +1.3–1.8 s per row (min-of-4, sf0.1, matched controls)
-            bcLog, bid)
-          ()
-        }.start()
-      // drain stage 1 first (it feeds the relay), then stage 2; both
-      // have been processing concurrently since start
-      drain(q1, q2)
+          _.seq, _._2.l_ver, ttl)
+        .select(col("key"), col("seq"),
+          col("x.c_custkey").as("c_custkey"),
+          col("x.c_name").as("c_name"),
+          col("x.o_orderkey").as("o_orderkey"),
+          col("x.o_totalprice").as("o_totalprice"),
+          col("y._2.l_linenumber").as("l_linenumber"),
+          col("y._2.l_extendedprice").as("l_extendedprice")),
+      // NOT repartition(1)-bounded like the singleFile logs: the
+      // per-batch emission sets are large (~10^5 rows), and funneling
+      // them through one write task was A/B-measured at +1.3–1.8 s per
+      // row (min-of-4, sf0.1, matched controls)
+      work.resolve("ckpt2"), bcLog, layout = identity)
+    // drain stage 1 first (it feeds the relay), then stage 2; both
+    // have been processing concurrently since start
+    drain(q1, q2)
 
-      if (filesPerTrigger > 1) {
-        // the coarsened trigger is only sound while >= 2 upserting
-        // microbatches per stage keep multi-batch semantics exercised:
-        // count them from the logs' `b<bid>_p*` names
-        def distinctBids(d: java.nio.file.Path): Int =
-          listDir(d).flatMap { p =>
-            val n = p.getFileName.toString
-            if (n.startsWith("b") && n.contains("_p"))
-              n.drop(1).takeWhile(_.isDigit).toLongOption
-            else None
-          }.distinct.size
-        val (abBids, bcBids) = (distinctBids(abLog), distinctBids(bcLog))
-        require(abBids >= 2 && bcBids >= 2,
-          s"chain replay degraded to a single upserting microbatch " +
-            s"(ab log: $abBids distinct bids, bc log: $bcBids): " +
-            s"the $filesPerTrigger-files-per-trigger coarsening is only " +
-            "sound because >=2 upserting microbatches per stage keep " +
-            "multi-batch semantics exercised")
-      }
-
-      // converged stage-2 view under DELTA emission: the last emission
-      // for a key is only its last CHANGE, so convergence is per row
-      // identity — latest seq per (key, l_linenumber) for the
-      // lineitem-carrying rows (an AB-row update re-emits every pair at
-      // a higher seq, and a (None, li) row is superseded the same way
-      // once its AB row arrives) — plus the null-linenumber group, a
-      // key's (x, None) rows, valid only while the key never emitted a
-      // pair. Folded as groupBy + max_by: ONE partially-aggregating
-      // exchange instead of a whole-log window sort; seq ties per group
-      // are impossible (a key emits each identity at most once per
-      // batch, and seq increases per batch).
-      val bcStruct = struct(col("c_custkey"), col("c_name"),
-        col("o_orderkey"), col("o_totalprice"), col("l_linenumber"),
-        col("l_extendedprice"))
-      val perIdentity = spark.read
-        .schema(abSchema + ", l_linenumber INT, l_extendedprice DOUBLE")
-        .parquet(bcLog.toString)
-        .groupBy(col("key"), col("l_linenumber"))
-        .agg(max_by(bcStruct, col("seq")).as("r"))
-        .withColumn("has_li",
-          max(when(col("l_linenumber").isNotNull, 1).otherwise(0))
-            .over(Window.partitionBy(col("key"))))
-        .filter(col("l_linenumber").isNotNull || col("has_li") === 0)
-      // cross-salt suppression: a (None, lineitem) row is real only if
-      // NO sub-key of its base o_orderkey holds an AB row (x present ⟺
-      // o_orderkey non-null, since AbRel.o_orderkey is mandatory)
-      val unsalted = perIdentity
-        .withColumn("base_key", substring_index(col("key"), "#", 1))
-        .withColumn("has_x",
-          max(when(col("r.o_orderkey").isNotNull, 1).otherwise(0))
-            .over(Window.partitionBy(col("base_key"))))
-        .filter(col("r.o_orderkey").isNotNull || col("has_x") === 0)
-      val viaBc = unsalted.select(col("r.c_custkey"), col("r.c_name"),
-        col("r.o_orderkey"), col("r.o_totalprice"),
-        col("r.l_linenumber"), col("r.l_extendedprice"))
-        // collapse the salts-fold replicas
-        .distinct()
-      // converged stage-1 view: the a-only arm (no order ever came).
-      // Among a max-seq TIE (one batch changing two of a key's orders)
-      // max_by picks arbitrarily, but every tied row then carries a
-      // non-null o_orderkey and is filtered out either way.
-      val aOnly = spark.read.schema(abSchema).parquet(abLog.toString)
-        .groupBy(col("key"))
-        .agg(max_by(struct(col("c_custkey"), col("c_name"),
-          col("o_orderkey")), col("seq")).as("r"))
-        .filter(col("r.o_orderkey").isNull)
-        .select(col("r.c_custkey").as("c_custkey"),
-          col("r.c_name").as("c_name"),
-          lit(null).cast("long").as("o_orderkey"),
-          lit(null).cast("double").as("o_totalprice"),
-          lit(null).cast("int").as("l_linenumber"),
-          lit(null).cast("double").as("l_extendedprice"))
-      // localCheckpoint materializes the small converged answer so the
-      // tmp logs (every emission) can be deleted below
-      viaBc.unionByName(aOnly)
-        .orderBy(asc_nulls_first("c_custkey"),
-          asc_nulls_first("o_orderkey"),
-          asc_nulls_first("l_linenumber"))
-        .localCheckpoint()
-    } finally deleteRecursively(tmp)
+    // converged stage-2 view under DELTA emission: the last emission
+    // for a key is only its last CHANGE, so convergence is per row
+    // identity — latest seq per (key, l_linenumber) for the
+    // lineitem-carrying rows (an AB-row update re-emits every pair at
+    // a higher seq, and a (None, li) row is superseded the same way
+    // once its AB row arrives) — plus the null-linenumber group, a
+    // key's (x, None) rows, valid only while the key never emitted a
+    // pair. Folded as groupBy + max_by: ONE partially-aggregating
+    // exchange instead of a whole-log window sort; seq ties per group
+    // are impossible (a key emits each identity at most once per
+    // batch, and seq increases per batch).
+    val bcStruct = struct(col("c_custkey"), col("c_name"),
+      col("o_orderkey"), col("o_totalprice"), col("l_linenumber"),
+      col("l_extendedprice"))
+    val perIdentity = spark.read
+      .schema(abSchema + ", l_linenumber INT, l_extendedprice DOUBLE")
+      .parquet(bcLog.toString)
+      .groupBy(col("key"), col("l_linenumber"))
+      .agg(max_by(bcStruct, col("seq")).as("r"))
+      .withColumn("has_li",
+        max(when(col("l_linenumber").isNotNull, 1).otherwise(0))
+          .over(Window.partitionBy(col("key"))))
+      .filter(col("l_linenumber").isNotNull || col("has_li") === 0)
+    // cross-salt suppression: a (None, lineitem) row is real only if
+    // NO sub-key of its base o_orderkey holds an AB row (x present ⟺
+    // o_orderkey non-null, since AbRel.o_orderkey is mandatory)
+    val unsalted = perIdentity
+      .withColumn("base_key", substring_index(col("key"), "#", 1))
+      .withColumn("has_x",
+        max(when(col("r.o_orderkey").isNotNull, 1).otherwise(0))
+          .over(Window.partitionBy(col("base_key"))))
+      .filter(col("r.o_orderkey").isNotNull || col("has_x") === 0)
+    val viaBc = unsalted.select(col("r.c_custkey"), col("r.c_name"),
+      col("r.o_orderkey"), col("r.o_totalprice"),
+      col("r.l_linenumber"), col("r.l_extendedprice"))
+      // collapse the salts-fold replicas
+      .distinct()
+    // converged stage-1 view: the a-only arm (no order ever came).
+    // Among a max-seq TIE (one batch changing two of a key's orders)
+    // max_by picks arbitrarily, but every tied row then carries a
+    // non-null o_orderkey and is filtered out either way.
+    val aOnly = spark.read.schema(abSchema).parquet(abLog.toString)
+      .groupBy(col("key"))
+      .agg(max_by(struct(col("c_custkey"), col("c_name"),
+        col("o_orderkey")), col("seq")).as("r"))
+      .filter(col("r.o_orderkey").isNull)
+      .select(col("r.c_custkey").as("c_custkey"),
+        col("r.c_name").as("c_name"),
+        lit(null).cast("long").as("o_orderkey"),
+        lit(null).cast("double").as("o_totalprice"),
+        lit(null).cast("int").as("l_linenumber"),
+        lit(null).cast("double").as("l_extendedprice"))
+    viaBc.unionByName(aOnly)
+      .orderBy(asc_nulls_first("c_custkey"),
+        asc_nulls_first("o_orderkey"),
+        asc_nulls_first("l_linenumber"))
   }
 }

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.streaming.{VersionedStreamDedup, VersionedStreamJoin}
+import graft.streaming.{EventTimeTtl, VersionedStreamDedup, VersionedStreamJoin}
 
 /** Watermarked window/aggregation twins and the native
   * stream-stream operators: tumbling/session windows (update and
@@ -339,7 +339,7 @@ private[graft] object StreamWindowTwins {
           in, 1, glob = "chunk*").as[TtlEv]
         val dd = VersionedStreamDedup.latestPerKeyIdWithEventTimeTtl[TtlEv](
           src, _.user_id.toString, _.event_id.toString, _.ts_us,
-          _.ts_us / 1000, ttlMs)
+          _.ts_us / 1000, EventTimeTtl(ttlMs))
         drain(startLog(dd.toDF(), work.resolve("ckpt"), work.resolve("log"), "update"))
         latestBidPerKey(spark.read.parquet(work.resolve("log").toString), "key")
           .filter(size(col("xs")) > 0) // end-retired keys: tombstoned

@@ -67,34 +67,30 @@ object VersionedStreamDedup {
 
   /** [[latestPerKeyId]] with watermark-aligned key retirement whose
     * timers actually FIRE observably: when the event-time watermark
-    * advances `ttlMs` past the data that last touched a key, the key's
-    * state is dropped AND a TOMBSTONE emission (`xs` empty, seq
-    * incremented) is produced — so an update-log consumer sees the
-    * retraction instead of inferring it from silence (the joins'
-    * `withEventTimeTtl` retires silently; a dedup view's downstream
-    * needs the empty-set emission to invalidate its copy). A later
-    * record rebuilds the key from scratch with `seq` restarting at 1,
-    * so converged readers must order emissions by sink batch id, not
-    * per-key seq.
+    * passes a key's [[EventTimeTtl.timeoutAt]], the key's state is
+    * dropped AND a TOMBSTONE emission (`xs` empty, seq incremented) is
+    * produced — so an update-log consumer sees the retraction instead
+    * of inferring it from silence (the joins retire silently; a dedup
+    * view's downstream needs the empty-set emission to invalidate its
+    * copy). A later record rebuilds the key from scratch with `seq`
+    * restarting at 1, so converged readers must order emissions by sink
+    * batch id, not per-key seq.
     *
-    * Timer anchoring matches the joins (max of current watermark and
-    * the batch's newest event time — the first-batch zero-watermark
-    * footgun fix); the same watermark-mode caveat applies: a record
-    * older than watermark − `watermarkDelay` is silently dropped by
+    * The timer is anchored as the joins anchor theirs
+    * ([[EventTimeTtl.timeoutAt]]), and the same watermark caveat
+    * applies: a record older than the watermark is silently dropped by
     * flatMapGroupsWithState. `etsMsFromX` supplies the epoch-ms event
     * time the watermark is built from. */
   def latestPerKeyIdWithEventTimeTtl[X](
       dsx: Dataset[X],
       keyFromX: X => String, idFromX: X => String, tsFromX: X => Long,
-      etsMsFromX: X => Long, ttlMs: Long,
-      watermarkDelay: String = "10 seconds")(
+      etsMsFromX: X => Long, ttl: EventTimeTtl)(
       implicit ex: Encoder[X], est: Encoder[Stamped[X]],
       es: Encoder[String],
       ee: Encoder[EmittedDedup[X]]): Dataset[EmittedDedup[X]] = {
-    require(ttlMs > 0, s"TTL must be positive, got $ttlMs")
     val codec = RowCodec(ex)
     dsx.map(x => Stamped(x, new java.sql.Timestamp(etsMsFromX(x))))
-      .withWatermark("ets", watermarkDelay)
+      .withWatermark("ets", ttl.watermarkDelay)
       .groupByKey(s => keyFromX(s.x))
       .flatMapGroupsWithState(OutputMode.Update,
         GroupStateTimeout.EventTimeTimeout) {
@@ -107,14 +103,15 @@ object VersionedStreamDedup {
           } else {
             val (seq0, m0) = readState(state.getOption, codec, idFromX)
             var m = m0
-            var anchor = state.getCurrentWatermarkMs()
+            var newestEtsMs = Long.MinValue
             rows.foreach { s =>
               m = JoinRules.upsert(m, s.x)(idFromX, tsFromX)
-              anchor = math.max(anchor, s.ets.getTime)
+              newestEtsMs = math.max(newestEtsMs, s.ets.getTime)
             }
             val seq = seq0 + 1
             state.update(writeState(seq, m, codec))
-            state.setTimeoutTimestamp(anchor + ttlMs)
+            state.setTimeoutTimestamp(
+              ttl.timeoutAt(state.getCurrentWatermarkMs(), newestEtsMs))
             Iterator.single(EmittedDedup(key, seq, JoinRules.byId(m)))
           }
       }(Encoders.BINARY, ee)

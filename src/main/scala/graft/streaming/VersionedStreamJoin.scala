@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoder, Encoders}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, TimeMode}
 
 import graft.core.JoinRules
 
@@ -31,7 +31,7 @@ private[streaming] final case class Packed(key: String, isX: Boolean,
 /** What the keyed state drivers need of the two sides: the key, id and
   * version of a record, and a [[RowCodec]] per side.
   *
-  * The flatMapGroupsWithState state of a key is one byte array
+  * The [[PackedPerKey]] state of a key is one byte array
   * ([[PackedState]]): its emission seq, then the latest X row per id,
   * then the latest Y row per id; ids are re-derived on unpack. Upsert
   * on write means the state IS the reference's compacted window
@@ -89,18 +89,91 @@ private[streaming] final class JoinSides[X, Y](
   }
 }
 
+/** Key retirement of a keyed streaming operator, passed to it as an
+  * argument. The reference never expires state (`GlobalWindows`,
+  * SURVEY.md §2.9 late-data note), so no TTL keeps state forever. At
+  * 100 TB a generous TTL bounds state to recently-active entities; a
+  * late-but-newer version for a retired key rebuilds the key from
+  * scratch (upsert semantics make that safe — it can only miss join
+  * partners that were themselves retired), with its emission `seq`
+  * restarting at 1, so converged-result consumers must treat it as a
+  * fresh key. */
+sealed trait Ttl
+
+/** Wall-clock idle time (GroupStateTimeout.ProcessingTimeTimeout),
+  * [[PackedPerKey]] only. The engine runs continuous (empty)
+  * microbatches to fire timeouts, so `processAllAvailable()` never
+  * observes quiescence — poll the sink or use explicit triggers. */
+final case class ProcessingTimeTtl(ms: Long) extends Ttl {
+  require(ms > 0, s"TTL must be positive, got $ms")
+}
+
+/** Watermark-aligned retirement — the Spark analog of Flink
+  * watermark-driven state cleanup (reference watermark assignment:
+  * GenJoinInput.scala:36-52). Versions are read as epoch-millisecond
+  * event times and the input is watermarked on them with
+  * `watermarkDelay`, the bounded out-of-orderness (the reference uses
+  * 10,000 ms, JoinSpec.scala:19,140-141). A key retires once the
+  * watermark passes [[timeoutAt]]. Fires only when data advances the
+  * watermark — no background batches, so `processAllAvailable()` works
+  * and tests need no sleeps.
+  *
+  * SEMANTIC CAVEAT: because the input is watermarked, the stateful
+  * operator silently DROPS any row whose event time is at or below the
+  * watermark — such a too-late record neither updates nor rebuilds
+  * state, unlike the unwatermarked modes where a late-but-newer version
+  * always supersedes and a late-but-older one is ignored by dedup
+  * (SURVEY.md §2.9). Size `watermarkDelay` to the stream's real
+  * out-of-orderness bound. */
+final case class EventTimeTtl(ms: Long, watermarkDelay: String = "10 seconds")
+    extends Ttl {
+  require(ms > 0, s"TTL must be positive, got $ms")
+
+  /** The retirement time of a key a trigger just updated: `ms` past the
+    * LATER of the current watermark and the newest event time the
+    * trigger delivered for the key, so the key retires once the
+    * watermark advances `ms` past the data that last touched it.
+    * Anchoring at the watermark alone is a first-batch footgun: the
+    * watermark is 0 during batch 1, so `0 + ms` is instantly passed
+    * once real event times arrive, retiring every batch-1-only key and
+    * restarting its emission seq — nondeterministic under input
+    * chunking. The data-side anchor keeps the timeout at or above the
+    * key's own event-time frontier. */
+  def timeoutAt(watermarkMs: Long, newestEtsMs: Long): Long =
+    math.max(watermarkMs, newestEtsMs) + ms
+}
+
+/** How a streaming versioned join keeps a key's state. Both layouts
+  * run every [[StreamEmit]] variant through the same upsert, seq and
+  * TTL contract, and converge to the same answers. */
+sealed trait StateLayout
+
+/** `flatMapGroupsWithState`: one [[PackedState]] byte array per key
+  * (its emission seq, then the latest row per id of each side); every
+  * touch rewrites the key's whole array. Runs on any state store. */
+case object PackedPerKey extends StateLayout
+
+/** `transformWithState`: one `MapState` entry per (key, id) on each
+  * side plus a `seq` value, so an upsert rewrites only the changed
+  * ids, and event-time TTL is one per-key timer. Requires the RocksDB
+  * provider ([[VersionedStreamJoin.withStateStoreProvider]]) and has no
+  * processing-time TTL. */
+case object PerIdEntries extends StateLayout
+
 /** Streaming versioned joins over CDC-style upsert streams — the
   * reference's continuously-updated J1–J4 (joins.scala:10-70)
   * re-expressed on Structured Streaming.
   *
   * Shape: pack both streams into [[Packed]] rows, union, `groupByKey(key)`,
-  * `flatMapGroupsWithState` (update mode). On every microbatch each
-  * touched key upserts arrivals into latest-wins per-id state and
-  * re-emits its full join result — per-microbatch granularity instead
-  * of the reference's per-record `CountTrigger.of(1)`
+  * then keyed update-mode state in the chosen [[StateLayout]]. On every
+  * microbatch each touched key upserts arrivals into latest-wins per-id
+  * state and re-emits its join result — per-microbatch granularity
+  * instead of the reference's per-record `CountTrigger.of(1)`
   * (joins.scala:19); the reference's own dedup-based verification
   * contract (raw ≥ expected, deduped == expected, JoinSpec.scala:153-154)
-  * is insensitive to that difference (SURVEY.md §4.2).
+  * is insensitive to that difference (SURVEY.md §4.2). Every variant
+  * takes an optional [[Ttl]] (default: keep state forever) and a
+  * [[StateLayout]] (default [[PackedPerKey]]).
   *
   * At scale: state is hash-partitioned by join key across executors
   * (the Exchange under groupByKey); each key holds only latest
@@ -109,73 +182,6 @@ private[streaming] final class JoinSides[X, Y](
   * pre-aggregate) as with any keyed stateful op.
   */
 object VersionedStreamJoin {
-
-  /** Key-retirement clock for [[withTtl]] / [[withEventTimeTtl]]. */
-  sealed trait TtlMode
-  /** Wall-clock idle time (GroupStateTimeout.ProcessingTimeTimeout). */
-  case object ProcessingTimeTtl extends TtlMode
-  /** Watermark-aligned: a key idle while the event-time watermark
-    * advances `ttl` past its last update is retired — the Spark analog
-    * of Flink watermark-driven state cleanup (reference watermark
-    * assignment: GenJoinInput.scala:36-52). Versions are interpreted
-    * as epoch-millisecond event times; `watermarkDelay` is the bounded
-    * out-of-orderness (the reference uses 10,000 ms). */
-  final case class EventTimeTtl(watermarkDelay: String) extends TtlMode
-
-  private final case class TtlConf(ms: Long, mode: TtlMode)
-
-  /** Optional key-retirement TTL. The reference never expires state
-    * (`GlobalWindows`, SURVEY.md §2.9 late-data note), so the default
-    * preserves that: no TTL = keep state forever. At 100 TB a generous
-    * TTL bounds state to recently-active entities; a late-but-newer
-    * version for a retired key simply rebuilds the key from scratch
-    * (upsert semantics make that safe — it can only miss join partners
-    * that were themselves retired). Scoped thread-locally so
-    * concurrent queries are unaffected. */
-  private val ttlConf = new ThreadLocal[Option[TtlConf]] {
-    override def initialValue(): Option[TtlConf] = None
-  }
-
-  /** Run `body` with all VersionedStreamJoin builders inside it
-    * configured to retire idle keys after `ms` of processing time.
-    *
-    * Caveats for processing-time TTL: (1) the engine runs continuous
-    * (empty) microbatches to fire timeouts, so `processAllAvailable()`
-    * never observes quiescence — poll the sink or use explicit
-    * triggers; (2) a retired key's emission `seq` restarts at 1, so
-    * converged-result consumers must treat it as a fresh key. */
-  def withTtl[T](ms: Long)(body: => T): T = {
-    require(ms > 0, s"TTL must be positive, got $ms")
-    ttlConf.set(Some(TtlConf(ms, ProcessingTimeTtl)))
-    try body finally ttlConf.set(None)
-  }
-
-  /** Run `body` with builders configured for watermark-aligned
-    * retirement: a key is dropped once the event-time watermark (built
-    * from record versions as epoch millis, minus `watermarkDelay`)
-    * passes `ms` beyond the batch that last updated it. Unlike
-    * processing-time TTL this fires only when data advances the
-    * watermark — no background batches, so `processAllAvailable()`
-    * works and tests need no sleeps.
-    *
-    * SEMANTIC CAVEAT this mode alone carries: because the union is
-    * watermarked, `flatMapGroupsWithState` silently DROPS any input
-    * row whose version (as event time) is older than
-    * watermark − `watermarkDelay` — such a too-late record neither
-    * updates nor rebuilds state, unlike the no-TTL and processing-time
-    * modes where a late-but-newer version always supersedes and a
-    * late-but-older one is ignored by dedup (SURVEY.md §2.9). Size
-    * `watermarkDelay` to the stream's real out-of-orderness bound; the
-    * default matches the reference's 10,000 ms
-    * (JoinSpec.scala:19,140-141). A record later than that bound for a
-    * retired key is lost; within the bound, it rebuilds the key from
-    * scratch. */
-  def withEventTimeTtl[T](ms: Long, watermarkDelay: String = "10 seconds")(
-      body: => T): T = {
-    require(ms > 0, s"TTL must be positive, got $ms")
-    ttlConf.set(Some(TtlConf(ms, EventTimeTtl(watermarkDelay))))
-    try body finally ttlConf.set(None)
-  }
 
   /** FQCN of Spark's RocksDB state store provider — the off-heap,
     * disk-spilling backend the streaming joins should run on once live
@@ -217,12 +223,13 @@ object VersionedStreamJoin {
       dsx: Dataset[X], dsy: Dataset[Y],
       keyFromX: X => String, keyFromY: Y => String,
       idFromX: X => String, idFromY: Y => String,
-      tsFromX: X => Long, tsFromY: Y => Long)(
+      tsFromX: X => Long, tsFromY: Y => Long,
+      ttl: Option[Ttl] = None, layout: StateLayout = PackedPerKey)(
       implicit ex: Encoder[X], ey: Encoder[Y],
       es: Encoder[String],
       ee: Encoder[Emitted[X, Y]]): Dataset[Emitted[X, Y]] =
-    joined(dsx, dsy, keyFromX, keyFromY, idFromX, idFromY, tsFromX, tsFromY)(
-      StreamEmit.fullOuter[X, Y])
+    joined(dsx, dsy, keyFromX, keyFromY, idFromX, idFromY, tsFromX, tsFromY,
+      ttl, layout)(StreamEmit.fullOuter[X, Y])
 
   /** [[fullOuter]] with DELTA emission: per trigger a touched key emits
     * only the join rows whose content CHANGED this batch
@@ -244,12 +251,13 @@ object VersionedStreamJoin {
       dsx: Dataset[X], dsy: Dataset[Y],
       keyFromX: X => String, keyFromY: Y => String,
       idFromX: X => String, idFromY: Y => String,
-      tsFromX: X => Long, tsFromY: Y => Long)(
+      tsFromX: X => Long, tsFromY: Y => Long,
+      ttl: Option[Ttl] = None, layout: StateLayout = PackedPerKey)(
       implicit ex: Encoder[X], ey: Encoder[Y],
       es: Encoder[String],
       ee: Encoder[Emitted[X, Y]]): Dataset[Emitted[X, Y]] =
-    joined(dsx, dsy, keyFromX, keyFromY, idFromX, idFromY, tsFromX, tsFromY)(
-      StreamEmit.fullOuterDelta[X, Y])
+    joined(dsx, dsy, keyFromX, keyFromY, idFromX, idFromY, tsFromX, tsFromY,
+      ttl, layout)(StreamEmit.fullOuterDelta[X, Y])
 
   /** J2: left-outer — at most one x per key ([[JoinRules.leftOuter]],
     * the reference quirk, cogroupFunctions.scala:31-47); keys with no x
@@ -258,24 +266,26 @@ object VersionedStreamJoin {
       dsx: Dataset[X], dsy: Dataset[Y],
       keyFromX: X => String, keyFromY: Y => String,
       idFromX: X => String, idFromY: Y => String,
-      tsFromX: X => Long, tsFromY: Y => Long)(
+      tsFromX: X => Long, tsFromY: Y => Long,
+      ttl: Option[Ttl] = None, layout: StateLayout = PackedPerKey)(
       implicit ex: Encoder[X], ey: Encoder[Y],
       es: Encoder[String],
       ee: Encoder[Emitted[X, Y]]): Dataset[Emitted[X, Y]] =
-    joined(dsx, dsy, keyFromX, keyFromY, idFromX, idFromY, tsFromX, tsFromY)(
-      StreamEmit.leftOuter[X, Y](tsFromX))
+    joined(dsx, dsy, keyFromX, keyFromY, idFromX, idFromY, tsFromX, tsFromY,
+      ttl, layout)(StreamEmit.leftOuter[X, Y](tsFromX))
 
   /** J5 analog: inner — emits only when both sides are populated. */
   def inner[X, Y](
       dsx: Dataset[X], dsy: Dataset[Y],
       keyFromX: X => String, keyFromY: Y => String,
       idFromX: X => String, idFromY: Y => String,
-      tsFromX: X => Long, tsFromY: Y => Long)(
+      tsFromX: X => Long, tsFromY: Y => Long,
+      ttl: Option[Ttl] = None, layout: StateLayout = PackedPerKey)(
       implicit ex: Encoder[X], ey: Encoder[Y],
       es: Encoder[String],
       ee: Encoder[Emitted[X, Y]]): Dataset[Emitted[X, Y]] =
-    joined(dsx, dsy, keyFromX, keyFromY, idFromX, idFromY, tsFromX, tsFromY)(
-      StreamEmit.inner[X, Y])
+    joined(dsx, dsy, keyFromX, keyFromY, idFromX, idFromY, tsFromX, tsFromY,
+      ttl, layout)(StreamEmit.inner[X, Y])
 
   /** Streaming AS-OF (point-in-time) join — the production variant the
     * versioned-join state machinery was built for: every x row is
@@ -290,18 +300,19 @@ object VersionedStreamJoin {
     * equals the batch as-of by construction. State holds latest-per-id
     * on both sides, exactly like the other variants; at scale, y
     * versions strictly SHADOWED below the watermark (a newer y also
-    * at-or-below it) can be evicted — compose [[withEventTimeTtl]] for
-    * whole-key retirement, the same knob the other variants use. */
+    * at-or-below it) can be evicted — pass an [[EventTimeTtl]] for
+    * whole-key retirement, as every variant takes. */
   def asOf[X, Y](
       dsx: Dataset[X], dsy: Dataset[Y],
       keyFromX: X => String, keyFromY: Y => String,
       idFromX: X => String, idFromY: Y => String,
-      tsFromX: X => Long, tsFromY: Y => Long)(
+      tsFromX: X => Long, tsFromY: Y => Long,
+      ttl: Option[Ttl] = None, layout: StateLayout = PackedPerKey)(
       implicit ex: Encoder[X], ey: Encoder[Y],
       es: Encoder[String],
       ee: Encoder[Emitted[X, Y]]): Dataset[Emitted[X, Y]] =
-    joined(dsx, dsy, keyFromX, keyFromY, idFromX, idFromY, tsFromX, tsFromY)(
-      StreamEmit.asOf[X, Y](tsFromX, tsFromY, forward = false))
+    joined(dsx, dsy, keyFromX, keyFromY, idFromX, idFromY, tsFromX, tsFromY,
+      ttl, layout)(StreamEmit.asOf[X, Y](tsFromX, tsFromY, forward = false))
 
   /** FORWARD as-of: each x resolves to the key's EARLIEST y version
     * at-or-AFTER its own timestamp (x.ts <= y.ts) — the streaming
@@ -318,12 +329,13 @@ object VersionedStreamJoin {
       dsx: Dataset[X], dsy: Dataset[Y],
       keyFromX: X => String, keyFromY: Y => String,
       idFromX: X => String, idFromY: Y => String,
-      tsFromX: X => Long, tsFromY: Y => Long)(
+      tsFromX: X => Long, tsFromY: Y => Long,
+      ttl: Option[Ttl] = None, layout: StateLayout = PackedPerKey)(
       implicit ex: Encoder[X], ey: Encoder[Y],
       es: Encoder[String],
       ee: Encoder[Emitted[X, Y]]): Dataset[Emitted[X, Y]] =
-    joined(dsx, dsy, keyFromX, keyFromY, idFromX, idFromY, tsFromX, tsFromY)(
-      StreamEmit.asOf[X, Y](tsFromX, tsFromY, forward = true))
+    joined(dsx, dsy, keyFromX, keyFromY, idFromX, idFromY, tsFromX, tsFromY,
+      ttl, layout)(StreamEmit.asOf[X, Y](tsFromX, tsFromY, forward = true))
 
   /** J3: left-outer nested — per trigger, the key's single latest x
     * (per-key dedup quirk) with all latest ys as an id-ordered Seq;
@@ -332,12 +344,13 @@ object VersionedStreamJoin {
       dsx: Dataset[X], dsy: Dataset[Y],
       keyFromX: X => String, keyFromY: Y => String,
       idFromX: X => String, idFromY: Y => String,
-      tsFromX: X => Long, tsFromY: Y => Long)(
+      tsFromX: X => Long, tsFromY: Y => Long,
+      ttl: Option[Ttl] = None, layout: StateLayout = PackedPerKey)(
       implicit ex: Encoder[X], ey: Encoder[Y],
       es: Encoder[String],
       ee: Encoder[EmittedSeq[X, Y]]): Dataset[EmittedSeq[X, Y]] =
-    joined(dsx, dsy, keyFromX, keyFromY, idFromX, idFromY, tsFromX, tsFromY)(
-      StreamEmit.leftOuterSeq[X, Y](tsFromX))
+    joined(dsx, dsy, keyFromX, keyFromY, idFromX, idFromY, tsFromX, tsFromY,
+      ttl, layout)(StreamEmit.leftOuterSeq[X, Y](tsFromX))
 
   /** J4: per-key cogroup — all latest versions on both sides as Seqs,
     * either possibly empty (reference joins.scala:56-70, C4). */
@@ -345,70 +358,70 @@ object VersionedStreamJoin {
       dsx: Dataset[X], dsy: Dataset[Y],
       keyFromX: X => String, keyFromY: Y => String,
       idFromX: X => String, idFromY: Y => String,
-      tsFromX: X => Long, tsFromY: Y => Long)(
+      tsFromX: X => Long, tsFromY: Y => Long,
+      ttl: Option[Ttl] = None, layout: StateLayout = PackedPerKey)(
       implicit ex: Encoder[X], ey: Encoder[Y],
       es: Encoder[String],
       ee: Encoder[EmittedSeq[X, Y]]): Dataset[EmittedSeq[X, Y]] =
-    joined(dsx, dsy, keyFromX, keyFromY, idFromX, idFromY, tsFromX, tsFromY)(
-      StreamEmit.fullOuterSeq[X, Y])
+    joined(dsx, dsy, keyFromX, keyFromY, idFromX, idFromY, tsFromX, tsFromY,
+      ttl, layout)(StreamEmit.fullOuterSeq[X, Y])
 
-  /** Shared core: packed union → keyed latest-wins upsert state →
-    * per-trigger re-expansion via `expand`. */
+  /** The one driver: packed union → keyed latest-wins upsert state in
+    * `layout` → per-trigger re-expansion via `expand`. The union is
+    * watermarked on the version axis only under an [[EventTimeTtl]]. */
   private def joined[X, Y, U](
       dsx: Dataset[X], dsy: Dataset[Y],
       keyFromX: X => String, keyFromY: Y => String,
       idFromX: X => String, idFromY: Y => String,
-      tsFromX: X => Long, tsFromY: Y => Long)(
+      tsFromX: X => Long, tsFromY: Y => Long,
+      ttl: Option[Ttl], layout: StateLayout)(
       expand: StreamEmit.Expand[X, Y, U])(
       implicit ex: Encoder[X], ey: Encoder[Y], es: Encoder[String],
       ee: Encoder[U]): Dataset[U] = {
+    require(layout == PackedPerKey || ttl.forall(_.isInstanceOf[EventTimeTtl]),
+      s"PerIdEntries retires keys only by event-time timers, got $ttl: " +
+        "use EventTimeTtl, or PackedPerKey for a ProcessingTimeTtl")
     val sides = new JoinSides(keyFromX, keyFromY, idFromX, idFromY,
       tsFromX, tsFromY)
     val packed = sides.pack(dsx, dsy)
-    val ttl = ttlConf.get() // captured at build time, serialized into the op
-    val (input, timeoutConf) = ttl match {
-      case Some(TtlConf(_, EventTimeTtl(delay))) =>
-        (packed.withWatermark("ets", delay),
-          GroupStateTimeout.EventTimeTimeout)
-      case Some(TtlConf(_, ProcessingTimeTtl)) =>
-        (packed, GroupStateTimeout.ProcessingTimeTimeout)
-      case None => (packed, GroupStateTimeout.NoTimeout)
-    }
-
-    input.groupByKey(_.key).flatMapGroupsWithState(
-      OutputMode.Update, timeoutConf) {
-      (key: String, rows: Iterator[Packed], state: GroupState[Array[Byte]]) =>
-        if (state.hasTimedOut) {
-          // key retirement: drop the compacted maps; a later record
-          // for this key rebuilds from scratch
-          state.remove()
-          Iterator.empty
-        } else {
-          val (seq0, xs0, ys0) = sides.readState(state.getOption)
-          val k = sides.upsert(xs0, ys0, rows)
-          val seq = seq0 + 1
-          state.update(sides.writeState(seq, k.xs, k.ys))
-          ttl.foreach {
-            case TtlConf(ms, ProcessingTimeTtl) => state.setTimeoutDuration(ms)
-            case TtlConf(ms, _: EventTimeTtl) =>
-              // Anchored at the LATER of the current watermark and the
-              // newest event time this batch delivered for the key, so
-              // the key retires once the watermark advances `ms` past
-              // the data that last touched it (watermark-driven
-              // cleanup, not wall clock). Anchoring at the watermark
-              // alone is a first-batch footgun: the watermark is 0
-              // during batch 1, so `0 + ms` is instantly passed once
-              // real event times arrive, retiring every batch-1-only
-              // key and restarting its emission seq — nondeterministic
-              // under input chunking. The data-side anchor keeps the
-              // timeout ≥ the key's own event-time frontier.
-              val anchor = math.max(state.getCurrentWatermarkMs(), k.maxEtsMs)
-              if (anchor > Long.MinValue)
-                state.setTimeoutTimestamp(anchor + ms)
-          }
-          expand(key, seq, k)
+    val keyed = (ttl match {
+      case Some(t: EventTimeTtl) => packed.withWatermark("ets", t.watermarkDelay)
+      case _                     => packed
+    }).groupByKey(_.key)
+    layout match {
+      case PerIdEntries =>
+        val timers = ttl.collect { case t: EventTimeTtl => t }
+        keyed.transformWithState(
+          new TwsJoinProcessor(sides, timers, ex, ey, expand),
+          if (timers.isEmpty) TimeMode.None() else TimeMode.EventTime(),
+          OutputMode.Update())
+      case PackedPerKey =>
+        val timeout = ttl match {
+          case Some(_: EventTimeTtl)      => GroupStateTimeout.EventTimeTimeout
+          case Some(_: ProcessingTimeTtl) => GroupStateTimeout.ProcessingTimeTimeout
+          case None                       => GroupStateTimeout.NoTimeout
         }
-    }(Encoders.BINARY, ee)
+        keyed.flatMapGroupsWithState(OutputMode.Update, timeout) {
+          (key: String, rows: Iterator[Packed], state: GroupState[Array[Byte]]) =>
+            if (state.hasTimedOut) {
+              // key retirement: drop the compacted maps; a later record
+              // for this key rebuilds from scratch
+              state.remove()
+              Iterator.empty
+            } else {
+              val (seq0, xs0, ys0) = sides.readState(state.getOption)
+              val k = sides.upsert(xs0, ys0, rows)
+              val seq = seq0 + 1
+              state.update(sides.writeState(seq, k.xs, k.ys))
+              ttl.foreach {
+                case ProcessingTimeTtl(ms) => state.setTimeoutDuration(ms)
+                case t: EventTimeTtl => state.setTimeoutTimestamp(
+                  t.timeoutAt(state.getCurrentWatermarkMs(), k.maxEtsMs))
+              }
+              expand(key, seq, k)
+            }
+        }(Encoders.BINARY, ee)
+    }
   }
 }
 
@@ -425,8 +438,7 @@ private[streaming] final case class KeyUpdate[X, Y](
 
 /** The streaming drivers' variants: each wraps one [[JoinRules]]
   * expansion into [[Emitted]] / [[EmittedSeq]] rows stamped with the
-  * key and its emission seq. Both state APIs
-  * ([[VersionedStreamJoin]], [[TwsVersionedJoin]]) run these. */
+  * key and its emission seq. Both [[StateLayout]]s run these. */
 private[streaming] object StreamEmit {
   type Expand[X, Y, U] = (String, Long, KeyUpdate[X, Y]) => Iterator[U]
 

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 import graft.GenJoin._
-import graft.streaming.{Emitted, VersionedStreamJoin}
+import graft.streaming.{Emitted, EventTimeTtl, VersionedStreamJoin}
 
 /** The epoch-zero version footgun under event-time TTL: once the union
   * is watermarked, Spark's late-row filter drops any input whose event
@@ -20,14 +20,12 @@ class EventTimeZeroVersionSpec extends SparkTestBase {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val sx = MemoryStream[A]
     val sy = MemoryStream[B]
-    val joined = VersionedStreamJoin.withEventTimeTtl(
-        ms = 1000L * 365 * 86400 * 1000,
-        watermarkDelay = "36500000 days") {
-      VersionedStreamJoin.fullOuter[A, B](
-        sx.toDS(), sy.toDS(),
-        _.id.toString, _.ida.toString, _.id.toString, _.id.toString,
-        _ => constTs, _.ts)
-    }
+    val joined = VersionedStreamJoin.fullOuter[A, B](
+      sx.toDS(), sy.toDS(),
+      _.id.toString, _.ida.toString, _.id.toString, _.id.toString,
+      _ => constTs, _.ts,
+      Some(EventTimeTtl(ms = 1000L * 365 * 86400 * 1000,
+        watermarkDelay = "36500000 days")))
     val name = s"zero_ver_$constTs"
     val q = joined.toDF().writeStream.outputMode("update")
       .format("memory").queryName(name).start()

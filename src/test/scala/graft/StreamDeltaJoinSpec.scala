@@ -4,7 +4,8 @@ import org.apache.spark.sql.{Dataset, Encoder}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 import graft.GenJoin._
-import graft.streaming.{Emitted, VersionedStreamJoin}
+import graft.streaming.{Emitted, PackedPerKey, PerIdEntries, StateLayout,
+  VersionedStreamJoin}
 
 /** fullOuterDelta: the delta-emitting variant of the versioned
   * full-outer join must (a) converge to the same answer as fullOuter
@@ -68,13 +69,21 @@ class StreamDeltaJoinSpec extends SparkTestBase {
     val as = asFresh.map(a => a.copy(ts = a.ts - 17L)) ++ asFresh
     val bs = bsFresh.map(b => b.copy(ts = b.ts - 17L)) ++ bsFresh
 
+    // both state layouts; the per-id entries need the RocksDB provider
+    checkDelta(as, bs, PackedPerKey)
+    VersionedStreamJoin.withStateStoreProvider(spark) {
+      checkDelta(as, bs, PerIdEntries)
+    }
+  }
+
+  private def checkDelta(as: Seq[A], bs: Seq[B], layout: StateLayout): Unit = {
     def run(delta: Boolean): Seq[Emitted[A, B]] =
-      replay(if (delta) "delta_ab" else "full_ab", as, bs) { (dx, dy) =>
-        val build =
-          if (delta) VersionedStreamJoin.fullOuterDelta[A, B] _
-          else VersionedStreamJoin.fullOuter[A, B] _
-        build(dx, dy, _.id.toString, _.ida.toString, _.id.toString,
-          _.id.toString, _.ts, _.ts)
+      replay(s"${if (delta) "delta" else "full"}_ab_$layout", as, bs) { (dx, dy) =>
+        val (key, id) = ((a: A) => a.id.toString, (b: B) => b.id.toString)
+        if (delta) VersionedStreamJoin.fullOuterDelta[A, B](dx, dy, key,
+          _.ida.toString, key, id, _.ts, _.ts, layout = layout)
+        else VersionedStreamJoin.fullOuter[A, B](dx, dy, key,
+          _.ida.toString, key, id, _.ts, _.ts, layout = layout)
       }
     val rawFull = run(delta = false)
     val rawDelta = run(delta = true)
@@ -83,7 +92,7 @@ class StreamDeltaJoinSpec extends SparkTestBase {
     // guarantees at least one key is touched across >1 batch, which is
     // exactly where full re-emission pays twice)
     assert(rawDelta.size < rawFull.size,
-      s"delta emitted ${rawDelta.size} rows vs full ${rawFull.size}")
+      s"$layout: delta emitted ${rawDelta.size} rows vs full ${rawFull.size}")
 
     // the delta consumers' fold (one x per key, the s11/s22 shape):
     // y-carrying rows converge per (key, y-id) by latest seq — an x
@@ -99,7 +108,7 @@ class StreamDeltaJoinSpec extends SparkTestBase {
       .groupBy(_.key).values.map(_.maxBy(_.seq)).toSeq
     val convergedDelta = (yRows ++ loneX).map(e => (e.x, e.y)).toSet
 
-    assert(convergedDelta == convergedFull(rawFull))
+    assert(convergedDelta == convergedFull(rawFull), s"$layout")
 
     // and both equal the batch latest-wins answer
     val latestA = as.groupBy(_.id).map { case (k, g) => k -> g.maxBy(_.ts) }
@@ -113,7 +122,7 @@ class StreamDeltaJoinSpec extends SparkTestBase {
         case (Some(a), bs2)   => bs2.map(b => (Some(a), Some(b)))
       }
     }
-    assert(convergedDelta == expected)
+    assert(convergedDelta == expected, s"$layout")
   }
 
   test("fullOuterDelta with several x ids per key converges under the " +
@@ -133,11 +142,11 @@ class StreamDeltaJoinSpec extends SparkTestBase {
 
     def run(delta: Boolean): Seq[Emitted[B, A]] =
       replay(if (delta) "delta_ba" else "full_ba", bs, as) { (dx, dy) =>
-        val build =
-          if (delta) VersionedStreamJoin.fullOuterDelta[B, A] _
-          else VersionedStreamJoin.fullOuter[B, A] _
-        build(dx, dy, _.ida.toString, _.id.toString, _.id.toString,
-          _.id.toString, _.ts, _.ts)
+        val (kB, kA) = ((b: B) => b.ida.toString, (a: A) => a.id.toString)
+        if (delta) VersionedStreamJoin.fullOuterDelta[B, A](dx, dy, kB, kA,
+          _.id.toString, kA, _.ts, _.ts)
+        else VersionedStreamJoin.fullOuter[B, A](dx, dy, kB, kA,
+          _.id.toString, kA, _.ts, _.ts)
       }
     val rawFull = run(delta = false)
     val rawDelta = run(delta = true)

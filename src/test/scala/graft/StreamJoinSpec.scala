@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 import graft.GenJoin._
-import graft.streaming.{Emitted, VersionedStreamJoin}
+import graft.streaming.{Emitted, EventTimeTtl, ProcessingTimeTtl, VersionedStreamJoin}
 
 /** Streaming versioned join: chunked MemoryStream replay with
   * stale-version churn, verified with the reference's dedup-tolerant
@@ -16,8 +16,6 @@ class StreamJoinSpec extends SparkTestBase {
   val numSamples = 100
 
   test("streaming AB full outer converges to the batch answer modulo dedup") {
-    val monitor = new graft.streaming.ThroughputMonitor
-    spark.streams.addListener(monitor)
     val truth = sampleExactlyN(genABNonempty(leftOptional = true, fanoutMax = 2),
       seed = 123L, numSamples)
     // stale versions first in the replay order — later chunks carry
@@ -87,16 +85,12 @@ class StreamJoinSpec extends SparkTestBase {
       .map(e => (e.x, e.y)).toSet
     assert(converged == expected)
 
-    // M1 monitoring analog: the listener observed every input row and
-    // live join state (reference StreamMonitor, SURVEY.md §2.7).
-    // Listener delivery is async — wait bounded for the bus to drain.
-    val expectedRows = (as.length + bs.length).toLong
-    val deadline = System.currentTimeMillis + 15000
-    while (monitor.totalInputRows < expectedRows &&
-      System.currentTimeMillis < deadline) Thread.sleep(100)
-    spark.streams.removeListener(monitor)
-    assert(monitor.totalInputRows == expectedRows)
-    assert(monitor.snapshot.exists(_.stateRows > 0))
+    // M1 monitoring analog (reference StreamMonitor, SURVEY.md §2.7):
+    // the query's own progress reports, recorded on the query thread
+    // before it stopped, saw every input row and live join state
+    val progress = q.recentProgress
+    assert(progress.map(_.numInputRows).sum == (as.length + bs.length).toLong)
+    assert(progress.exists(_.stateOperators.exists(_.numRowsTotal > 0)))
   }
 
   test("streaming as-of join: late ys retroactively correct exactly the xs " +
@@ -343,11 +337,9 @@ class StreamJoinSpec extends SparkTestBase {
     val sx = MemoryStream[A]
     val sy = MemoryStream[B]
     // versions double as epoch-ms event times in this mode
-    val joined = VersionedStreamJoin.withEventTimeTtl(500L) {
-      VersionedStreamJoin.fullOuter[A, B](sx.toDS(), sy.toDS(),
-        _.id.toString, _.ida.toString, _.id.toString, _.id.toString,
-        _.ts, _.ts)
-    }
+    val joined = VersionedStreamJoin.fullOuter[A, B](sx.toDS(), sy.toDS(),
+      _.id.toString, _.ida.toString, _.id.toString, _.id.toString,
+      _.ts, _.ts, Some(EventTimeTtl(500L)))
     val q = joined.toDF().writeStream.outputMode("update")
       .format("memory").queryName("stream_ettl").start()
     def rows() = spark.table("stream_ettl").as[Emitted[A, B]].collect()
@@ -387,11 +379,9 @@ class StreamJoinSpec extends SparkTestBase {
     val base = 1000000000L // epoch-scale event times >> the 500_000 TTL
     val sx = MemoryStream[A]
     val sy = MemoryStream[B]
-    val joined = VersionedStreamJoin.withEventTimeTtl(500000L) {
-      VersionedStreamJoin.fullOuter[A, B](sx.toDS(), sy.toDS(),
-        _.id.toString, _.ida.toString, _.id.toString, _.id.toString,
-        _.ts, _.ts)
-    }
+    val joined = VersionedStreamJoin.fullOuter[A, B](sx.toDS(), sy.toDS(),
+      _.id.toString, _.ida.toString, _.id.toString, _.id.toString,
+      _.ts, _.ts, Some(EventTimeTtl(500000L)))
     val q = joined.toDF().writeStream.outputMode("update")
       .format("memory").queryName("stream_ettl_quiet").start()
     def rows() = spark.table("stream_ettl_quiet").as[Emitted[A, B]].collect()
@@ -423,11 +413,9 @@ class StreamJoinSpec extends SparkTestBase {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val sx = MemoryStream[A]
     val sy = MemoryStream[B]
-    val joined = VersionedStreamJoin.withTtl(500L) {
-      VersionedStreamJoin.fullOuter[A, B](sx.toDS(), sy.toDS(),
-        _.id.toString, _.ida.toString, _.id.toString, _.id.toString,
-        _.ts, _.ts)
-    }
+    val joined = VersionedStreamJoin.fullOuter[A, B](sx.toDS(), sy.toDS(),
+      _.id.toString, _.ida.toString, _.id.toString, _.id.toString,
+      _.ts, _.ts, Some(ProcessingTimeTtl(500L)))
     val q = joined.toDF().writeStream.outputMode("update")
       .format("memory").queryName("stream_ttl").start()
     // NOTE: with ProcessingTimeTimeout registered, the engine keeps
@@ -635,7 +623,7 @@ class StreamJoinSpec extends SparkTestBase {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val sx = MemoryStream[A]
     val dd = VersionedStreamDedup.latestPerKeyIdWithEventTimeTtl[A](
-      sx.toDS(), _.id.toString, _.id.toString, _.ts, _.ts, ttlMs = 500L)
+      sx.toDS(), _.id.toString, _.id.toString, _.ts, _.ts, EventTimeTtl(500L))
     val q = dd.toDF().writeStream.outputMode("update")
       .format("memory").queryName("dedup_ettl").start()
     def rows() = spark.table("dedup_ettl").as[EmittedDedup[A]].collect()

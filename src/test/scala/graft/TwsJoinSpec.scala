@@ -5,14 +5,15 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 import graft.GenJoin._
 import graft.core.{JoinRules, TypedVersionedJoins}
-import graft.streaming.{Emitted, EmittedSeq, TwsVersionedJoin, VersionedStreamJoin}
+import graft.streaming.{Emitted, EmittedSeq, EventTimeTtl, PackedPerKey, PerIdEntries,
+  ProcessingTimeTtl, StateLayout, VersionedStreamJoin}
 
-/** The transformWithState twin of the versioned join
-  * (TwsVersionedJoin): must satisfy the same convergence contract as
-  * the flatMapGroupsWithState implementation, and its typed-timer TTL
-  * must retire idle keys without the first-batch anchor hazard.
-  * transformWithState requires the RocksDB state store provider, so
-  * every test runs inside withStateStoreProvider. */
+/** The per-id entries layout of the versioned join (PerIdEntries, on
+  * transformWithState): must satisfy the same convergence contract as
+  * the packed per-key layout (flatMapGroupsWithState), and its
+  * typed-timer TTL must retire idle keys without the first-batch
+  * anchor hazard. transformWithState requires the RocksDB state store
+  * provider, so every test runs inside withStateStoreProvider. */
 class TwsJoinSpec extends SparkTestBase {
   import spark.implicits._
 
@@ -31,10 +32,10 @@ class TwsJoinSpec extends SparkTestBase {
       implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
       val sx = MemoryStream[A]
       val sy = MemoryStream[B]
-      val joined = TwsVersionedJoin.fullOuter[A, B](
+      val joined = VersionedStreamJoin.fullOuter[A, B](
         sx.toDS(), sy.toDS(),
         _.id.toString, _.ida.toString, _.id.toString, _.id.toString,
-        _.ts, _.ts)
+        _.ts, _.ts, layout = PerIdEntries)
       val q = joined.toDF().writeStream.outputMode("update")
         .format("memory").queryName("tws_ab").start()
       try {
@@ -131,7 +132,7 @@ class TwsJoinSpec extends SparkTestBase {
       val iB: B => String = _.id.toString
       val tA: A => Long = _.ts
       val tB: B => Long = _.ts
-      val (fm, tws, batch) = (VersionedStreamJoin, TwsVersionedJoin, TypedVersionedJoins)
+      val (stream, batch) = (VersionedStreamJoin, TypedVersionedJoins)
       val (dsA, dsB) = (spark.createDataset(as), spark.createDataset(bs))
 
       // expected building blocks: per-key latest A (one A id per key),
@@ -170,51 +171,50 @@ class TwsJoinSpec extends SparkTestBase {
       val batchJ1: Rows = batch.fullOuter[A, B](dsA, dsB, kA, kB, kA, iB, tA, tB)
         .collect().map { case (x, y) => (x.toSeq, y.toSeq) }.toSet
 
-      val table: Seq[(String, Option[Rows], Build, Seq[Row] => Rows, Option[Build], Rows)] = Seq(
-        //  variant, batch, fMGWS, fMGWS fold, Tws, expected
+      // per-id delta is replayed in StreamDeltaJoinSpec; delta and as-of
+      // keep one layout here, as each per-id replay is a RocksDB query
+      val (both, packed) = (Seq(PackedPerKey, PerIdEntries), Seq(PackedPerKey))
+      val table: Seq[(String, Option[Rows], StateLayout => Build, Seq[Row] => Rows,
+          Seq[StateLayout], Rows)] = Seq(
+        //  variant, batch, stream build per layout, fold, layouts, expected
         ("j1", Some(batchJ1),
-          (x, y) => pairs(fm.fullOuter[A, B](x, y, kA, kB, kA, iB, tA, tB)), latestPerKey,
-          Some((x, y) => pairs(tws.fullOuter[A, B](x, y, kA, kB, kA, iB, tA, tB))), j1),
+          l => (x, y) => pairs(stream.fullOuter[A, B](x, y, kA, kB, kA, iB, tA, tB, layout = l)),
+          latestPerKey, both, j1),
         ("j1_delta", Some(batchJ1),
-          (x, y) => pairs(fm.fullOuterDelta[A, B](x, y, kA, kB, kA, iB, tA, tB)),
-          latestPerIdentity, None, j1),
+          l => (x, y) => pairs(stream.fullOuterDelta[A, B](x, y, kA, kB, kA, iB, tA, tB, layout = l)),
+          latestPerIdentity, packed, j1),
         ("j2", Some(batch.leftOuter[A, B](dsA, dsB, kA, kB, kA, iB, tA, tB)
             .collect().map { case (x, y) => (Seq(x), y.toSeq) }.toSet),
-          (x, y) => pairs(fm.leftOuter[A, B](x, y, kA, kB, kA, iB, tA, tB)), latestPerKey,
-          Some((x, y) => pairs(tws.leftOuter[A, B](x, y, kA, kB, kA, iB, tA, tB))), j2),
+          l => (x, y) => pairs(stream.leftOuter[A, B](x, y, kA, kB, kA, iB, tA, tB, layout = l)),
+          latestPerKey, both, j2),
         ("j3", Some(batch.leftOuterSeq[A, B](dsA, dsB, kA, kB, kA, iB, tA, tB)
             .collect().map { case (x, ys) => (Seq(x), ys) }.toSet),
-          (x, y) => nested(fm.leftOuterSeq[A, B](x, y, kA, kB, kA, iB, tA, tB)), latestPerKey,
-          Some((x, y) => nested(tws.leftOuterSeq[A, B](x, y, kA, kB, kA, iB, tA, tB))),
-          latestA.toSeq.map { case (k, a) => (Seq(a), ysSorted(k)) }.toSet),
+          l => (x, y) => nested(stream.leftOuterSeq[A, B](x, y, kA, kB, kA, iB, tA, tB, layout = l)),
+          latestPerKey, both, latestA.toSeq.map { case (k, a) => (Seq(a), ysSorted(k)) }.toSet),
         ("j4", Some(batch.fullOuterSeq[A, B](dsA, dsB, kA, kB, kA, iB, tA, tB)
             .collect().toSet),
-          (x, y) => nested(fm.fullOuterSeq[A, B](x, y, kA, kB, kA, iB, tA, tB)), latestPerKey,
-          Some((x, y) => nested(tws.fullOuterSeq[A, B](x, y, kA, kB, kA, iB, tA, tB))),
-          keys.map(k => (latestA.get(k).toSeq, ysSorted(k)))),
+          l => (x, y) => nested(stream.fullOuterSeq[A, B](x, y, kA, kB, kA, iB, tA, tB, layout = l)),
+          latestPerKey, both, keys.map(k => (latestA.get(k).toSeq, ysSorted(k)))),
         ("j5", Some(batch.inner[A, B](dsA, dsB, kA, kB, kA, iB, tA, tB)
             .collect().map { case (x, y) => (Seq(x), Seq(y)) }.toSet),
-          (x, y) => pairs(fm.inner[A, B](x, y, kA, kB, kA, iB, tA, tB)), latestPerKey,
-          Some((x, y) => pairs(tws.inner[A, B](x, y, kA, kB, kA, iB, tA, tB))),
-          j1.filter { case (xs, ys) => xs.nonEmpty && ys.nonEmpty }),
+          l => (x, y) => pairs(stream.inner[A, B](x, y, kA, kB, kA, iB, tA, tB, layout = l)),
+          latestPerKey, both, j1.filter { case (xs, ys) => xs.nonEmpty && ys.nonEmpty }),
         ("asof", Some(asOfBatch(forward = false)),
-          (x, y) => pairs(fm.asOf[A, B](x, y, kA, kB, kA, iB, tA, tB)), latestPerKey,
-          None, asOfExp(forward = false)),
+          l => (x, y) => pairs(stream.asOf[A, B](x, y, kA, kB, kA, iB, tA, tB, layout = l)),
+          latestPerKey, packed, asOfExp(forward = false)),
         ("asof_forward", Some(asOfBatch(forward = true)),
-          (x, y) => pairs(fm.asOfForward[A, B](x, y, kA, kB, kA, iB, tA, tB)), latestPerKey,
-          None, asOfExp(forward = true)))
+          l => (x, y) => pairs(stream.asOfForward[A, B](x, y, kA, kB, kA, iB, tA, tB, layout = l)),
+          latestPerKey, packed, asOfExp(forward = true)))
 
       // the fixture must reach both outer arms and both as-of outcomes
       assert(j1.exists(_._1.isEmpty) && j1.exists(_._2.isEmpty))
       assert(asOfExp(forward = false).exists(_._2.isEmpty) &&
         asOfExp(forward = false).exists(_._2.nonEmpty))
-      table.foreach { case (variant, batchRows, fmBuild, fold, twsBuild, expected) =>
+      table.foreach { case (variant, batchRows, build, fold, layouts, expected) =>
         assert(batchRows.forall(_ == expected), s"$variant: batch")
-        assert(fold(replay(s"fm_$variant", batches)(fmBuild)) == expected,
-          s"$variant: flatMapGroupsWithState")
-        twsBuild.foreach { b =>
-          assert(latestPerKey(replay(s"tws_$variant", batches)(b)) == expected,
-            s"$variant: transformWithState")
+        layouts.foreach { l =>
+          assert(fold(replay(s"${l}_$variant", batches)(build(l))) == expected,
+            s"$variant: $l")
         }
       }
     }
@@ -246,15 +246,26 @@ class TwsJoinSpec extends SparkTestBase {
             VersionedStreamJoin.leftOuterSeq[X, B](x, y, kX, kB, iX, iB, tX, tB)
               .map(e => (e.seq, e.xs.head.id)) })),
           "Tws J2" -> Seq(lastX(replay(s"tie_tws_j2_$n", batches) { (x, y) =>
-            TwsVersionedJoin.leftOuter[X, B](x, y, kX, kB, iX, iB, tX, tB)
-              .map(e => (e.seq, e.x.get.id)) })),
+            VersionedStreamJoin.leftOuter[X, B](x, y, kX, kB, iX, iB, tX, tB,
+              layout = PerIdEntries).map(e => (e.seq, e.x.get.id)) })),
           "Tws J3" -> Seq(lastX(replay(s"tie_tws_j3_$n", batches) { (x, y) =>
-            TwsVersionedJoin.leftOuterSeq[X, B](x, y, kX, kB, iX, iB, tX, tB)
-              .map(e => (e.seq, e.xs.head.id)) })))
+            VersionedStreamJoin.leftOuterSeq[X, B](x, y, kX, kB, iX, iB, tX, tB,
+              layout = PerIdEntries).map(e => (e.seq, e.xs.head.id)) })))
         assert(picked.values.forall(_ == Seq("x1")),
           s"arrival order ${order.map(_.id)}: $picked")
       }
     }
+  }
+
+  test("per-id entries refuse a processing-time TTL when the join is built") {
+    val sx = MemoryStream[A]
+    val sy = MemoryStream[B]
+    val e = intercept[IllegalArgumentException] {
+      VersionedStreamJoin.fullOuter[A, B](sx.toDS(), sy.toDS(),
+        _.id.toString, _.ida.toString, _.id.toString, _.id.toString,
+        _.ts, _.ts, Some(ProcessingTimeTtl(500L)), PerIdEntries)
+    }
+    assert(e.getMessage.contains("event-time"), e.getMessage)
   }
 
   test("tws typed-timer TTL: quiet keys inside the horizon survive; idle keys beyond it retire") {
@@ -263,10 +274,10 @@ class TwsJoinSpec extends SparkTestBase {
       val base = 1000000000L // epoch-scale event times >> the TTL
       val sx = MemoryStream[A]
       val sy = MemoryStream[B]
-      val joined = TwsVersionedJoin.fullOuter[A, B](
+      val joined = VersionedStreamJoin.fullOuter[A, B](
         sx.toDS(), sy.toDS(),
         _.id.toString, _.ida.toString, _.id.toString, _.id.toString,
-        _.ts, _.ts, ttlMs = Some(500000L))
+        _.ts, _.ts, Some(EventTimeTtl(500000L)), PerIdEntries)
       val q = joined.toDF().writeStream.outputMode("update")
         .format("memory").queryName("tws_ttl").start()
       def rows() = spark.table("tws_ttl").as[Emitted[A, B]].collect()

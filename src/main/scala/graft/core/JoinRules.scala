@@ -4,7 +4,8 @@ package graft.core
   * typed cogroup ([[TypedVersionedJoins]]), the streaming join in
   * either state layout ([[graft.streaming.VersionedStreamJoin]]:
   * flatMapGroupsWithState or transformWithState) and the streaming dedup
-  * ([[graft.streaming.VersionedStreamDedup]]) — reduces a key's records
+  * ([[graft.streaming.VersionedStreamDedup]], a one-sided run of the
+  * join's packed flatMapGroupsWithState driver) — reduces a key's records
   * to `id → latest version` maps with [[upsert]] and turns those maps
   * into rows with one of the per-key expansions below. The drivers only
   * wrap the rows into their own output types. The expansions re-express

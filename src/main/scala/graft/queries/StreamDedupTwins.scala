@@ -63,21 +63,8 @@ private[graft] object StreamDedupTwins {
         // family's per-file-fidelity archetype
         runFileStream(spark, dir, "s21_stream_minhash_sig", DocText,
             filesPerTrigger = coarseFilesPerTrigger) { src =>
-          // each projection materializes the previous stage's array
-          // so the next HOF reads an attribute (shingles3FromTokens
-          // perf note), never a re-evaluated expression
-          val sigs = src()
-            .select(col("doc_id"),
-              TextFunctions.tokens(col("text")).as("toks"))
-            .select(col("doc_id"), array_distinct(
-              TextFunctions.shingles3FromTokens(col("toks"))).as("shs"))
-            .select(col("doc_id"), transform(col("shs"),
-              s => TextFunctions.tokenHash(s)).as("ths"))
-            .select(col("doc_id") +:
-              SketchFunctions.rowSignature(col("ths")): _*)
-            .as[DocSig]
-          VersionedStreamDedup.latestPerKeyId[DocSig](
-            sigs, _.doc_id.toString, _.doc_id.toString, _ => 0L).toDF()
+          VersionedStreamDedup.latestPerKeyId[DocSig](docSignatures(src()).as[DocSig],
+            _.doc_id.toString, _.doc_id.toString, _ => 0L).toDF()
         } { raw =>
           latestMembers(raw)
             .select(col("x.doc_id").as("doc_id") +:
@@ -110,15 +97,7 @@ private[graft] object StreamDedupTwins {
             // order-independent converged fold (see entry comment);
             // s19 keeps this family's per-file archetype
             filesPerTrigger = coarseFilesPerTrigger) { src =>
-          val bandRows = src()
-            .select(col("doc_id"),
-              TextFunctions.tokens(col("text")).as("toks"))
-            .select(col("doc_id"), array_distinct(
-              TextFunctions.shingles3FromTokens(col("toks"))).as("shs"))
-            .select(col("doc_id"), transform(col("shs"),
-              s => TextFunctions.tokenHash(s)).as("ths"))
-            .select(col("doc_id") +:
-              SketchFunctions.rowSignature(col("ths")): _*)
+          val bandRows = docSignatures(src())
             .select(col("doc_id"), explode(array(bandStructs: _*)).as("b"))
             .select(col("b.bi").as("bi"), col("b.bv").as("bv"),
               col("doc_id"))
@@ -532,26 +511,33 @@ private[graft] object StreamDedupTwins {
     // instead of accumulated state — the term that survives the 100x
     // scale-up.
     Entry("s62_stream_dedup_clusters",
-      (spark, dir) => withStreamConf(spark) {
-        val tmp = java.nio.file.Files.createTempDirectory("graft_cc_")
-        val ckpt = tmp.resolve("ckpt")
-        val state = tmp.resolve("state")
+      (spark, dir) => inWorkDir(spark, "s62_stream_dedup_clusters", filesPerTrigger = 1) { work =>
+        val state = work.resolve("state").toString
         try {
           val q = incrementalCcQuery(spark, DupPairs.chunkDir(spark, dir).toString,
-            ckpt.toString, state.toString)
+            work.resolve("ckpt").toString, state)
           try q.processAllAvailable() finally q.stop()
-          DedupOps.canonicalFrom(spark, dir,
-              loadStarForest(spark, state.toString)
-                .select(col("d1").as("doc_id"), col("d2").as("cluster_id")))
-            .localCheckpoint()
-        } finally {
-          dropForestHandle(state.toString) // free the persisted blocks
-          deleteRecursively(tmp)
-        }
+          DedupOps.canonicalFrom(spark, dir, loadStarForest(spark, state)
+            .select(col("d1").as("doc_id"), col("d2").as("cluster_id")))
+        } finally dropForestHandle(state) // free the persisted blocks
       },
       Some(DedupOps.canonicalOracleSql)),
   )
 
+
+  /** s21's and s24's scan-local stage: each document's k=8 MinHash
+    * signature (doc_id, h0..h7) — tokens → distinct 3-shingles →
+    * shingle hashes → per-permutation minima. Each projection
+    * materializes the previous stage's array so the next HOF reads an
+    * attribute (shingles3FromTokens perf note), never a re-evaluated
+    * expression. */
+  private def docSignatures(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), TextFunctions.tokens(col("text")).as("toks"))
+      .select(col("doc_id"), array_distinct(
+        TextFunctions.shingles3FromTokens(col("toks"))).as("shs"))
+      .select(col("doc_id"), transform(col("shs"),
+        s => TextFunctions.tokenHash(s)).as("ths"))
+      .select(col("doc_id") +: SketchFunctions.rowSignature(col("ths")): _*)
 
   /** s37's scan-local stage: content-defined-chunk each document and
     * count per-doc chunk-hash multiplicities in ONE pass over the

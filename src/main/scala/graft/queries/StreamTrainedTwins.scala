@@ -161,31 +161,25 @@ private[graft] object StreamTrainedTwins {
     // (1,024 (Σ, n) rows of state, never the vectors), so a centroid
     // refresh never needs the corpus materialized as a batch table.
     Entry("s66_stream_kmeans_lloyd3",
-      (spark, dir) => {
-        withStreamConf(spark) {
+      (spark, dir) =>
+        inWorkDir(spark, "s66_stream_kmeans_lloyd3", filesPerTrigger = 1) { work =>
           val in = EmbVec.chunkDir(spark, dir)
-          // ONE temp root for the whole trajectory, one subdir per
-          // round (each round is its own pair of streaming queries
-          // with its own checkpoints — the restart unit)
-          val tmp = java.nio.file.Files.createTempDirectory("graft_kmeans_")
-          try {
-            var cent = VectorOps.ivfSeedCentroids(spark, dir)
-              .select(col("cid"), col("ce")).localCheckpoint()
-            for (r <- 1 to 3) {
-              cent = streamedLloydRound(spark, in, cent, tmp.resolve(s"r$r"))
-              requireMultiBatch(tmp.resolve(s"r$r").resolve("ckpt"),
-                "s66_stream_kmeans_lloyd3")
-            }
-            graft.core.VectorTools.assignCells(
-                VectorOps.embSlim(spark, dir)
-                  .select(col("vec_id").as("id"), col("e")),
-                cent)
-              .select(col("id").as("vec_id"), col("cell"), col("csim"))
-              .orderBy(col("vec_id"))
-              .localCheckpoint()
-          } finally deleteRecursively(tmp)
-        }
-      },
+          // one subdir per round: each round is its own pair of
+          // streaming queries with its own checkpoints (the restart unit)
+          var cent = VectorOps.ivfSeedCentroids(spark, dir)
+            .select(col("cid"), col("ce")).localCheckpoint()
+          for (r <- 1 to 3) {
+            cent = streamedLloydRound(spark, in, cent, work.resolve(s"r$r"))
+            requireMultiBatch(work.resolve(s"r$r").resolve("ckpt"),
+              "s66_stream_kmeans_lloyd3")
+          }
+          graft.core.VectorTools.assignCells(
+              VectorOps.embSlim(spark, dir)
+                .select(col("vec_id").as("id"), col("e")),
+              cent)
+            .select(col("id").as("vec_id"), col("cell"), col("csim"))
+            .orderBy(col("vec_id"))
+        },
       Some(VectorOps.kmeansLloyd3OracleSql)),
   )
 

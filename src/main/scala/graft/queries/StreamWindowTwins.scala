@@ -337,9 +337,9 @@ private[graft] object StreamWindowTwins {
         writeChunk(Seq(TtlEv(-1L, -1L, mx)).toDF(), nCh)
         val src = fileStream(spark, "user_id BIGINT, event_id BIGINT, ts_us BIGINT",
           in, 1, glob = "chunk*").as[TtlEv]
-        val dd = VersionedStreamDedup.latestPerKeyIdWithEventTimeTtl[TtlEv](
-          src, _.user_id.toString, _.event_id.toString, _.ts_us,
-          _.ts_us / 1000, EventTimeTtl(ttlMs))
+        val dd = VersionedStreamDedup.latestPerKeyId[TtlEv](
+          src, _.user_id.toString, _.event_id.toString, _.ts_us / 1000,
+          Some(EventTimeTtl(ttlMs)))
         drain(startLog(dd.toDF(), work.resolve("ckpt"), work.resolve("log"), "update"))
         latestBidPerKey(spark.read.parquet(work.resolve("log").toString), "key")
           .filter(size(col("xs")) > 0) // end-retired keys: tombstoned

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoder, Encoders}
+import org.apache.spark.sql.{Dataset, Encoder, Encoders, KeyValueGroupedDataset}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, TimeMode}
 
 import graft.core.JoinRules
@@ -29,7 +29,8 @@ private[streaming] final case class Packed(key: String, isX: Boolean,
                                            ets: java.sql.Timestamp)
 
 /** What the keyed state drivers need of the two sides: the key, id and
-  * version of a record, and a [[RowCodec]] per side.
+  * version of a record, and a [[RowCodec]] per side. The streaming
+  * dedup runs one-sided: a `JoinSides[X, X]` fed by [[packX]] alone.
   *
   * The [[PackedPerKey]] state of a key is one byte array
   * ([[PackedState]]): its emission seq, then the latest X row per id,
@@ -47,15 +48,18 @@ private[streaming] final class JoinSides[X, Y](
   private val cx = RowCodec(ex)
   private val cy = RowCodec(ey)
 
-  /** Both sides as one keyed stream whose event time is the record's
-    * version. */
-  def pack(dsx: Dataset[X], dsy: Dataset[Y]): Dataset[Packed] = {
-    implicit val ep: Encoder[Packed] = Encoders.product[Packed]
-    dsx.map(x => Packed(keyX(x), isX = true, cx.toBytes(x),
-        new java.sql.Timestamp(tsX(x))))
-      .union(dsy.map(y => Packed(keyY(y), isX = false, cy.toBytes(y),
-        new java.sql.Timestamp(tsY(y)))))
-  }
+  /** One side as keyed rows whose event time is the record's version. */
+  private def packSide[T](ds: Dataset[T], isX: Boolean, key: T => String,
+                          codec: RowCodec[T], ts: T => Long): Dataset[Packed] =
+    ds.map(t => Packed(key(t), isX, codec.toBytes(t),
+      new java.sql.Timestamp(ts(t))))(Encoders.product[Packed])
+
+  /** The X side alone: the input of a one-sided run, such as the dedup. */
+  def packX(dsx: Dataset[X]): Dataset[Packed] = packSide(dsx, isX = true, keyX, cx, tsX)
+
+  /** Both sides as one keyed stream. */
+  def pack(dsx: Dataset[X], dsy: Dataset[Y]): Dataset[Packed] =
+    packX(dsx).union(packSide(dsy, isX = false, keyY, cy, tsY))
 
   /** One trigger's rows for a key upserted into its latest-per-id maps
     * with [[JoinRules.upsert]], in one pass that also takes the newest
@@ -366,9 +370,9 @@ object VersionedStreamJoin {
     joined(dsx, dsy, keyFromX, keyFromY, idFromX, idFromY, tsFromX, tsFromY,
       ttl, layout)(StreamEmit.fullOuterSeq[X, Y])
 
-  /** The one driver: packed union → keyed latest-wins upsert state in
-    * `layout` → per-trigger re-expansion via `expand`. The union is
-    * watermarked on the version axis only under an [[EventTimeTtl]]. */
+  /** The one join driver: packed union → keyed latest-wins upsert state
+    * in `layout` → per-trigger re-expansion via `expand`. A key the TTL
+    * retires emits nothing. */
   private def joined[X, Y, U](
       dsx: Dataset[X], dsy: Dataset[Y],
       keyFromX: X => String, keyFromY: Y => String,
@@ -384,44 +388,60 @@ object VersionedStreamJoin {
     val sides = new JoinSides(keyFromX, keyFromY, idFromX, idFromY,
       tsFromX, tsFromY)
     val packed = sides.pack(dsx, dsy)
-    val keyed = (ttl match {
-      case Some(t: EventTimeTtl) => packed.withWatermark("ets", t.watermarkDelay)
-      case _                     => packed
-    }).groupByKey(_.key)
     layout match {
       case PerIdEntries =>
         val timers = ttl.collect { case t: EventTimeTtl => t }
-        keyed.transformWithState(
+        byKey(packed, ttl).transformWithState(
           new TwsJoinProcessor(sides, timers, ex, ey, expand),
           if (timers.isEmpty) TimeMode.None() else TimeMode.EventTime(),
           OutputMode.Update())
-      case PackedPerKey =>
-        val timeout = ttl match {
-          case Some(_: EventTimeTtl)      => GroupStateTimeout.EventTimeTimeout
-          case Some(_: ProcessingTimeTtl) => GroupStateTimeout.ProcessingTimeTimeout
-          case None                       => GroupStateTimeout.NoTimeout
-        }
-        keyed.flatMapGroupsWithState(OutputMode.Update, timeout) {
-          (key: String, rows: Iterator[Packed], state: GroupState[Array[Byte]]) =>
-            if (state.hasTimedOut) {
-              // key retirement: drop the compacted maps; a later record
-              // for this key rebuilds from scratch
-              state.remove()
-              Iterator.empty
-            } else {
-              val (seq0, xs0, ys0) = sides.readState(state.getOption)
-              val k = sides.upsert(xs0, ys0, rows)
-              val seq = seq0 + 1
-              state.update(sides.writeState(seq, k.xs, k.ys))
-              ttl.foreach {
-                case ProcessingTimeTtl(ms) => state.setTimeoutDuration(ms)
-                case t: EventTimeTtl => state.setTimeoutTimestamp(
-                  t.timeoutAt(state.getCurrentWatermarkMs(), k.maxEtsMs))
-              }
-              expand(key, seq, k)
-            }
-        }(Encoders.BINARY, ee)
+      case PackedPerKey => packedPerKey(sides, packed, ttl)(expand, (_, _) => Iterator.empty)
     }
+  }
+
+  /** `packed` grouped by key, watermarked on the version axis only under
+    * an [[EventTimeTtl]]. */
+  private def byKey(packed: Dataset[Packed], ttl: Option[Ttl])(
+      implicit es: Encoder[String]): KeyValueGroupedDataset[String, Packed] =
+    (ttl match {
+      case Some(t: EventTimeTtl) => packed.withWatermark("ets", t.watermarkDelay)
+      case _                     => packed
+    }).groupByKey(_.key)
+
+  /** The [[PackedPerKey]] step, the one keyed latest-wins state of the
+    * joins and of [[VersionedStreamDedup]]: per trigger a key's rows are
+    * upserted into its [[PackedState]], its seq is bumped, a TTL re-arms
+    * its timeout, and `expand` turns the result into rows. A key the TTL
+    * retires drops its state and emits `retired(key, last seq)`. */
+  private[streaming] def packedPerKey[X, Y, U](
+      sides: JoinSides[X, Y], packed: Dataset[Packed], ttl: Option[Ttl])(
+      expand: StreamEmit.Expand[X, Y, U], retired: (String, Long) => Iterator[U])(
+      implicit es: Encoder[String], ee: Encoder[U]): Dataset[U] = {
+    val timeout = ttl match {
+      case Some(_: EventTimeTtl)      => GroupStateTimeout.EventTimeTimeout
+      case Some(_: ProcessingTimeTtl) => GroupStateTimeout.ProcessingTimeTimeout
+      case None                       => GroupStateTimeout.NoTimeout
+    }
+    byKey(packed, ttl).flatMapGroupsWithState(OutputMode.Update, timeout) {
+      (key: String, rows: Iterator[Packed], state: GroupState[Array[Byte]]) =>
+        if (state.hasTimedOut) {
+          // key retirement: a later record for this key rebuilds from scratch
+          val seq = new PackedState.Reader(state.get).seq
+          state.remove()
+          retired(key, seq)
+        } else {
+          val (seq0, xs0, ys0) = sides.readState(state.getOption)
+          val k = sides.upsert(xs0, ys0, rows)
+          val seq = seq0 + 1
+          state.update(sides.writeState(seq, k.xs, k.ys))
+          ttl.foreach {
+            case ProcessingTimeTtl(ms) => state.setTimeoutDuration(ms)
+            case t: EventTimeTtl => state.setTimeoutTimestamp(
+              t.timeoutAt(state.getCurrentWatermarkMs(), k.maxEtsMs))
+          }
+          expand(key, seq, k)
+        }
+    }(Encoders.BINARY, ee)
   }
 }
 

@@ -622,8 +622,8 @@ class StreamJoinSpec extends SparkTestBase {
     import graft.streaming.{EmittedDedup, VersionedStreamDedup}
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val sx = MemoryStream[A]
-    val dd = VersionedStreamDedup.latestPerKeyIdWithEventTimeTtl[A](
-      sx.toDS(), _.id.toString, _.id.toString, _.ts, _.ts, EventTimeTtl(500L))
+    val dd = VersionedStreamDedup.latestPerKeyId[A](
+      sx.toDS(), _.id.toString, _.id.toString, _.ts, Some(EventTimeTtl(500L)))
     val q = dd.toDF().writeStream.outputMode("update")
       .format("memory").queryName("dedup_ettl").start()
     def rows() = spark.table("dedup_ettl").as[EmittedDedup[A]].collect()

@@ -136,8 +136,9 @@ object Bench {
     // ending at "sf":"…"}).
     // SCALING PROBES (r20): the stdout line previously itemized only
     // the 8 slowest queries, which after the streaming optimizations
-    // are ALL replay rows whose width is pinned to
-    // SPARK_GRAFT_STREAM_PARTS — so the driver's 8-vs-32-core ratio
+    // are ALL replay rows whose width is capped at 8 (the session's
+    // slots up to 8, or SPARK_GRAFT_STREAM_PARTS; see
+    // StreamingHarness.streamWidth) — so an 8-vs-32-core ratio
     // check could only see commit-bound rows and flagged a false
     // `suspect_cpus_ignored`. These batch rows are CPU-parallel (their
     // scans repartition to defaultParallelism), so their timings move
@@ -190,6 +191,8 @@ object Bench {
     // BENCH_FULL.json resolves against the repo root (derived from the
     // classpath the bench was launched from), not the process CWD — a
     // bench launched elsewhere must not silently strand the artifact.
+    // Only a whole-suite run (no row arguments) writes it: a row-subset
+    // map must not replace the suite record.
     val repoRoot =
       try {
         // …/target/scala-2.13/classes → repo root three levels up
@@ -198,9 +201,9 @@ object Bench {
         if (cls.getNameCount >= 3) cls.getParent.getParent.getParent
         else java.nio.file.Paths.get(".")
       } catch { case _: Throwable => java.nio.file.Paths.get(".") }
-    for (p <- Seq(java.nio.file.Paths.get(sys.env.getOrElse(
-        "SPARK_GRAFT_BENCH_OUT", "/tmp/graft_bench.json")),
-        repoRoot.resolve("BENCH_FULL.json"))) {
+    for (p <- java.nio.file.Paths.get(sys.env.getOrElse(
+        "SPARK_GRAFT_BENCH_OUT", "/tmp/graft_bench.json")) +:
+        Option.when(only.isEmpty)(repoRoot.resolve("BENCH_FULL.json")).toSeq) {
       try java.nio.file.Files.write(p, (fullJson + "\n").getBytes("UTF-8"))
       catch { case e: Throwable =>
         System.err.println(s"[bench] could not write $p: ${e.getMessage}") }

@@ -61,35 +61,50 @@ private[graft] object StreamingHarness {
         ">=2 required so multi-batch upsert semantics stay exercised")
   }
 
-  /** State-store parallelism for the replay runs. Each microbatch
-    * writes one checkpoint delta file per state partition, and on a
-    * local filesystem without native Hadoop libs every file costs an
-    * exec'd `chmod` (measured: the dominant cost of these queries).
-    * 8 partitions is ample for ~150 join keys; a real cluster against
-    * object storage would size this to executor count instead — hence
-    * the env knob (must be constant across a query's restarts: the
-    * idempotent sink's stable-part-count contract rides this width).
-    * Widening was A/B-measured at replay scale and LOSES: 8/16/32
-    * over six representative rows (min-of-3, sf0.1) read totals
-    * 28.9 / 30.5 / 52.2 s — the per-partition per-batch commit cost
-    * (RocksDB instance + changelog file each) grows faster than the
-    * state-update critical path shrinks. */
-  private[graft] val streamShufflePartitions = {
-    val raw = sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTS", "8")
-    // validate ONCE at class load and fail fast with a clear message:
-    // this value becomes spark.sql.shuffle.partitions AND relay
-    // trigger sizes, where a non-numeric or non-positive value would
-    // otherwise surface as an opaque mid-query failure
-    require(raw.toIntOption.exists(_ > 0),
-      s"SPARK_GRAFT_STREAM_PARTS must be a positive integer, got '$raw'" +
-        " (it must also stay constant across a query's restarts - the" +
-        " idempotent sink's stable-part-count contract rides it)")
-    raw
-  }
+  /** State-store and shuffle width of the replay runs: one task wave
+    * per microbatch. Every state partition is one task per microbatch,
+    * and a stage-2 task's fixed cost is ~74 ms (cold_keys Spark event
+    * logs, 8 partitions: ~31 ms task deserialization plus ~40-50 ms of
+    * state-store open and commit, per-task operator codegen and the
+    * sink writer) against ~130 ms of per-key work per whole batch. So a
+    * width above the session's task slots buys a second wave of that
+    * fixed cost and no parallelism: on a 4-core host, perfbench
+    * cold_keys ran 120 tasks in 8-wide batches and 72 at width 4, and
+    * its upserts/s rose 12.7k → 16.2k (10/10 pairs, together with the
+    * join's key-column grouping). Widening past 8 LOSES even with the
+    * slots for it: 8/16/32 over six representative replay rows
+    * (min-of-3, sf0.1) read totals 28.9 / 30.5 / 52.2 s, because each
+    * partition's per-batch commit (a RocksDB instance and a changelog
+    * file) grows faster than the critical path shrinks. A real cluster
+    * against object storage sizes this to executor slots too, hence
+    * the env knob. The width must stay constant across a query's
+    * restarts: state partitioning is fixed at the first batch, and the
+    * idempotent sink's stable part count rides the width. The default
+    * follows the session's slots, so a restart under a different slot
+    * count must pin `SPARK_GRAFT_STREAM_PARTS`. */
+  private[graft] def streamWidth(spark: SparkSession): Int =
+    streamWidth(sys.env.get("SPARK_GRAFT_STREAM_PARTS"),
+      spark.sparkContext.defaultParallelism)
+
+  /** The width rule: `raw` (the `SPARK_GRAFT_STREAM_PARTS` value) when
+    * set, else `min(8, slots)`. A set value is validated fail-fast: it
+    * becomes spark.sql.shuffle.partitions AND relay trigger sizes,
+    * where a non-numeric or non-positive value would otherwise surface
+    * as an opaque mid-query failure. */
+  private[graft] def streamWidth(raw: Option[String], slots: Int): Int =
+    raw match {
+      case Some(v) =>
+        require(v.toIntOption.exists(_ > 0),
+          s"SPARK_GRAFT_STREAM_PARTS must be a positive integer, got '$v'" +
+            " (it must also stay constant across a query's restarts - the" +
+            " idempotent sink's stable-part-count contract rides it)")
+        v.toInt
+      case None => math.min(8, slots)
+    }
 
   private[graft] def withStreamConf[T](spark: SparkSession)(body: => T): T = {
     val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", streamShufflePartitions)
+    spark.conf.set("spark.sql.shuffle.partitions", streamWidth(spark).toString)
     // All replay checkpoints live under the local /tmp dirs these
     // harnesses create, so commit them through the fork-free NIO
     // manager (see [[graft.streaming.NioCheckpointFileManager]]: the
@@ -395,7 +410,7 @@ private[graft] object StreamingHarness {
     * [[writeBatchIdempotent]] requires. */
   private[graft] val singleFile: DataFrame => DataFrame = _.repartition(1)
   private[graft] val keyBuckets: DataFrame => DataFrame =
-    _.repartition(streamShufflePartitions.toInt, col("key"))
+    df => df.repartition(streamWidth(df.sparkSession), col("key"))
 
   /** Starts `df`'s query, checkpointed at `ckpt`, logging its output
     * to parquet under `log` in `layout`. Update and append modes write
@@ -439,7 +454,7 @@ private[graft] object StreamingHarness {
   private[graft] def relayTail(spark: SparkSession, relay: Path,
       schema: String): DataFrame = {
     java.nio.file.Files.createDirectories(relay)
-    fileStream(spark, schema, relay, streamShufflePartitions.toInt, glob = "b*")
+    fileStream(spark, schema, relay, streamWidth(spark), glob = "b*")
   }
 
   /** Drains `qs` in order, then stops them all. processAllAvailable is

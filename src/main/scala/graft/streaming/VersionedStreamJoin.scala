@@ -1,6 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoder, Encoders, KeyValueGroupedDataset}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, TimeMode}
 
 import graft.core.JoinRules
@@ -168,19 +169,22 @@ case object PerIdEntries extends StateLayout
   * reference's continuously-updated J1–J4 (joins.scala:10-70)
   * re-expressed on Structured Streaming.
   *
-  * Shape: pack both streams into [[Packed]] rows, union, `groupByKey(key)`,
-  * then keyed update-mode state in the chosen [[StateLayout]]. On every
-  * microbatch each touched key upserts arrivals into latest-wins per-id
-  * state and re-emits its join result — per-microbatch granularity
-  * instead of the reference's per-record `CountTrigger.of(1)`
-  * (joins.scala:19); the reference's own dedup-based verification
+  * Shape: pack both streams into [[Packed]] rows, union, group by the
+  * `key` column, then keyed update-mode state in the chosen
+  * [[StateLayout]]. On every microbatch each touched key upserts
+  * arrivals into latest-wins per-id state and re-emits its join
+  * result — per-microbatch granularity instead of the reference's
+  * per-record `CountTrigger.of(1)` (joins.scala:19); the reference's
+  * own dedup-based verification
   * contract (raw ≥ expected, deduped == expected, JoinSpec.scala:153-154)
   * is insensitive to that difference (SURVEY.md §4.2). Every variant
   * takes an optional [[Ttl]] (default: keep state forever) and a
   * [[StateLayout]] (default [[PackedPerKey]]).
   *
   * At scale: state is hash-partitioned by join key across executors
-  * (the Exchange under groupByKey); each key holds only latest
+  * (the one hash Exchange on `key`, one partition per state partition:
+  * the replay runner sizes that width to the session's task slots, see
+  * `StreamingHarness.streamWidth`); each key holds only latest
   * versions, so state size is bounded by live entities, not stream
   * length. Skewed keys are the caller's concern (salt the key or
   * pre-aggregate) as with any keyed stateful op.
@@ -399,14 +403,17 @@ object VersionedStreamJoin {
     }
   }
 
-  /** `packed` grouped by key, watermarked on the version axis only under
-    * an [[EventTimeTtl]]. */
+  /** `packed` grouped by its `key` column, watermarked on the version
+    * axis only under an [[EventTimeTtl]]. Grouping by the column (not
+    * `groupByKey(_.key)`) hashes the rows as they are: no
+    * `AppendColumns` step deserializes every row to run the key
+    * function and ships the key a second time as a `value` column. */
   private def byKey(packed: Dataset[Packed], ttl: Option[Ttl])(
       implicit es: Encoder[String]): KeyValueGroupedDataset[String, Packed] =
     (ttl match {
       case Some(t: EventTimeTtl) => packed.withWatermark("ets", t.watermarkDelay)
       case _                     => packed
-    }).groupByKey(_.key)
+    }).groupBy(col("key")).as[String, Packed](es, Encoders.product[Packed])
 
   /** The [[PackedPerKey]] step, the one keyed latest-wins state of the
     * joins and of [[VersionedStreamDedup]]: per trigger a key's rows are

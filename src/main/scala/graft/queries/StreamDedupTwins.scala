@@ -139,12 +139,11 @@ private[graft] object StreamDedupTwins {
           val cent = VectorOps.ivfSeedCentroids(spark, dir).localCheckpoint()
           // scan-local per-batch assignment carrying e/nrm through;
           // replay chunks are PK-unique, so no per-vec_id collapse
-          val q1 = startRelay(fileStream(spark, EmbVec.schema,
+          val q1 = startLog(fileStream(spark, EmbVec.schema,
               EmbVec.chunkDir(spark, dir), coarseFilesPerTrigger),
-              work.resolve("ckpt"), work.resolve("relay")) {
+              work.resolve("ckpt"), work.resolve("relay"), "append",
             VectorOps.assignScan(_, cent)
-              .select(col("vec_id"), col("cell"), col("e"), col("nrm"))
-          }
+              .select(col("vec_id"), col("cell"), col("e"), col("nrm")))
           val asgs = relayTail(spark, work.resolve("relay"),
               "vec_id BIGINT, cell BIGINT, e ARRAY<DOUBLE>, nrm DOUBLE")
             .as[graft.streaming.AssignedVec]
@@ -202,9 +201,9 @@ private[graft] object StreamDedupTwins {
               TextFunctions.qualityScore(col("text")).as("quality"))
             .localCheckpoint()
           val relay = work.resolve("relay")
-          val q1 = startRelay(fileStream(spark, DocText.schema,
+          val q1 = startLog(fileStream(spark, DocText.schema,
               DocText.chunkDir(spark, dir), coarseFilesPerTrigger),
-              work.resolve("ckpt"), relay) {
+              work.resolve("ckpt"), relay, "append",
             _.select(col("doc_id"),
                 TextFunctions.qualityScore(col("text")).as("quality"),
                 TextFunctions.fingerprint64(col("text")).as("fp64"),
@@ -214,8 +213,7 @@ private[graft] object StreamDedupTwins {
               .join(asg.withColumnRenamed("vec_id", "avid"),
                 col("avid") === col("doc_id"))
               .select(col("doc_id"), col("bucket"), col("fp64"),
-                col("cell"), col("e"), col("nrm"))
-          }
+                col("cell"), col("e"), col("nrm")))
           // each decision query tails the relay, keyed by `cell`
           def decisions(cell: String, threshold: Double, i: Int) =
             startLog(graft.streaming.SemanticStreamDedup.decisions(
@@ -493,9 +491,7 @@ private[graft] object StreamDedupTwins {
     // components — in COMPUTE (only touched components re-contract)
     // AND in WRITE (the snapshot is label-bucketed; only touched
     // buckets are rewritten, untouched buckets carry over as
-    // hardlinks; bulk/backfill batches that touch every existing
-    // bucket skip the bookkeeping and contract the full forest
-    // directly). The forest is RESTART-SAFE: each batch commits an
+    // hardlinks). The forest is RESTART-SAFE: each batch commits an
     // atomically-renamed _SUCCESS-gated snapshot (the compacted state
     // table a production deployment keeps in Delta) and recovery
     // seeds the fold from the latest committed one —
@@ -628,15 +624,12 @@ private[graft] object StreamDedupTwins {
         .select(col("id").as("d1"), col("id").as("d2")))
 
   /** Cached read handle over the latest COMMITTED star-forest snapshot:
-    * its path, its bucket set (one directory listing at install), and
-    * its rows as a persisted DataFrame — so successive microbatches
-    * stop re-listing and re-opening the committed parquet from disk
-    * (a per-batch fixed cost of s62).
-    * `buckets` is empty (and `forest` None) for a committed-but-empty
-    * snapshot. */
+    * its path and its rows as a persisted DataFrame — so successive
+    * microbatches stop re-opening the committed parquet from disk (a
+    * per-batch fixed cost of s62). `forest` is None for a
+    * committed-but-empty snapshot (no bucket dirs). */
   private[graft] final class CcForestHandle(
       val snapshot: java.nio.file.Path,
-      val buckets: Set[Int],
       val forest: Option[DataFrame])
 
   /** stateDir → handle over its latest committed snapshot. The DISK
@@ -670,38 +663,23 @@ private[graft] object StreamDedupTwins {
     * the just-renamed b<bid>) and on a validation miss. */
   private[graft] def installForestHandle(spark: SparkSession,
       stateDir: String, snap: java.nio.file.Path): CcForestHandle = {
-    val buckets = listDir(snap).map(_.getFileName.toString)
-      .filter(_.startsWith("bucket="))
-      .map(_.stripPrefix("bucket=").toInt).toSet
     val forest =
-      if (buckets.isEmpty) None
+      if (!listDir(snap).exists(_.getFileName.toString.startsWith("bucket="))) None
       else Some(spark.read.parquet(snap.toString)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    val h = new CcForestHandle(snap, buckets, forest)
+    val h = new CcForestHandle(snap, forest)
     Option(ccForestCache.put(stateDir, h))
       .foreach(_.forest.foreach(_.unpersist(false)))
     h
   }
 
   /** Drop `stateDir`'s cached handle (freeing its persisted blocks) —
-    * call when the state dir itself is being destroyed. */
+    * call when the state dir itself is being destroyed. A query that
+    * stops keeps its handle: a restart revalidates it against the disk
+    * commit log on its first batch. */
   private[graft] def dropForestHandle(stateDir: String): Unit =
     Option(ccForestCache.remove(stateDir))
       .foreach(_.forest.foreach(_.unpersist(false)))
-
-  /** BULK-batch classification (initial backfill): take the full-forest
-    * contraction only when the batch touches components in EVERY bucket
-    * the state has AND that span is at least half the bucket layout — a
-    * trickle batch early in a stream's life (state still concentrated
-    * in one or two buckets) must keep the touched-component write bound
-    * even though it happens to cover every existing bucket. Labels come
-    * FROM the forest, so touched ⊆ existing and the subset condition
-    * reads "the batch touches all existing buckets". Pure function of
-    * the two bucket sets so the classification is unit-testable. */
-  private[graft] def isBulkBatch(existing: Set[Int],
-                                 touched: Set[Int]): Boolean =
-    existing.nonEmpty && existing.subsetOf(touched) &&
-      2 * touched.size >= ccForestBuckets
 
   /** s62's incremental connected-components engine, RESTART-SAFE and
     * TOUCHED-BUCKET INCREMENTAL: edges stream from `edgesDir`; each
@@ -726,8 +704,8 @@ private[graft] object StreamDedupTwins {
     * partial-write fallback, and the untouched-bucket byte-identity. */
   private[graft] def incrementalCcQuery(spark: SparkSession,
       edgesDir: String, ckpt: String, stateDir: String)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val q = fileStream(spark, DupPairs.schema,
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    fileStream(spark, DupPairs.schema,
         java.nio.file.Paths.get(edgesDir), filesPerTrigger = 1)
       .writeStream.outputMode("append")
       .option("checkpointLocation", ckpt)
@@ -735,27 +713,6 @@ private[graft] object StreamDedupTwins {
         applyCcBatch(df.sparkSession, df, bid, stateDir)
         ()
       }.start()
-    // the cached handle's persisted blocks are released when THIS query
-    // terminates (the owner of the cache entry), not left to every call
-    // site's finally block; a restart simply rebuilds the handle from
-    // the committed snapshot on its first batch. The listener is
-    // one-shot and self-removing. (The event bus is async: a drop
-    // racing a restarted query's fresh install only costs that install
-    // a rebuild — handles are validated against the disk commit log on
-    // every access.)
-    val listener = new org.apache.spark.sql.streaming.StreamingQueryListener {
-      import org.apache.spark.sql.streaming.StreamingQueryListener._
-      override def onQueryStarted(e: QueryStartedEvent): Unit = ()
-      override def onQueryProgress(e: QueryProgressEvent): Unit = ()
-      override def onQueryTerminated(e: QueryTerminatedEvent): Unit =
-        if (e.id == q.id) {
-          dropForestHandle(stateDir)
-          spark.streams.removeListener(this)
-        }
-    }
-    spark.streams.addListener(listener)
-    q
-  }
 
   /** One microbatch of the incremental CC engine (see
     * [[incrementalCcQuery]]). Driver-resident values per batch, all
@@ -769,11 +726,7 @@ private[graft] object StreamDedupTwins {
     * collect); and the touched BUCKET ids (≤ 2·ccForestBuckets
     * ints). Degenerate bound on the over-cap path: a backfill batch
     * whose edges touch nearly EVERY existing component makes the
-    * touched-label collect proportional to total component count —
-    * at 100 TB the real answer for such a batch is the bulk path's
-    * full contraction (which [[isBulkBatch]] selects exactly then,
-    * skipping the per-component bookkeeping those labels feed), not
-    * a tighter collect.
+    * touched-label collect proportional to total component count.
     *
     * The limit-probe's `collect()` is NOT a wasted job on an empty
     * forest (first batch of a fresh stream): on the trickle path the
@@ -858,25 +811,9 @@ private[graft] object StreamDedupTwins {
     val touchedLabels = oldLabels.toSeq.toDF("lab")
     val labelBuckets: Set[Int] = oldLabels
       .map(l => java.lang.Math.floorMod(l, ccForestBuckets.toLong).toInt)
-    // BULK-batch detection (initial backfill): when the batch's
-    // endpoints touch components in EVERY bucket the state currently
-    // has — and that is a real span of the layout, not just a young
-    // stream's one or two populated buckets (see [[isBulkBatch]]) —
-    // the per-component bookkeeping (semi/anti joins, per-star bucket
-    // collect, hardlink carry-over) can't save anything — every
-    // existing bucket rewrites regardless — so it is pure overhead.
-    // Contract (edges ∪ full forest) directly instead: untouched stars
-    // contract to themselves, so the result is identical; only the
-    // work shape changes. Trickle batches (the 100 TB steady state)
-    // keep the incremental path; StreamCcRecoverySpec exercises both
-    // (its grow and merge phases are trickle, its backfill-bridge
-    // phase bulk).
-    val existingBuckets: Set[Int] = handle.map(_.buckets).getOrElse(Set.empty)
-    val bulk = isBulkBatch(existingBuckets, labelBuckets)
     // rows of the touched components only — partition-pruned to their
     // label buckets, then semi-joined on the (small) touched label set
     val touchedRows = forest match {
-      case Some(f) if bulk => f.select(col("d1"), col("d2"))
       case Some(f) => f
         .filter(col("bucket").isin(labelBuckets.toSeq: _*))
         .join(broadcast(touchedLabels), col("d2") === col("lab"), "left_semi")
@@ -896,12 +833,12 @@ private[graft] object StreamDedupTwins {
     // fixpoint equals the min over all member docs ∪ new docs — the
     // same labeling the full contraction produces. The limit-probe
     // above bounds the driver residency explicitly: a batch larger
-    // than ccQuotientMaxEdges (bulk/backfill territory) — and any bulk
-    // batch — falls back to the distributed contraction, which
-    // materializes eagerly (its result IS a localCheckpoint), so every
-    // read of the old snapshot completes before any mutation.
+    // than ccQuotientMaxEdges (backfill territory) falls back to the
+    // distributed contraction, which materializes eagerly (its result
+    // IS a localCheckpoint), so every read of the old snapshot
+    // completes before any mutation.
     val (newStars, starBuckets) = batchEdges match {
-      case Some(es) if !bulk =>
+      case Some(es) =>
         val qcomp = graft.core.GraphTools.unionFindComponents(
           es.map { case (a, b) =>
             (epLab.getOrElse(a, a), epLab.getOrElse(b, b)) })
@@ -927,15 +864,12 @@ private[graft] object StreamDedupTwins {
           .map(l => java.lang.Math.floorMod(l, ccForestBuckets.toLong).toInt)
           .toSet
         (stars, buckets)
-      case _ =>
+      case None =>
         val stars = graft.core.GraphTools
           .connectedComponents(edges.unionAll(touchedRows), "d1", "d2")
           .select(col("id").as("d1"), col("component").as("d2"))
-        val buckets =
-          if (bulk) Set.empty[Int] // touched already covers every bucket
-          else stars.select(bucketOf.as("b"))
-            .distinct().collect().map(_.getInt(0)).toSet
-        (stars, buckets)
+        (stars, stars.select(bucketOf.as("b"))
+          .distinct().collect().map(_.getInt(0)).toSet)
     }
     val touched = labelBuckets ++ starBuckets
     // stage the new snapshot: touched buckets = survivors (rows of
@@ -943,11 +877,11 @@ private[graft] object StreamDedupTwins {
     val stage = root.resolve(s".stage_b$bid")
     if (Files.exists(stage)) deleteRecursively(stage)
     val survivors = forest match {
-      case Some(f) if !bulk => f
+      case Some(f) => f
         .filter(col("bucket").isin(touched.toSeq: _*))
         .join(broadcast(touchedLabels), col("d2") === col("lab"), "left_anti")
         .select(col("d1"), col("d2"))
-      case _ => spark.range(0) // bulk: the contraction carried every row
+      case None => spark.range(0)
         .select(col("id").as("d1"), col("id").as("d2"))
     }
     survivors.unionAll(newStars)

@@ -1,12 +1,12 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import java.nio.file.Path
 import scala.reflect.runtime.universe.TypeTag
 
-import graft.streaming.{EventTimeTtl, PerIdEntries, Ttl, VersionedStreamDedup,
+import graft.streaming.{EventTimeTtl, PerIdEntries, VersionedStreamDedup,
   VersionedStreamJoin}
 
 /** The reference-surface streaming twins: every versioned join
@@ -47,12 +47,30 @@ private[graft] object StreamJoinTwins {
     * Retirement itself is sbt-asserted (StreamJoinSpec, TwsJoinSpec),
     * where arrival order is controllable. */
   private val horizonTtlMs = 1000L * 365 * 86400 * 1000
-  private val horizon: Option[Ttl] = Some(EventTimeTtl(horizonTtlMs, "36500 days"))
+  private val horizon: Option[EventTimeTtl] = Some(EventTimeTtl(horizonTtlMs, "36500 days"))
 
   private val user: Ev => String = _.user_id.toString
   private val evType: Ev => String = _.event_type
   private val evId: Ev => String = _.event_id.toString
   private val evTs: Ev => Long = _.ts_us
+
+  /** SKEW-SALTED streaming state, composed from the existing operators
+    * (SkewTools' salt-and-replicate contract in streaming form): the
+    * streaming joins leave skewed keys to the caller, and this is the
+    * fix. Each x lands in exactly one of `salts` sub-keys of its user
+    * (by id hash), so a hot key's X state and emission fan-out spread
+    * over `salts` state partitions; each y is replicated to every
+    * sub-key as `(salt, y)`. The converged sub-key rows fold back to
+    * the unsalted batch oracle's answer through [[convergedSalted]]. */
+  private final val salts = 4
+  private def salted(join: (Dataset[Ev], Dataset[(Int, Ev)]) => DataFrame): Join =
+    (xs, ys) => join(xs, ys.flatMap(y => (0 until salts).map(s => (s, y)))(
+      Encoders.product[(Int, Ev)]))
+  private val saltedUser: Ev => String =
+    x => x.user_id.toString + "#" + math.floorMod(x.event_type.hashCode, salts)
+  private val replicaUser: ((Int, Ev)) => String = y => y._2.user_id.toString + "#" + y._1
+  private val replicaType: ((Int, Ev)) => String = _._2.event_type
+  private val replicaTs: ((Int, Ev)) => Long = _._2.ts_us
 
   private val singleJoins: Seq[Twin] = {
     import ReferenceJoins.{j1OracleSql => j1, j2OracleSql => j2,
@@ -98,8 +116,51 @@ private[graft] object StreamJoinTwins {
           horizon, PerIdEntries).toDF()),
       Twin("s49_stream_tws_inner", true, true, convergedJ1, j5,
         inner(_, _, user, user, evType, evType, evTs, evTs,
-          horizon, PerIdEntries).toDF()))
+          horizon, PerIdEntries).toDF()),
+      // SKEW-SALTED streaming state (see [[salted]]) on the inner join
+      Twin("s16_stream_salted_inner", false, true, convergedSalted, j5,
+        salted(inner(_, _, saltedUser, replicaUser, evType, replicaType,
+          evTs, replicaTs).toDF())),
+      // THE PRODUCTION DEPLOYMENT SHAPE: all three 100 TB configs at
+      // once — RocksDB state (state >> heap), event-time TTL (state
+      // bounded to watermark-active keys; beyond the horizon as in s17)
+      // and skew-salted keys — on the FULL OUTER join
+      Twin("s18_stream_production_join", true, true, convergedSalted, j1,
+        salted(fullOuter(_, _, saltedUser, replicaUser, evType, replicaType,
+          evTs, replicaTs, horizon).toDF())))
   }
+
+  /** Converged view of a salted J1/J5 sink in the batch shape: the
+    * latest emission per sub-key, [[crossSalt]]-suppressed on x, its
+    * `salts`-fold (None, y) replicas collapsed by one `distinct` (exact
+    * for every other row too: each J1/J5 row carries its event ids, so
+    * the answer holds no duplicate rows). (x, y) and (x, None) rows
+    * are exact as emitted: each x is in one sub-key, and the y replicas
+    * reach it all. For the inner join neither step changes anything. */
+  private def convergedSalted(raw: DataFrame): DataFrame =
+    crossSalt(latestSeqPerKey(raw, "key"), col("x").isNotNull)
+      .select(
+        col("base_key").cast("long").as("user_id"),
+        col("x.event_id").as("x_event_id"),
+        col("x.event_type").as("x_type"),
+        expr("timestamp_micros(x.ts_us)").as("x_ts"),
+        col("y._2.event_id").as("y_event_id"),
+        col("y._2.event_type").as("y_type"),
+        expr("timestamp_micros(y._2.ts_us)").as("y_ts"))
+      .distinct()
+      .orderBy(col("user_id"), asc_nulls_first("x_type"),
+        asc_nulls_first("y_type"))
+
+  /** Cross-salt suppression of a salted outer join's converged rows,
+    * keyed `<base>#<salt>`: a row without x (`hasX` false) is a
+    * replicated y's unmatched emission, real only when NO sub-key of
+    * its `base_key` holds an x (each x lives in exactly one sub-key).
+    * Adds the `base_key` column. */
+  private def crossSalt(rows: DataFrame, hasX: Column): DataFrame =
+    rows.withColumn("base_key", substring_index(col("key"), "#", 1))
+      .withColumn("has_x", max(when(hasX, 1).otherwise(0))
+        .over(Window.partitionBy(col("base_key"))))
+      .filter(hasX || col("has_x") === 0)
 
   /** Runs one [[Twin]] row: state config around a file-source replay of
     * the row's join, folded and checked against the row's oracle. */
@@ -137,106 +198,6 @@ private[graft] object StreamJoinTwins {
         }
       },
       Some(ReferenceJoins.d2OracleSql)),
-
-    // SKEW-SALTED streaming state: the streaming joins' contract says
-    // "skewed keys are the caller's concern" — this row demonstrates
-    // the fix composed from the existing operators (SkewTools'
-    // salt-and-replicate contract in streaming form). The X side salts
-    // its key deterministically by id hash (each x lands in exactly one
-    // of `salts` sub-keys, so a hot key's X state and emission fan-out
-    // spread over `salts` state partitions); the Y side replicates
-    // each record to every sub-key. For the INNER join each (x, y)
-    // pair then surfaces in exactly one sub-key — no cross-salt dedup
-    // needed — and the converged union over sub-keys must hash-match
-    // the same unsalted batch j5 oracle. (Outer variants additionally
-    // need a cross-salt pass to suppress replicated unmatched-Y rows —
-    // the standard extra cost of salting an outer join.)
-    Entry("s16_stream_salted_inner",
-      (spark, dir) => { import spark.implicits._
-        val salts = 4
-        runFileStream(spark, dir, "s16_stream_salted_inner", Events,
-            // coarsened trigger (StreamingHarness.coarseFilesPerTrigger): per-sub-key max-seq fold, batching-independent
-            filesPerTrigger = coarseFilesPerTrigger) { src =>
-          val ys = src().as[Ev].filter(isY _)
-            .flatMap(y => (0 until salts).map(s => (s, y)))
-          VersionedStreamJoin.inner[Ev, (Int, Ev)](
-            src().as[Ev].filter(isX _), ys,
-            x => x.user_id.toString + "#" +
-              math.floorMod(x.event_type.hashCode, salts),
-            y => y._2.user_id.toString + "#" + y._1,
-            x => x.event_type, y => y._2.event_type,
-            x => x.ts_us, y => y._2.ts_us).toDF()
-        } { raw =>
-          latestSeqPerKey(raw, "key")
-            .select(
-              col("x.user_id").as("user_id"),
-              col("x.event_id").as("x_event_id"),
-              col("x.event_type").as("x_type"),
-              expr("timestamp_micros(x.ts_us)").as("x_ts"),
-              col("y._2.event_id").as("y_event_id"),
-              col("y._2.event_type").as("y_type"),
-              expr("timestamp_micros(y._2.ts_us)").as("y_ts"))
-            .orderBy(col("user_id"), asc_nulls_first("x_type"),
-              asc_nulls_first("y_type"))
-        }
-      },
-      Some(ReferenceJoins.j5OracleSql)),
-
-    // THE PRODUCTION DEPLOYMENT SHAPE: all three 100 TB configs at
-    // once — RocksDB state store (state >> heap), event-time TTL
-    // (state bounded to watermark-active keys; sized beyond this
-    // replay's horizon as in s17), and skew-salted keys — on the FULL
-    // OUTER join, against the unchanged batch J1 oracle. Salting an
-    // OUTER join needs the cross-salt pass s16's inner variant could
-    // skip: a replicated Y emits (None, y) from every salt whose
-    // sub-key holds no X, but the row is real only if NO salt holds an
-    // X for the base key (each X lives in exactly one sub-key), and
-    // the survivors are `salts`-fold replicas needing one dedup.
-    // (x, y) and (x, None) rows are already exact: each X is in one
-    // sub-key, and Y replicas reach it all.
-    Entry("s18_stream_production_join",
-      (spark, dir) => { import spark.implicits._
-        val salts = 4
-        VersionedStreamJoin.withStateStoreProvider(spark) {
-          runFileStream(spark, dir, "s18_stream_production_join", Events,
-              // coarsened trigger (StreamingHarness.coarseFilesPerTrigger): beyond-horizon TTL as s17; cross-salt fold over converged view is batching-independent
-              filesPerTrigger = coarseFilesPerTrigger) { src =>
-            val ys = src().as[Ev].filter(isY _)
-              .flatMap(y => (0 until salts).map(s => (s, y)))
-            VersionedStreamJoin.fullOuter[Ev, (Int, Ev)](
-              src().as[Ev].filter(isX _), ys,
-              x => x.user_id.toString + "#" +
-                math.floorMod(x.event_type.hashCode, salts),
-              y => y._2.user_id.toString + "#" + y._1,
-              x => x.event_type, y => y._2.event_type,
-              x => x.ts_us, y => y._2.ts_us, horizon).toDF()
-          } { raw =>
-            val wBase = Window.partitionBy(col("base_key"))
-            latestSeqPerKey(raw, "key")
-              .withColumn("base_key", substring_index(col("key"), "#", 1))
-              // cross-salt suppression: (None, y) survives only when
-              // no salt of the base key holds any X
-              .withColumn("has_x",
-                max(when(col("x").isNotNull, 1).otherwise(0)).over(wBase))
-              .filter(col("x").isNotNull || col("has_x") === 0)
-              .select(
-                col("base_key").cast("long").as("user_id"),
-                col("x.event_id").as("x_event_id"),
-                col("x.event_type").as("x_type"),
-                expr("timestamp_micros(x.ts_us)").as("x_ts"),
-                col("y._2.event_id").as("y_event_id"),
-                col("y._2.event_type").as("y_type"),
-                expr("timestamp_micros(y._2.ts_us)").as("y_ts"))
-              // collapse the `salts`-fold (None, y) replicas; exact
-              // for the rest too — no duplicate rows exist in the J1
-              // answer (every row carries its event ids)
-              .distinct()
-              .orderBy(col("user_id"), asc_nulls_first("x_type"),
-                asc_nulls_first("y_type"))
-          }
-        }
-      },
-      Some(ReferenceJoins.j1OracleSql)),
 
     // STREAMING AS-OF JOIN — q_asof_join's streaming twin: every
     // signup/error event is enriched with the click/purchase/view IN
@@ -418,7 +379,7 @@ private[graft] object StreamJoinTwins {
 
   private def chainReplay(spark: SparkSession, dir: String, work: Path,
                           salts: Int, filesPerTrigger: Int,
-                          ttl: Option[Ttl]): DataFrame = {
+                          ttl: Option[EventTimeTtl]): DataFrame = {
     import spark.implicits._
     val (abLog, bcLog) = (work.resolve("ablog"), work.resolve("bclog"))
     def src(c: ChunkedSource): DataFrame =
@@ -507,16 +468,9 @@ private[graft] object StreamJoinTwins {
         max(when(col("l_linenumber").isNotNull, 1).otherwise(0))
           .over(Window.partitionBy(col("key"))))
       .filter(col("l_linenumber").isNotNull || col("has_li") === 0)
-    // cross-salt suppression: a (None, lineitem) row is real only if
-    // NO sub-key of its base o_orderkey holds an AB row (x present ⟺
+    // cross-salt suppression of (None, lineitem) rows (x present ⟺
     // o_orderkey non-null, since AbRel.o_orderkey is mandatory)
-    val unsalted = perIdentity
-      .withColumn("base_key", substring_index(col("key"), "#", 1))
-      .withColumn("has_x",
-        max(when(col("r.o_orderkey").isNotNull, 1).otherwise(0))
-          .over(Window.partitionBy(col("base_key"))))
-      .filter(col("r.o_orderkey").isNotNull || col("has_x") === 0)
-    val viaBc = unsalted.select(col("r.c_custkey"), col("r.c_name"),
+    val viaBc = crossSalt(perIdentity, col("r.o_orderkey").isNotNull).select(col("r.c_custkey"), col("r.c_name"),
       col("r.o_orderkey"), col("r.o_totalprice"),
       col("r.l_linenumber"), col("r.l_extendedprice"))
       // collapse the salts-fold replicas

@@ -88,11 +88,10 @@ private[graft] object StreamServingTwins {
         // batching-independent
         inWorkDir(spark, "s46_stream_pq_serving", coarseFilesPerTrigger) { work =>
           val cb = VectorOps.pqCodebook(spark, dir).localCheckpoint()
-          val q1 = startRelay(fileStream(spark, EmbVec.schema,
+          val q1 = startLog(fileStream(spark, EmbVec.schema,
               EmbVec.chunkDir(spark, dir), coarseFilesPerTrigger),
-              work.resolve("ckpt"), work.resolve("relay")) { df =>
-            VectorOps.pqEncode(spark, df.select(col("vec_id"), col("e")), cb)
-          }
+              work.resolve("ckpt"), work.resolve("relay"), "append",
+            df => VectorOps.pqEncode(spark, df.select(col("vec_id"), col("e")), cb))
           val codesIn = relayTail(spark, work.resolve("relay"),
             "vec_id BIGINT, s INT, code BIGINT").as[PqCodeRow]
           drain(q1, startLog(VersionedStreamDedup.latestPerKeyId[PqCodeRow](
@@ -305,10 +304,9 @@ private[graft] object StreamServingTwins {
       cent: DataFrame, ckpt: java.nio.file.Path, relay: java.nio.file.Path,
       filesPerTrigger: Int = 1)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    startRelay(fileStream(spark, EmbVec.schema, java.nio.file.Paths.get(in),
-        filesPerTrigger), ckpt, relay) {
-      VectorOps.assignScan(_, cent).select(col("vec_id"), col("cell"))
-    }
+    startLog(fileStream(spark, EmbVec.schema, java.nio.file.Paths.get(in),
+        filesPerTrigger), ckpt, relay, "append",
+      VectorOps.assignScan(_, cent).select(col("vec_id"), col("cell")))
 
   /** IVF stage 2: the relayed (vec_id, cell) assignments upsert into
     * cell-keyed membership state (two longs per vector), each update

@@ -246,8 +246,8 @@ private[graft] object StreamTrainedTwins {
     // coarsened trigger (StreamingHarness.coarseFilesPerTrigger): the
     // (cell,pos) sums are exact-integer monoids; any batching converges
     // to the same statistics (recovery spec-driven)
-    val q1 = startRelay(fileStream(spark, EmbVec.schema, in,
-        coarseFilesPerTrigger), work.resolve("ckpt"), relay) { df =>
+    val q1 = startLog(fileStream(spark, EmbVec.schema, in,
+        coarseFilesPerTrigger), work.resolve("ckpt"), relay, "append", df => {
       val b = df.select(col("vec_id").as("id"), col("e"))
       graft.core.VectorTools.assignCells(b, cent)
         .select(col("id"), col("cell"))
@@ -255,7 +255,7 @@ private[graft] object StreamTrainedTwins {
         .select(col("cell"), posexplode(col("e")).as(Seq("pos", "v")))
         .select(col("cell"), col("pos"),
           graft.core.VectorTools.microQuantize(col("v")).as("q"))
-    }
+    })
     val stats = relayTail(spark, relay, "cell BIGINT, pos INT, q BIGINT")
       .groupBy(col("cell"), col("pos"))
       .agg(sum(col("q")).as("s"), count(lit(1)).as("n"))

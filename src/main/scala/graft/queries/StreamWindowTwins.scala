@@ -105,15 +105,14 @@ private[graft] object StreamWindowTwins {
       },
       Some(Analytics.sessionWindowOracleSql)),
 
-    // APPEND-mode watermarked windowed agg with a real FILE sink —
-    // the production output mode: each closed window is emitted
-    // exactly once to parquet (a downstream consumer needs no upsert
-    // handling), and state for closed windows is dropped. A window
-    // closes once the watermark passes its end; the sentinel event far
-    // past the data (the "punctuation" idea) moves the watermark past
-    // every real window, and `Trigger.AvailableNow` runs the no-data
-    // batch that emits them before the query terminates
-    // (StreamingHarness.runAppendReplay). The flushed parquet must
+    // APPEND-mode watermarked windowed agg — the production output
+    // mode: each closed window is emitted once to the idempotent log
+    // (a downstream consumer needs no upsert handling), and state for
+    // closed windows is dropped. A window closes once the watermark
+    // passes its end; the sentinel event far past the data (the
+    // "punctuation" idea) moves the watermark past every real window,
+    // and the drain waits for the no-data batch that emits them
+    // (StreamingHarness.runAppendReplay). The flushed log must
     // hash-match the batch q_time_window oracle.
     Entry("s13_stream_append_window",
       (spark, dir) => runAppendReplay(spark, dir, "s13_stream_append_window", Events,
@@ -128,8 +127,8 @@ private[graft] object StreamWindowTwins {
       }(_.orderBy(col("day"), col("event_type"))),
       Some(Analytics.timeWindowOracleSql)),
 
-    // APPEND-mode watermarked SESSION windows with a real file sink —
-    // the production output mode for the MERGING window state (s12 is
+    // APPEND-mode watermarked SESSION windows — the production output
+    // mode for the MERGING window state (s12 is
     // the complete-mode twin): an open session per user is held in
     // state, merged when a bridging event arrives, and emitted exactly
     // once when the watermark passes its end. The sentinel flush
@@ -161,8 +160,8 @@ private[graft] object StreamWindowTwins {
     // moment). Asymmetric sides (signup/error lefts probing
     // click/purchase/view rights, see [[rangeJoin]]) so genuinely
     // unmatched lefts exist; the sentinel advances BOTH streams'
-    // watermarks past every match window, and the no-data batch that
-    // `Trigger.AvailableNow` runs at that watermark flushes the nulls.
+    // watermarks past every match window, and the no-data batch the
+    // engine runs at that watermark flushes the nulls.
     // The join condition carries only key equality + the event-time
     // range (the stream-stream state watermark contract, as in s9);
     // both the matched and the null-extended rows must hash-match the

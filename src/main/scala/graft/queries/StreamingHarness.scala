@@ -5,7 +5,7 @@ import java.nio.file.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Shared machinery of the streaming replay rows. A table replays as
   * a [[ChunkedSource]]: `chunks` range-split parquet files, written
@@ -23,11 +23,12 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * state ([[latestSeqPerKey]], [[latestMembers]]) and the last
   * microbatch per group for running aggregates ([[latestBidPerKey]]).
   * Two-stage rows relay stage 1's scan-local output through a parquet
-  * dir ([[startRelay]], [[relayTail]]) and drain the stages in order
-  * ([[drain]]). Append-mode watermark rows run in the same work dir
-  * through [[runAppendReplay]]: a sentinel file pushes the watermark
-  * past every real row, and `Trigger.AvailableNow` runs the no-data
-  * flush batch before the query terminates. */
+  * dir (an append-mode [[startLog]] whose layout is the stage, tailed
+  * by [[relayTail]]) and drain the stages in order ([[drain]]).
+  * Append-mode watermark rows run on the same runner through
+  * [[runAppendReplay]]: a sentinel file pushes the watermark past
+  * every real row, and the drain waits for the no-data batch that
+  * flushes them. */
 private[graft] object StreamingHarness {
 
 
@@ -418,7 +419,10 @@ private[graft] object StreamingHarness {
     * batch replaces its first attempt; update mode also stamps each row
     * with its microbatch `bid`, the order [[latestBidPerKey]] folds by.
     * Complete mode overwrites the log: each trigger carries the whole
-    * current answer. */
+    * current answer. A relay's stage 1 is an append-mode log whose
+    * `layout` is the scan-local stage itself: it keeps the stage's own
+    * partitioning, whose part count [[withStreamConf]]'s constant
+    * shuffle width keeps stable across re-deliveries. */
   private[graft] def startLog(df: DataFrame, ckpt: Path, log: Path,
       mode: String = "update",
       layout: DataFrame => DataFrame = singleFile): StreamingQuery =
@@ -432,19 +436,6 @@ private[graft] object StreamingHarness {
             writeBatchIdempotent(layout(batch.withColumn("bid", lit(bid))), log, bid)
           case _ => writeBatchIdempotent(layout(batch), log, bid)
         }
-      }.start()
-
-  /** Relay stage 1: an append-mode query over `src` whose microbatches,
-    * transformed scan-locally by `stage`, land in `relay` through
-    * [[writeBatchIdempotent]]. The relay keeps `stage`'s own
-    * partitioning, whose part count [[withStreamConf]]'s constant
-    * shuffle width keeps stable across re-deliveries. */
-  private[graft] def startRelay(src: DataFrame, ckpt: Path, relay: Path)(
-      stage: DataFrame => DataFrame): StreamingQuery =
-    src.writeStream.outputMode("append")
-      .option("checkpointLocation", ckpt.toString)
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        writeBatchIdempotent(stage(batch), relay, bid)
       }.start()
 
   /** Relay stage 2's source: the `b*` files stage 1 committed to
@@ -594,13 +585,13 @@ private[graft] object StreamingHarness {
     * so no real window or match range closes before the sentinel
     * arrives: file arrival order and trigger size cannot make a real
     * row late. `build` gets a factory of `ets`-stamped, watermarked
-    * streams (joins open two) and its closed rows land exactly once in
-    * a parquet file sink at `work/log`. The query runs under
-    * `Trigger.AvailableNow`: it processes every file, then runs the
-    * no-data batch at the sentinel's watermark, which flushes the
-    * closed state, before it terminates. A failed batch, that flush
-    * included, throws from here. The sentinels' own windows never
-    * close, so they are never emitted. */
+    * streams (joins open two), and the query runs through
+    * [[replayInto]] like every other row: its closed rows land in the
+    * idempotent log at `work/log`, keeping the stateful stage's own
+    * partitioning. The drain waits for the no-data batch the engine
+    * runs at the sentinel's watermark, which flushes the closed state;
+    * a failed batch, that flush included, throws from here. The
+    * sentinels' own windows never close, so they are never emitted. */
   private[graft] def runAppendReplay(spark: SparkSession, dir: String,
       name: String, source: ChunkedSource, filesPerTrigger: Int)(
       build: (() => DataFrame) => DataFrame)(
@@ -631,14 +622,10 @@ private[graft] object StreamingHarness {
         .coalesce(1).write.mode("append").parquet(in.toString)
       (parts() -- mainParts).foreach(java.nio.file.Files.setLastModifiedTime(_,
         java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis() + 60000L)))
-      build(() => fileStream(spark, source.schema, in, filesPerTrigger)
-          .withColumn("ets", expr("timestamp_micros(ts_us)"))
+      finish(replayInto(spark, source, in, work, "append", filesPerTrigger,
+          layout = identity) { src =>
+        build(() => src().withColumn("ets", expr("timestamp_micros(ts_us)"))
           .withWatermark("ets", "35 days"))
-        .writeStream.outputMode("append")
-        .format("parquet").option("path", work.resolve("log").toString)
-        .option("checkpointLocation", work.resolve("ckpt").toString)
-        .trigger(Trigger.AvailableNow())
-        .start().awaitTermination()
-      finish(spark.read.parquet(work.resolve("log").toString))
+      })
     }
 }

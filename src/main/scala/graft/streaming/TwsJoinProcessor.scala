@@ -66,7 +66,7 @@ private[streaming] final class TwsJoinProcessor[X, Y, U](
   }
 
   /** Key retirement: drop state and counter; a later record rebuilds
-    * the key from scratch (seq restarts — the [[Ttl]] contract). */
+    * the key from scratch (seq restarts — the [[EventTimeTtl]] contract). */
   override def handleExpiredTimer(key: String, timerValues: TimerValues,
       expiredTimerInfo: ExpiredTimerInfo): Iterator[U] = {
     xs.clear(); ys.clear(); seqS.clear()

@@ -95,43 +95,33 @@ private[streaming] final class JoinSides[X, Y](
 }
 
 /** Key retirement of a keyed streaming operator, passed to it as an
-  * argument. The reference never expires state (`GlobalWindows`,
-  * SURVEY.md §2.9 late-data note), so no TTL keeps state forever. At
-  * 100 TB a generous TTL bounds state to recently-active entities; a
-  * late-but-newer version for a retired key rebuilds the key from
-  * scratch (upsert semantics make that safe — it can only miss join
-  * partners that were themselves retired), with its emission `seq`
-  * restarting at 1, so converged-result consumers must treat it as a
-  * fresh key. */
-sealed trait Ttl
-
-/** Wall-clock idle time (GroupStateTimeout.ProcessingTimeTimeout),
-  * [[PackedPerKey]] only. The engine runs continuous (empty)
-  * microbatches to fire timeouts, so `processAllAvailable()` never
-  * observes quiescence — poll the sink or use explicit triggers. */
-final case class ProcessingTimeTtl(ms: Long) extends Ttl {
-  require(ms > 0, s"TTL must be positive, got $ms")
-}
-
-/** Watermark-aligned retirement — the Spark analog of Flink
+  * argument: watermark-aligned, the Spark analog of Flink
   * watermark-driven state cleanup (reference watermark assignment:
-  * GenJoinInput.scala:36-52). Versions are read as epoch-millisecond
-  * event times and the input is watermarked on them with
-  * `watermarkDelay`, the bounded out-of-orderness (the reference uses
-  * 10,000 ms, JoinSpec.scala:19,140-141). A key retires once the
-  * watermark passes [[timeoutAt]]. Fires only when data advances the
-  * watermark — no background batches, so `processAllAvailable()` works
-  * and tests need no sleeps.
+  * GenJoinInput.scala:36-52). The reference never expires state
+  * (`GlobalWindows`, SURVEY.md §2.9 late-data note), so no TTL keeps
+  * state forever. At 100 TB a generous TTL bounds state to
+  * recently-active entities; a late-but-newer version for a retired
+  * key rebuilds the key from scratch (upsert semantics make that safe
+  * — it can only miss join partners that were themselves retired),
+  * with its emission `seq` restarting at 1, so converged-result
+  * consumers must treat it as a fresh key.
+  *
+  * Versions are read as epoch-millisecond event times and the input is
+  * watermarked on them with `watermarkDelay`, the bounded
+  * out-of-orderness (the reference uses 10,000 ms,
+  * JoinSpec.scala:19,140-141). A key retires once the watermark passes
+  * [[timeoutAt]]. Fires only when data advances the watermark — no
+  * background batches, so `processAllAvailable()` works and tests need
+  * no sleeps.
   *
   * SEMANTIC CAVEAT: because the input is watermarked, the stateful
   * operator silently DROPS any row whose event time is at or below the
   * watermark — such a too-late record neither updates nor rebuilds
-  * state, unlike the unwatermarked modes where a late-but-newer version
-  * always supersedes and a late-but-older one is ignored by dedup
-  * (SURVEY.md §2.9). Size `watermarkDelay` to the stream's real
+  * state, unlike the unwatermarked default where a late-but-newer
+  * version always supersedes and a late-but-older one is ignored by
+  * dedup (SURVEY.md §2.9). Size `watermarkDelay` to the stream's real
   * out-of-orderness bound. */
-final case class EventTimeTtl(ms: Long, watermarkDelay: String = "10 seconds")
-    extends Ttl {
+final case class EventTimeTtl(ms: Long, watermarkDelay: String = "10 seconds") {
   require(ms > 0, s"TTL must be positive, got $ms")
 
   /** The retirement time of a key a trigger just updated: `ms` past the
@@ -161,8 +151,7 @@ case object PackedPerKey extends StateLayout
 /** `transformWithState`: one `MapState` entry per (key, id) on each
   * side plus a `seq` value, so an upsert rewrites only the changed
   * ids, and event-time TTL is one per-key timer. Requires the RocksDB
-  * provider ([[VersionedStreamJoin.withStateStoreProvider]]) and has no
-  * processing-time TTL. */
+  * provider ([[VersionedStreamJoin.withStateStoreProvider]]). */
 case object PerIdEntries extends StateLayout
 
 /** Streaming versioned joins over CDC-style upsert streams — the
@@ -178,7 +167,7 @@ case object PerIdEntries extends StateLayout
   * own dedup-based verification
   * contract (raw ≥ expected, deduped == expected, JoinSpec.scala:153-154)
   * is insensitive to that difference (SURVEY.md §4.2). Every variant
-  * takes an optional [[Ttl]] (default: keep state forever) and a
+  * takes an optional [[EventTimeTtl]] (default: keep state forever) and a
   * [[StateLayout]] (default [[PackedPerKey]]).
   *
   * At scale: state is hash-partitioned by join key across executors
@@ -199,23 +188,19 @@ object VersionedStreamJoin {
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
   /** Run `body` with the session's streaming state store backed by
-    * `providerClass` (e.g. [[RocksDbProvider]]), restoring the prior
-    * settings after. The provider is read per streaming query at
-    * start, so this scopes cleanly around query construction +
-    * execution. For RocksDB, changelog checkpointing is enabled too:
-    * each microbatch then uploads only the batch's state DELTA to the
-    * checkpoint (snapshots move to background maintenance), instead of
-    * snapshotting the full store inline — at 100 TB state the per-batch
-    * checkpoint cost must track the update rate, not the store size. */
-  def withStateStoreProvider[T](spark: org.apache.spark.sql.SparkSession,
-                                providerClass: String = RocksDbProvider)(
+    * [[RocksDbProvider]], restoring the prior settings after. The
+    * provider is read per streaming query at start, so this scopes
+    * cleanly around query construction + execution. Changelog
+    * checkpointing is enabled too: each microbatch then uploads only
+    * the batch's state DELTA to the checkpoint (snapshots move to
+    * background maintenance), instead of snapshotting the full store
+    * inline — at 100 TB state the per-batch checkpoint cost must track
+    * the update rate, not the store size. */
+  def withStateStoreProvider[T](spark: org.apache.spark.sql.SparkSession)(
       body: => T): T = {
-    val changelogKey =
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
-    val keys = Seq("spark.sql.streaming.stateStore.providerClass" ->
-        providerClass) ++
-      (if (providerClass == RocksDbProvider) Seq(changelogKey -> "true")
-       else Nil)
+    val keys = Seq(
+      org.apache.spark.sql.internal.SQLConf.STATE_STORE_PROVIDER_CLASS.key -> RocksDbProvider,
+      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true")
     val prev = keys.map { case (k, _) => k -> spark.conf.getOption(k) }
     keys.foreach { case (k, v) => spark.conf.set(k, v) }
     try body finally prev.foreach {
@@ -232,7 +217,7 @@ object VersionedStreamJoin {
       keyFromX: X => String, keyFromY: Y => String,
       idFromX: X => String, idFromY: Y => String,
       tsFromX: X => Long, tsFromY: Y => Long,
-      ttl: Option[Ttl] = None, layout: StateLayout = PackedPerKey)(
+      ttl: Option[EventTimeTtl] = None, layout: StateLayout = PackedPerKey)(
       implicit ex: Encoder[X], ey: Encoder[Y],
       es: Encoder[String],
       ee: Encoder[Emitted[X, Y]]): Dataset[Emitted[X, Y]] =
@@ -260,7 +245,7 @@ object VersionedStreamJoin {
       keyFromX: X => String, keyFromY: Y => String,
       idFromX: X => String, idFromY: Y => String,
       tsFromX: X => Long, tsFromY: Y => Long,
-      ttl: Option[Ttl] = None, layout: StateLayout = PackedPerKey)(
+      ttl: Option[EventTimeTtl] = None, layout: StateLayout = PackedPerKey)(
       implicit ex: Encoder[X], ey: Encoder[Y],
       es: Encoder[String],
       ee: Encoder[Emitted[X, Y]]): Dataset[Emitted[X, Y]] =
@@ -275,7 +260,7 @@ object VersionedStreamJoin {
       keyFromX: X => String, keyFromY: Y => String,
       idFromX: X => String, idFromY: Y => String,
       tsFromX: X => Long, tsFromY: Y => Long,
-      ttl: Option[Ttl] = None, layout: StateLayout = PackedPerKey)(
+      ttl: Option[EventTimeTtl] = None, layout: StateLayout = PackedPerKey)(
       implicit ex: Encoder[X], ey: Encoder[Y],
       es: Encoder[String],
       ee: Encoder[Emitted[X, Y]]): Dataset[Emitted[X, Y]] =
@@ -288,7 +273,7 @@ object VersionedStreamJoin {
       keyFromX: X => String, keyFromY: Y => String,
       idFromX: X => String, idFromY: Y => String,
       tsFromX: X => Long, tsFromY: Y => Long,
-      ttl: Option[Ttl] = None, layout: StateLayout = PackedPerKey)(
+      ttl: Option[EventTimeTtl] = None, layout: StateLayout = PackedPerKey)(
       implicit ex: Encoder[X], ey: Encoder[Y],
       es: Encoder[String],
       ee: Encoder[Emitted[X, Y]]): Dataset[Emitted[X, Y]] =
@@ -315,7 +300,7 @@ object VersionedStreamJoin {
       keyFromX: X => String, keyFromY: Y => String,
       idFromX: X => String, idFromY: Y => String,
       tsFromX: X => Long, tsFromY: Y => Long,
-      ttl: Option[Ttl] = None, layout: StateLayout = PackedPerKey)(
+      ttl: Option[EventTimeTtl] = None, layout: StateLayout = PackedPerKey)(
       implicit ex: Encoder[X], ey: Encoder[Y],
       es: Encoder[String],
       ee: Encoder[Emitted[X, Y]]): Dataset[Emitted[X, Y]] =
@@ -338,7 +323,7 @@ object VersionedStreamJoin {
       keyFromX: X => String, keyFromY: Y => String,
       idFromX: X => String, idFromY: Y => String,
       tsFromX: X => Long, tsFromY: Y => Long,
-      ttl: Option[Ttl] = None, layout: StateLayout = PackedPerKey)(
+      ttl: Option[EventTimeTtl] = None, layout: StateLayout = PackedPerKey)(
       implicit ex: Encoder[X], ey: Encoder[Y],
       es: Encoder[String],
       ee: Encoder[Emitted[X, Y]]): Dataset[Emitted[X, Y]] =
@@ -353,7 +338,7 @@ object VersionedStreamJoin {
       keyFromX: X => String, keyFromY: Y => String,
       idFromX: X => String, idFromY: Y => String,
       tsFromX: X => Long, tsFromY: Y => Long,
-      ttl: Option[Ttl] = None, layout: StateLayout = PackedPerKey)(
+      ttl: Option[EventTimeTtl] = None, layout: StateLayout = PackedPerKey)(
       implicit ex: Encoder[X], ey: Encoder[Y],
       es: Encoder[String],
       ee: Encoder[EmittedSeq[X, Y]]): Dataset[EmittedSeq[X, Y]] =
@@ -367,7 +352,7 @@ object VersionedStreamJoin {
       keyFromX: X => String, keyFromY: Y => String,
       idFromX: X => String, idFromY: Y => String,
       tsFromX: X => Long, tsFromY: Y => Long,
-      ttl: Option[Ttl] = None, layout: StateLayout = PackedPerKey)(
+      ttl: Option[EventTimeTtl] = None, layout: StateLayout = PackedPerKey)(
       implicit ex: Encoder[X], ey: Encoder[Y],
       es: Encoder[String],
       ee: Encoder[EmittedSeq[X, Y]]): Dataset[EmittedSeq[X, Y]] =
@@ -382,22 +367,18 @@ object VersionedStreamJoin {
       keyFromX: X => String, keyFromY: Y => String,
       idFromX: X => String, idFromY: Y => String,
       tsFromX: X => Long, tsFromY: Y => Long,
-      ttl: Option[Ttl], layout: StateLayout)(
+      ttl: Option[EventTimeTtl], layout: StateLayout)(
       expand: StreamEmit.Expand[X, Y, U])(
       implicit ex: Encoder[X], ey: Encoder[Y], es: Encoder[String],
       ee: Encoder[U]): Dataset[U] = {
-    require(layout == PackedPerKey || ttl.forall(_.isInstanceOf[EventTimeTtl]),
-      s"PerIdEntries retires keys only by event-time timers, got $ttl: " +
-        "use EventTimeTtl, or PackedPerKey for a ProcessingTimeTtl")
     val sides = new JoinSides(keyFromX, keyFromY, idFromX, idFromY,
       tsFromX, tsFromY)
     val packed = sides.pack(dsx, dsy)
     layout match {
       case PerIdEntries =>
-        val timers = ttl.collect { case t: EventTimeTtl => t }
         byKey(packed, ttl).transformWithState(
-          new TwsJoinProcessor(sides, timers, ex, ey, expand),
-          if (timers.isEmpty) TimeMode.None() else TimeMode.EventTime(),
+          new TwsJoinProcessor(sides, ttl, ex, ey, expand),
+          if (ttl.isEmpty) TimeMode.None() else TimeMode.EventTime(),
           OutputMode.Update())
       case PackedPerKey => packedPerKey(sides, packed, ttl)(expand, (_, _) => Iterator.empty)
     }
@@ -408,12 +389,10 @@ object VersionedStreamJoin {
     * `groupByKey(_.key)`) hashes the rows as they are: no
     * `AppendColumns` step deserializes every row to run the key
     * function and ships the key a second time as a `value` column. */
-  private def byKey(packed: Dataset[Packed], ttl: Option[Ttl])(
+  private def byKey(packed: Dataset[Packed], ttl: Option[EventTimeTtl])(
       implicit es: Encoder[String]): KeyValueGroupedDataset[String, Packed] =
-    (ttl match {
-      case Some(t: EventTimeTtl) => packed.withWatermark("ets", t.watermarkDelay)
-      case _                     => packed
-    }).groupBy(col("key")).as[String, Packed](es, Encoders.product[Packed])
+    ttl.fold(packed)(t => packed.withWatermark("ets", t.watermarkDelay))
+      .groupBy(col("key")).as[String, Packed](es, Encoders.product[Packed])
 
   /** The [[PackedPerKey]] step, the one keyed latest-wins state of the
     * joins and of [[VersionedStreamDedup]]: per trigger a key's rows are
@@ -421,14 +400,11 @@ object VersionedStreamJoin {
     * its timeout, and `expand` turns the result into rows. A key the TTL
     * retires drops its state and emits `retired(key, last seq)`. */
   private[streaming] def packedPerKey[X, Y, U](
-      sides: JoinSides[X, Y], packed: Dataset[Packed], ttl: Option[Ttl])(
+      sides: JoinSides[X, Y], packed: Dataset[Packed], ttl: Option[EventTimeTtl])(
       expand: StreamEmit.Expand[X, Y, U], retired: (String, Long) => Iterator[U])(
       implicit es: Encoder[String], ee: Encoder[U]): Dataset[U] = {
-    val timeout = ttl match {
-      case Some(_: EventTimeTtl)      => GroupStateTimeout.EventTimeTimeout
-      case Some(_: ProcessingTimeTtl) => GroupStateTimeout.ProcessingTimeTimeout
-      case None                       => GroupStateTimeout.NoTimeout
-    }
+    val timeout =
+      if (ttl.isEmpty) GroupStateTimeout.NoTimeout else GroupStateTimeout.EventTimeTimeout
     byKey(packed, ttl).flatMapGroupsWithState(OutputMode.Update, timeout) {
       (key: String, rows: Iterator[Packed], state: GroupState[Array[Byte]]) =>
         if (state.hasTimedOut) {
@@ -441,11 +417,8 @@ object VersionedStreamJoin {
           val k = sides.upsert(xs0, ys0, rows)
           val seq = seq0 + 1
           state.update(sides.writeState(seq, k.xs, k.ys))
-          ttl.foreach {
-            case ProcessingTimeTtl(ms) => state.setTimeoutDuration(ms)
-            case t: EventTimeTtl => state.setTimeoutTimestamp(
-              t.timeoutAt(state.getCurrentWatermarkMs(), k.maxEtsMs))
-          }
+          ttl.foreach(t => state.setTimeoutTimestamp(
+            t.timeoutAt(state.getCurrentWatermarkMs(), k.maxEtsMs)))
           expand(key, seq, k)
         }
     }(Encoders.BINARY, ee)

@@ -6,7 +6,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import graft.GenJoin._
 import graft.core.{JoinRules, TypedVersionedJoins}
 import graft.streaming.{Emitted, EmittedSeq, EventTimeTtl, PackedPerKey, PerIdEntries,
-  ProcessingTimeTtl, StateLayout, VersionedStreamJoin}
+  StateLayout, VersionedStreamJoin}
 
 /** The per-id entries layout of the versioned join (PerIdEntries, on
   * transformWithState): must satisfy the same convergence contract as
@@ -255,17 +255,6 @@ class TwsJoinSpec extends SparkTestBase {
           s"arrival order ${order.map(_.id)}: $picked")
       }
     }
-  }
-
-  test("per-id entries refuse a processing-time TTL when the join is built") {
-    val sx = MemoryStream[A]
-    val sy = MemoryStream[B]
-    val e = intercept[IllegalArgumentException] {
-      VersionedStreamJoin.fullOuter[A, B](sx.toDS(), sy.toDS(),
-        _.id.toString, _.ida.toString, _.id.toString, _.id.toString,
-        _.ts, _.ts, Some(ProcessingTimeTtl(500L)), PerIdEntries)
-    }
-    assert(e.getMessage.contains("event-time"), e.getMessage)
   }
 
   test("tws typed-timer TTL: quiet keys inside the horizon survive; idle keys beyond it retire") {

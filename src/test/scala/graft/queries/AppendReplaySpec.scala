@@ -7,9 +7,10 @@ import org.apache.spark.sql.functions._
 
 /** The append-mode replay's flush contract: every row a watermark
   * closes only after the sentinel has arrived (here, every emitted row)
-  * comes out of the no-data batch that `Trigger.AvailableNow` runs
-  * before the query terminates, so the sink equals the batch answer at
-  * any trigger size, and a failure in that batch fails the row. */
+  * comes out of the no-data batch the engine runs at the sentinel's
+  * watermark, and the runner's drain waits for that batch, so the
+  * idempotent log equals the batch answer at any trigger size, and a
+  * failure in that batch fails the row. */
 class AppendReplaySpec extends graft.SparkTestBase {
 
   // 280 events over 4 days in the events replay schema, as 140 pairs

@@ -123,52 +123,85 @@ class StreamCcRecoverySpec extends graft.SparkTestBase {
         !snaps.exists(_.startsWith(".stage_")),
         s"stale snapshots not pruned: $snaps")
 
-      // phase 4: the BULK path (a backfill-scale bridge). 4a populates
-      // components across half the bucket layout; 4b's star touches a
-      // component in EVERY existing bucket, so the engine takes the
-      // full-forest contraction — and must still agree with the
-      // one-shot batch answer, with every merged-away bucket vanishing.
+      // phase 4: a bridge across the bucket layout. 4a populates
+      // components across half the buckets; 4b's star touches a
+      // component in EVERY existing bucket — and must still agree with
+      // the one-shot batch answer, with every merged-away bucket
+      // vanishing.
       val chains = Seq((100L, 101L), (102L, 103L), (104L, 105L),
         (106L, 107L), (108L, 109L), (110L, 111L), (112L, 113L))
       append(chains: _*)
       val q4 = StreamDedupTwins.incrementalCcQuery(spark, edges, ckpt, state)
       try q4.processAllAvailable() finally q4.stop()
       // existing buckets now: {1, 4} ∪ pmod({100,102,...,112}, 16)
-      // = 8 of 16 — a bulk-eligible span under the isBulkBatch floor
+      // = 8 of 16
       val star = Seq((1L, 20L), (1L, 100L), (1L, 102L), (1L, 104L),
         (1L, 106L), (1L, 108L), (1L, 110L), (1L, 112L))
-      // the classifier itself (pure function): 4b's shape IS bulk,
-      // while a young stream touching its only populated bucket is NOT
-      // (the early-life full-contraction regression the floor prevents)
       val existing8 = (Set(1L, 20L) ++ chains.map(_._1))
         .map(l => java.lang.Math.floorMod(l, 16L).toInt)
-      assert(StreamDedupTwins.isBulkBatch(existing8, existing8),
-        s"full-cover bridge over $existing8 should classify bulk")
-      assert(!StreamDedupTwins.isBulkBatch(Set(1), Set(1)),
-        "single-bucket trickle must NOT classify bulk")
-      assert(!StreamDedupTwins.isBulkBatch(Set(1, 4), Set(1)),
-        "partial cover must NOT classify bulk")
-      assert(!StreamDedupTwins.isBulkBatch(Set.empty, Set.empty),
-        "empty state must NOT classify bulk")
       append(star: _*)
       val q5 = StreamDedupTwins.incrementalCcQuery(spark, edges, ckpt, state)
       try q5.processAllAvailable() finally q5.stop()
       val allEdges = Seq((1L, 2L), (2L, 3L), (10L, 11L), (11L, 12L),
         (1L, 4L), (3L, 10L), (20L, 21L)) ++ chains ++ star
-      val bulkGot = StreamDedupTwins.loadStarForest(spark, state)
+      val starGot = StreamDedupTwins.loadStarForest(spark, state)
         .as[(Long, Long)].collect().toMap
-      val bulkExp = graft.core.GraphTools
+      val starExp = graft.core.GraphTools
         .connectedComponents(allEdges.toDF("d1", "d2"), "d1", "d2")
         .as[(Long, Long)].collect().toMap
-      assert(bulkGot == bulkExp, s"bulk-path labels $bulkGot != $bulkExp")
-      assert(bulkGot.values.toSet == Set(1L),
+      assert(starGot == starExp, s"bridge-star labels $starGot != $starExp")
+      assert(starGot.values.toSet == Set(1L),
         s"bridge star should collapse everything into component 1")
       for (k <- existing8 - 1)
         assert(bucketFiles(committedSnap(), k).isEmpty,
-          s"bucket $k should vanish after the bulk contraction")
+          s"bucket $k should vanish after the bridge-star merge")
     } finally {
       spark.conf.set("spark.sql.shuffle.partitions", prev)
       StreamDedupTwins.dropForestHandle(tmp.resolve("state").toString)
+      rmTree(tmp)
+    }
+  }
+
+  test("a batch over the quotient cap takes the distributed contraction") {
+    val prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "2")
+    val tmp = Files.createTempDirectory("graft_ccovercap_")
+    val state = tmp.resolve("state").toString
+    try {
+      val edges = Files.createDirectories(tmp.resolve("edges")).toString
+      val ckpt = tmp.resolve("ckpt").toString
+      def append(rows: Seq[(Long, Long)]): Unit =
+        rows.toDF("d1", "d2").coalesce(1).write.mode("append").parquet(edges)
+      def run(): Map[Long, Long] = {
+        val q = StreamDedupTwins.incrementalCcQuery(spark, edges, ckpt, state)
+        try q.processAllAvailable() finally q.stop()
+        StreamDedupTwins.loadStarForest(spark, state).as[(Long, Long)].collect().toMap
+      }
+      // a trickle batch: component {1,2} → bucket 1, {5,6} → bucket 5
+      val seed = Seq((1L, 2L), (5L, 6L))
+      append(seed)
+      assert(run() == Map(1L -> 1L, 2L -> 1L, 5L -> 5L, 6L -> 5L))
+      // one batch of cap + 1 edges: cap disjoint pairs labelled into
+      // bucket 0 (min ids 1024 + 16i), plus a bridge merging {5,6}
+      // into {1,2}, so bucket 5 is merged away
+      val cap = StreamDedupTwins.ccQuotientMaxEdges
+      val overCap = (0L until cap.toLong).map(i => (1024L + 16 * i, 1025L + 16 * i)) :+
+        ((2L, 6L))
+      assert(overCap.length == cap + 1)
+      append(overCap)
+      val got = run()
+      val oneShot = graft.core.GraphTools
+        .connectedComponents((seed ++ overCap).toDF("d1", "d2"), "d1", "d2")
+        .as[(Long, Long)].collect().toMap
+      assert(got == oneShot, "over-cap labels differ from the one-shot components")
+      val snap = StreamDedupTwins.latestCommittedForest(state)
+        .getOrElse(fail("no committed snapshot"))
+      assert(bucketFiles(snap, 5).isEmpty,
+        "bucket 5 should vanish after its component merged into bucket 1")
+      assert(bucketFiles(snap, 1).nonEmpty && bucketFiles(snap, 0).nonEmpty)
+    } finally {
+      spark.conf.set("spark.sql.shuffle.partitions", prev)
+      StreamDedupTwins.dropForestHandle(state)
       rmTree(tmp)
     }
   }
